@@ -1,29 +1,41 @@
-"""Pyramid build — per-level Spark jobs (SURVEY.md §2.3 A1-A11, §3.1).
+"""Pyramid build — fused level blocks over one tile-mosaic kernel
+(SURVEY.md §2.3 A1-A11, §3.1).
 
 The reference's flagship entry points (``buildpyramids`` / ``Pyramid(data)``,
-/root/reference/src/PyramidScheme.jl:347-392,428-445) become a driver loop of
-per-level DataFrame jobs:
+src/PyramidScheme.jl:347-392,428-445) become a driver loop
+(``_build_levels``) of one DataFrame job per block of k levels:
 
-    level z-1 tiles
-      --mapInPandas--> 2x2-downsampled *quarter* tiles (narrow, no shuffle)
-      --groupBy(parent tx,ty).applyInPandas--> assembled level-z tiles
-      --write parquet partition z + manifest lineage rows (checkpoint)
+    level z-1 tiles (or the images table, decoded in the same stage)
+      --mapInPandas--> 2x2-reduced *quarter* tiles keyed by their
+                       level-(z+k-1) ancestor (narrow, no shuffle)
+      --groupBy(ancestor).applyInPandas--> one mosaic per group, cut into
+                       level-z tiles, then reduced and cut for z+1..z+k-1
+      --write parquet partitions z..z+k-1 + manifest lineage rows (checkpoint)
+
+Every pyramid writer shares one kernel, as the reference builds every
+level with one windowed kernel (src/PyramidScheme.jl:216-253).
+``_mosaic`` places ``(y0, x0, array)`` pieces into a plane (gaps NaN for
+float dtypes) for the fused blocks, ``build_overviews``, the direct
+build, the driver-side tail, cube levels (``operators/cube.py``) and
+streaming ancestor repair (``streaming/ingest.py``); ``_cut`` slices a
+plane into tile rows; ``_quarter_gen`` is the one quarter emitter
+(source: stored tiles or image payloads; optional lead keys such as the
+cube ``t``).
 
 Scale notes (why this shape at 100 TB):
 
 - **Downsample before shuffling**: the heavy pixel math happens map-side on
   the child tiles, so only quarter-size blocks (1/4 of the level's bytes)
-  cross the wire; the shuffle per level moves level_{z}/1 bytes instead of
-  level_{z-1} (4x). Total shuffle across the build is a geometric series
-  ~1/3 of the base bytes.
+  cross the wire, and the k-1 coarser levels of a block add no shuffle at
+  all. Total shuffle across the build is at most ~1/3 of the base bytes.
 - **Recursive by default** (level z from z-1): total pixel work is
   O(4/3 * N) like the reference's ``recursive=true``
   (src/PyramidScheme.jl:192-203); ``recursive=False`` rebuilds each level
   straight from the base for non-decomposable reducers (mode/median caveat,
   src/PyramidScheme.jl:192-193).
-- **Each level is read back from its checkpoint** before building the next:
-  truncates lineage, makes resume trivial (manifest row == committed level),
-  and the reread is sequential columnar I/O.
+- **Each level block is read back from its checkpoint** before building
+  the next: truncates lineage, makes resume trivial (manifest row ==
+  committed level), and the reread is sequential columnar I/O.
 - All pixel math is whole-array numpy inside Arrow-batched UDFs; rows are
   tiles, never pixels.
 """
@@ -40,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.cells import xy_to_cell
-from ..functions.codec import decode_tile, encode_tile, reducer_dtype
+from ..functions.codec import decode_tile, encode_tile
 from ..functions.reducers import (
     block_reduce,
     is_decomposable,
@@ -56,6 +68,7 @@ from ..sources.catalog import (
     read_level,
     write_level,
     write_level_driver,
+    write_levels_fused,
     write_multiscales,
 )
 
@@ -291,264 +304,155 @@ def _cast_level(arr: np.ndarray, level_dtype: str | None) -> np.ndarray:
     return arr.astype(np.dtype(level_dtype), copy=False)
 
 
-def _downsample_quarters(spec: PyramidSpec, reducer, level_dtype: str | None = None):
-    """Narrow stage: child tile -> 2x2-reduced quarter keyed by parent."""
+def _mosaic(pieces) -> np.ndarray:
+    """THE tile-mosaic kernel: ``(y0, x0, array)`` pieces -> one plane whose
+    extent is the furthest pixel any piece covers (ragged edges keep ceil
+    semantics). Uncovered area — a SPARSE base: rasterized/partial
+    mosaics, a missing image — is missing data: NaN for float dtypes so
+    skipmissing reducers and tile stats stay correct; int dtypes have no
+    missing representation and keep 0. Dense builds never hit either case."""
+    pieces = list(pieces)
+    a0 = pieces[0][2]
+    H = max(y0 + a.shape[0] for y0, _, a in pieces)
+    W = max(x0 + a.shape[1] for _, x0, a in pieces)
+    fill = np.nan if a0.dtype.kind == "f" else 0
+    plane = np.full((H, W) + a0.shape[2:], fill, dtype=a0.dtype)
+    for y0, x0, a in pieces:
+        plane[y0 : y0 + a.shape[0], x0 : x0 + a.shape[1]] = a
+    return plane
+
+
+def _cut(spec: PyramidSpec, plane: np.ndarray, z: int, tx0: int = 0, ty0: int = 0,
+         keep=None) -> list[dict]:
+    """Plane -> level-``z`` tile rows: plane tile ``(i, j)`` becomes tile
+    ``(tx0 + i, ty0 + j)``, edge tiles clipped to the plane. ``keep``
+    (optional set of plane-relative ``(i, j)``) skips tiles with no data
+    below them, so a sparse base yields the same tile set however many
+    levels one pass derives."""
+    T_ = spec.tilesize
+    return [
+        _tile_row(spec, z, tx0 + i, ty0 + j, plane[j * T_ : (j + 1) * T_, i * T_ : (i + 1) * T_])
+        for j in range(-(-plane.shape[0] // T_))
+        for i in range(-(-plane.shape[1] // T_))
+        if keep is None or (i, j) in keep
+    ]
+
+
+def _lead_schema(lead: tuple, schema: T.StructType) -> T.StructType:
+    return T.StructType([T.StructField(c, T.IntegerType()) for c in lead] + list(schema.fields))
+
+
+def _quarter_gen(k: int, reducer, level_dtype: str | None, from_images: bool, lead: tuple):
+    """THE quarter emitter (narrow stage of every recursive level block):
+    each source row -> its 2x2-reduced quarter, keyed by its level-``+k``
+    ancestor ``(tx >> k, ty >> k)`` with its offset ``(qx, qy)`` inside
+    that ancestor in child-tile units. ``from_images`` decodes image
+    payloads (``base_image_src`` rows) instead of stored tiles, in this
+    same python stage: chaining two mapInPandas stages (decode -> reduce)
+    runs two python workers per task with the JVM relaying Arrow batches
+    between them — measured 10x slower at 32 cores — and keeping one
+    python stage before the shuffle is also the right cluster shape (the
+    base is read once, reduced map-side, and only quarter tiles shuffle).
+    ``lead`` key columns (cubes: ``("t",)``) pass through untouched."""
+    if from_images:
+        decode, args = _decode_payload, ("bytes", "w", "h", "fmt", "image_id")
+    else:
+        decode, args = decode_tile, ("bytes", "h", "w", "dtype", "c")
+    cols = (*lead, *QUARTER_SCHEMA.fieldNames())
+    int_cols = [c for c in cols if c not in ("bytes", "dtype")]
+    n, mask = len(lead), (1 << k) - 1
 
     def gen(batches):
         for pdf in batches:
-            out = {k: [] for k in ("ptx", "pty", "qx", "qy", "bytes", "w", "h", "c", "dtype")}
-            for tx, ty, buf, w, h, c, dt in zip(
-                pdf["tx"], pdf["ty"], pdf["bytes"], pdf["w"], pdf["h"], pdf["c"], pdf["dtype"]
-            ):
-                arr = decode_tile(buf, int(h), int(w), dt, int(c))
-                red = _cast_level(block_reduce(arr, reducer), level_dtype)
-                out["ptx"].append(int(tx) >> 1)
-                out["pty"].append(int(ty) >> 1)
-                out["qx"].append(int(tx) & 1)
-                out["qy"].append(int(ty) & 1)
+            out = {c: [] for c in cols}
+            for row in zip(*(pdf[c] for c in (*lead, "tx", "ty", *args))):
+                red = _cast_level(block_reduce(decode(*row[n + 2 :]), reducer), level_dtype)
+                tx, ty = int(row[n]), int(row[n + 1])
+                for c, v in zip(lead, row):
+                    out[c].append(int(v))
+                out["ptx"].append(tx >> k)
+                out["pty"].append(ty >> k)
+                out["qx"].append(tx & mask)
+                out["qy"].append(ty & mask)
                 out["bytes"].append(encode_tile(red))
                 out["w"].append(red.shape[1])
                 out["h"].append(red.shape[0])
-                out["c"].append(int(c))
+                out["c"].append(red.shape[2] if red.ndim == 3 else 1)
                 out["dtype"].append(str(red.dtype.name))
             pdf_out = pd.DataFrame(out)
-            for col in ("ptx", "pty", "qx", "qy", "w", "h", "c"):
-                pdf_out[col] = pdf_out[col].astype("int32")
+            pdf_out[int_cols] = pdf_out[int_cols].astype("int32")
             yield pdf_out
 
     return gen
 
 
-def _assemble_parent(spec: PyramidSpec, z: int):
-    """Grouped stage: up to 4 quarters -> one level-z tile (exact coverage)."""
-    half = spec.tilesize // 2
-
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ptx, pty = int(key[0]), int(key[1])
-        c = int(pdf["c"].iloc[0])
-        dt = pdf["dtype"].iloc[0]
-        W = int((pdf["qx"] * half + pdf["w"]).max())
-        H = int((pdf["qy"] * half + pdf["h"]).max())
-        shape = (H, W, c) if c > 1 else (H, W)
-        # uncovered area (a SPARSE base: rasterized/partial mosaics) is
-        # missing data, not zero — NaN for float dtypes so skipmissing
-        # reducers and tile stats stay correct; int dtypes have no missing
-        # representation and keep 0 (dense builds never hit either case:
-        # absent quarters only occur past the data extent, excluded by W/H)
-        kind = np.dtype(dt).kind
-        arr = np.full(shape, np.nan if kind == "f" else 0, dtype=np.dtype(dt))
-        for qx, qy, buf, w, h in zip(pdf["qx"], pdf["qy"], pdf["bytes"], pdf["w"], pdf["h"]):
-            q = decode_tile(buf, int(h), int(w), dt, c)
-            x0, y0 = int(qx) * half, int(qy) * half
-            arr[y0 : y0 + int(h), x0 : x0 + int(w)] = q
-        return _rows_to_pdf([_tile_row(spec, z, ptx, pty, arr)])
-
-    return assemble
-
-
-def build_level(
-    prev: DataFrame, z: int, spec: PyramidSpec, reducer, level_dtype: str | None = None
+def _level_block(
+    src: DataFrame, from_images: bool, z_start: int, k: int, spec: PyramidSpec, reducer,
+    level_dtype: str | None, lead: tuple = (),
 ) -> DataFrame:
-    """One recursive build step: level z from level z-1."""
-    quarters = prev.mapInPandas(_downsample_quarters(spec, reducer, level_dtype), QUARTER_SCHEMA)
-    return quarters.groupBy("ptx", "pty").applyInPandas(_assemble_parent(spec, z), TILE_SCHEMA)
-
-
-def build_level1_from_images(
-    images: DataFrame, G: int, spec: PyramidSpec, reducer, level_dtype: str | None = None
-) -> DataFrame:
-    """Level 1 straight from the images table in ONE fused Python stage.
-
-    Chaining two mapInPandas stages (decode-view -> downsample) in the same
-    task pipeline runs two Python workers per task with the JVM relaying
-    Arrow batches between them — measured 10x slower at 32 cores. Fusing
-    decode + 2x2 reduce into a single UDF keeps one Python stage before the
-    shuffle, which is also the right shape on a real cluster (north rule:
-    the 10^12-row base is read once, reduced map-side, and only quarter
-    tiles shuffle).
-    """
-    idx = F.regexp_extract("image_id", r"^img-(\d{8})$", 1).cast("long")
-    src = (
-        images.where(F.col("fmt").isin(*SUPPORTED_IMAGE_FMTS))
-        .where(idx.isNotNull())
-        .select(
-            (idx % _grid_dims(G)[0]).cast("int").alias("tx"),
-            (idx / _grid_dims(G)[0]).cast("int").alias("ty"),
-            "image_id",
-            "bytes",
-            "w",
-            "h",
-            "fmt",
-        )
-        .where(F.col("tx").isNotNull())
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("ptx", "pty", "qx", "qy", "bytes", "w", "h", "c", "dtype")}
-            for tx, ty, iid, buf, w, h, fmt in zip(
-                pdf["tx"], pdf["ty"], pdf["image_id"], pdf["bytes"],
-                pdf["w"], pdf["h"], pdf["fmt"],
-            ):
-                arr = _decode_payload(buf, w, h, fmt, iid)
-                c = int(arr.shape[2]) if arr.ndim == 3 else 1
-                red = _cast_level(block_reduce(arr, reducer), level_dtype)
-                out["ptx"].append(int(tx) >> 1)
-                out["pty"].append(int(ty) >> 1)
-                out["qx"].append(int(tx) & 1)
-                out["qy"].append(int(ty) & 1)
-                out["bytes"].append(encode_tile(red))
-                out["w"].append(red.shape[1])
-                out["h"].append(red.shape[0])
-                out["c"].append(c)
-                out["dtype"].append(str(red.dtype.name))
-            pdf_out = pd.DataFrame(out)
-            for col in ("ptx", "pty", "qx", "qy", "w", "h", "c"):
-                pdf_out[col] = pdf_out[col].astype("int32")
-            yield pdf_out
-
-    quarters = src.mapInPandas(gen, QUARTER_SCHEMA)
-    return quarters.groupBy("ptx", "pty").applyInPandas(_assemble_parent(spec, 1), TILE_SCHEMA)
-
-
-def _assemble_levels(spec: PyramidSpec, z_start: int, k: int, reducer, level_dtype: str | None):
-    """Grouped stage of the FUSED multi-level build (reference A4 windowed
-    execution, VERDICT r8 #2): one group = the footprint of a single
-    level-``z_start+k-1`` tile, holding up to ``4^k`` child quarters.
-    Assembles the level-``z_start`` mosaic once and derives all ``k``
-    levels from it in-memory — bit-identical to the per-level pipeline
-    because the reduction chain is the same ``block_reduce`` +
+    """Levels ``z_start .. z_start+k-1`` from level ``z_start-1`` (or the
+    images) in ONE shuffle (reference A4 windowed execution, VERDICT r8 #2):
+    ``_quarter_gen`` keys each child by its level-``z_start+k-1`` ancestor;
+    one group = that ancestor's footprint, holding up to ``4^k`` quarters.
+    The group mosaics the level-``z_start`` plane once and derives all
+    ``k`` levels from it in memory — bit-identical to ``k`` single-level
+    passes because the reduction chain is the same ``block_reduce`` +
     ``_cast_level`` at every level boundary (tiles are even-sized, so
     reducing the group plane equals reducing each tile; clipped ragged
-    edges keep ceil semantics; missing quarters are NaN for floats
-    exactly as ``_assemble_parent`` fills them)."""
-    T_ = spec.tilesize
-    half = T_ // 2
+    edges keep ceil semantics). A tile is emitted only where a child
+    quarter lies below it, so a sparse base gets the per-level tile set;
+    above a missing tile the plane holds the reducer's output for an
+    all-NaN block (NaN, or 0 for ``sum``) where a single-level pass holds
+    the mosaic's NaN fill. Shuffle volume is that of level ``z_start``
+    alone: the k-1 further levels ride for free."""
+    half = spec.tilesize // 2
+    n = len(lead)
 
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ptx, pty = int(key[0]), int(key[1])
-        c = int(pdf["c"].iloc[0])
-        dt = pdf["dtype"].iloc[0]
-        W = int((pdf["qx"] * half + pdf["w"]).max())
-        H = int((pdf["qy"] * half + pdf["h"]).max())
-        shape = (H, W, c) if c > 1 else (H, W)
-        kind = np.dtype(dt).kind
-        plane = np.full(shape, np.nan if kind == "f" else 0, dtype=np.dtype(dt))
-        for qx, qy, buf, w, h in zip(pdf["qx"], pdf["qy"], pdf["bytes"], pdf["w"], pdf["h"]):
-            q = decode_tile(buf, int(h), int(w), dt, c)
-            x0, y0 = int(qx) * half, int(qy) * half
-            plane[y0 : y0 + int(h), x0 : x0 + int(w)] = q
+        ptx, pty = int(key[n]), int(key[n + 1])
+        dt, c = pdf["dtype"].iloc[0], int(pdf["c"].iloc[0])
+        qxy = [(int(qx), int(qy)) for qx, qy in zip(pdf["qx"], pdf["qy"])]
+        plane = _mosaic(
+            (qy * half, qx * half, decode_tile(buf, h, w, dt, c))
+            for (qx, qy), buf, w, h in zip(qxy, pdf["bytes"], pdf["w"], pdf["h"])
+        )
         rows = []
         for j in range(k):
             span = 1 << (k - 1 - j)  # group tiles per axis at this level
-            nty_l = -(-plane.shape[0] // T_)
-            ntx_l = -(-plane.shape[1] // T_)
-            for ty in range(nty_l):
-                for tx in range(ntx_l):
-                    blk = plane[ty * T_ : (ty + 1) * T_, tx * T_ : (tx + 1) * T_]
-                    rows.append(
-                        _tile_row(spec, z_start + j, ptx * span + tx, pty * span + ty, blk)
-                    )
+            keep = {(qx >> (j + 1), qy >> (j + 1)) for qx, qy in qxy}
+            rows += _cut(spec, plane, z_start + j, ptx * span, pty * span, keep)
             if j < k - 1:
                 plane = _cast_level(block_reduce(plane, reducer), level_dtype)
-        return _rows_to_pdf(rows)
+        pdf_out = _rows_to_pdf(rows)
+        for i, col in enumerate(lead):
+            pdf_out.insert(i, col, pd.array([int(key[i])] * len(rows), dtype="int32"))
+        return pdf_out
 
-    return assemble
+    quarters = src.mapInPandas(
+        _quarter_gen(k, reducer, level_dtype, from_images, lead), _lead_schema(lead, QUARTER_SCHEMA)
+    )
+    return quarters.groupBy(*lead, "ptx", "pty").applyInPandas(
+        assemble, _lead_schema(lead, TILE_SCHEMA)
+    )
 
 
 def build_levels_fused(
     prev: DataFrame, z_start: int, k: int, spec: PyramidSpec, reducer,
     level_dtype: str | None = None,
 ) -> DataFrame:
-    """Levels ``z_start .. z_start+k-1`` from level ``z_start-1`` in ONE
-    shuffle: the narrow quarter stage keys each child by its level-
-    ``z_start+k-1`` ancestor, and the grouped stage emits every level of
-    the block (``_assemble_levels``). Shuffle volume is identical to the
-    plain ``build_level`` step for ``z_start`` alone — the k-1 further
-    levels ride for free (no reread, no extra exchange, no extra job)."""
-    kk = k
-
-    def gen(batches):
-        for pdf in batches:
-            out = {c: [] for c in ("ptx", "pty", "qx", "qy", "bytes", "w", "h", "c", "dtype")}
-            for tx, ty, buf, w, h, c, dt in zip(
-                pdf["tx"], pdf["ty"], pdf["bytes"], pdf["w"], pdf["h"], pdf["c"], pdf["dtype"]
-            ):
-                arr = decode_tile(buf, int(h), int(w), dt, int(c))
-                red = _cast_level(block_reduce(arr, reducer), level_dtype)
-                out["ptx"].append(int(tx) >> kk)
-                out["pty"].append(int(ty) >> kk)
-                out["qx"].append(int(tx) & ((1 << kk) - 1))
-                out["qy"].append(int(ty) & ((1 << kk) - 1))
-                out["bytes"].append(encode_tile(red))
-                out["w"].append(red.shape[1])
-                out["h"].append(red.shape[0])
-                out["c"].append(int(c))
-                out["dtype"].append(str(red.dtype.name))
-            pdf_out = pd.DataFrame(out)
-            for col in ("ptx", "pty", "qx", "qy", "w", "h", "c"):
-                pdf_out[col] = pdf_out[col].astype("int32")
-            yield pdf_out
-
-    quarters = prev.mapInPandas(gen, QUARTER_SCHEMA)
-    return quarters.groupBy("ptx", "pty").applyInPandas(
-        _assemble_levels(spec, z_start, k, reducer, level_dtype), TILE_SCHEMA
-    )
+    """Levels ``z_start .. z_start+k-1`` from stored level ``z_start-1``
+    in one shuffle (``_level_block``); ``k=1`` is the plain per-level step."""
+    return _level_block(prev, False, z_start, k, spec, reducer, level_dtype)
 
 
 def build_levels1_fused_from_images(
     images: DataFrame, G, k: int, spec: PyramidSpec, reducer,
     level_dtype: str | None = None,
 ) -> DataFrame:
-    """Fused-levels twin of ``build_level1_from_images``: decode + first
-    2x2 reduce in one python stage (same single-worker-per-task rationale),
-    then the multi-level assemble — levels ``1..k`` from the images table
-    with one shuffle."""
-    idx = F.regexp_extract("image_id", r"^img-(\d{8})$", 1).cast("long")
-    src = (
-        images.where(F.col("fmt").isin(*SUPPORTED_IMAGE_FMTS))
-        .where(idx.isNotNull())
-        .select(
-            (idx % _grid_dims(G)[0]).cast("int").alias("tx"),
-            (idx / _grid_dims(G)[0]).cast("int").alias("ty"),
-            "image_id",
-            "bytes",
-            "w",
-            "h",
-            "fmt",
-        )
-        .where(F.col("tx").isNotNull())
-    )
-    kk = k
-
-    def gen(batches):
-        for pdf in batches:
-            out = {c: [] for c in ("ptx", "pty", "qx", "qy", "bytes", "w", "h", "c", "dtype")}
-            for tx, ty, iid, buf, w, h, fmt in zip(
-                pdf["tx"], pdf["ty"], pdf["image_id"], pdf["bytes"],
-                pdf["w"], pdf["h"], pdf["fmt"],
-            ):
-                arr = _decode_payload(buf, w, h, fmt, iid)
-                c = int(arr.shape[2]) if arr.ndim == 3 else 1
-                red = _cast_level(block_reduce(arr, reducer), level_dtype)
-                out["ptx"].append(int(tx) >> kk)
-                out["pty"].append(int(ty) >> kk)
-                out["qx"].append(int(tx) & ((1 << kk) - 1))
-                out["qy"].append(int(ty) & ((1 << kk) - 1))
-                out["bytes"].append(encode_tile(red))
-                out["w"].append(red.shape[1])
-                out["h"].append(red.shape[0])
-                out["c"].append(c)
-                out["dtype"].append(str(red.dtype.name))
-            pdf_out = pd.DataFrame(out)
-            for col in ("ptx", "pty", "qx", "qy", "w", "h", "c"):
-                pdf_out[col] = pdf_out[col].astype("int32")
-            yield pdf_out
-
-    quarters = src.mapInPandas(gen, QUARTER_SCHEMA)
-    return quarters.groupBy("ptx", "pty").applyInPandas(
-        _assemble_levels(spec, 1, k, reducer, level_dtype), TILE_SCHEMA
-    )
+    """Levels ``1..k`` straight from the images table in one shuffle:
+    decode + first 2x2 reduce run in the quarter stage's single python
+    worker (``_quarter_gen``), so the base is never materialized."""
+    return _level_block(base_image_src(images, G), True, 1, k, spec, reducer, level_dtype)
 
 
 def build_tail_driver(
@@ -563,27 +467,14 @@ def build_tail_driver(
     numpy reduce chain, direct parquet writes. Returns {z: tile_rows}.
     """
     T_ = spec.tilesize
-    c = int(prev_rows[0]["c"])
-    dt = prev_rows[0]["dtype"]
-    W = max(r["tx"] * T_ + r["w"] for r in prev_rows)
-    H = max(r["ty"] * T_ + r["h"] for r in prev_rows)
-    shape = (H, W, c) if c > 1 else (H, W)
-    # sparse-base aware like _assemble_parent: uncovered area is missing
-    # data (NaN) for float dtypes, 0 for ints (no missing representation)
-    kind = np.dtype(dt).kind
-    plane = np.full(shape, np.nan if kind == "f" else 0, dtype=np.dtype(dt))
-    for r in prev_rows:
-        a = decode_tile(r["bytes"], int(r["h"]), int(r["w"]), dt, c)
-        plane[r["ty"] * T_ : r["ty"] * T_ + r["h"], r["tx"] * T_ : r["tx"] * T_ + r["w"]] = a
+    plane = _mosaic(
+        (r["ty"] * T_, r["tx"] * T_, decode_tile(r["bytes"], r["h"], r["w"], r["dtype"], r["c"]))
+        for r in prev_rows
+    )
     out: dict[int, list[dict]] = {}
     for z in range(z_start, spec.nlevels + 1):
         plane = _cast_level(block_reduce(plane, reducer), level_dtype)
-        rows = []
-        for ty in range(-(-plane.shape[0] // T_)):
-            for tx in range(-(-plane.shape[1] // T_)):
-                blk = plane[ty * T_ : (ty + 1) * T_, tx * T_ : (tx + 1) * T_]
-                rows.append(_tile_row(spec, z, tx, ty, blk))
-        out[z] = rows
+        out[z] = _cut(spec, plane, z)
     return out
 
 
@@ -602,24 +493,109 @@ def build_level_direct(
 
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ptx, pty = int(key[0]), int(key[1])
-        c = int(pdf["c"].iloc[0])
-        dt = pdf["dtype"].iloc[0]
+        dt, c = pdf["dtype"].iloc[0], int(pdf["c"].iloc[0])
         x0, y0 = ptx * T_ * fac, pty * T_ * fac  # base-pixel origin
-        W = int((pdf["tx"] * T_ + pdf["w"]).max()) - x0
-        H = int((pdf["ty"] * T_ + pdf["h"]).max()) - y0
-        shape = (H, W, c) if c > 1 else (H, W)
-        arr = np.zeros(shape, dtype=np.dtype(dt))
-        for tx, ty, buf, w, h in zip(pdf["tx"], pdf["ty"], pdf["bytes"], pdf["w"], pdf["h"]):
-            a = decode_tile(buf, int(h), int(w), dt, c)
-            ox, oy = int(tx) * T_ - x0, int(ty) * T_ - y0
-            arr[oy : oy + int(h), ox : ox + int(w)] = a
-        red = _cast_level(block_reduce(arr, reducer, fac=fac), level_dtype)
-        return _rows_to_pdf([_tile_row(spec, z, ptx, pty, red)])
+        plane = _mosaic(
+            (int(ty) * T_ - y0, int(tx) * T_ - x0, decode_tile(buf, h, w, dt, c))
+            for tx, ty, buf, w, h in zip(pdf["tx"], pdf["ty"], pdf["bytes"], pdf["w"], pdf["h"])
+        )
+        red = _cast_level(block_reduce(plane, reducer, fac=fac), level_dtype)
+        return _rows_to_pdf(_cut(spec, red, z, ptx, pty))
 
     grouped = base.withColumn("ptx", F.shiftright("tx", z)).withColumn(
         "pty", F.shiftright("ty", z)
     )
     return grouped.groupBy("ptx", "pty").applyInPandas(assemble, TILE_SCHEMA)
+
+
+def _build_levels(
+    spark: SparkSession, path: str, spec: PyramidSpec, reducer, level_dtype: str | None,
+    run_id: str, rname: str, rhash: str, done: set, ordinal: int, recursive: bool = True,
+    fuse_threshold: int = 64, fused_levels: int = 3, images: DataFrame | None = None,
+    G=None, verbose: bool = False,
+) -> None:
+    """THE level loop of ``build_pyramid`` and ``build_overviews``: levels
+    1..n over level 0, which is the stored base — or, with ``images``, the
+    images table decoded inside the first block's quarter stage. One
+    checkpointed Spark job per fused level block: the block size adapts
+    down when the group count would drop below the session parallelism
+    (scale-adaptive, not a constant), and to whatever ``done`` (resume)
+    still needs. Each block reads its input back from the previous
+    block's checkpoint — sequential columnar I/O that measured faster
+    end-to-end than DataFrame persist() on fat binary tile rows
+    (BENCH/BASELINE.md). Once a level fits ``fuse_threshold`` tiles the
+    tip is finished driver-side. Commit protocol: parquet first, then
+    manifest lineage rows — a level is committed iff its rows exist."""
+    import time
+
+    par = max(1, spark.sparkContext.defaultParallelism)
+
+    def commit(df: DataFrame, z: int, k: int) -> None:
+        nonlocal ordinal
+        t0 = time.perf_counter()
+        if k == 1:
+            write_level(df, path, z)
+        else:
+            write_levels_fused(df, path)
+        for zz in range(z, z + k):
+            append_manifest(spark, path, manifest_lineage(path, zz, run_id, rname, rhash, ordinal))
+            ordinal += 1
+        if verbose:
+            print(f"[build] levels {z}..{z + k - 1} committed in "
+                  f"{time.perf_counter() - t0:.2f}s", flush=True)
+
+    z = 1
+    while z <= spec.nlevels:
+        if z in done:
+            ordinal += 1
+            z += 1
+            continue
+        if not recursive:
+            base = (
+                read_level(spark, path, 0) if images is None
+                else base_tiles_from_images(images, G, spec)
+            )
+            commit(build_level_direct(base, z, spec, reducer, level_dtype), z, 1)
+            z += 1
+            continue
+        ntx, nty = tile_count((spec.base_w, spec.base_h), z - 1, spec.tilesize)
+        if z < spec.nlevels and ntx * nty <= fuse_threshold and (z > 1 or images is None):
+            # tail fusion: collect the tiny level, finish driver-side
+            prev_rows = [r.asDict() for r in read_level(spark, path, z - 1).collect()]
+            t0 = time.perf_counter()
+            tail = build_tail_driver(prev_rows, z, spec, reducer, level_dtype)
+            for zz in range(z, spec.nlevels + 1):
+                if zz not in done:
+                    write_level_driver(tail[zz], path, zz)
+                    append_manifest(
+                        spark, path, manifest_lineage(path, zz, run_id, rname, rhash, ordinal)
+                    )
+                ordinal += 1
+            if verbose:
+                print(f"[build] tail levels {z}..{spec.nlevels} fused driver-side "
+                      f"in {time.perf_counter() - t0:.2f}s", flush=True)
+            break
+        k = 1
+        for kk in range(2, max(1, int(fused_levels)) + 1):
+            if z + kk - 1 > spec.nlevels or any((z + j) in done for j in range(kk)):
+                break
+            if -(-ntx // (1 << kk)) * (-(-nty // (1 << kk))) < par:
+                break
+            k = kk
+        if z == 1 and images is not None:
+            built = build_levels1_fused_from_images(images, G, k, spec, reducer, level_dtype)
+        else:
+            built = build_levels_fused(
+                read_level(spark, path, z - 1), z, k, spec, reducer, level_dtype
+            )
+        commit(built, z, k)
+        z += k
+    # interchange metadata (reference writes GeoZarr multiscales attrs,
+    # src/PyramidScheme.jl:381-388): level discovery + plan constants for
+    # foreign readers and scan-free reopen
+    write_multiscales(
+        path, spec.nlevels, spec.tilesize, spec.base_w, spec.base_h, rname, rhash
+    )
 
 
 def build_overviews(
@@ -639,14 +615,13 @@ def build_overviews(
     the step that turns ``rasterize_polygons`` output (or any imported /
     foreign-written base) into a full pyramid.
 
-    Same commit protocol as ``build_pyramid``: parquet level first, then
-    manifest lineage rows (a level is committed iff its manifest rows
-    exist), so ``resume=True`` restarts mid-build safely; the geometric
-    tip fuses driver-side below ``fuse_threshold`` tiles. Sparse bases
-    are first-class: uncovered quarters assemble as NaN (float dtypes)
-    and skipmissing reducers do the rest."""
-    import time
-
+    Runs ``build_pyramid``'s level loop (``_build_levels``) over the
+    stored base: fused level blocks, the same commit protocol (parquet
+    level first, then manifest lineage rows — a level is committed iff its
+    manifest rows exist), so ``resume=True`` restarts mid-build safely; the
+    geometric tip fuses driver-side below ``fuse_threshold`` tiles. Sparse
+    bases are first-class: uncovered quarters assemble as NaN (float
+    dtypes) and skipmissing reducers do the rest."""
     from ..functions.reducers import REDUCERS
     from ..sources.catalog import read_multiscales
 
@@ -682,46 +657,9 @@ def build_overviews(
     rname = reducer_name(reducer)
     rhash = reducer_hash(reducer if level_dtype is None else f"{rname}@{level_dtype}")
     done = set(committed_levels(spark, path, run_id)) if resume else set()
-    ordinal = 0
-    z = 1
-    while z <= spec.nlevels:
-        if z in done:
-            ordinal += 1
-            z += 1
-            continue
-        ntx, nty = tile_count((spec.base_w, spec.base_h), z - 1, spec.tilesize)
-        if spec.nlevels - z + 1 >= 2 and ntx * nty <= fuse_threshold:
-            prev_rows = [r.asDict() for r in read_level(spark, path, z - 1).collect()]
-            t0 = time.perf_counter()
-            tail = build_tail_driver(prev_rows, z, spec, reducer, level_dtype)
-            for zz in range(z, spec.nlevels + 1):
-                if zz in done:
-                    ordinal += 1
-                    continue
-                write_level_driver(tail[zz], path, zz)
-                append_manifest(
-                    spark, path, manifest_lineage(path, zz, run_id, rname, rhash, ordinal)
-                )
-                ordinal += 1
-            if verbose:
-                print(
-                    f"[overviews] tail {z}..{spec.nlevels} fused driver-side "
-                    f"in {time.perf_counter() - t0:.2f}s",
-                    flush=True,
-                )
-            break
-        t0 = time.perf_counter()
-        built = build_level(read_level(spark, path, z - 1), z, spec, reducer, level_dtype)
-        write_level(built, path, z)
-        append_manifest(
-            spark, path, manifest_lineage(path, z, run_id, rname, rhash, ordinal)
-        )
-        if verbose:
-            print(f"[overviews] level {z} committed in {time.perf_counter() - t0:.2f}s", flush=True)
-        ordinal += 1
-        z += 1
-    write_multiscales(
-        path, spec.nlevels, spec.tilesize, spec.base_w, spec.base_h, rname, rhash
+    _build_levels(
+        spark, path, spec, reducer, level_dtype, run_id, rname, rhash, done, 0,
+        fuse_threshold=fuse_threshold, verbose=verbose,
     )
     return spec
 
@@ -738,7 +676,6 @@ def build_pyramid(
     resume: bool = False,
     fuse_threshold: int = 64,
     materialize_base: bool = True,
-    chain_in_memory: bool = False,
     level_dtype: str | None = None,
     strict_formats: bool = False,
     fused_levels: int = 3,
@@ -800,7 +737,6 @@ def build_pyramid(
             stacklevel=2,
         )
     import os
-    import time
 
     verbose = os.environ.get("PYRAMID_BUILD_VERBOSE", "") not in ("", "0")
     # surface rows the decode stage will drop (warn, or raise under
@@ -812,162 +748,32 @@ def build_pyramid(
     rhash = reducer_hash(reducer if level_dtype is None else f"{rname}@{level_dtype}")
     done = set(committed_levels(spark, path, run_id)) if resume else set()
     ordinal = 0
-
-    def commit(df: DataFrame, z: int) -> None:
-        nonlocal ordinal
-        t0 = time.perf_counter()
-        write_level(df, path, z)
-        append_manifest(
-            spark, path, manifest_lineage(path, z, run_id, rname, rhash, ordinal)
-        )
-        if verbose:
-            print(f"[build] level {z} committed in {time.perf_counter() - t0:.2f}s", flush=True)
-        ordinal += 1
-
-    def base_view() -> DataFrame:
-        return base_tiles_from_images(images, G, spec)
-
-    # Level chaining: by default the next level re-reads the just-written
-    # checkpoint — sequential columnar I/O that measured FASTER end-to-end
-    # than DataFrame persist() on fat 512 KB binary tile rows, where the
-    # InMemoryRelation columnar copy costs ~2x the parquet write itself
-    # (write+persist 24-37 s vs write-only 11 s at G=64/local[32], even with
-    # inMemoryColumnarStorage.batchSize tuned down; see BENCH/BASELINE.md).
-    # ``chain_in_memory=True`` restores the cache-chaining behavior for
-    # deployments where the checkpoint store is remote/slow object storage.
-    cached_prev: DataFrame | None = None
-
-    def set_cached(df: DataFrame | None) -> None:
-        nonlocal cached_prev
-        if cached_prev is not None:
-            cached_prev.unpersist()
-        cached_prev = df if chain_in_memory else None
-
-    def prev_level(z: int) -> DataFrame:
-        if cached_prev is not None:
-            return cached_prev
-        if z == 0 and not materialize_base:
-            return base_view()
-        return read_level(spark, path, z)
-
     if 0 not in done:
         if materialize_base:
-            base_df = base_view()
-            if chain_in_memory:
-                base_df = base_df.persist()
-            commit(base_df, 0)
-            set_cached(base_df)
+            write_level(base_tiles_from_images(images, G, spec), path, 0)
+            lineage = manifest_lineage(path, 0, run_id, rname, rhash, 0)
         else:
             # base stays the images table (reference parity: buildpyramids
             # writes only levels 1..n, never copies the base — at 10^12
             # images a z=0 copy would double storage and I/O); the manifest
             # still records the commit for resume bookkeeping.
-            append_manifest(
-                spark,
-                path,
-                [
-                    {
-                        "run_id": run_id,
-                        "z": 0,
-                        "partition_id": -1,
-                        "tile_count": -1,
-                        "bytes": -1,
-                        "reducer": rname,
-                        "reducer_hash": rhash,
-                        "committed_at_ordinal": 0,
-                    }
-                ],
-            )
-            ordinal += 1
-    z = 1
-    while z <= spec.nlevels:
-        if z in done:
-            set_cached(None)  # next uncommitted level must read from disk
-            ordinal += 1
-            z += 1
-            continue
-        ntx, nty = tile_count((spec.base_w, spec.base_h), z - 1, tilesize)
-        remaining = spec.nlevels - z + 1
-        if recursive and remaining >= 2 and ntx * nty <= fuse_threshold and (z > 1 or materialize_base):
-            # tail fusion: collect the tiny level, finish driver-side
-            prev_rows = [r.asDict() for r in prev_level(z - 1).collect()]
-            t0 = time.perf_counter()
-            tail = build_tail_driver(prev_rows, z, spec, reducer, level_dtype)
-            for zz in range(z, spec.nlevels + 1):
-                if zz in done:
-                    ordinal += 1
-                    continue
-                write_level_driver(tail[zz], path, zz)
-                append_manifest(
-                    spark, path, manifest_lineage(path, zz, run_id, rname, rhash, ordinal)
-                )
-                ordinal += 1
-            if verbose:
-                print(
-                    f"[build] tail levels {z}..{spec.nlevels} fused driver-side "
-                    f"in {time.perf_counter() - t0:.2f}s",
-                    flush=True,
-                )
-            break
-        if recursive:
-            # fused block size: as many levels as (a) exist, (b) resume
-            # still needs, (c) keep the group count at or above the session
-            # parallelism (guide §2: scale-adaptive, not a constant)
-            par = max(1, spark.sparkContext.defaultParallelism)
-            k = 1
-            for kk in range(2, max(1, int(fused_levels)) + 1):
-                if z + kk - 1 > spec.nlevels:
-                    break
-                if any((z + j) in done for j in range(kk)):
-                    break
-                groups = -(-ntx // (1 << kk)) * (-(-nty // (1 << kk)))
-                if groups < par:
-                    break
-                k = kk
-            if k > 1:
-                t0 = time.perf_counter()
-                if z == 1 and not materialize_base:
-                    built = build_levels1_fused_from_images(
-                        images, G, k, spec, reducer, level_dtype
-                    )
-                else:
-                    built = build_levels_fused(
-                        prev_level(z - 1), z, k, spec, reducer, level_dtype
-                    )
-                from ..sources.catalog import write_levels_fused
-
-                write_levels_fused(built, path)
-                for zz in range(z, z + k):
-                    append_manifest(
-                        spark, path,
-                        manifest_lineage(path, zz, run_id, rname, rhash, ordinal),
-                    )
-                    ordinal += 1
-                if verbose:
-                    print(
-                        f"[build] levels {z}..{z + k - 1} fused-committed in "
-                        f"{time.perf_counter() - t0:.2f}s",
-                        flush=True,
-                    )
-                set_cached(None)  # next block reads the checkpoint
-                z += k
-                continue
-            if z == 1 and not materialize_base:
-                built = build_level1_from_images(images, G, spec, reducer, level_dtype)
-            else:
-                built = build_level(prev_level(z - 1), z, spec, reducer, level_dtype)
-            if chain_in_memory:
-                built = built.persist()
-            commit(built, z)
-            set_cached(built)
-        else:
-            commit(build_level_direct(prev_level(0), z, spec, reducer, level_dtype), z)
-        z += 1
-    set_cached(None)
-    # interchange metadata (reference writes GeoZarr multiscales attrs,
-    # src/PyramidScheme.jl:381-388): level discovery + plan constants for
-    # foreign readers and scan-free reopen
-    write_multiscales(
-        path, spec.nlevels, tilesize, spec.base_w, spec.base_h, rname, rhash
+            lineage = [
+                {
+                    "run_id": run_id,
+                    "z": 0,
+                    "partition_id": -1,
+                    "tile_count": -1,
+                    "bytes": -1,
+                    "reducer": rname,
+                    "reducer_hash": rhash,
+                    "committed_at_ordinal": 0,
+                }
+            ]
+        append_manifest(spark, path, lineage)
+        ordinal = 1
+    _build_levels(
+        spark, path, spec, reducer, level_dtype, run_id, rname, rhash, done, ordinal,
+        recursive, fuse_threshold, fused_levels,
+        None if materialize_base else images, G, verbose,
     )
     return spec

@@ -26,14 +26,12 @@ scheduling/commit overhead).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.codec import decode_tile, encode_tile
-from ..functions.reducers import block_reduce, is_decomposable, reducer_hash, reducer_name
+from ..functions.reducers import is_decomposable, reducer_hash, reducer_name
 from ..sources.catalog import (
     TILE_DATA_COLS,
     TILE_SCHEMA,
@@ -44,21 +42,16 @@ from ..sources.catalog import (
     write_multiscales,
 )
 from .build import (
-    QUARTER_SCHEMA,
     SUPPORTED_IMAGE_FMTS,
     PyramidSpec,
-    _cast_level,
     _decode_payload,
     _grid_dims,
-    _rows_to_pdf,
+    _level_block,
     _tile_row,
 )
 
 CUBE_TILE_SCHEMA = T.StructType(
     [T.StructField("t", T.IntegerType())] + list(TILE_SCHEMA.fields)
-)
-CUBE_QUARTER_SCHEMA = T.StructType(
-    [T.StructField("t", T.IntegerType())] + list(QUARTER_SCHEMA.fields)
 )
 
 
@@ -142,54 +135,11 @@ def base_cube_tiles(
 def build_cube_level(
     prev: DataFrame, z: int, spec: PyramidSpec, reducer, level_dtype: str | None = None
 ) -> DataFrame:
-    """One recursive step for every t-slice at once: the downsample is the
-    same narrow map stage, and ``t`` simply joins the shuffle key — the
-    'pass through aggregation untouched' semantics, relationally."""
-    half = spec.tilesize // 2
-
-    def down(batches):
-        for pdf in batches:
-            out = {
-                k: []
-                for k in ("t", "ptx", "pty", "qx", "qy", "bytes", "w", "h", "c", "dtype")
-            }
-            for t, tx, ty, buf, w, h, c, dt in zip(
-                pdf["t"], pdf["tx"], pdf["ty"], pdf["bytes"],
-                pdf["w"], pdf["h"], pdf["c"], pdf["dtype"],
-            ):
-                arr = decode_tile(buf, int(h), int(w), dt, int(c))
-                red = _cast_level(block_reduce(arr, reducer), level_dtype)
-                out["t"].append(int(t))
-                out["ptx"].append(int(tx) >> 1)
-                out["pty"].append(int(ty) >> 1)
-                out["qx"].append(int(tx) & 1)
-                out["qy"].append(int(ty) & 1)
-                out["bytes"].append(encode_tile(red))
-                out["w"].append(red.shape[1])
-                out["h"].append(red.shape[0])
-                out["c"].append(int(c))
-                out["dtype"].append(str(red.dtype.name))
-            pdf_out = pd.DataFrame(out)
-            for col in ("t", "ptx", "pty", "qx", "qy", "w", "h", "c"):
-                pdf_out[col] = pdf_out[col].astype("int32")
-            yield pdf_out
-
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        t, ptx, pty = int(key[0]), int(key[1]), int(key[2])
-        c = int(pdf["c"].iloc[0])
-        dt = pdf["dtype"].iloc[0]
-        W = int((pdf["qx"] * half + pdf["w"]).max())
-        H = int((pdf["qy"] * half + pdf["h"]).max())
-        shape = (H, W, c) if c > 1 else (H, W)
-        arr = np.zeros(shape, dtype=np.dtype(dt))
-        for qx, qy, buf, w, h in zip(pdf["qx"], pdf["qy"], pdf["bytes"], pdf["w"], pdf["h"]):
-            q = decode_tile(buf, int(h), int(w), dt, c)
-            x0, y0 = int(qx) * half, int(qy) * half
-            arr[y0 : y0 + int(h), x0 : x0 + int(w)] = q
-        return _cube_rows_to_pdf([dict(_tile_row(spec, z, ptx, pty, arr), t=t)])
-
-    quarters = prev.mapInPandas(down, CUBE_QUARTER_SCHEMA)
-    return quarters.groupBy("t", "ptx", "pty").applyInPandas(assemble, CUBE_TILE_SCHEMA)
+    """One recursive step for every t-slice at once: the shared level
+    block (``build._level_block``, k=1) with ``t`` as a lead key — it
+    joins the shuffle key and never the aggregated values, the 'pass
+    through aggregation untouched' semantics, relationally."""
+    return _level_block(prev, False, z, 1, spec, reducer, level_dtype, lead=("t",))
 
 
 CUBE_DATA_COLS = ["t", *TILE_DATA_COLS]
@@ -314,13 +264,10 @@ def build_cube(
 
     if 0 not in done:
         commit(base_cube_tiles(images, G, spec, t_col), 0)
-    prev = read_cube_level(spark, path, 0)
     for z in range(1, spec.nlevels + 1):
-        if z in done:
-            prev = read_cube_level(spark, path, z)
-            continue
-        commit(build_cube_level(prev, z, spec, reducer, level_dtype), z)
-        prev = read_cube_level(spark, path, z)
+        if z not in done:
+            prev = read_cube_level(spark, path, z - 1)
+            commit(build_cube_level(prev, z, spec, reducer, level_dtype), z)
     write_multiscales(
         path, spec.nlevels, tilesize, spec.base_w, spec.base_h, rname, rhash
     )

@@ -87,6 +87,7 @@ from ..functions.reducers import block_reduce
 from ..operators.build import (
     PyramidSpec,
     _grid_dims,
+    _mosaic,
     _rows_to_pdf,
     _tile_row,
     audit_unsupported_images,
@@ -362,22 +363,6 @@ def _children_of(level_df: DataFrame, parents: list[tuple[int, int]]) -> DataFra
     return level_df.where(pushable).where(pair_in)
 
 
-def _assemble_from_quarters(quarters, half):
-    """[(qx, qy, quarter_array)] -> assembled parent array (ragged-edge
-    aware: extent is the max covered; interior gaps from a SPARSE base are
-    missing data — NaN for float dtypes, 0 for ints which cannot represent
-    missing; dense streams never hit either, matching build.py)."""
-    W = max(qx * half + q.shape[1] for qx, _, q in quarters)
-    H = max(qy * half + q.shape[0] for _, qy, q in quarters)
-    c = quarters[0][2].shape[2] if quarters[0][2].ndim == 3 else 1
-    shape = (H, W, c) if c > 1 else (H, W)
-    dt = quarters[0][2].dtype
-    arr = np.full(shape, np.nan if dt.kind == "f" else 0, dtype=dt)
-    for qx, qy, q in quarters:
-        arr[qy * half : qy * half + q.shape[0], qx * half : qx * half + q.shape[1]] = q
-    return arr
-
-
 #: cascade pass depth: each pass recomputes K levels inside ONE
 #: applyInPandas job, grouped by the pass-top ancestor. 4^K base
 #: descendants bound the group (K=3 -> <=64 base + 21 ancestor tiles
@@ -507,10 +492,10 @@ def _cascade_repair(
                         child = disk.get(ck)
                     if child is None:
                         continue  # ragged edge: tile doesn't exist
-                    quarters.append((dx, dy, block_reduce(child, reducer)))
+                    quarters.append((dy * half, dx * half, block_reduce(child, reducer)))
             if not quarters:
                 continue
-            arr = _assemble_from_quarters(quarters, half)
+            arr = _mosaic(quarters)
             computed[(z,) + lead + (ptx, pty)] = arr
             row = dict(_tile_row(spec, z, ptx, pty, arr), lvl=z)
             if with_t:

@@ -140,6 +140,35 @@ def test_cube_resume_and_reducer_guard(spark, tmp_path):
         build_cube(spark, images, str(tmp_path / "c3"), G=4, reducer="mode")
 
 
+def test_cube_sparse_slot_fills_nan_not_zero(spark, tmp_path):
+    """A cube whose t=0 slice is missing one mosaic slot: the absent
+    quarter must assemble as NaN (missing), not 0, and the stored stats
+    must skip it — the flat build's contract
+    (test_rasterize::test_sparse_mosaic_build_fills_nan_not_zero)."""
+    from pyramidscheme_jl_spark.sources.synth import image_pixels
+
+    rows = [
+        {**r, "t": t}
+        for t in (0, 1)
+        for r in synth_images(G=2, size=64)
+        if not (t == 0 and r["image_id"] == "img-00000003")
+    ]
+    path = str(tmp_path / "sparse_cube")
+    images = spark.createDataFrame(rows, CUBE_DDL)
+    build_cube(spark, images, path, G=2, reducer="mean", tilesize=64, run_id="s")
+    lv1 = {(r["t"], r["tx"], r["ty"]): r for r in read_cube_level(spark, path, 1).collect()}
+    r = lv1[(0, 0, 0)]
+    arr = decode_tile(r["bytes"], r["h"], r["w"], r["dtype"], r["c"])
+    # quarter (1,1) came from the missing image: NaN, not zeros
+    assert np.isnan(arr[32:, 32:]).all()
+    want = image_pixels(0, 0, 64).reshape(32, 2, 32, 2).mean(axis=(1, 3))
+    assert (arr[:32, :32] == want).all()
+    assert r["vmin"] == np.nanmin(arr) and not np.isnan(r["vmean"])
+    # the complete t=1 slice has no gap
+    full = lv1[(1, 0, 0)]
+    assert not np.isnan(decode_tile(full["bytes"], full["h"], full["w"], full["dtype"], full["c"])).any()
+
+
 def test_cube_base_decodes_encoded_formats(spark, tmp_path):
     """build_cube ingests every SUPPORTED_IMAGE_FMTS payload like the flat
     build — png/jpeg rows must decode, not silently drop (ADVICE r3)."""

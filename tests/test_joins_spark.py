@@ -81,7 +81,8 @@ def test_zonal_stats(spark, points, polygons):
     z = {r["polygon_id"]: r for r in zonal_stats(spark, pts, polygons, RES, WORLD).collect()}
     # oracle for rect-a: points strictly inside by the half-open rule
     rows = pts.collect()
-    want = [r for r in rows if (r["point_id"], "rect-a") in oracle_pip(rows, polygons)]
+    pairs = oracle_pip(rows, polygons)
+    want = [r for r in rows if (r["point_id"], "rect-a") in pairs]
     assert z["rect-a"]["n"] == len(want)
     assert z["rect-a"]["sum_value"] == pytest.approx(sum(r["value"] for r in want))
     assert z["rect-a"]["mean_value"] == pytest.approx(
