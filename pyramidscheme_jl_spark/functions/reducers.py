@@ -28,6 +28,21 @@ lambdas/closures.
 
 All reducers are whole-array numpy (no Python loops over pixels) so they run
 inside Arrow-batched pandas UDFs at full vector speed.
+
+**The 2x2 kernel.** Every pyramid level runs ``fac == 2``, so mean/sum/
+min/max there skip the float64 block stack and combine the four strided
+views ``a[0::2,0::2]``, ``a[0::2,1::2]``, ``a[1::2,0::2]``, ``a[1::2,1::2]``
+(one windowed pass, like the reference's ``aggregate_by_factor``) —
+byte-identical to the block-stack formulas, ~10x faster. Bit-exactness
+fixes the op order: sums are ``(((0.0 + v0) + v1) + v2) + v3``, numpy's
+own order for 4 elements (the leading ``0.0 +`` turns -0.0 into +0.0);
+the NaN-aware mean is ``Σ where(~isnan, v, 0)`` over the NaN-padded views
+divided by the integer count, and a plain sum / 4 is taken only for an
+unpadded input with no NaN; float min/max chain ``np.fmin``/``np.fmax``
+(``nanmin`` is ``fmin.reduce``), integer ones ``np.minimum``/``np.maximum``.
+The block stack still serves ``fac > 2`` (numpy sums 16+ elements
+pairwise, which strided adds would not reproduce bit for bit), median,
+mode and callables.
 """
 
 from __future__ import annotations
@@ -157,6 +172,61 @@ def _nan_block_stack(a: np.ndarray, fac: int) -> np.ndarray:
     return _blocks(work, fac)
 
 
+def _quads(a: np.ndarray):
+    """The four strided corner views of an even-shaped array, in block-stack
+    order: block element k of ``_blocks(a, 2)`` is view k here."""
+    return a[0::2, 0::2], a[0::2, 1::2], a[1::2, 0::2], a[1::2, 1::2]
+
+
+def _add4(views) -> np.ndarray:
+    """``(((0.0 + v0) + v1) + v2) + v3`` in float64 — numpy's own order for a
+    4-element ``sum``/``nanmean``; the leading ``0.0 +`` turns -0.0 into +0.0."""
+    v0, v1, v2, v3 = views
+    tot = np.add(v0, 0.0, dtype=np.float64)
+    with np.errstate(invalid="ignore"):  # inf + -inf -> NaN, as numpy's sum
+        for v in (v1, v2, v3):
+            np.add(tot, v, out=tot)
+    return tot
+
+
+def _chain(op, views, dtype=None) -> np.ndarray:
+    """``((v0 op v1) op v2) op v3`` — a 4-element reduce's left-to-right order."""
+    v0, v1, v2, v3 = views
+    out = op(v0, v1, dtype=dtype)
+    for v in (v2, v3):
+        op(out, v, out=out, dtype=dtype)
+    return out
+
+
+def _reduce2(a: np.ndarray, reducer: str) -> np.ndarray:
+    """``fac == 2`` mean/sum/min/max from the four strided views, byte-identical
+    to the block-stack path (module docstring)."""
+    is_float = np.issubdtype(a.dtype, np.floating)
+    if reducer in ("min", "max"):
+        if is_float:  # nanmin/nanmax are fmin/fmax.reduce
+            op, fill = (np.fmin if reducer == "min" else np.fmax), np.nan
+        else:
+            info = np.iinfo(a.dtype)
+            op, fill = (np.minimum, info.max) if reducer == "min" else (np.maximum, info.min)
+        return _chain(op, _quads(_pad_to_multiple(a, 2, fill)))
+    if reducer == "sum" and not is_float:
+        return _chain(np.add, _quads(_pad_to_multiple(a, 2, 0)), np.int64)
+    # NaN propagates through +, so a NaN-free plain sum proves a NaN-free input
+    if a.shape[0] % 2 == 0 and a.shape[1] % 2 == 0:
+        tot = _add4(_quads(a))
+        if not (is_float and np.isnan(tot).any()):
+            return np.true_divide(tot, 4, out=tot) if reducer == "mean" else tot
+    # NaN-aware: Σ where(~isnan, v, 0) over the NaN-padded views, / int count
+    v = _quads(_pad_to_multiple(a.astype(np.float64, copy=False), 2, np.nan))
+    ok = [~np.isnan(x) for x in v]
+    tot = _add4([np.where(m, x, 0.0) for m, x in zip(ok, v)])
+    if reducer == "sum":
+        return tot
+    cnt = _chain(np.add, ok, np.intp)
+    with np.errstate(invalid="ignore"):  # all-NaN block: 0/0 -> NaN
+        return np.true_divide(tot, cnt, out=tot)
+
+
 def block_reduce(a: np.ndarray, reducer, fac: int = 2) -> np.ndarray:
     """Reduce spatial blocks of ``fac x fac`` over the first two dims.
 
@@ -187,6 +257,8 @@ def block_reduce(a: np.ndarray, reducer, fac: int = 2) -> np.ndarray:
         raise KeyError(f"unknown reducer {reducer!r}")
     if reducer == "mode":
         return _block_mode(a, fac)
+    if fac == 2 and reducer in DECOMPOSABLE:
+        return _reduce2(a, reducer)
 
     is_float = np.issubdtype(a.dtype, np.floating)
     if reducer in ("mean", "median"):

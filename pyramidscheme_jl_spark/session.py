@@ -10,6 +10,10 @@ Tuning rationale (SURVEY.md §4 physical-execution notes):
   with runtime re-planning.
 - ``shuffle.partitions`` defaults to 2x cores locally; at cluster scale this
   is expected to be overridden (AQE coalesces down anyway).
+- ``files.maxPartitionBytes`` is 16m only under a ``local``/``local[...]``
+  master, where many cores share small single-file tables; any other
+  master keeps Spark's 128m default, because cluster-scale scans want
+  fewer, larger splits. ``SPARK_GRAFT_MAX_PARTITION_BYTES`` overrides both.
 """
 
 from __future__ import annotations
@@ -70,6 +74,79 @@ def _tune_driver_malloc() -> None:
         pass  # non-glibc platform: defaults stand
 
 
+def spark_conf(
+    master: str,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict | None = None,
+    env=os.environ,
+) -> dict:
+    """The engine's session conf for ``master``, ``extra_conf`` applied last.
+
+    Pure (reads only ``env``), so both branches of the master-dependent
+    defaults are testable without starting a session.
+    """
+    cores = 32
+    if master.startswith("local[") and master[6:-1].isdigit():
+        cores = int(master[6:-1])
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or max(8, cores)),
+        # keep the Python-worker pool alive and cheap: fat Arrow-batched UDF
+        # stages re-fork workers (re-importing numpy/pandas per task) without
+        # these, which measured 2-3x slower on 32 cores
+        "spark.python.worker.reuse": "true",
+        "spark.python.worker.faulthandler.enabled": "false",
+        "spark.python.daemon.module": "pyramidscheme_jl_spark.daemon_preload",
+        # glibc malloc tuning for python workers ONLY (executorEnv is the env
+        # channel that reaches them — and scoping it there keeps the JVM's
+        # native allocator untouched): tile UDFs churn >128KB buffers which
+        # glibc otherwise mmap()s; munmap TLB-shootdown IPIs hit every core
+        # (measured 60-87% system time at 32 workers)
+        "spark.executorEnv.MALLOC_MMAP_THRESHOLD_": str(1 << 30),
+        "spark.executorEnv.MALLOC_TRIM_THRESHOLD_": str(1 << 30),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # byte-capped Arrow batches: fat 512KB tile rows batch ~32/batch,
+        # skinny join rows batch 10k/batch — a fixed small record cap was
+        # measured 10x slower on skinny-row UDF stages (62k tiny batches)
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.sql.execution.arrow.maxBytesPerBatch": str(16 * 1024 * 1024),
+        # vectorized parquet reader batches 4096 rows by default — with fat
+        # binary tile rows (512 KB) that is a 2 GB columnar batch per task;
+        # 32 concurrent tasks then GC-thrash the JVM while Python workers
+        # starve (measured: 38 s blocked in open_stream). 128 rows caps a
+        # batch at ~64 MB worst-case.
+        "spark.sql.parquet.columnarReaderBatchSize": "128",
+        # DataFrame cache (InMemoryRelation) packs 10k rows per columnar
+        # batch by default — multi-GB buffers on fat binary tile rows, and
+        # compression attempts on incompressible pixel bytes; measured 36.6s
+        # -> 23.8s for a cache-while-write of a 537 MB level at batchSize 32
+        "spark.sql.inMemoryColumnarStorage.batchSize": "32",
+        "spark.sql.inMemoryColumnarStorage.compressed": "false",
+        "spark.sql.parquet.compression.codec": "zstd",
+        "spark.driver.memory": env.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        # decision-sized driver collects (connected_components driver tier,
+        # bounded at 50M edges = ~800 MB of Arrow longs) need more than the
+        # 1g default; 8g stays well inside the 24g driver heap
+        "spark.driver.maxResultSize": "8g",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.ui.enabled": "false",
+    }
+    # scan split size. Local default 16m: the bench host pairs 32 cores with
+    # 100MB-class single-file tables, and the stock 128m leaves e.g. a 126 MB
+    # lineitem scan (6 row groups) as ONE task feeding every aggregation/join
+    # stage built on it. Any other master keeps Spark's default (guide: large
+    # sequential scans want fewer, larger map tasks feeding any shuffle).
+    # SPARK_GRAFT_MAX_PARTITION_BYTES overrides either.
+    local = master == "local" or master.startswith("local[")
+    split = env.get("SPARK_GRAFT_MAX_PARTITION_BYTES") or ("16m" if local else None)
+    if split:
+        conf["spark.sql.files.maxPartitionBytes"] = split
+    conf.update(extra_conf or {})
+    return conf
+
+
 def get_spark(
     app: str = "pyramidscheme-spark",
     master: str | None = None,
@@ -83,67 +160,8 @@ def get_spark(
     pkg_root = str(pathlib.Path(__file__).resolve().parent.parent)
     if pkg_root not in os.environ.get("PYTHONPATH", ""):
         os.environ["PYTHONPATH"] = pkg_root + os.pathsep + os.environ.get("PYTHONPATH", "")
-    cores = 32
-    if master.startswith("local[") and master[6:-1].isdigit():
-        cores = int(master[6:-1])
-    b = (
-        SparkSession.builder.appName(app)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(8, cores)))
-        # keep the Python-worker pool alive and cheap: fat Arrow-batched UDF
-        # stages re-fork workers (re-importing numpy/pandas per task) without
-        # these, which measured 2-3x slower on 32 cores
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.python.worker.faulthandler.enabled", "false")
-        .config("spark.python.daemon.module", "pyramidscheme_jl_spark.daemon_preload")
-        # glibc malloc tuning for python workers ONLY (executorEnv is the env
-        # channel that reaches them — and scoping it there keeps the JVM's
-        # native allocator untouched): tile UDFs churn >128KB buffers which
-        # glibc otherwise mmap()s; munmap TLB-shootdown IPIs hit every core
-        # (measured 60-87% system time at 32 workers)
-        .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", str(1 << 30))
-        .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", str(1 << 30))
-        # scan split size, env-parameterised. Local default 16m: the bench
-        # host pairs 32 cores with 100MB-class single-file tables, and the
-        # stock 128m leaves e.g. a 126 MB lineitem scan (6 row groups) as
-        # ONE task feeding every aggregation/join stage built on it. At
-        # cluster scale override toward 128m-1g (guide: large sequential
-        # scans want fewer, larger map tasks feeding any shuffle).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # byte-capped Arrow batches: fat 512KB tile rows batch ~32/batch,
-        # skinny join rows batch 10k/batch — a fixed small record cap was
-        # measured 10x slower on skinny-row UDF stages (62k tiny batches)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(16 * 1024 * 1024))
-        # vectorized parquet reader batches 4096 rows by default — with fat
-        # binary tile rows (512 KB) that is a 2 GB columnar batch per task;
-        # 32 concurrent tasks then GC-thrash the JVM while Python workers
-        # starve (measured: 38 s blocked in open_stream). 128 rows caps a
-        # batch at ~64 MB worst-case.
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        # DataFrame cache (InMemoryRelation) packs 10k rows per columnar
-        # batch by default — multi-GB buffers on fat binary tile rows, and
-        # compression attempts on incompressible pixel bytes; measured 36.6s
-        # -> 23.8s for a cache-while-write of a 537 MB level at batchSize 32
-        .config("spark.sql.inMemoryColumnarStorage.batchSize", "32")
-        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        # decision-sized driver collects (connected_components driver tier,
-        # bounded at 50M edges = ~800 MB of Arrow longs) need more than the
-        # 1g default; 8g stays well inside the 24g driver heap
-        .config("spark.driver.maxResultSize", "8g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra_conf or {}).items():
+    b = SparkSession.builder.appName(app).master(master)
+    for k, v in spark_conf(master, shuffle_partitions, extra_conf).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     if not getattr(spark, "_pyramid_pkg_shipped", False):

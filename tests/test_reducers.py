@@ -1,5 +1,7 @@
 """Block-reducer semantics vs naive numpy oracles (FIXTURES.md §6)."""
 
+import warnings
+
 import numpy as np
 import pytest
 
@@ -183,3 +185,61 @@ def test_callable_digest_position_independent():
     assert reducer_hash(g) == reducer_hash(g)
     # distinct from a named reducer
     assert reducer_hash(ns1["f"]) != reducer_hash("mean")
+
+
+def _block_stack_oracle(a, reducer):
+    """The block-stack formulas the ``fac == 2`` strided kernel replaces."""
+    from pyramidscheme_jl_spark.functions.reducers import _blocks, _nan_block_stack, _pad_to_multiple
+
+    with np.errstate(invalid="ignore"), warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        if reducer == "mean":
+            return np.nanmean(_nan_block_stack(a, 2), axis=2)
+        is_float = a.dtype.kind == "f"
+        if reducer == "sum":
+            work = a.astype(np.float64 if is_float else np.int64)
+            if is_float:
+                work = np.where(np.isnan(work), 0.0, work)
+            return _blocks(_pad_to_multiple(work, 2, 0), 2).sum(axis=2)
+        if is_float:
+            b = _blocks(_pad_to_multiple(a, 2, np.nan), 2)
+            return (np.nanmin if reducer == "min" else np.nanmax)(b, axis=2)
+        info = np.iinfo(a.dtype)
+        b = _blocks(_pad_to_multiple(a, 2, info.max if reducer == "min" else info.min), 2)
+        return (np.min if reducer == "min" else np.max)(b, axis=2)
+
+
+def _fuzz_array(rng, dtype, shape):
+    if np.dtype(dtype).kind != "f":
+        info = np.iinfo(dtype)
+        return rng.integers(info.min, info.max, size=shape, dtype=dtype, endpoint=True)
+    special = np.array([0.0, -0.0, 1.5, -2.25, np.inf, -np.inf, 3e30, np.nan, -np.nan])
+    a = np.where(rng.random(shape) < 0.5, rng.normal(size=shape), rng.choice(special, size=shape))
+    a = a.astype(dtype)
+    a[rng.random(shape) < 0.15] = np.nan  # scattered NaN
+    if a.shape[0] >= 2 and a.shape[1] >= 2:
+        a[:2, :2] = np.nan  # one all-NaN block
+    return a
+
+
+@pytest.mark.parametrize("reducer", ["mean", "sum", "min", "max"])
+@pytest.mark.parametrize("dtype", ["uint8", "uint16", "int32", "float32", "float64"])
+def test_strided_kernel_byte_identical_to_block_stack(reducer, dtype):
+    rng = np.random.default_rng(sum(map(ord, reducer + dtype)))
+    shapes = [(8, 8), (2, 2), (7, 9), (1, 1), (1, 6), (5, 1), (0, 4), (33, 17), (6, 10, 3), (9, 7, 2)]
+    shapes += [tuple(rng.integers(1, 40, size=2)) + ((3,) if i % 3 == 0 else ()) for i in range(40)]
+    for shape in shapes:
+        a = _fuzz_array(rng, dtype, shape)
+        got, want = block_reduce(a, reducer), _block_stack_oracle(a, reducer)
+        assert (got.dtype, got.shape) == (want.dtype, want.shape), shape
+        assert got.tobytes() == want.tobytes(), (shape, a)
+
+
+@pytest.mark.parametrize("reducer", ["mean", "sum"])
+def test_strided_kernel_signed_zero(reducer):
+    # numpy's 4-element sum starts from +0.0: an all -0.0 block gives +0.0
+    a = np.full((4, 6), -0.0)
+    for x in (a, a[:3, :5]):
+        got = block_reduce(x, reducer)
+        assert not np.signbit(got).any()
+        assert got.tobytes() == _block_stack_oracle(x, reducer).tobytes()
