@@ -16,11 +16,11 @@ Every pyramid writer shares one kernel, as the reference builds every
 level with one windowed kernel (src/PyramidScheme.jl:216-253).
 ``_mosaic`` places ``(y0, x0, array)`` pieces into a plane (gaps NaN for
 float dtypes) for the fused blocks, ``build_overviews``, the direct
-build, the driver-side tail, cube levels (``operators/cube.py``) and
-streaming ancestor repair (``streaming/ingest.py``); ``_cut`` slices a
-plane into tile rows; ``_quarter_gen`` is the one quarter emitter
-(source: stored tiles or image payloads; optional lead keys such as the
-cube ``t``).
+build, the driver-side tail, cube levels (``operators/cube.py``),
+streaming ancestor repair (``streaming/ingest.py``) and the driver reads
+(``operators/read.py``); ``_cut`` slices a plane into tile rows;
+``_quarter_gen`` is the one quarter emitter (source: stored tiles or
+image payloads; optional lead keys such as the cube ``t``).
 
 Scale notes (why this shape at 100 TB):
 
@@ -66,6 +66,7 @@ from ..sources.catalog import (
     committed_levels,
     manifest_lineage,
     read_level,
+    read_tiles_local,
     write_level,
     write_level_driver,
     write_levels_fused,
@@ -304,17 +305,17 @@ def _cast_level(arr: np.ndarray, level_dtype: str | None) -> np.ndarray:
     return arr.astype(np.dtype(level_dtype), copy=False)
 
 
-def _mosaic(pieces) -> np.ndarray:
-    """THE tile-mosaic kernel: ``(y0, x0, array)`` pieces -> one plane whose
-    extent is the furthest pixel any piece covers (ragged edges keep ceil
-    semantics). Uncovered area — a SPARSE base: rasterized/partial
-    mosaics, a missing image — is missing data: NaN for float dtypes so
+def _mosaic(pieces, shape: tuple[int, int] | None = None) -> np.ndarray:
+    """THE tile-mosaic kernel: ``(y0, x0, array)`` pieces -> one plane of
+    ``shape`` (default: to the furthest pixel any piece covers; ragged
+    edges keep ceil semantics). Uncovered area — a SPARSE base: rasterized/partial
+    mosaics, a missing image or tile — is missing data: NaN for float dtypes so
     skipmissing reducers and tile stats stay correct; int dtypes have no
     missing representation and keep 0. Dense builds never hit either case."""
     pieces = list(pieces)
     a0 = pieces[0][2]
-    H = max(y0 + a.shape[0] for y0, _, a in pieces)
-    W = max(x0 + a.shape[1] for _, x0, a in pieces)
+    H, W = shape or (max(y0 + a.shape[0] for y0, _, a in pieces),
+                     max(x0 + a.shape[1] for _, x0, a in pieces))
     fill = np.nan if a0.dtype.kind == "f" else 0
     plane = np.full((H, W) + a0.shape[2:], fill, dtype=a0.dtype)
     for y0, x0, a in pieces:
@@ -463,8 +464,8 @@ def build_tail_driver(
     Once a level fits in a handful of tiles, the remaining log4 levels are
     kilobytes — any distributed stage is pure fixed overhead (the reference
     runs its whole build in one windowed kernel for the same reason,
-    src/PyramidScheme.jl:216-253). One collect of the <=threshold tiles,
-    numpy reduce chain, direct parquet writes. Returns {z: tile_rows}.
+    src/PyramidScheme.jl:216-253). One ``read_tiles_local`` of the <=threshold
+    tiles, numpy reduce chain, direct parquet writes. Returns {z: tile_rows}.
     """
     T_ = spec.tilesize
     plane = _mosaic(
@@ -560,8 +561,8 @@ def _build_levels(
             continue
         ntx, nty = tile_count((spec.base_w, spec.base_h), z - 1, spec.tilesize)
         if z < spec.nlevels and ntx * nty <= fuse_threshold and (z > 1 or images is None):
-            # tail fusion: collect the tiny level, finish driver-side
-            prev_rows = [r.asDict() for r in read_level(spark, path, z - 1).collect()]
+            # tail fusion: read the tiny level driver-side, finish there
+            prev_rows = read_tiles_local(path, z - 1).to_dict("records")
             t0 = time.perf_counter()
             tail = build_tail_driver(prev_rows, z, spec, reducer, level_dtype)
             for zz in range(z, spec.nlevels + 1):

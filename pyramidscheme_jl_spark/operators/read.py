@@ -1,11 +1,12 @@
 """Read-side operators (SURVEY.md §2.4-§2.7): windowed reads, subsetting,
 elementwise maps, zip-joins (broadcast), equality, concatenation.
 
-Design: every read is a *pruned scan* — ``z`` is a partition column
-(partition pruning) and ``tx``/``ty`` are top-level int columns (parquet
-min/max row-group skipping), so the viewport query touches exactly one
-level and only intersecting tiles, the Spark analogue of the reference's
-``selectlevel`` chunk-pruned read (src/PyramidScheme.jl:447-467).
+Design: driver-sized reads (``read_window``, ``read(z)``) run no Spark
+job — ``catalog.read_tiles_local`` opens only the files and row groups
+holding the wanted tiles of one level, the analogue of the reference's
+``selectlevel`` chunk-pruned read (src/PyramidScheme.jl:447-467), and
+``build._mosaic`` assembles them. Distributed consumers scan with
+``catalog.read_level`` (``z`` partition pruning, tx/ty row-group stats).
 """
 
 from __future__ import annotations
@@ -17,12 +18,21 @@ from pyspark.sql import functions as F
 
 from ..functions.codec import decode_tile, encode_tile
 from ..plans.grid import agg_axis, extents_intersect, plan_window
-from ..sources.catalog import TILE_SCHEMA, read_level
-from .build import PyramidSpec, _rows_to_pdf, _tile_row
+from ..sources.catalog import TILE_SCHEMA, read_tiles_local
+from .build import PyramidSpec, _mosaic, _rows_to_pdf, _tile_row
 
 # ---------------------------------------------------------------------------
 # L1-L3 + F1-F3: windowed viewport read
 # ---------------------------------------------------------------------------
+
+
+def _pieces(tiles: pd.DataFrame, T_: int, ty0: int = 0, tx0: int = 0):
+    """Decoded ``_mosaic`` pieces placed relative to tile ``(tx0, ty0)``."""
+    return (
+        ((r["ty"] - ty0) * T_, (r["tx"] - tx0) * T_,
+         decode_tile(r["bytes"], r["h"], r["w"], r["dtype"], r["c"]))
+        for r in tiles.to_dict("records")
+    )
 
 
 def read_window(
@@ -34,38 +44,27 @@ def read_window(
 ):
     """The signature read query (reference ``plot``/``selectlevel`` loop,
     ext/PyramidSchemeMakieExt.jl:55-106): pick the level for the viewport,
-    scan only intersecting tiles of that level, crop, assemble.
+    read only its intersecting tiles driver-side (``read_tiles_local``, no
+    Spark job), assemble with ``_mosaic``, crop. ``spark`` is unused.
 
     Returns ``(array, x_axis, y_axis, z)``; array is ``<= target_imsize``
-    by construction so the driver-side assembly is small. Non-intersecting
-    extent short-circuits to an empty array (reference :456).
+    by construction. Missing tiles read as NaN for float dtypes (0 for
+    ints), like stored no-data. A non-intersecting extent or a tile range
+    with no stored tile returns an empty array (reference :456).
     """
     base_ext = (0.0, 0.0, float(spec.base_w), float(spec.base_h))
     if not extents_intersect(extent, base_ext):
         return np.zeros((0, 0)), np.zeros(0), np.zeros(0), 0
     p = plan_window((spec.base_w, spec.base_h), spec.nlevels, extent, target_imsize, spec.tilesize)
-    rows = (
-        read_level(spark, path, p.z)
-        .where(F.col("tx").between(p.tx0, p.tx1) & F.col("ty").between(p.ty0, p.ty1))
-        .collect()
-    )
-    if not rows:
+    tiles = read_tiles_local(path, p.z, range(p.tx0, p.tx1 + 1), range(p.ty0, p.ty1 + 1))
+    if not len(tiles):
         return np.zeros((0, 0)), np.zeros(0), np.zeros(0), p.z
-    dt = rows[0]["dtype"]
-    c = rows[0]["c"]
-    shape = (p.py1 - p.py0, p.px1 - p.px0) + ((c,) if c > 1 else ())
-    out = np.zeros(shape, dtype=np.dtype(dt))
     T_ = spec.tilesize
-    for r in rows:
-        a = decode_tile(r["bytes"], r["h"], r["w"], r["dtype"], r["c"])
-        gx0, gy0 = r["tx"] * T_, r["ty"] * T_  # level-pixel origin of the tile
-        sx0, sy0 = max(p.px0, gx0), max(p.py0, gy0)
-        sx1, sy1 = min(p.px1, gx0 + r["w"]), min(p.py1, gy0 + r["h"])
-        if sx1 <= sx0 or sy1 <= sy0:
-            continue
-        out[sy0 - p.py0 : sy1 - p.py0, sx0 - p.px0 : sx1 - p.px0] = a[
-            sy0 - gy0 : sy1 - gy0, sx0 - gx0 : sx1 - gx0
-        ]
+    plane = _mosaic(  # the whole tile range, then the planned pixel crop
+        _pieces(tiles, T_, p.ty0, p.tx0),
+        shape=((p.ty1 - p.ty0 + 1) * T_, (p.tx1 - p.tx0 + 1) * T_),
+    )
+    out = plane[p.py0 - p.ty0 * T_ : p.py1 - p.ty0 * T_, p.px0 - p.tx0 * T_ : p.px1 - p.tx0 * T_]
     # midpoint axes (agg_axis semantics, ref src/PyramidScheme.jl:297-304)
     base_x = np.arange(spec.base_w, dtype=np.float64) + 0.5
     base_y = np.arange(spec.base_h, dtype=np.float64) + 0.5
@@ -77,19 +76,12 @@ def read_window(
 def read_level_array(spark: SparkSession, path: str, spec: PyramidSpec, z: int) -> np.ndarray:
     """P3 eager read: stitch one stored level into a single numpy array
     (the reference's ``read(pyr) = modify(Array, pyr)`` materialization,
-    src/PyramidScheme.jl:109-116, per level). Driver-sized by definition —
-    viewport queries should use ``read_window`` instead."""
-    rows = read_level(spark, path, z).collect()
-    if not rows:
+    src/PyramidScheme.jl:109-116, per level); no Spark job. Driver-sized
+    by definition — viewport queries should use ``read_window`` instead."""
+    tiles = read_tiles_local(path, z)
+    if not len(tiles):
         return np.zeros((0, 0))
-    dt, c, T_ = rows[0]["dtype"], int(rows[0]["c"]), spec.tilesize
-    W = max(r["tx"] * T_ + r["w"] for r in rows)
-    H = max(r["ty"] * T_ + r["h"] for r in rows)
-    out = np.zeros((H, W, c) if c > 1 else (H, W), dtype=np.dtype(dt))
-    for r in rows:
-        a = decode_tile(r["bytes"], r["h"], r["w"], r["dtype"], r["c"])
-        out[r["ty"] * T_ : r["ty"] * T_ + r["h"], r["tx"] * T_ : r["tx"] * T_ + r["w"]] = a
-    return out
+    return _mosaic(_pieces(tiles, spec.tilesize))
 
 
 def subset_tiles(tiles: DataFrame, x0: int, x1: int, y0: int, y1: int, tilesize: int = 256) -> DataFrame:

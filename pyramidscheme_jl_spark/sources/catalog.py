@@ -19,13 +19,24 @@ pruning), and ``tx``/``ty``/``cell``/extents are top-level scalar columns so
 parquet min/max stats skip row groups for window/bbox predicates — the Spark
 analogue of the reference's chunk-pruned ``selectlevel`` read
 (src/PyramidScheme.jl:454-467).
+
+``read_level`` is the Spark scan for distributed consumers (joins,
+``zip_tiles``, raster operators, compaction); ``read_tiles_local`` is the
+pyarrow read behind every driver-sized read (``read_window``, ``read(z)``,
+the build and ingest tails). This module owns the tile-file format both
+parse: arrow column types, filewise ``tile-`` and bounded ``delta-`` names.
 """
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .fsio import DEFAULT_FS, LocalFS
 
 TILE_SCHEMA = T.StructType(
     [
@@ -69,11 +80,71 @@ def level_path(path: str, z: int) -> str:
     return f"{path}/tiles/z={z}"
 
 
+_TILE_ARROW_TYPES_CACHE: dict[bool, dict] = {}
+
+
+def _tile_arrow_types(with_t: bool = False):
+    """Arrow schema for one tile row, memoized — rebuilt-per-row dicts on
+    the executor write hot path are pure waste."""
+    cached = _TILE_ARROW_TYPES_CACHE.get(with_t)
+    if cached is not None:
+        return cached
+    import pyarrow as pa
+
+    arrow_types = {
+        "tx": pa.int32(), "ty": pa.int32(), "bytes": pa.binary(),
+        "w": pa.int32(), "h": pa.int32(), "c": pa.int32(), "dtype": pa.string(),
+        "vmin": pa.float64(), "vmax": pa.float64(), "vmean": pa.float64(),
+        "cell": pa.int64(),
+        "xmin": pa.float64(), "ymin": pa.float64(),
+        "xmax": pa.float64(), "ymax": pa.float64(),
+    }
+    assert list(arrow_types) == TILE_DATA_COLS
+    if with_t:
+        arrow_types = {"t": pa.int32(), **arrow_types}
+    _TILE_ARROW_TYPES_CACHE[with_t] = arrow_types
+    return arrow_types
+
+
+def _tile_fname(r: dict, with_t: bool = False) -> str:
+    """THE deterministic tile filename — single source of truth for the
+    idempotent last-writer-wins upsert contract."""
+    parts = ([f"t{int(r['t']):06d}"] if with_t else []) + [
+        f"{int(r['tx']):06d}", f"{int(r['ty']):06d}"
+    ]
+    return "tile-" + "-".join(parts) + ".parquet"
+
+
+#: a ``_tile_fname`` name: (t or None, tx, ty)
+_TILE_NAMED = re.compile(r"^tile-(?:t(\d+)-)?(\d+)-(\d+)\.parquet$")
+
+
+def _delta_fname(
+    ordinal: int, pid: int, bounds=None, merged: bool = False
+) -> str:
+    """Deterministic per-(batch, task-partition) delta filename — batch
+    ordinal first so lexical order == commit order. ``bounds`` =
+    ``(txmin, txmax, tymin, tymax)`` rides in the NAME so a driver read
+    (``read_tiles_local``, any object-store reader) can prune whole files
+    without a footer GET — the delta analog of the filewise
+    ``tile-<tx>-<ty>`` contract. Deterministic: the bounds are a pure
+    function of the task's rows, so retries republish the same name."""
+    tag = "m" if merged else "p"
+    stem = f"delta-b{int(ordinal):08d}-{tag}{int(pid):05d}"
+    if bounds is not None:
+        x0, x1, y0, y1 = (int(v) for v in bounds)
+        stem += f"-x{x0}-{x1}-y{y0}-{y1}"
+    return stem + ".parquet"
+
+
+#: bounds-bearing delta name (older bound-less names read unpruned)
+_DELTA_BOUNDED = re.compile(r"^delta-.*-x(\d+)-(\d+)-y(\d+)-(\d+)\.parquet$")
+
+
 def write_level_driver(rows: list[dict], path: str, z: int) -> None:
     """Write a (small) level directly with pyarrow — used by tail fusion for
     the pyramid tip, where a Spark job is pure overhead. Produces the same
     layout/schema as ``write_level`` so readers can't tell the difference."""
-    import os
     import shutil
 
     import pyarrow as pa
@@ -83,25 +154,8 @@ def write_level_driver(rows: list[dict], path: str, z: int) -> None:
     shutil.rmtree(d, ignore_errors=True)  # idempotent like mode=overwrite
     os.makedirs(d, exist_ok=True)
     rows = sorted(rows, key=lambda r: r["cell"])  # Morton order like write_level
-    arrow_types = {
-        "tx": pa.int32(),
-        "ty": pa.int32(),
-        "bytes": pa.binary(),
-        "w": pa.int32(),
-        "h": pa.int32(),
-        "c": pa.int32(),
-        "dtype": pa.string(),
-        "vmin": pa.float64(),
-        "vmax": pa.float64(),
-        "vmean": pa.float64(),
-        "cell": pa.int64(),
-        "xmin": pa.float64(),
-        "ymin": pa.float64(),
-        "xmax": pa.float64(),
-        "ymax": pa.float64(),
-    }
     table = pa.table(
-        {c: pa.array([r[c] for r in rows], t) for c, t in arrow_types.items()}
+        {c: pa.array([r[c] for r in rows], t) for c, t in _tile_arrow_types().items()}
     )
     pq.write_table(table, os.path.join(d, "part-00000-driver.parquet"), compression="zstd")
 
@@ -162,8 +216,6 @@ def write_levels_fused(df: DataFrame, path: str) -> None:
 def _delta_level_names(path: str, z: int) -> list[str]:
     """Delta files in a level dir ([] for bulk/filewise/missing levels) —
     one driver-side metadata listing through the fs seam."""
-    from .fsio import DEFAULT_FS
-
     return [
         n
         for n in DEFAULT_FS.listdir(level_path(path, z))
@@ -194,6 +246,66 @@ def read_level(spark: SparkSession, path: str, z: int) -> DataFrame:
     return df.withColumn("z", F.lit(z).cast("int"))
 
 
+def read_tiles_local(
+    path: str, z: int, txs=None, tys=None, ts=None, fs: LocalFS = DEFAULT_FS
+):
+    """Driver-side pyarrow read of the level-``z`` tiles with keys in
+    ``txs`` x ``tys`` (x ``ts`` on a cube level; ``None`` keeps all); no
+    Spark job. Opens only files whose names (``tile-[t<t>-]<tx>-<ty>``,
+    bounded ``delta-...``) can hold a wanted key, in a small thread pool,
+    and filters row groups on tx/ty/t IN lists. Last writer wins per key
+    on ``_ord`` (``read_level``'s semantics). Returns the stored columns
+    as pandas. A missing level, or a listed file gone before open, raises
+    FileNotFoundError."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    keep = [None if k is None else {int(v) for v in k} for k in (ts, txs, tys)]
+
+    def wanted(name: str) -> bool:
+        if name.startswith((".", "_")) or not name.endswith(".parquet"):
+            return False
+        m = _TILE_NAMED.match(name)
+        if m:
+            return all(k is None or v is None or int(v) in k for k, v in zip(keep, m.groups()))
+        m = _DELTA_BOUNDED.match(name)
+        if m:
+            x0, x1, y0, y1 = (int(v) for v in m.groups())
+            return all(
+                k is None or any(lo <= v <= hi for v in k)
+                for k, lo, hi in ((keep[1], x0, x1), (keep[2], y0, y1))
+            )
+        return True
+
+    d = level_path(path, z)
+    names = fs.listdir(d)
+    if not names and not fs.exists(d):
+        raise FileNotFoundError(d)
+    files = sorted(n for n in names if wanted(n))
+    filters = [
+        (c, "in", sorted(k)) for c, k in zip(("t", "tx", "ty"), keep) if k is not None
+    ] or None
+
+    def read_one(name: str):
+        return pq.read_table(os.path.join(d, name), filters=filters).to_pandas()
+
+    with ThreadPoolExecutor(max_workers=min(8, len(files)) or 1) as ex:
+        frames = [f for f in ex.map(read_one, files) if len(f)]
+    if not frames:
+        return pd.DataFrame(columns=TILE_DATA_COLS)
+    pdf = pd.concat(frames, ignore_index=True)
+    if "_ord" in pdf.columns:
+        keys = [c for c in ("t", "tx", "ty") if c in pdf.columns]
+        pdf = (
+            pdf.sort_values("_ord", kind="stable", na_position="first")
+            .drop_duplicates(keys, keep="last")
+            .drop(columns="_ord")
+        )
+    return pdf
+
+
 def read_tiles(spark: SparkSession, path: str) -> DataFrame:
     """All levels; ``z`` recovered as a partition column (pruning-friendly).
 
@@ -201,8 +313,6 @@ def read_tiles(spark: SparkSession, path: str) -> DataFrame:
     a literal ``z`` per branch, so a ``z = k`` filter still constant-folds
     every other branch to an empty relation (pruning preserved); compacted
     or built pyramids take the single-scan fast path."""
-    from .fsio import DEFAULT_FS
-
     zs = sorted(
         int(d.split("=", 1)[1])
         for d in DEFAULT_FS.listdir(f"{path}/tiles")
@@ -225,7 +335,6 @@ def append_manifest(spark: SparkSession, path: str, rows: list[dict]) -> None:
     """Manifest rows are driver-side metadata (a handful per level commit) —
     written directly with pyarrow, not a Spark job. A job here would add
     seconds of fixed overhead per level for kilobytes of data."""
-    import os
     import uuid
 
     import pyarrow as pa
@@ -285,8 +394,6 @@ def manifest_lineage(
     """Per-partition lineage rows for a just-written level, from parquet
     FOOTER metadata only (row counts + file sizes) — no data pages are read
     and no Spark job runs. partition_id == output file index."""
-    import os
-
     import pyarrow.parquet as pq
 
     d = level_path(path, z)
@@ -336,7 +443,6 @@ def write_multiscales(
     reducer_hash: str,
 ) -> None:
     import json
-    import os
 
     doc = {
         "multiscales": [
@@ -365,7 +471,6 @@ def read_multiscales(path: str) -> dict | None:
     """The first multiscale entry's flattened view, or None when absent /
     unreadable (absence is normal: streaming-ingested or foreign pyramids)."""
     import json
-    import os
 
     p = os.path.join(path, MULTISCALES_FILE)
     if not os.path.exists(p):

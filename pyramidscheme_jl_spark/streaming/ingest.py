@@ -74,7 +74,6 @@ Scale shape (per micro-batch, O(batch) work and O(1) Spark jobs):
 from __future__ import annotations
 
 import os
-import re
 
 import numpy as np
 import pandas as pd
@@ -94,35 +93,18 @@ from ..operators.build import (
     base_image_src,
     base_tile_gen,
 )
-from ..sources.catalog import TILE_DATA_COLS, TILE_SCHEMA, level_path, read_level
+from ..sources.catalog import (
+    TILE_DATA_COLS,
+    TILE_SCHEMA,
+    _delta_fname,
+    _tile_arrow_types,
+    _tile_fname,
+    level_path,
+    read_level,
+    read_tiles_local,
+)
 from ..sources.fsio import DEFAULT_FS, LocalFS
 from ..sources.synth import IMAGES_DDL
-
-
-_TILE_ARROW_TYPES_CACHE: dict[bool, dict] = {}
-
-
-def _tile_arrow_types(with_t: bool = False):
-    """Arrow schema for one tile row, memoized — rebuilt-per-row dicts on
-    the executor write hot path are pure waste."""
-    cached = _TILE_ARROW_TYPES_CACHE.get(with_t)
-    if cached is not None:
-        return cached
-    import pyarrow as pa
-
-    arrow_types = {
-        "tx": pa.int32(), "ty": pa.int32(), "bytes": pa.binary(),
-        "w": pa.int32(), "h": pa.int32(), "c": pa.int32(), "dtype": pa.string(),
-        "vmin": pa.float64(), "vmax": pa.float64(), "vmean": pa.float64(),
-        "cell": pa.int64(),
-        "xmin": pa.float64(), "ymin": pa.float64(),
-        "xmax": pa.float64(), "ymax": pa.float64(),
-    }
-    assert list(arrow_types) == TILE_DATA_COLS
-    if with_t:
-        arrow_types = {"t": pa.int32(), **arrow_types}
-    _TILE_ARROW_TYPES_CACHE[with_t] = arrow_types
-    return arrow_types
 
 
 def _write_one_tile(
@@ -183,43 +165,12 @@ def _assert_filewise_layout(path: str, z: int) -> str:
     return _assert_stream_layout(path, z, "filewise")
 
 
-def _tile_fname(r: dict, with_t: bool = False) -> str:
-    """THE deterministic tile filename — single source of truth for the
-    idempotent last-writer-wins upsert contract."""
-    parts = ([f"t{int(r['t']):06d}"] if with_t else []) + [
-        f"{int(r['tx']):06d}", f"{int(r['ty']):06d}"
-    ]
-    return "tile-" + "-".join(parts) + ".parquet"
-
-
 def _write_tiles_filewise(rows: list[dict], path: str, z: int, with_t: bool = False) -> None:
     """Driver-side file-per-tile write (small tile sets only; the streaming
     hot path uses ``_write_tiles_distributed``)."""
     d = _assert_filewise_layout(path, z)
     for r in rows:
         _write_one_tile(d, r, _tile_fname(r, with_t), with_t=with_t)
-
-
-def _delta_fname(
-    ordinal: int, pid: int, bounds=None, merged: bool = False
-) -> str:
-    """Deterministic per-(batch, task-partition) delta filename — batch
-    ordinal first so lexical order == commit order. ``bounds`` =
-    ``(txmin, txmax, tymin, tymax)`` rides in the NAME so the driver
-    tail (and any object-store reader) can prune whole files without a
-    footer GET — the delta analog of the filewise ``tile-<tx>-<ty>``
-    contract. Deterministic: the bounds are a pure function of the
-    task's rows, so retries republish the same name."""
-    tag = "m" if merged else "p"
-    stem = f"delta-b{int(ordinal):08d}-{tag}{int(pid):05d}"
-    if bounds is not None:
-        x0, x1, y0, y1 = (int(v) for v in bounds)
-        stem += f"-x{x0}-{x1}-y{y0}-{y1}"
-    return stem + ".parquet"
-
-
-#: bounds-bearing delta name (older bound-less names read unpruned)
-_DELTA_BOUNDED = re.compile(r"^delta-.*-x(\d+)-(\d+)-y(\d+)-(\d+)\.parquet$")
 
 
 def _tile_table(pdf: pd.DataFrame, with_t: bool, ordinal: int):
@@ -614,11 +565,11 @@ def _driver_tail(
     sets, then the exact same ``_cascade_repair`` group function run
     locally per top ancestor (sink mode writes through the fs seam, so
     layout/idempotency are identical to the executor path). The sibling
-    read is direct pyarrow (``_read_sibling_rows_local``) — a Spark scan
-    here cost ~0.6 s of plan-build + job overhead per batch for a few
-    dozen rows (round-5 probe); on an object store the same reads go
-    through pyarrow.fs (fsio seam note). ``with_t`` (r8, VERDICT r7 #6):
-    cubes take the same tail — before this, a steady full-slice cube
+    read is ``_read_sibling_rows_local``: one ``catalog.read_tiles_local``
+    per level, the same driver-side pyarrow reader ``read_window`` and the
+    build tail use, listed through the fs seam — a Spark scan here cost
+    ~0.6 s of plan-build + job overhead per batch for a few dozen rows.
+    ``with_t``: cubes take the same tail — before this, a steady full-slice cube
     batch paid one entire Spark job for the single top-level tile its
     final pass recomputes, a pure per-batch constant."""
     hi = spec.nlevels
@@ -650,106 +601,34 @@ def _read_sibling_rows_local(
     path: str, changed, z_lo: int, z_hi: int, fs: LocalFS,
     with_t: bool = False,
 ) -> pd.DataFrame:
-    """Driver-side pyarrow read of the 4-sibling child sets of
-    ``changed[z]`` for z in [z_lo, z_hi] (the bounded tail path only —
-    bytes here are gated by ``_TAIL_MAX_CHANGED``). Row-group pruning
-    via tx/ty (and, for cubes, t) IN filters; exact parent membership in
-    numpy; ``lvl`` and ``_ord`` columns match ``_sibling_union_scan``'s
-    shape. Filewise ``tile-[t<t>-]<tx>-<ty>`` files (all ancestor
-    levels) are pruned by NAME — only the needed sibling files are ever
-    opened; base-level delta files carry the task's key BOUNDS in their
-    names (``-x<min>-<max>-y<min>-<max>``), so a z_lo=1 tail skips whole
-    delta files without a footer open (bound-less legacy names fall back
-    to the filtered read; delta names carry no t bounds, so cube deltas
-    prune on x/y only and leave t to the read filter;
-    ``compact_pyramid`` remains the hard bound on the level's file
-    count). File reads run in a small thread pool — pyarrow drops the
-    GIL during IO/decompress and the sequential loop was ~1 s of the
-    steady small-batch floor (round-6 profile)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.parquet as pq
-
-    tile_named = re.compile(r"tile-(\d+)-(\d+)\.parquet$")
-    tile_named_t = re.compile(r"tile-t(\d+)-(\d+)-(\d+)\.parquet$")
-    work = []  # (z-1, d, fname, ts, txs, tys, parent_set)
+    """Driver-side read of the 4-sibling child sets of ``changed[z]`` for
+    z in [z_lo, z_hi] (the bounded tail path only — bytes here are gated
+    by ``_TAIL_MAX_CHANGED``): one ``read_tiles_local`` per level on the
+    children's tx/ty (and, for cubes, t) key sets, which prunes files by
+    name and row groups by key, then exact parent membership in numpy.
+    The ``lvl`` column matches ``_sibling_union_scan``'s shape; rows are
+    already last-writer-wins deduped."""
+    frames = []
     for z in range(z_lo, z_hi + 1):
-        parents = sorted(changed[z])
+        parents = set(changed[z])
         if not parents:
             continue
-        txs = sorted({2 * k[-2] + dx for k in parents for dx in (0, 1)})
-        tys = sorted({2 * k[-1] + dy for k in parents for dy in (0, 1)})
-        ts = sorted({k[0] for k in parents}) if with_t else None
-        parent_set = set(parents)
-        d = level_path(path, z - 1)
-        txset, tyset = set(txs), set(tys)
-        tset = set(ts) if with_t else None
-        for fname in fs.listdir(d):
-            if not fname.endswith(".parquet") or fname.startswith((".", "_")):
-                continue
-            m = tile_named_t.match(fname) if with_t else tile_named.match(fname)
-            if m:
-                vals = [int(v) for v in m.groups()]
-                ftx, fty = vals[-2], vals[-1]
-                if ftx not in txset or fty not in tyset:
-                    continue
-                if with_t and vals[0] not in tset:
-                    continue
-                pk = (ftx >> 1, fty >> 1)
-                if ((vals[0],) + pk if with_t else pk) not in parent_set:
-                    continue
-            else:
-                mb = _DELTA_BOUNDED.match(fname)
-                if mb:
-                    x0, x1, y0, y1 = (int(v) for v in mb.groups())
-                    if not any(x0 <= t <= x1 for t in txset) or not any(
-                        y0 <= t <= y1 for t in tyset
-                    ):
-                        continue
-            work.append((z - 1, d, fname, ts, txs, tys, parent_set))
-
-    def read_one(item):
-        lvl, d, fname, ts, txs, tys, parent_set = item
-        filters = [("tx", "in", txs), ("ty", "in", tys)]
-        if with_t:
-            filters.append(("t", "in", ts))
-        tab = pq.read_table(os.path.join(d, fname), filters=filters)
-        if tab.num_rows == 0:
-            return None
-        pdf = tab.to_pandas()
-        ptx = (pdf["tx"].values >> 1).astype(np.int64)
-        pty = (pdf["ty"].values >> 1).astype(np.int64)
-        if with_t:
-            # epoch-scale t cannot pack into int64 with tx/ty (r4 review)
-            # — tuple membership on a bounded row count instead
-            keep = np.fromiter(
-                ((int(t), int(x), int(y)) in parent_set
-                 for t, x, y in zip(pdf["t"].values, ptx, pty)),
-                dtype=bool, count=len(pdf),
-            )
-        else:
-            packed = np.array(
-                sorted((px << 32) | py for px, py in parent_set),
-                dtype=np.int64,
-            )
-            keep = np.isin((ptx << 32) | pty, packed)
-        pdf = pdf[keep]
-        if not len(pdf):
-            return None
-        if "_ord" not in pdf.columns:
-            pdf = pdf.assign(_ord=np.nan)
-        return pdf.assign(lvl=lvl)
-
-    frames = []
-    if work:
-        with ThreadPoolExecutor(max_workers=min(8, len(work))) as ex:
-            frames = [f for f in ex.map(read_one, work) if f is not None]
-    if not frames:
-        return pd.DataFrame(
-            columns=["lvl", *(["t"] if with_t else []),
-                     *[f.name for f in TILE_SCHEMA.fields if f.name != "z"],
-                     "_ord"]
+        pdf = read_tiles_local(
+            path, z - 1,
+            {2 * k[-2] + dx for k in parents for dx in (0, 1)},
+            {2 * k[-1] + dy for k in parents for dy in (0, 1)},
+            {k[0] for k in parents} if with_t else None,
+            fs,
         )
+        if not len(pdf):
+            continue
+        # tuple membership: epoch-scale t cannot pack into int64 with tx/ty
+        cols = [pdf["t"]] if with_t else []
+        cols += [pdf["tx"].to_numpy(np.int64) >> 1, pdf["ty"].to_numpy(np.int64) >> 1]
+        keep = [tuple(map(int, k)) in parents for k in zip(*cols)]
+        frames.append(pdf[keep].assign(lvl=z - 1))
+    if not frames:
+        return pd.DataFrame(columns=["lvl", "tx", "ty"])
     return pd.concat(frames, ignore_index=True)
 
 

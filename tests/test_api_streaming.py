@@ -1370,9 +1370,8 @@ def test_delta_name_bounds_prune_driver_tail(spark, tmp_path):
     import glob
     import os
 
-    from pyramidscheme_jl_spark.sources.catalog import level_path
+    from pyramidscheme_jl_spark.sources.catalog import _DELTA_BOUNDED, level_path
     from pyramidscheme_jl_spark.streaming.ingest import (
-        _DELTA_BOUNDED,
         _read_sibling_rows_local,
         ingest_images,
     )
@@ -1411,6 +1410,129 @@ def test_delta_name_bounds_prune_driver_tail(spark, tmp_path):
     with _pytest.raises(Exception):
         _read_sibling_rows_local(q_path, changed, 1, 1, LocalFS())
     os.remove(legacy)
+
+
+def _stream_overlapping_batches(spark, tmp_path, cube: bool):
+    """Three micro-batches in one query that rewrite overlapping slots,
+    each batch split over two delta files, with in-stream compaction off
+    so every superseded version stays on disk. Returns the pyramid path."""
+    from pyramidscheme_jl_spark.sources.synth import encode_tile
+    from pyramidscheme_jl_spark.streaming.ingest import ingest_cube_images, ingest_images
+
+    G = 2 if cube else 4
+    rows = synth_images(G=G)
+    if cube:
+        rows = [{**r, "t": t} for t in (0, 1) for r in rows]
+    n = len(rows)
+    batches = [rows, rows[: n // 2], rows[n // 4 : 3 * n // 4]]
+    src = tmp_path / "src"
+    src.mkdir(parents=True)
+    ddl = IMAGES_DDL + (", t int" if cube else "")
+    for b, part in enumerate(batches):
+        part = [{**r, "bytes": encode_tile(np.full((256, 256), 10 * b + i, dtype=np.uint8))}
+                if b else r for i, r in enumerate(part)]
+        spark.createDataFrame(part, ddl).coalesce(2).write.parquet(str(src / f"b{b}"))
+    q_path = str(tmp_path / "pyr")
+    ingest = ingest_cube_images if cube else ingest_images
+    ingest(
+        spark, f"{src}/*", q_path, G=G, max_files_per_trigger=2, max_delta_files=None
+    ).awaitTermination(300)
+    return q_path
+
+
+def test_read_tiles_local_matches_read_level(spark, tmp_path):
+    """The driver reader and the Spark scan agree byte for byte per tile
+    key on a streamed level holding several superseded versions (last
+    writer wins on ``_ord``), with and without key filters, on a flat
+    pyramid and on a streamed cube (``ts=``). A file that is listed but
+    gone before it is opened, or a missing level, fails the read loudly."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from pyramidscheme_jl_spark.sources.catalog import level_path, read_level, read_tiles_local
+    from pyramidscheme_jl_spark.sources.fsio import LocalFS
+
+    def by_key(rows, keys):
+        out = {tuple(int(r[k]) for k in keys): bytes(r["bytes"]) for r in rows}
+        assert len(out) == len(rows), "duplicate tile keys"
+        return out
+
+    flat = _stream_overlapping_batches(spark, tmp_path / "flat", cube=False)
+    deltas = glob.glob(f"{level_path(flat, 0)}/delta-*.parquet")
+    assert sum(pq.read_metadata(f).num_rows for f in deltas) > 16  # superseded rows kept
+    for z in (0, 1, 2):
+        want = by_key(read_level(spark, flat, z).collect(), ("tx", "ty"))
+        got = by_key(read_tiles_local(flat, z).to_dict("records"), ("tx", "ty"))
+        assert got == want, z
+    want0 = by_key(read_level(spark, flat, 0).collect(), ("tx", "ty"))
+    got = by_key(read_tiles_local(flat, 0, [1, 2], [0, 3]).to_dict("records"), ("tx", "ty"))
+    assert got == {k: v for k, v in want0.items() if k[0] in (1, 2) and k[1] in (0, 3)}
+
+    cube = _stream_overlapping_batches(spark, tmp_path / "cube", cube=True)
+    for z in (0, 1):
+        want = by_key(read_level(spark, cube, z).collect(), ("t", "tx", "ty"))
+        got = by_key(read_tiles_local(cube, z).to_dict("records"), ("t", "tx", "ty"))
+        assert got == want, z
+        got1 = by_key(read_tiles_local(cube, z, ts=[1]).to_dict("records"), ("t", "tx", "ty"))
+        assert got1 == {k: v for k, v in want.items() if k[0] == 1}, z
+
+    # a listed file vanishes before open: no retry, no partial result
+    gone = str(tmp_path / "gone")
+    shutil.copytree(flat, gone)
+
+    class VanishingFS(LocalFS):
+        def listdir(self, d):
+            names = super().listdir(d)
+            os.remove(os.path.join(d, sorted(n for n in names if n.startswith("delta-"))[0]))
+            return names
+
+    with pytest.raises(FileNotFoundError):
+        read_tiles_local(gone, 0, fs=VanishingFS())
+    with pytest.raises(FileNotFoundError):
+        read_tiles_local(gone, 7)  # no such level
+
+
+def test_driver_reads_start_no_spark_job(spark, tmp_path):
+    """``read_window`` and ``read(z)`` run no Spark job (a positive
+    control proves the job-group probe counts jobs), and ``read_window``
+    opens only the files its tile range needs: a garbage bounded delta
+    file whose name lies outside the window cannot break it."""
+    import os
+
+    from pyramidscheme_jl_spark.sources.catalog import level_path
+    from pyramidscheme_jl_spark.streaming.ingest import ingest_images
+
+    src = tmp_path / "src"
+    src.mkdir()
+    spark.createDataFrame(synth_images(G=4), IMAGES_DDL).coalesce(2).write.parquet(str(src / "b0"))
+    q_path = str(tmp_path / "pyr")
+    ingest_images(spark, f"{src}/*", q_path, G=4).awaitTermination(120)
+    ds = PyramidDataset.open(spark, q_path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("read-probe-control", "control")
+        spark.range(3).count()
+        assert tracker.getJobIdsForGroup("read-probe-control")
+        sc.setJobGroup("read-probe", "driver reads")
+        win = ds.read_window((0.0, 0.0, 256.0, 256.0), (256, 256))
+        top = ds.read(2)
+        assert tracker.getJobIdsForGroup("read-probe") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    base = mosaic_pixels(G=4)
+    assert win["z"] == 0
+    np.testing.assert_array_equal(win["data"], base[:256, :256])
+    np.testing.assert_allclose(top, oracle_levels(base, "mean", 2)[2], rtol=1e-12)
+
+    bad = os.path.join(level_path(q_path, 0), "delta-b00000099-p00099-x2-3-y2-3.parquet")
+    with open(bad, "w") as f:
+        f.write("not parquet at all")
+    win = ds.read_window((0.0, 0.0, 256.0, 256.0), (256, 256))
+    np.testing.assert_array_equal(win["data"], base[:256, :256])
 
 
 def test_ngram_contamination(spark):

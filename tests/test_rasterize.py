@@ -172,6 +172,39 @@ def test_sparse_mosaic_build_fills_nan_not_zero(spark, tmp_path):
     assert r["vmin"] == np.nanmin(arr) and not np.isnan(r["vmean"])
 
 
+def test_sparse_float_reads_fill_nan_not_zero(spark, tmp_path):
+    """Driver reads of a SPARSE float level: tiles that were never stored
+    read as NaN (missing), like the no-data pixels inside stored tiles —
+    not 0.0, which is a valid data value. Two squares burn tiles (0,0)
+    and (3,3) of a 4x4-tile 64-px level; ``read(0)`` and a full-extent
+    ``read_window`` must both equal the paint oracle, NaN for NaN."""
+    from pyramidscheme_jl_spark.api import PyramidDataset
+    from pyramidscheme_jl_spark.sources.catalog import write_level, write_multiscales
+
+    squares = [
+        {"polygon_id": "a", "ring": [[8.0, 8.0], [40.0, 8.0], [40.0, 40.0], [8.0, 40.0]], "value": 3.0},
+        {"polygon_id": "b", "ring": [[200.0, 200.0], [240.0, 200.0], [240.0, 240.0], [200.0, 240.0]], "value": 5.0},
+    ]
+    path = str(tmp_path / "sparse_read")
+    tiles = rasterize_polygons(spark, squares, (W, W), tilesize=64)
+    assert sorted((r["tx"], r["ty"]) for r in tiles.select("tx", "ty").collect()) == [(0, 0), (3, 3)]
+    write_level(tiles, path, 0)
+    write_multiscales(path, 0, 64, W, W, "rasterize", "none")
+
+    oracle = np.full((W, W), np.nan)
+    ys, xs = np.mgrid[0:W, 0:W]
+    for p in squares:
+        m = points_in_polygon(xs.ravel() + 0.5, ys.ravel() + 0.5, np.asarray(p["ring"]))
+        oracle[m.reshape(W, W)] = p["value"]
+
+    ds = PyramidDataset.open(spark, path, tilesize=64)
+    win = ds.read_window((0.0, 0.0, float(W), float(W)), (W, W))
+    assert win["z"] == 0
+    for got in (ds.read(0), win["data"]):
+        assert got.shape == (W, W)
+        np.testing.assert_array_equal(got, oracle)  # NaN == NaN here
+
+
 def test_image_phash_dedup_pipeline_end_to_end(spark):
     """The input_hint story end-to-end: an images table (image_id, bytes,
     w, h, fmt, caption, phash) with perturbed duplicates -> REAL decode +
