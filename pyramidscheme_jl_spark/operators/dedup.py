@@ -278,7 +278,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     """SimHash fingerprint: per-bit majority vote over 60-bit token hashes.
 
     Packed-counter formulation (r9): per (id, token) row, the token hash's
-    bits are packed as four 16-bit counters per BIGINT (``ceil(bits/4)``
+    bits are packed as three 16-bit counters per BIGINT (``ceil(bits/3)``
     packed columns); ONE ``groupBy(id)`` sums them map-side, and the
     fingerprint unpacks as ``bit b set iff 2*cnt_b > ntok`` — exactly the
     old per-bit vote ``sum(+-1) > 0`` since ``vote_b = 2*cnt_b - ntok``.
@@ -286,8 +286,12 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     (a ``bits``-fold row fan-out: 163M aggregated rows at sf1.0/60 bits)
     with ~16 sum buffers over the raw token rows — measured 6.1 -> 3.0 s
     at sf1.0/60 bits, bit-identical output. (The r6 A/B that rejected
-    per-bit conditional sums used 60 separate buffers; 4x16-bit packing
-    keeps the buffer count at 16 and stays in whole-stage codegen.)
+    per-bit conditional sums used 60 separate buffers; 3x16-bit packing
+    keeps the buffer count at 20 and stays in whole-stage codegen.) Three
+    counters, not four: a counter at bit 48 overflows the SIGNED sum once
+    it passes 32,767, which ANSI mode raises as ARITHMETIC_OVERFLOW on
+    documents inside the bound; three leave 15 spare bits, so a document
+    past the bound reaches the ``raise_error`` below instead.
 
     Input contract (r9): one row per document (``id_col`` unique per row;
     pre-aggregate duplicate-id inputs). Packed counters bound documents at
@@ -295,12 +299,12 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     fingerprint job fails loudly via ``raise_error`` rather than wrapping.
     """
     ts = _doc_token_sets(df, text_col, id_col).withColumn("h", _tok_hash(F.col("tok")))
-    npack = (bits + 3) // 4
+    npack = (bits + 2) // 3
     packs = []
     for j in range(npack):
         e = None
-        for k in range(4):
-            b = 4 * j + k
+        for k in range(3):
+            b = 3 * j + k
             if b >= bits:
                 break
             t = F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1).cast("long"))
@@ -317,7 +321,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     )
     fp = None
     for b in range(bits):
-        cnt = F.shiftright(F.col(f"p{b // 4}"), 16 * (b % 4)).bitwiseAND(
+        cnt = F.shiftright(F.col(f"p{b // 3}"), 16 * (b % 3)).bitwiseAND(
             F.lit(0xFFFF).cast("long")
         )
         # b == 63: 1<<63 overflows a long literal; the sign bit's weight in

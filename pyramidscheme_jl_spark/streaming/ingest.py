@@ -55,20 +55,26 @@ re-ingest, or use ``build_pyramid(resume=True)`` for bulk backfill;
 
 Scale shape (per micro-batch, O(batch) work and O(1) Spark jobs):
 
-- the child lookups filter on **plain tx/ty IN-lists** — source-pushable
-  predicates (`PushedFilters: In(tx, ...), In(ty, ...)`) so parquet min/max
-  stats skip every row group outside the touched neighborhood; the exact
-  parent-pair membership test runs JVM-side on the surviving rows;
+- every ancestor-cascade read takes its keys from ONE rule,
+  ``_allowed_child_keys``: per source level, the 4-sibling children of
+  the changed parents minus the tiles the same pass recomputes in-group.
+  A level whose set is empty is not read at all;
+- the Spark pass filters each level on **plain [t/]tx/ty IN-lists** —
+  source-pushable predicates (`PushedFilters: In(tx, ...), In(ty, ...)`)
+  so parquet min/max stats skip every row group outside the touched
+  neighborhood — then keeps exactly the allowed keys with one broadcast
+  left-semi join; the driver tail reads the same sets with
+  ``read_tiles_local`` and the same exact membership in numpy;
 - the ancestor recompute is a GROUPED CASCADE (``_patch_ancestors``): one
-  pruned union scan of the 4-sibling sets at levels 0..K-1, one
+  pruned union scan of the allowed sets at levels 0..K-1, one
   ``applyInPandas`` grouped by the level-K ancestor recomputing the whole
-  subtree locally AND writing it from inside the group fn (sink mode —
-  one python stage, no chained write stage) — replacing the former
-  per-level job loop (its round-trips were the ingest scaling floor,
+  subtree locally AND writing it from inside the group fn (one python
+  stage, no chained write stage) — replacing the former per-level job
+  loop (its round-trips were the ingest scaling floor,
   BENCH/INGEST_SCALING.md);
 - ALL tile bytes are written from executors (``_write_tiles_distributed``
-  with a fused decode ``gen``, ``_sink_group_rows``); only integer key
-  lists reach the driver.
+  with a fused decode ``gen``; ``_cascade_repair``'s group fn); only
+  integer key lists reach the driver.
 """
 
 from __future__ import annotations
@@ -87,7 +93,6 @@ from ..operators.build import (
     PyramidSpec,
     _grid_dims,
     _mosaic,
-    _rows_to_pdf,
     _tile_row,
     audit_unsupported_images,
     base_image_src,
@@ -160,27 +165,56 @@ def _assert_stream_layout(
     return d
 
 
-def _assert_filewise_layout(path: str, z: int) -> str:
-    """Back-compat alias for the filewise write guard."""
-    return _assert_stream_layout(path, z, "filewise")
-
-
 def _write_tiles_filewise(rows: list[dict], path: str, z: int, with_t: bool = False) -> None:
     """Driver-side file-per-tile write (small tile sets only; the streaming
     hot path uses ``_write_tiles_distributed``)."""
-    d = _assert_filewise_layout(path, z)
+    d = _assert_stream_layout(path, z, "filewise")
     for r in rows:
         _write_one_tile(d, r, _tile_fname(r, with_t), with_t=with_t)
 
 
-def _tile_table(pdf: pd.DataFrame, with_t: bool, ordinal: int):
-    """One Arrow table of tile rows + the ``_ord`` column (delta layout)."""
-    import pyarrow as pa
+def _write_delta_file(
+    d: str, batches, with_t: bool, ordinal: int, fs: LocalFS, merged: bool = False
+) -> list[pd.DataFrame]:
+    """THE delta-file writer (executor side, one call per task): streams
+    the task's non-empty tile batches into ONE parquet file — a row group
+    per batch, constant memory, plus the ``_ord`` column — and publishes
+    it atomically as ``_delta_fname(ordinal, pid, bounds, merged)``. The
+    tx/ty bounds in the name are resolved after the write from the rows
+    themselves, so a retried task republishes the same name. Returns the
+    written batches' key columns (none: no file)."""
+    from itertools import chain
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+
+    it = (p for p in batches if len(p))
+    first = next(it, None)
+    if first is None:
+        return []
     types = _tile_arrow_types(with_t)
-    cols = {c: pa.array(pdf[c].tolist(), ty) for c, ty in types.items()}
-    cols["_ord"] = pa.array([int(ordinal)] * len(pdf), pa.int64())
-    return pa.table(cols)
+    keys: list[pd.DataFrame] = []
+
+    def write(tmp):
+        writer = None
+        for pdf in chain([first], it):
+            cols = {c: pa.array(pdf[c].tolist(), ty) for c, ty in types.items()}
+            cols["_ord"] = pa.array([int(ordinal)] * len(pdf), pa.int64())
+            tab = pa.table(cols)
+            if writer is None:
+                writer = pq.ParquetWriter(tmp, tab.schema, compression="zstd")
+            writer.write_table(tab)
+            keys.append(pdf[(["t"] if with_t else []) + ["tx", "ty"]])
+        writer.close()
+
+    def fname():
+        k = pd.concat(keys)
+        bounds = (k["tx"].min(), k["tx"].max(), k["ty"].min(), k["ty"].max())
+        return _delta_fname(ordinal, TaskContext.get().partitionId(), bounds, merged)
+
+    fs.publish_file(d, fname, write)
+    return keys
 
 
 def _write_tiles_distributed(
@@ -202,12 +236,12 @@ def _write_tiles_distributed(
 
     ``ordinal=None`` => filewise layout (one file per tile). With a batch
     ``ordinal`` => delta layout: each task streams ALL its tile rows into
-    ONE ``delta-b<ordinal>-p<pid>.parquet`` (a row group per Arrow batch —
-    constant memory), cutting the per-batch file count from O(tiles) to
-    O(tasks); readers last-writer-win on the embedded ``_ord``. Both paths
-    publish atomically through the fs seam (deterministic names =>
-    idempotent under task retry/speculation) and yield just the key
-    columns.
+    ONE bounded ``delta-b<ordinal>-p<pid>-x…-y….parquet``
+    (``_write_delta_file``), cutting the per-batch file count from
+    O(tiles) to O(tasks); readers last-writer-win on the embedded
+    ``_ord``. Both paths publish atomically through the fs seam
+    (deterministic names => idempotent under task retry/speculation) and
+    yield just the key columns.
 
     ``gen`` (optional): a pandas batch transform producing the tile rows
     from ``tiles`` (e.g. ``build.base_tile_gen``). When given it is FUSED
@@ -216,65 +250,24 @@ def _write_tiles_distributed(
     per task + a JVM Arrow relay of every tile byte, the measured
     pipeline trap in session.py's notes).
     """
-    write_mode = "filewise" if ordinal is None else "delta"
-    d = _assert_stream_layout(path, z, write_mode, fs)
+    d = _assert_stream_layout(path, z, "filewise" if ordinal is None else "delta", fs)
     key_cols = ([t_col] if t_col else []) + ["tx", "ty"]
     with_t = bool(t_col)
 
-    if ordinal is None:
+    def write_partition(batches):
+        from pyspark import TaskContext
 
-        def write_partition(batches):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            for pdf in batches:
-                for r in pdf.to_dict("records"):
-                    _write_one_tile(d, r, _tile_fname(r, with_t), with_t, fs)
-                yield pdf[key_cols].assign(_pid=pid)
-
-    else:
-
-        def write_partition(batches):
-            import pyarrow.parquet as pq
-            from pyspark import TaskContext
-
-            it = iter(batches)
-            first = next((p for p in it if len(p)), None)
-            if first is None:
-                return
-            from itertools import chain
-
-            keys = []
-
-            def write(tmp):
-                writer = None
-                for pdf in chain([first], it):
-                    if not len(pdf):
-                        continue
-                    tab = _tile_table(pdf, with_t, ordinal)
-                    if writer is None:
-                        writer = pq.ParquetWriter(tmp, tab.schema, compression="zstd")
-                    writer.write_table(tab)
-                    keys.append(pdf[key_cols])
-                writer.close()
-
-            pid = TaskContext.get().partitionId()
-
-            def fname():  # resolved post-write: bounds from the seen keys
-                tx = pd.concat([k["tx"] for k in keys])
-                ty = pd.concat([k["ty"] for k in keys])
-                bounds = (tx.min(), tx.max(), ty.min(), ty.max())
-                return _delta_fname(ordinal, pid, bounds)
-
-            fs.publish_file(d, fname, write)
-            for kdf in keys:
+        pid = TaskContext.get().partitionId()
+        if gen is not None:
+            batches = gen(batches)
+        if ordinal is not None:
+            for kdf in _write_delta_file(d, batches, with_t, ordinal, fs):
                 yield kdf.assign(_pid=pid)
-
-    if gen is not None:
-        inner = write_partition
-
-        def write_partition(batches):
-            yield from inner(gen(batches))
+            return
+        for pdf in batches:
+            for r in pdf.to_dict("records"):
+                _write_one_tile(d, r, _tile_fname(r, with_t), with_t, fs)
+            yield pdf[key_cols].assign(_pid=pid)
 
     schema = ", ".join(f"{c} int" for c in key_cols) + ", _pid int"
     keys = tiles.mapInPandas(write_partition, schema).collect()
@@ -285,59 +278,20 @@ def _write_tiles_distributed(
     return uniq, n_files
 
 
-def _children_of(level_df: DataFrame, parents: list[tuple[int, int]]) -> DataFrame:
-    """Child tiles of the given parents, with *source-pushable* predicates.
-
-    The coarse filter is two IN-lists on the plain ``tx``/``ty`` columns —
-    Catalyst pushes them into the parquet scan (min/max row-group skipping),
-    unlike a derived ``shiftright(tx,1)==px`` expression which forces a full
-    level scan. The coarse cross-product may admit a few extra tiles; the
-    exact parent-pair membership (packed ``(tx>>1)<<32 | ty>>1``) filters
-    them JVM-side on the already-tiny survivor set.
-
-    Predicates are ONE parsed SQL string, not Column algebra: building
-    thousand-element ``isin`` lists through py4j cost ~1 s of driver time
-    per cascade pass on a 1024-tile batch (round-5 measurement — the same
-    expr-vs-Column lesson as similarity's generated scores).
-    """
-    txs = sorted({2 * px + dx for px, _ in parents for dx in (0, 1)})
-    tys = sorted({2 * py + dy for _, py in parents for dy in (0, 1)})
-    packed = [(px << 32) | py for px, py in parents]
-    csv = ",".join
-    pushable = F.expr(
-        f"tx IN ({csv(map(str, txs))}) AND ty IN ({csv(map(str, tys))})"
-    )
-    pair_in = F.expr(
-        "(shiftleft(cast(shiftright(tx, 1) as bigint), 32) | "
-        f"cast(shiftright(ty, 1) as bigint)) IN ({csv(map(str, packed))})"
-    )
-    return level_df.where(pushable).where(pair_in)
-
-
 #: cascade pass depth: each pass recomputes K levels inside ONE
 #: applyInPandas job, grouped by the pass-top ancestor. 4^K base
 #: descendants bound the group (K=3 -> <=64 base + 21 ancestor tiles
 #: ~ <=15-40 MB/group); deeper pyramids take ceil(nlevels/K) passes.
 _CASCADE_LEVELS = 3
 
-#: flat-pyramid driver tail gate: once the REMAINING changed-ancestor
-#: count (all levels to the top) is at most this, the geometric tip is
-#: finished driver-side — one bounded collect (<= 4x this many sibling
-#: tiles, ~48 MB worst-case at float64 512 KB tiles) + numpy + direct
-#: writes — instead of another full grouped pass whose per-job overhead
-#: (~1 s) dwarfs its microscopic work. Same philosophy as build.py's
-#: fuse_threshold tail fusion (adjudicated fine in r3/r4). Cubes are
-#: excluded: their tip multiplies by the unbounded touched-slice count
-#: (r4 review), so they always take grouped passes.
+#: driver tail gate: once the REMAINING changed-ancestor count (all
+#: levels to the top, cube slices included) is at most this, the
+#: geometric tip is finished driver-side — one bounded read (<= 4x this
+#: many sibling tiles, ~48 MB worst-case at float64 512 KB tiles) +
+#: numpy + direct writes — instead of another full grouped pass whose
+#: per-job overhead (~1 s) dwarfs its microscopic work. Same philosophy
+#: as build.py's fuse_threshold tail fusion (adjudicated fine in r3/r4).
 _TAIL_MAX_CHANGED = 24
-
-LEVELED_TILE_SCHEMA = T.StructType(
-    [T.StructField("lvl", T.IntegerType())] + list(TILE_SCHEMA.fields)
-)
-CUBE_LEVELED_TILE_SCHEMA = T.StructType(
-    [T.StructField("lvl", T.IntegerType()), T.StructField("t", T.IntegerType())]
-    + list(TILE_SCHEMA.fields)
-)
 
 
 def _read_level_or_empty(
@@ -374,29 +328,52 @@ def _changed_keys_by_level(base_keys, nlevels: int):
     return changed
 
 
+def _allowed_child_keys(changed, z_lo: int, z_hi: int) -> dict[int, set[tuple]]:
+    """THE read rule of a cascade pass recomputing levels z_lo..z_hi:
+    ``{source level: keys}`` of the stored tiles the pass reads. For each
+    recomputed level z these are the 4-sibling children of ``changed[z]``
+    at level z-1, minus ``changed[z-1]`` when the pass recomputes level
+    z-1 too — those tiles are recomputed in-group (computed beats disk in
+    ``_cascade_repair``), so their disk copies are pure scan+shuffle waste
+    (for a spatially clustered batch ~70% of the scanned bytes, round-5
+    probe: the f64 intermediate levels dwarf the uint8 base). Keys are
+    ``(tx, ty)`` or ``(t, tx, ty)``; a level left with no key is omitted,
+    so nothing there is read."""
+    allowed = {}
+    for z in range(z_lo, z_hi + 1):
+        keys = {
+            k[:-2] + (2 * k[-2] + dx, 2 * k[-1] + dy)
+            for k in changed[z] for dx in (0, 1) for dy in (0, 1)
+        }
+        if z > z_lo:
+            keys -= set(changed[z - 1])
+        if keys:
+            allowed[z - 1] = keys
+    return allowed
+
+
 def _cascade_repair(
-    spec: PyramidSpec, reducer: str, z_lo: int, z_hi: int, changed, with_t=False,
-    sink: dict | None = None,
+    spec: PyramidSpec, reducer: str, z_lo: int, z_hi: int, changed, with_t: bool,
+    fs: LocalFS, dirs: dict[int, str],
 ):
     """Per-group bottom-up recompute of levels z_lo..z_hi.
 
-    The group holds every input tile this pass needs (4-sibling sets at
-    each level, pruned scan); changed tiles at intermediate levels are
-    recomputed in-group (never trusted from disk), unchanged siblings come
-    from the scanned disk rows. ``with_t``: keys and group keys carry the
+    The group holds every stored input tile this pass needs (its
+    ``_allowed_child_keys`` rows); changed tiles at intermediate levels
+    are recomputed in-group (never trusted from disk), unchanged siblings
+    come from the read rows. ``with_t``: keys and group keys carry the
     leading cube t dim.
 
-    ``sink=None``: emits the recomputed tile rows (LEVELED schema).
-    ``sink={"fs", "dirs"}``: writes the tiles from INSIDE this group fn —
-    per-tile filewise files (ancestor tiles are REWRITES over a bounded
-    key space, so overwrite-in-place keeps the level's file count bounded
-    at its tile count forever; a per-batch delta file here would
-    accumulate one file per touched group per batch until compaction,
-    which round-5 measured as a growing per-batch scan cost) — and emits
-    only (lvl, tx, ty) keys. Fusing the write here keeps the pass at ONE
-    python stage; the previous repair->mapInPandas-write chain ran two
-    python workers per task with a JVM Arrow relay of every tile byte
-    between them (the session.py pipeline trap)."""
+    The recomputed tiles are written from INSIDE this group fn to
+    ``dirs[z]`` as per-tile filewise files (ancestor tiles are REWRITES
+    over a bounded key space, so overwrite-in-place keeps the level's file
+    count bounded at its tile count forever; a per-batch delta file here
+    would accumulate one file per touched group per batch until
+    compaction, which round-5 measured as a growing per-batch scan cost),
+    and only their (lvl, tx, ty) keys are emitted. Fusing the write here
+    keeps the pass at ONE python stage; the previous repair->mapInPandas
+    -write chain ran two python workers per task with a JVM Arrow relay of
+    every tile byte between them (the session.py pipeline trap)."""
     half = spec.tilesize // 2
 
     # driver-precomputed per-group work lists: each task touches ONLY its
@@ -431,7 +408,7 @@ def _cascade_repair(
             for dk, (_, r) in chosen.items()
         }
         computed: dict[tuple, np.ndarray] = {}
-        out_rows = []
+        written = []
         for work in group_work.get(gkey, ()):  # level-ascending
             z, lead, (ptx, pty) = work[0], work[1:-2], work[-2:]
             quarters = []
@@ -448,47 +425,18 @@ def _cascade_repair(
                 continue
             arr = _mosaic(quarters)
             computed[(z,) + lead + (ptx, pty)] = arr
-            row = dict(_tile_row(spec, z, ptx, pty, arr), lvl=z)
+            row = _tile_row(spec, z, ptx, pty, arr)
             if with_t:
                 row["t"] = lead[0]
-            out_rows.append(row)
-        if sink is not None:
-            return _sink_group_rows(out_rows, gkey, with_t, sink)
-        schema = CUBE_LEVELED_TILE_SCHEMA if with_t else LEVELED_TILE_SCHEMA
-        if not out_rows:
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        pdf_out = _rows_to_pdf(
-            [{k: v for k, v in r.items() if k not in ("lvl", "t")} for r in out_rows]
-        )
-        if with_t:
-            pdf_out.insert(0, "t", pd.array([r["t"] for r in out_rows], dtype="int32"))
-        pdf_out.insert(0, "lvl", pd.array([r["lvl"] for r in out_rows], dtype="int32"))
-        return pdf_out
+            _write_one_tile(dirs[z], row, _tile_fname(row, with_t), with_t, fs)
+            written.append((z, ptx, pty))
+        return pd.DataFrame(written, columns=["lvl", "tx", "ty"], dtype="int32")
 
     return fn
 
 
-#: keys-only output schema of a sink-mode cascade group
+#: keys-only output schema of a cascade group
 CASCADE_KEYS_SCHEMA = "lvl int, tx int, ty int"
-
-
-def _sink_group_rows(out_rows: list[dict], gkey, with_t: bool, sink: dict) -> pd.DataFrame:
-    """Write one group's recomputed tiles (see ``_cascade_repair``) and
-    return just their (lvl, tx, ty) keys."""
-    fs, dirs = sink["fs"], sink["dirs"]
-    by_lvl: dict[int, list[dict]] = {}
-    for r in out_rows:
-        by_lvl.setdefault(int(r["lvl"]), []).append(r)
-    for z, rows in by_lvl.items():
-        for r in rows:
-            _write_one_tile(dirs[z], r, _tile_fname(r, with_t), with_t, fs)
-    return pd.DataFrame(
-        {
-            "lvl": pd.array([r["lvl"] for r in out_rows], dtype="int32"),
-            "tx": pd.array([r["tx"] for r in out_rows], dtype="int32"),
-            "ty": pd.array([r["ty"] for r in out_rows], dtype="int32"),
-        }
-    )
 
 
 def _patch_ancestors(
@@ -503,15 +451,16 @@ def _patch_ancestors(
 
     Grouped-cascade passes, O(nlevels / K) Spark jobs per micro-batch
     instead of O(nlevels) (the per-level round-trip was the ingest scaling
-    floor). Each pass covers K levels: one pruned UNION scan collects,
-    per level, the 4-sibling sets of the changed tiles; grouped by the
-    pass's top-level ancestor, one ``applyInPandas`` recomputes the whole
-    subtree locally (changed tiles in-group, unchanged siblings from the
-    scan) and writes it from inside the group fn. Tile bytes NEVER touch
-    the driver on this path — for flat pyramids and cubes alike
-    (``base_keys`` of ``(t, tx, ty)`` switch on the cube path); the one
-    exception is the bounded flat-pyramid tip (``_driver_tail``, gated at
-    ``_TAIL_MAX_CHANGED`` tiles like build_pyramid's tail fusion).
+    floor). Each pass covers K levels: one pruned UNION scan reads, per
+    source level, exactly the ``_allowed_child_keys`` tiles
+    (``_sibling_union_scan``); grouped by the pass's top-level ancestor,
+    one ``applyInPandas`` recomputes the whole subtree locally (changed
+    tiles in-group, unchanged siblings from the scan) and writes it from
+    inside the group fn. Tile bytes NEVER touch the driver on this path —
+    for flat pyramids and cubes alike (``base_keys`` of ``(t, tx, ty)``
+    switch on the cube path); the one exception is the bounded tip
+    (``_driver_tail``, gated at ``_TAIL_MAX_CHANGED`` tiles like
+    build_pyramid's tail fusion), which reads the same key sets.
 
     Ancestor levels always use the FILEWISE layout regardless of the base
     level's mode: they are rewrites over a bounded key space, so overwrite
@@ -540,10 +489,7 @@ def _patch_ancestors(
         ]
         dirs = {z: _assert_stream_layout(path, z, "filewise", fs) for z in range(lo, hi + 1)}
         grouped = union.groupBy(*gcols).applyInPandas(
-            _cascade_repair(
-                spec, reducer, lo, hi, changed, with_t,
-                sink={"fs": fs, "dirs": dirs},
-            ),
+            _cascade_repair(spec, reducer, lo, hi, changed, with_t, fs, dirs),
             CASCADE_KEYS_SCHEMA,
         )
         grouped.write.format("noop").mode("overwrite").save()
@@ -561,24 +507,21 @@ def _driver_tail(
     with_t: bool = False,
 ) -> None:
     """Finish the geometric tip of a cascade driver-side (gated by
-    ``_TAIL_MAX_CHANGED``): one pruned read of the remaining sibling
-    sets, then the exact same ``_cascade_repair`` group function run
-    locally per top ancestor (sink mode writes through the fs seam, so
-    layout/idempotency are identical to the executor path). The sibling
+    ``_TAIL_MAX_CHANGED``): one pruned read of the remaining
+    ``_allowed_child_keys`` sets, then the exact same ``_cascade_repair``
+    group function run locally per top ancestor (it writes through the fs
+    seam, so layout/idempotency are identical to the executor path). The
     read is ``_read_sibling_rows_local``: one ``catalog.read_tiles_local``
-    per level, the same driver-side pyarrow reader ``read_window`` and the
-    build tail use, listed through the fs seam — a Spark scan here cost
-    ~0.6 s of plan-build + job overhead per batch for a few dozen rows.
-    ``with_t``: cubes take the same tail — before this, a steady full-slice cube
-    batch paid one entire Spark job for the single top-level tile its
+    per source level, the same driver-side pyarrow reader ``read_window``
+    and the build tail use, listed through the fs seam — a Spark scan here
+    cost ~0.6 s of plan-build + job overhead per batch for a few dozen
+    rows. Cubes take the same tail — before this, a steady full-slice
+    cube batch paid one entire Spark job for the single top-level tile its
     final pass recomputes, a pure per-batch constant."""
     hi = spec.nlevels
     dirs = {z: _assert_stream_layout(path, z, "filewise", fs) for z in range(z_lo, hi + 1)}
     pdf = _read_sibling_rows_local(path, changed, z_lo, hi, fs, with_t)
-    fn = _cascade_repair(
-        spec, reducer, z_lo, hi, changed, with_t,
-        sink={"fs": fs, "dirs": dirs},
-    )
+    fn = _cascade_repair(spec, reducer, z_lo, hi, changed, with_t, fs, dirs)
     gkeys = sorted(
         {k[:-2] + (k[-2] >> (hi - z), k[-1] >> (hi - z))
          for z in range(z_lo, hi + 1) for k in changed[z]}
@@ -601,32 +544,25 @@ def _read_sibling_rows_local(
     path: str, changed, z_lo: int, z_hi: int, fs: LocalFS,
     with_t: bool = False,
 ) -> pd.DataFrame:
-    """Driver-side read of the 4-sibling child sets of ``changed[z]`` for
-    z in [z_lo, z_hi] (the bounded tail path only — bytes here are gated
-    by ``_TAIL_MAX_CHANGED``): one ``read_tiles_local`` per level on the
-    children's tx/ty (and, for cubes, t) key sets, which prunes files by
-    name and row groups by key, then exact parent membership in numpy.
-    The ``lvl`` column matches ``_sibling_union_scan``'s shape; rows are
-    already last-writer-wins deduped."""
+    """Driver-side read of the ``_allowed_child_keys`` tiles of a pass over
+    z_lo..z_hi (the bounded tail path only — bytes here are gated by
+    ``_TAIL_MAX_CHANGED``): one ``read_tiles_local`` per source level on
+    the allowed keys' tx/ty (and, for cubes, t) sets, which prunes files
+    by name and row groups by key, then exact key membership. The ``lvl``
+    column matches ``_sibling_union_scan``'s shape; rows are already
+    last-writer-wins deduped."""
+    key_cols = (["t"] if with_t else []) + ["tx", "ty"]
     frames = []
-    for z in range(z_lo, z_hi + 1):
-        parents = set(changed[z])
-        if not parents:
-            continue
+    for z, keys in _allowed_child_keys(changed, z_lo, z_hi).items():
         pdf = read_tiles_local(
-            path, z - 1,
-            {2 * k[-2] + dx for k in parents for dx in (0, 1)},
-            {2 * k[-1] + dy for k in parents for dy in (0, 1)},
-            {k[0] for k in parents} if with_t else None,
+            path, z,
+            {k[-2] for k in keys}, {k[-1] for k in keys},
+            {k[0] for k in keys} if with_t else None,
             fs,
         )
-        if not len(pdf):
-            continue
-        # tuple membership: epoch-scale t cannot pack into int64 with tx/ty
-        cols = [pdf["t"]] if with_t else []
-        cols += [pdf["tx"].to_numpy(np.int64) >> 1, pdf["ty"].to_numpy(np.int64) >> 1]
-        keep = [tuple(map(int, k)) in parents for k in zip(*cols)]
-        frames.append(pdf[keep].assign(lvl=z - 1))
+        if len(pdf):
+            keep = [k in keys for k in zip(*(pdf[c].tolist() for c in key_cols))]
+            frames.append(pdf[keep].assign(lvl=z))
     if not frames:
         return pd.DataFrame(columns=["lvl", "tx", "ty"])
     return pd.concat(frames, ignore_index=True)
@@ -634,192 +570,51 @@ def _read_sibling_rows_local(
 
 def _sibling_union_scan(
     spark: SparkSession, path: str, changed, z_lo: int, z_hi: int, with_t: bool,
-    exclude_recomputed: bool = True,
 ):
-    """Union of per-level pruned scans of the 4-sibling child sets of
-    ``changed[z]`` for z in [z_lo, z_hi], each tagged with ``lvl``.
+    """Spark read of the ``_allowed_child_keys`` tiles of a cascade pass
+    over z_lo..z_hi, each row tagged with its source level ``lvl``.
 
-    Flat path: ``_children_of`` (pushable IN-lists + packed-int64 exact
-    membership). Cube path: IN-lists on t/tx/ty + ONE broadcast left-semi
-    join on the enumerated allowed (lvl, t, tx, ty) child keys after the
-    union — packed int64 would overflow for epoch-scale t (review r4).
+    Per source level, plain IN-lists on the allowed keys' [t/]tx/ty sets
+    are pushed into the parquet scan (row-group skipping); then ONE
+    broadcast left-semi join on ``(lvl, [t,] tx, ty)`` against the
+    enumerated allowed keys keeps exactly those — flat pyramids and cubes
+    alike (a packed int64 key would overflow at epoch-scale t, review r4).
+    The keys are bounded at 4x the changed ancestor count; on the cube
+    path the join measured -53% payload bytes into the cascade shuffle at
+    zero extra join cost (``BENCH/CUBE_SCAN.md``). A source level with no
+    allowed key is not scanned at all.
 
-    Source levels INSIDE this pass's recompute range (z-1 in
-    [z_lo, z_hi-1]) additionally EXCLUDE rows whose own key is in
-    ``changed[z-1]``: those tiles are recomputed in-group (computed takes
-    precedence over disk in ``_cascade_repair``), so their disk copies are
-    pure scan+shuffle waste — for a spatially clustered batch they were
-    ~70% of the scanned bytes (round-5 probe: the f64 intermediate levels
-    dwarf the uint8 base). Only unchanged boundary siblings survive.
-    ``exclude_recomputed=False`` disables that exclusion — the A/B handle
-    for ``tools/cube_scan_probe.py``, never used in production."""
+    Predicates are ONE parsed SQL string, not Column algebra: building
+    thousand-element ``isin`` lists through py4j cost ~1 s of driver time
+    per cascade pass on a 1024-tile batch (round-5 measurement)."""
     from concurrent.futures import ThreadPoolExecutor
 
+    allowed = _allowed_child_keys(changed, z_lo, z_hi)
+    key_cols = (["t"] if with_t else []) + ["tx", "ty"]
+    cols = ["lvl"] + (["t"] if with_t else []) + TILE_DATA_COLS + ["_ord"]
     # building each level's source is dominated by the JVM file listing
     # (a filewise ancestor level holds one file per tile); the listings
     # are independent, so run them concurrently — ~0.5 s/batch of serial
     # driver time at G=128 (round-6 profile)
-    zs = list(range(z_lo, z_hi + 1))
+    zs = sorted(allowed)
     with ThreadPoolExecutor(max_workers=len(zs)) as ex:
-        lvls = dict(
-            zip(
-                zs,
-                ex.map(
-                    lambda z: _read_level_or_empty(spark, path, z - 1, with_t), zs
-                ),
-            )
+        lvls = list(ex.map(lambda z: _read_level_or_empty(spark, path, z, with_t), zs))
+    union = None
+    for z, lvl in zip(zs, lvls):
+        pushable = " AND ".join(
+            f"{c} IN ({','.join(map(str, sorted({k[i] for k in allowed[z]})))})"
+            for i, c in enumerate(key_cols)
         )
-    scans = []
-    for z in zs:
-        lvl = lvls[z]
-        excl = None
-        if exclude_recomputed and z_lo <= z - 1 <= z_hi - 1 and changed[z - 1]:
-            if with_t:
-                # cubes fold the exclusion into the one existing broadcast
-                # membership join below (a packed NOT-IN would overflow at
-                # epoch-scale t, r4 review; a SEPARATE anti-join measured
-                # +0.5 s of plan/job constant — tools/cube_scan_probe.py)
-                pass
-            else:
-                ex = ",".join(
-                    str((tx << 32) | ty) for tx, ty in sorted(changed[z - 1])
-                )
-                excl = F.expr(
-                    "(shiftleft(cast(tx as bigint), 32) | cast(ty as bigint)) "
-                    f"NOT IN ({ex})"
-                )
-        if with_t:
-            keys = sorted(changed[z])
-            ts = sorted({t for t, _, _ in keys})
-            xs = sorted({2 * px + dx for _, px, _ in keys for dx in (0, 1)})
-            ys = sorted({2 * py + dy for _, _, py in keys for dy in (0, 1)})
-            csv = ",".join
-            src = lvl.where(
-                F.expr(
-                    f"t IN ({csv(map(str, ts))}) AND tx IN ({csv(map(str, xs))})"
-                    f" AND ty IN ({csv(map(str, ys))})"
-                )
-            )
-        else:
-            src = _children_of(lvl, sorted(changed[z]))
-        if excl is not None:
-            src = src.where(excl)
-        scans.append(src.withColumn("lvl", F.lit(z - 1).cast("int")).select(
-            "lvl",
-            *((["t"] if with_t else [])
-              + [f.name for f in TILE_SCHEMA.fields if f.name != "z"]
-              + ["_ord"]),
-        ))
-    union = scans[0]
-    for sc in scans[1:]:
-        union = union.unionByName(sc)
-    if with_t:
-        # ONE broadcast membership join does both exact parent membership
-        # AND the recomputed-tile exclusion (VERDICT r5 #4): enumerate the
-        # allowed CHILD keys driver-side — the 4-sibling sets of changed[z]
-        # minus the keys this pass recomputes in-group — instead of joining
-        # on parent then anti-joining on changed. Bounded at 4x the changed
-        # ancestor count; measured -53% payload bytes into the cascade
-        # shuffle at zero extra join cost (tools/cube_scan_probe.py).
-        allowed: list[tuple[int, int, int, int]] = []
-        for z in range(z_lo, z_hi + 1):
-            excl = (
-                set(changed[z - 1])
-                if exclude_recomputed and z_lo <= z - 1 <= z_hi - 1
-                else frozenset()
-            )
-            for t, px, py in changed[z]:
-                for dx in (0, 1):
-                    for dy in (0, 1):
-                        k = (t, 2 * px + dx, 2 * py + dy)
-                        if k not in excl:
-                            allowed.append((z - 1, *k))
-        adf = spark.createDataFrame(allowed, "lvl int, t int, tx int, ty int")
-        union = union.join(F.broadcast(adf), ["lvl", "t", "tx", "ty"], "left_semi")
-    return union
-
-
-def ingest_cube_images(
-    spark: SparkSession,
-    source_dir: str,
-    path: str,
-    G,
-    reducer: str = "mean",
-    tilesize: int = 256,
-    t_col: str = "t",
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    layout: str = "delta",
-    fs: LocalFS = DEFAULT_FS,
-    max_files_per_trigger: int | None = None,
-    strict_formats: bool = False,
-    max_delta_files: int | None = 256,
-):
-    """Streaming build of an (x, y, t) cube (VERDICT r3 #8): the batch
-    path's ``build_cube`` semantics, incrementally — each micro-batch of
-    image rows (input_hint schema + integer ``t_col``) appends its base
-    tiles and patches exactly the ancestors of the touched
-    ``(t, tx, ty)`` keys through the same grouped cascade as the flat
-    path (groups keyed by (t, level-K ancestor); exact membership is a
-    broadcast semi-join — packed int64 would overflow at epoch-scale t).
-    All tile writes happen on executors; ``layout`` as in
-    ``ingest_images``."""
-    from ..functions.reducers import is_decomposable, reducer_name
-    from ..operators.cube import base_cube_src, base_cube_tile_gen
-
-    if not is_decomposable(reducer):
-        raise ValueError(
-            f"streaming cube ingest is recursive; reducer "
-            f"{reducer_name(reducer)!r} is not decomposable"
-        )
-    if layout not in ("delta", "filewise"):
-        raise ValueError(f"layout must be 'delta' or 'filewise', got {layout!r}")
-    gx, gy = _grid_dims(G)
-    spec = PyramidSpec(gx * tilesize, gy * tilesize, tilesize)
-    # dataset-open self-heal: replay any swap marker a crashed compaction
-    # left behind before the stream reads/writes this layout (ADVICE r6)
-    recover_pending_swaps(path, fs)
-    # per-stream driver memo (VERDICT r5 #7): delta-file overcount +
-    # multiscales-committed flag — both idempotent under restart
-    state: dict = {"files": None, "ms_done": False}
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if strict_formats:  # opt-in per-batch audit (see ingest_images)
-            audit_unsupported_images(
-                batch_df, strict=True, context=f"cube ingest batch {batch_id}"
-            )
-        ordinal = int(batch_id) if layout == "delta" else None
-        keys0, n_files = _write_tiles_distributed(
-            base_cube_src(batch_df, G, t_col), path, 0, t_col="t",
-            ordinal=ordinal, fs=fs, gen=base_cube_tile_gen(spec),
-        )
-        if not keys0:
-            return
-        _patch_ancestors(spark, path, spec, reducer, keys0, fs)
-        if not state["ms_done"]:
-            _commit_multiscales_once(path, spec, tilesize, reducer, fs)
-            state["ms_done"] = True
-        if ordinal is not None:
-            if state["files"] is not None:
-                state["files"] += n_files
-            _maybe_compact_deltas(
-                spark, path, 0, ordinal, fs, max_delta_files,
-                with_t=True, state=state,
-            )
-
-    reader = spark.readStream.schema(IMAGES_DDL + f", {t_col} int")
-    if max_files_per_trigger:
-        # bound micro-batch size inside ONE long-running query — the
-        # production cadence (and the steady-state bench shape), same
-        # contract as ingest_images
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir or f"{path}/_stream_checkpoint"
+        scan = lvl.where(F.expr(pushable)).withColumn("lvl", F.lit(z).cast("int")).select(*cols)
+        union = scan if union is None else union.unionByName(scan)
+    # an inline VALUES table is a JVM-local relation; createDataFrame from
+    # a list would run a PythonRDD job, and its idle Python workers stay
+    # resident for the life of the stream
+    values = ",".join(
+        "(" + ",".join(map(str, (z,) + k)) + ")" for z in zs for k in sorted(allowed[z])
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    keys = spark.sql(f"SELECT * FROM VALUES {values} AS allowed({', '.join(['lvl'] + key_cols)})")
+    return union.join(F.broadcast(keys), ["lvl"] + key_cols, "left_semi")
 
 
 def _maybe_compact_deltas(
@@ -879,51 +674,13 @@ def _maybe_compact_deltas(
         if state is not None:
             state["files"] = len(old)
         return
-    merged = read_level(spark, path, z).drop("z")
-
     def write_partition(batches):
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
+        _write_delta_file(d, batches, with_t, ordinal, fs, merged=True)
+        yield from ()
 
-        it = iter(batches)
-        first = next((p for p in it if len(p)), None)
-        if first is None:
-            return
-        from itertools import chain
-
-        bounds = []  # per-chunk (txmin, txmax, tymin, tymax)
-
-        def write(tmp):
-            writer = None
-            for pdf in chain([first], it):
-                if not len(pdf):
-                    continue
-                tab = _tile_table(pdf, with_t, ordinal)
-                if writer is None:
-                    writer = pq.ParquetWriter(tmp, tab.schema, compression="zstd")
-                writer.write_table(tab)
-                bounds.append(
-                    (pdf["tx"].min(), pdf["tx"].max(), pdf["ty"].min(), pdf["ty"].max())
-                )
-            writer.close()
-
-        pid = TaskContext.get().partitionId()
-
-        def fname():
-            b = (
-                min(x0 for x0, _, _, _ in bounds),
-                max(x1 for _, x1, _, _ in bounds),
-                min(y0 for _, _, y0, _ in bounds),
-                max(y1 for _, _, _, y1 in bounds),
-            )
-            return _delta_fname(ordinal, pid, b, merged=True)
-
-        fs.publish_file(d, fname, write)
-        yield pd.DataFrame({"n": [len(first)]})
-
-    merged.mapInPandas(write_partition, "n long").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    read_level(spark, path, z).drop("z").mapInPandas(
+        write_partition, "n long"
+    ).write.format("noop").mode("overwrite").save()
     for f in old:
         fs.remove(os.path.join(d, f))
     if state is not None:
@@ -972,12 +729,73 @@ def ingest_images(
     ``build_pyramid``. ``layout="delta"`` (default) writes one file per
     (task, level) per batch with last-writer-wins ordinals — the scale
     path; ``layout="filewise"`` writes one file per tile (no read-side
-    dedup; fine for low-rate streams).
+    dedup; fine for low-rate streams). Ancestors are patched recursively,
+    so a non-decomposable ``reducer`` (median, mode) is refused up front.
     """
+    return _ingest_stream(
+        spark, source_dir, path, G, reducer, tilesize, None, checkpoint_dir,
+        available_now, layout, fs, max_files_per_trigger, strict_formats,
+        max_delta_files,
+    )
+
+
+def ingest_cube_images(
+    spark: SparkSession,
+    source_dir: str,
+    path: str,
+    G,
+    reducer: str = "mean",
+    tilesize: int = 256,
+    t_col: str = "t",
+    checkpoint_dir: str | None = None,
+    available_now: bool = True,
+    layout: str = "delta",
+    fs: LocalFS = DEFAULT_FS,
+    max_files_per_trigger: int | None = None,
+    strict_formats: bool = False,
+    max_delta_files: int | None = 256,
+):
+    """Streaming build of an (x, y, t) cube (VERDICT r3 #8): the batch
+    path's ``build_cube`` semantics, incrementally — each micro-batch of
+    image rows (input_hint schema + integer ``t_col``) appends its base
+    tiles and patches exactly the ancestors of the touched
+    ``(t, tx, ty)`` keys through the same grouped cascade as the flat
+    path (groups keyed by (t, level-K ancestor)). All tile writes happen
+    on executors; the other arguments as in ``ingest_images``."""
+    return _ingest_stream(
+        spark, source_dir, path, G, reducer, tilesize, t_col, checkpoint_dir,
+        available_now, layout, fs, max_files_per_trigger, strict_formats,
+        max_delta_files,
+    )
+
+
+def _ingest_stream(
+    spark, source_dir, path, G, reducer, tilesize, t_col, checkpoint_dir,
+    available_now, layout, fs, max_files_per_trigger, strict_formats,
+    max_delta_files,
+):
+    """The one stream body behind ``ingest_images`` (``t_col=None``) and
+    ``ingest_cube_images`` (``t_col`` names the integer slice column)."""
+    from ..functions.reducers import is_decomposable, reducer_name
+
+    if not is_decomposable(reducer):
+        raise ValueError(
+            "streaming ingest patches ancestors recursively; reducer "
+            f"{reducer_name(reducer)!r} is not decomposable (build_pyramid "
+            "computes it from the base directly)"
+        )
     if layout not in ("delta", "filewise"):
         raise ValueError(f"layout must be 'delta' or 'filewise', got {layout!r}")
     gx, gy = _grid_dims(G)
     spec = PyramidSpec(gx * tilesize, gy * tilesize, tilesize)
+    if t_col is None:
+        ddl, what = IMAGES_DDL, "ingest"
+        source, gen = (lambda df: base_image_src(df, G)), base_tile_gen(spec)
+    else:
+        from ..operators.cube import base_cube_src, base_cube_tile_gen
+
+        ddl, what = IMAGES_DDL + f", {t_col} int", "cube ingest"
+        source, gen = (lambda df: base_cube_src(df, G, t_col)), base_cube_tile_gen(spec)
     # dataset-open self-heal: replay any swap marker a crashed compaction
     # left behind before the stream reads/writes this layout (ADVICE r6)
     recover_pending_swaps(path, fs)
@@ -994,12 +812,12 @@ def ingest_images(
         # loud-on-request is one flag away.
         if strict_formats:
             audit_unsupported_images(
-                batch_df, strict=True, context=f"ingest batch {batch_id}"
+                batch_df, strict=True, context=f"{what} batch {batch_id}"
             )
         ordinal = int(batch_id) if layout == "delta" else None
         keys0, n_files = _write_tiles_distributed(
-            base_image_src(batch_df, G), path, 0,
-            ordinal=ordinal, fs=fs, gen=base_tile_gen(spec),
+            source(batch_df), path, 0, t_col=None if t_col is None else "t",
+            ordinal=ordinal, fs=fs, gen=gen,
         )
         if not keys0:
             return
@@ -1016,17 +834,17 @@ def ingest_images(
             if state["files"] is not None:
                 state["files"] += n_files
             _maybe_compact_deltas(
-                spark, path, 0, ordinal, fs, max_delta_files, state=state
+                spark, path, 0, ordinal, fs, max_delta_files,
+                with_t=t_col is not None, state=state,
             )
 
-    reader = spark.readStream.schema(IMAGES_DDL)
+    reader = spark.readStream.schema(ddl)
     if max_files_per_trigger:
         # bound micro-batch size inside ONE long-running query — the
         # production cadence (and the steady-state ingest bench shape:
         # per-batch cost without re-paying query startup every batch)
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(process_batch).option(
+    writer = reader.parquet(source_dir).writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir or f"{path}/_stream_checkpoint"
     )
     if available_now:

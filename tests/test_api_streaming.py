@@ -74,10 +74,9 @@ def test_streaming_ingest_matches_batch_build(spark, tmp_path):
 
 def test_streaming_child_lookup_pushes_filters(spark, tmp_path):
     """The ancestor-patch child scan must push tx/ty predicates into parquet
-    (VERDICT r1: the old shiftright(tx,1)==px OR-chain scanned whole levels)."""
-    from pyramidscheme_jl_spark.operators.build import PyramidSpec
-    from pyramidscheme_jl_spark.sources.catalog import read_level
-    from pyramidscheme_jl_spark.streaming.ingest import _children_of, ingest_images
+    (VERDICT r1: the old shiftright(tx,1)==px OR-chain scanned whole levels)
+    and keep exactly the children of the changed parents."""
+    from pyramidscheme_jl_spark.streaming.ingest import _sibling_union_scan, ingest_images
 
     src = tmp_path / "src"
     src.mkdir()
@@ -87,12 +86,12 @@ def test_streaming_child_lookup_pushes_filters(spark, tmp_path):
     q_path = str(tmp_path / "pyr")
     ingest_images(spark, f"{src}/*", q_path, G=4).awaitTermination(120)
 
-    kids = _children_of(read_level(spark, q_path, 0), [(0, 0), (1, 1)])
+    kids = _sibling_union_scan(spark, q_path, {1: {(0, 0), (1, 1)}}, 1, 1, False)
     plan = kids._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "In(tx" in plan and "In(ty" in plan
-    got = {(r["tx"], r["ty"]) for r in kids.collect()}
-    assert got == {(tx, ty) for tx in range(4) for ty in range(4)} - {
-        (0, 2), (0, 3), (1, 2), (1, 3), (2, 0), (2, 1), (3, 0), (3, 1)
+    got = {(r["lvl"], r["tx"], r["ty"]) for r in kids.collect()}
+    assert got == {(0, tx, ty) for tx in range(4) for ty in range(4)} - {
+        (0, 0, 2), (0, 0, 3), (0, 1, 2), (0, 1, 3), (0, 2, 0), (0, 2, 1), (0, 3, 0), (0, 3, 1)
     }
 
 
@@ -194,6 +193,26 @@ def test_dedup_module_spark(spark):
     assert mh[(0, 1)] == 8  # identical docs agree on every band
     sh = {r["id"]: r["simhash"] for r in simhash(docs).collect()}
     assert sh[0] == sh[1] and sh[0] != sh[3]
+
+
+def test_simhash_distinct_token_bound(spark):
+    """The packed 16-bit counters bound a document at 65,535 distinct
+    tokens: exactly at the bound the fingerprint is the per-bit majority
+    vote over the token hashes; one token more fails loudly."""
+    import hashlib
+
+    from pyramidscheme_jl_spark.operators.dedup import simhash
+
+    toks = [f"w{i}" for i in range(65536)]
+    docs = spark.createDataFrame([(0, " ".join(toks[:-1]))], "doc_id long, text string")
+    got = simhash(docs).collect()[0]["simhash"]
+    h = np.array([int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in toks[:-1]])
+    votes = ((h[:, None] >> np.arange(32)) & 1).sum(axis=0)
+    want = sum(1 << b for b in range(32) if 2 * votes[b] > len(h))
+    assert got == want
+    over = spark.createDataFrame([(1, " ".join(toks))], "doc_id long, text string")
+    with pytest.raises(Exception, match="exceeds 65535 distinct tokens"):
+        simhash(over).collect()
 
 
 def test_hyperplane_lsh_recall(spark):
@@ -874,6 +893,63 @@ def test_streaming_multipass_cascade(spark, tmp_path, monkeypatch):
     oracle = oracle_levels(mosaic_pixels(G=4), "mean", 2)
     for z in (0, 1, 2):
         np.testing.assert_allclose(assemble_level(spark, q_path, z, spec), oracle[z], rtol=1e-12)
+
+
+@pytest.mark.parametrize("arm", ["spark_pass", "driver_tail"])
+def test_cascade_skips_recomputed_tile_files(spark, tmp_path, monkeypatch, arm):
+    """The cascade never reads a stored tile it recomputes in-group: with a
+    GARBAGE file planted at a level-1 key the batch recomputes, the patch
+    still succeeds and matches the oracle — on the Spark pass (forced by
+    a zero tail gate) and on the driver tail. The batch touches one base
+    tile under every level-1 tile, so no level-1 sibling survives the
+    read rule and level 1 is not read at all."""
+    import os
+
+    import pyramidscheme_jl_spark.streaming.ingest as ing
+    from pyramidscheme_jl_spark.operators.build import PyramidSpec
+    from pyramidscheme_jl_spark.sources.catalog import level_path
+    from pyramidscheme_jl_spark.sources.synth import encode_tile, image_row
+
+    if arm == "spark_pass":
+        monkeypatch.setattr(ing, "_TAIL_MAX_CHANGED", 0)
+    src = tmp_path / "src"
+    src.mkdir()
+    spark.createDataFrame(synth_images(G=4), IMAGES_DDL).coalesce(1).write.parquet(str(src / "b0"))
+    q_path = str(tmp_path / "pyr")
+    ing.ingest_images(spark, f"{src}/*", q_path, G=4).awaitTermination(120)
+
+    with open(os.path.join(level_path(q_path, 1), "tile-000000-000000.parquet"), "w") as f:
+        f.write("not parquet at all")
+    base = mosaic_pixels(G=4).copy()
+    repl = []
+    for i, slot in enumerate((0, 2, 8, 10)):  # base (0,0), (2,0), (0,2), (2,2)
+        r = dict(image_row(slot, G=4))
+        px = np.full((256, 256), 20 * i + 5, dtype=np.uint8)
+        r["bytes"] = encode_tile(px)
+        repl.append(r)
+        ty, tx = divmod(slot, 4)
+        base[256 * ty:256 * (ty + 1), 256 * tx:256 * (tx + 1)] = px
+    spark.createDataFrame(repl, IMAGES_DDL).coalesce(1).write.parquet(str(src / "b1"))
+    ing.ingest_images(spark, f"{src}/*", q_path, G=4).awaitTermination(120)
+
+    oracle = oracle_levels(base, "mean", 2)
+    spec = PyramidSpec(1024, 1024)
+    for z in (0, 1, 2):
+        np.testing.assert_allclose(assemble_level(spark, q_path, z, spec), oracle[z], rtol=1e-12)
+
+
+def test_streaming_refuses_non_decomposable_reducer(spark, tmp_path):
+    """The flat stream, like the cube stream, patches ancestors from their
+    children, so median-of-medians would silently diverge from
+    build_pyramid's direct median: refused before anything is written."""
+    import os
+
+    from pyramidscheme_jl_spark.streaming.ingest import ingest_images
+
+    q_path = str(tmp_path / "pyr")
+    with pytest.raises(ValueError, match="not decomposable"):
+        ingest_images(spark, str(tmp_path / "src"), q_path, G=4, reducer="median")
+    assert not os.path.exists(q_path)
 
 
 def test_ivf_assign_expr_matches_numpy_argmin(spark):

@@ -348,43 +348,43 @@ def test_streaming_cube_delta_rewrite_last_writer_wins(spark, tmp_path):
             np.testing.assert_allclose(got, oracle[z], rtol=1e-12)
 
 
-def test_cube_union_scan_exclusion_drops_recomputed_keys(spark, tmp_path):
-    """VERDICT r5 #4: the cube cascade's sibling union scan must not
-    re-read tiles the pass recomputes in-group. The exclusion is folded
-    into the one broadcast membership join (a separate anti-join measured
-    +0.5 s of job constant — tools/cube_scan_probe.py), so the excluded
-    arm ships strictly fewer rows and the set difference is exactly the
-    interior changed keys."""
+@pytest.mark.parametrize("cube", [False, True], ids=["flat", "cube"])
+def test_union_scan_reads_exactly_allowed_keys(spark, tmp_path, cube):
+    """VERDICT r5 #4: the cascade's sibling union scan reads exactly the
+    ``_allowed_child_keys`` tiles — the 4-sibling sets of the changed
+    parents minus the tiles the pass recomputes in-group — on flat
+    pyramids and cubes alike, and the rule drops the recomputed level-1
+    key of this clustered batch."""
     from pyramidscheme_jl_spark.streaming.ingest import (
+        _allowed_child_keys,
         _changed_keys_by_level,
         _sibling_union_scan,
         ingest_cube_images,
+        ingest_images,
     )
 
-    rows = _cube_rows(G=4)
     src = tmp_path / "exsrc"
     src.mkdir()
-    spark.createDataFrame(rows, CUBE_DDL).coalesce(2).write.parquet(str(src / "b0"))
-    path = str(tmp_path / "excube")
-    ingest_cube_images(spark, f"{src}/*", path, G=4).awaitTermination(180)
+    path = str(tmp_path / "expyr")
+    if cube:
+        spark.createDataFrame(_cube_rows(G=4), CUBE_DDL).coalesce(2).write.parquet(str(src / "b0"))
+        ingest_cube_images(spark, f"{src}/*", path, G=4).awaitTermination(180)
+    else:
+        spark.createDataFrame(synth_images(G=4), IMAGES_DDL).coalesce(2).write.parquet(str(src / "b0"))
+        ingest_images(spark, f"{src}/*", path, G=4).awaitTermination(180)
 
-    # steady batch: the t=0 top-left 2x2 base quadrant -> changed level-1
-    # key (0,0,0) is recomputed in-group and must vanish from the level-2
-    # pass's source scan
-    base_keys = [(0, tx, ty) for tx in (0, 1) for ty in (0, 1)]
+    # steady batch: the top-left 2x2 base quadrant (slice t=0 on the
+    # cube) -> changed level-1 key (0,0) is recomputed in-group and must
+    # not be read as a level-2 source
+    lead = (0,) if cube else ()
+    base_keys = [lead + (tx, ty) for tx in (0, 1) for ty in (0, 1)]
     changed = _changed_keys_by_level(base_keys, 2)
-
-    def keys(flag):
-        df = _sibling_union_scan(
-            spark, path, changed, 1, 2, True, exclude_recomputed=flag
-        )
-        return {
-            (r["lvl"], r["t"], r["tx"], r["ty"])
-            for r in df.select("lvl", "t", "tx", "ty").collect()
-        }
-
-    with_excl, without = keys(True), keys(False)
-    assert without - with_excl == {(1, 0, 0, 0)}
-    assert with_excl < without
-    # level-0 sources sit below the recompute range: never excluded
-    assert {k for k in without if k[0] == 0} == {k for k in with_excl if k[0] == 0}
+    allowed = _allowed_child_keys(changed, 1, 2)
+    assert allowed == {
+        0: set(base_keys),
+        1: {lead + k for k in ((1, 0), (0, 1), (1, 1))},
+    }
+    df = _sibling_union_scan(spark, path, changed, 1, 2, cube)
+    cols = ["lvl"] + (["t"] if cube else []) + ["tx", "ty"]
+    got = [tuple(r) for r in df.select(*cols).collect()]
+    assert sorted(got) == sorted((z,) + k for z, ks in allowed.items() for k in ks)
