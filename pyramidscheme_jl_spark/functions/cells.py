@@ -282,57 +282,24 @@ def _segments_intersect_rect(ring, rx0, ry0, rx1, ry1) -> bool:
     return False
 
 
-def polygon_to_cells_classified(
-    ring, res: int, world: float
-) -> tuple[np.ndarray, np.ndarray]:
-    """Compact cover split into (cells, is_full) where ``is_full`` marks cells
-    entirely inside the geometry (for holed polygons: inside the outer AND
-    outside every hole — the even-odd corner test plus the no-edge/no-vertex
-    guards over ALL rings give exactly that).
+def _cover_descent(rings: list[np.ndarray], res: int, world: float) -> list[tuple[int, bool]]:
+    """Recursive quadtree descent over a geometry's ring list, yielding
+    ``(cell, is_full)`` for every kept cell in visit order.
 
-    The distinction drives the filter+refine join (J3): points in *full*
-    cells are inside with no ray-cast at all — at scale that's the vast
-    majority, so the exact test runs only on the boundary shell.
-    """
-    rings = as_rings(ring)
-    cover = polygon_to_cells(rings, res, world, compact=True)
-    allv = np.concatenate(rings)
-    is_full = np.zeros(len(cover), dtype=bool)
-    ix, iy, r = cell_to_xy(cover)
-    for i in range(len(cover)):
-        size = world / (1 << int(r[i]))
-        x0, y0 = ix[i] * size, iy[i] * size
-        x1, y1 = x0 + size, y0 + size
-        corners = points_in_polygon(
-            np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1]), rings
-        )
-        vert_in = (
-            (allv[:, 0] >= x0) & (allv[:, 0] <= x1) & (allv[:, 1] >= y0) & (allv[:, 1] <= y1)
-        ).any()
-        is_full[i] = bool(
-            corners.all() and not vert_in and not _segments_intersect_rect(rings, x0, y0, x1, y1)
-        )
-    return cover, is_full
-
-
-def polygon_to_cells(ring, res: int, world: float, compact: bool = True) -> np.ndarray:
-    """Compact cover of a geometry (any ``as_rings`` shape): recursive
-    quadtree descent.
-
-    - cell fully inside          -> keep at current res (compact)
+    - cell fully inside          -> keep at current res, ``is_full`` (for
+      holed polygons: inside the outer AND outside every hole — the
+      even-odd corner test plus the no-edge/no-vertex guards over ALL
+      rings give exactly that)
     - cell disjoint              -> drop (this includes cells wholly inside
       a HOLE: all four corners test outside under even-odd, and no hole
       edge crosses the cell)
-    - partial                    -> recurse until ``res``; keep intersecting leaves
-
-    The cover is a superset of the geometry (leaf cells may only partially
-    overlap) — callers refine with exact ray casting (filter+refine join J3).
+    - partial                    -> recurse until ``res``; keep intersecting
+      leaves, not ``is_full``
     """
-    rings = as_rings(ring)
     allv = np.concatenate(rings)
     bx0, by0 = allv[:, 0].min(), allv[:, 1].min()
     bx1, by1 = allv[:, 0].max(), allv[:, 1].max()
-    out: list[int] = []
+    out: list[tuple[int, bool]] = []
 
     def visit(r: int, ix: int, iy: int) -> None:
         size = world / (1 << r)
@@ -348,19 +315,47 @@ def polygon_to_cells(ring, res: int, world: float, compact: bool = True) -> np.n
             (allv[:, 0] >= x0) & (allv[:, 0] <= x1) & (allv[:, 1] >= y0) & (allv[:, 1] <= y1)
         ).any()
         if corners_in.all() and not edge_hit and not vert_in:
-            out.append(int(xy_to_cell(ix, iy, r)))  # fully inside
+            out.append((int(xy_to_cell(ix, iy, r)), True))  # fully inside
             return
         if not corners_in.any() and not edge_hit and not vert_in:
             return  # fully outside
         if r == res:
-            out.append(int(xy_to_cell(ix, iy, r)))  # partial leaf
+            out.append((int(xy_to_cell(ix, iy, r)), False))  # partial leaf
             return
         for dy in (0, 1):
             for dx in (0, 1):
                 visit(r + 1, 2 * ix + dx, 2 * iy + dy)
 
     visit(0, 0, 0)
-    cells = np.asarray(sorted(out), dtype=np.int64)
+    return out
+
+
+def polygon_to_cells_classified(
+    ring, res: int, world: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """Compact cover split into (cells, is_full) where ``is_full`` marks cells
+    entirely inside the geometry — the descent's own verdict, so no cover
+    cell is tested twice.
+
+    The distinction drives the filter+refine join (J3): points in *full*
+    cells are inside with no ray-cast at all — at scale that's the vast
+    majority, so the exact test runs only on the boundary shell.
+    """
+    kept = sorted(_cover_descent(as_rings(ring), res, world))
+    return (
+        np.asarray([c for c, _ in kept], dtype=np.int64),
+        np.asarray([f for _, f in kept], dtype=bool),
+    )
+
+
+def polygon_to_cells(ring, res: int, world: float, compact: bool = True) -> np.ndarray:
+    """Compact cover of a geometry (any ``as_rings`` shape): the cells of
+    ``polygon_to_cells_classified``.
+
+    The cover is a superset of the geometry (leaf cells may only partially
+    overlap) — callers refine with exact ray casting (filter+refine join J3).
+    """
+    cells = polygon_to_cells_classified(ring, res, world)[0]
     if not compact and len(cells):
         lo, hi = cell_range(cells, res)
         # expand everything to res leaves (ranges are contiguous)

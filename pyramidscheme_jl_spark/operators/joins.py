@@ -675,6 +675,27 @@ def _zonal_candidates(
     return cand, rings
 
 
+def _pixel_center_mask(row, rings) -> np.ndarray:
+    """(h, w) mask of the tile row's pixel CENTERS inside ``rings`` — the
+    exact ray-cast the zonal refine stages run on boundary-cover tiles."""
+    sx = (row.xmax - row.xmin) / row.w
+    sy = (row.ymax - row.ymin) / row.h
+    cx = row.xmin + (np.arange(row.w) + 0.5) * sx
+    cy = row.ymin + (np.arange(row.h) + 0.5) * sy
+    gx, gy = np.meshgrid(cx, cy)
+    return points_in_polygon(gx.ravel(), gy.ravel(), rings).reshape(row.h, row.w)
+
+
+def _level_spec(spark: SparkSession, path: str, z: int):
+    """The pyramid's spec, refusing a level ``z`` it does not have."""
+    from ..api import PyramidDataset
+
+    spec = PyramidDataset.open(spark, path).spec
+    if z < 0 or z >= spec.nlevels + 1:
+        raise ValueError(f"level {z} out of range for {spec.nlevels + 1}-level pyramid")
+    return spec
+
+
 def _zonal_over_tiles(
     spark: SparkSession,
     tiles: DataFrame,
@@ -744,14 +765,7 @@ def _zonal_over_tiles(
                 if row.is_full:
                     mask = np.ones(arr.shape, dtype=bool)
                 else:
-                    sx = (row.xmax - row.xmin) / row.w
-                    sy = (row.ymax - row.ymin) / row.h
-                    cx = row.xmin + (np.arange(row.w) + 0.5) * sx
-                    cy = row.ymin + (np.arange(row.h) + 0.5) * sy
-                    gx, gy = np.meshgrid(cx, cy)
-                    mask = points_in_polygon(
-                        gx.ravel(), gy.ravel(), ringmap[row.polygon_id]
-                    ).reshape(arr.shape)
+                    mask = _pixel_center_mask(row, ringmap[row.polygon_id])
                 mask &= ~np.isnan(arr)
                 n = int(mask.sum())
                 if n == 0:
@@ -833,12 +847,9 @@ def zonal_raster(
     generality; quantize in the caller for engine-portable hashing.
     Polygons with zero covered pixels produce no row.
     """
-    from ..api import PyramidDataset
     from ..sources.catalog import read_level
 
-    spec = PyramidDataset.open(spark, path).spec
-    if z < 0 or z >= spec.nlevels + 1:
-        raise ValueError(f"level {z} out of range for {spec.nlevels + 1}-level pyramid")
+    spec = _level_spec(spark, path, z)
     return _zonal_over_tiles(
         spark, read_level(spark, path, z), spec, polygons, spec.cell_res(z),
         max_pushdown_ranges=max_pushdown_ranges,
@@ -886,13 +897,10 @@ def zonal_quantiles(
     with error <= one bucket width, the 100-TB shape for continuous
     domains.
     """
-    from ..api import PyramidDataset
     from ..sources.catalog import read_level
 
     qs, labels, bins, lo_b, hi_b = _validate_quantile_args(qs, bins, vmin, vmax)
-    spec = PyramidDataset.open(spark, path).spec
-    if z < 0 or z >= spec.nlevels + 1:
-        raise ValueError(f"level {z} out of range for {spec.nlevels + 1}-level pyramid")
+    spec = _level_spec(spark, path, z)
     return _zonal_quantiles_over_tiles(
         spark, read_level(spark, path, z), spec, polygons, spec.cell_res(z),
         qs, labels, (), max_pushdown_ranges, bins, lo_b, hi_b,
@@ -914,13 +922,10 @@ def zonal_quantiles_cube(
     twin of ``zonal_quantiles`` exactly as ``zonal_cube`` twins
     ``zonal_raster``: ``t`` rides the refine keys, the histogram
     aggregate, and the per-partition windows; never extra scans."""
-    from ..api import PyramidDataset
     from ..operators.cube import read_cube_level
 
     qs, labels, bins, lo_b, hi_b = _validate_quantile_args(qs, bins, vmin, vmax)
-    spec = PyramidDataset.open(spark, path).spec
-    if z < 0 or z >= spec.nlevels + 1:
-        raise ValueError(f"level {z} out of range for {spec.nlevels + 1}-level pyramid")
+    spec = _level_spec(spark, path, z)
     return _zonal_quantiles_over_tiles(
         spark, read_cube_level(spark, path, z), spec, polygons,
         spec.cell_res(z), qs, labels, ("t",), max_pushdown_ranges,
@@ -957,12 +962,9 @@ def zonal_categorical(
     (ext/PyramidSchemeArchGDALExt.jl) IS per-block majority — this is
     the vector-zone generalization, north-rule surface.
     """
-    from ..api import PyramidDataset
     from ..sources.catalog import read_level
 
-    spec = PyramidDataset.open(spark, path).spec
-    if z < 0 or z >= spec.nlevels + 1:
-        raise ValueError(f"level {z} out of range for {spec.nlevels + 1}-level pyramid")
+    spec = _level_spec(spark, path, z)
     hist = _zonal_value_hist(
         spark, read_level(spark, path, z), spec, polygons, spec.cell_res(z),
         (), max_pushdown_ranges, None, 0.0, 0.0,
@@ -1036,14 +1038,7 @@ def _zonal_value_hist(
                 if row.is_full:
                     flat = arr.ravel()
                 else:
-                    sx = (row.xmax - row.xmin) / row.w
-                    sy = (row.ymax - row.ymin) / row.h
-                    cx = row.xmin + (np.arange(row.w) + 0.5) * sx
-                    cy = row.ymin + (np.arange(row.h) + 0.5) * sy
-                    gx, gy = np.meshgrid(cx, cy)
-                    mask = points_in_polygon(
-                        gx.ravel(), gy.ravel(), ringmap[row.polygon_id]
-                    ).reshape(arr.shape)
+                    mask = _pixel_center_mask(row, ringmap[row.polygon_id])
                     if not mask.any():
                         continue
                     flat = arr[mask]
@@ -1134,12 +1129,9 @@ def zonal_cube(
     ``zonal_raster`` with the time dimension riding through the tile
     split, the Arrow refine, and the final hash aggregate (one partial row
     per (tile, t, polygon); the t axis adds keys, never extra scans)."""
-    from ..api import PyramidDataset
     from ..operators.cube import read_cube_level
 
-    spec = PyramidDataset.open(spark, path).spec
-    if z < 0 or z >= spec.nlevels + 1:
-        raise ValueError(f"level {z} out of range for {spec.nlevels + 1}-level pyramid")
+    spec = _level_spec(spark, path, z)
     tiles = read_cube_level(spark, path, z)
     return _zonal_over_tiles(
         spark, tiles, spec, polygons, spec.cell_res(z), extra_keys=("t",),
@@ -1184,13 +1176,10 @@ def raster_extract(
     - one Arrow stage decodes each tile once and gathers all its points
       vectorized (multi-channel tiles gather the channel mean).
     """
-    from ..api import PyramidDataset
     from ..functions.codec import decode_tile
     from ..sources.catalog import read_level
 
-    spec = PyramidDataset.open(spark, path).spec
-    if z < 0 or z >= spec.nlevels + 1:
-        raise ValueError(f"level {z} out of range for {spec.nlevels + 1}-level pyramid")
+    spec = _level_spec(spark, path, z)
     res_z = spec.cell_res(z)
     ex, ey = grid_coord_cols(res_z, spec.world)
     keyed = points.select(

@@ -167,9 +167,14 @@ def rasterize_polygons(
 
 
 # ---------------------------------------------------------------------------
-# focal (neighborhood) statistics — the classic GIS raster family the
+# neighborhood operators — the classic GIS raster family the
 # block-aggregation pyramid does not cover: every output pixel is a
-# function of its (2r+1)^2 neighborhood, which crosses tile boundaries.
+# function of a window that crosses tile boundaries. Focal stats,
+# morphology, proximity, fillnodata, focal_apply (and the DEM kernels on
+# it) and contours all run ONE halo stage (``_halo_stage``): one tile
+# scan, one strip exchange (``_halo_gen``), one padded-plane assembly
+# (``_assemble_pad``) per (t,) tx, ty group and one row emitter; each
+# operator contributes only its per-tile kernel.
 
 
 FOCAL_STATS = ("mean", "sum", "count", "min", "max")
@@ -188,7 +193,7 @@ _HALO_SCHEMA = (
 _HALO_SCHEMA_T = "t int, " + _HALO_SCHEMA
 
 
-def _halo_gen(radius: int, with_t: bool = False):
+def _halo_gen(radius: int, op: str, with_t: bool = False):
     """mapInPandas stage: each tile re-emits itself (dx=dy=0, metadata
     attached) plus the r-wide edge strips its 8 neighbors need, keyed to
     the NEIGHBOR. Strips are O(perimeter) bytes — the shuffle moves
@@ -225,9 +230,11 @@ def _halo_gen(radius: int, with_t: bool = False):
             for row in pdf.itertuples():
                 if int(row.c) != 1:
                     raise ValueError(
-                        "focal_stats supports single-channel rasters "
+                        f"{op} supports single-channel rasters "
                         f"(tile ({row.tx},{row.ty}) has c={row.c})")
                 r = radius
+                # the driver checks the level's spec; this guards tiles
+                # whose stored dims disagree with it
                 if r > min(int(row.h), int(row.w)):
                     raise ValueError(
                         f"radius {r} exceeds tile dims "
@@ -255,82 +262,144 @@ def _halo_gen(radius: int, with_t: bool = False):
     return gen
 
 
-def _assemble_pad(c, pdf, r: int):
-    """Shared halo assembly: decode the center tile and surround it with
-    the received strips. Returns ``(a, pad, valid, is_int)`` where ``pad``
-    is the (h+2r, w+2r) value plane (int64 for integer rasters, float64
-    otherwise; NaN zero-filled) and ``valid`` marks real finite pixels —
-    absent neighbors/strips stay invalid (borders SHRINK)."""
-    import numpy as np
-
+def _assemble_pad(c, strips, r: int):
+    """Decode the center tile and surround it with the received strips.
+    Returns ``(a, pad, present)``: ``pad`` is the raw (h+2r, w+2r) value
+    plane (int64 for integer rasters, float64 otherwise, NaN where no
+    tile delivered a pixel) and ``present`` marks every delivered pixel,
+    NaN pixels included. The two pad conventions both derive from it:
+    focal kernels take ``present & isfinite(pad)`` as their valid mask
+    (NaN pixels are NODATA; absent neighbors stay invalid, so windows
+    SHRINK at borders), ``focal_apply`` hands its kernel the NaN-padded
+    float64 plane with ``present`` as the mask."""
     from ..functions.codec import decode_tile
 
     h, w = int(c["h"]), int(c["w"])
     a = decode_tile(c["bytes"], h, w, c["dtype"])
-    is_int = a.dtype.kind in "ui"
-    acc_dt = np.int64 if is_int else np.float64
-    pad = np.zeros((h + 2 * r, w + 2 * r), dtype=acc_dt)
-    valid = np.zeros(pad.shape, dtype=bool)
-    pad[r:r + h, r:r + w] = np.nan_to_num(a) if not is_int else a
-    # NaN pixels are NODATA (the sparse-assembly convention), not
-    # values: they must neither poison neighbors' stats nor count
-    valid[r:r + h, r:r + w] = np.isfinite(a)
-    for row in pdf[(pdf["dx"] != 0) | (pdf["dy"] != 0)].itertuples():
+    shape = (h + 2 * r, w + 2 * r)
+    if a.dtype.kind in "ui":
+        pad = np.zeros(shape, dtype=np.int64)
+    else:
+        pad = np.full(shape, np.nan, dtype=np.float64)
+    present = np.zeros(shape, dtype=bool)
+    pad[r:r + h, r:r + w] = a
+    present[r:r + h, r:r + w] = True
+    for row in strips.itertuples():
         p = decode_tile(row.bytes, row.h, row.w, row.dtype)
         x0 = 0 if row.dx == -1 else (r if row.dx == 0 else r + w)
         y0 = 0 if row.dy == -1 else (r if row.dy == 0 else r + h)
         ph, pw = p.shape
-        pad[y0:y0 + ph, x0:x0 + pw] = np.nan_to_num(p)
-        valid[y0:y0 + ph, x0:x0 + pw] = np.isfinite(p)
-    return a, pad, valid, is_int
+        pad[y0:y0 + ph, x0:x0 + pw] = p
+        present[y0:y0 + ph, x0:x0 + pw] = True
+    return a, pad, present
 
 
-def _focal_assemble(stat: str, radius: int, z: int, with_t: bool = False):
-    """applyInPandas stage per (tx, ty): pad the center tile with the
-    received strips (absent neighbors/strips -> invalid: the window
-    SHRINKS at raster borders, counts reflect valid pixels only), then
-    compute the separable (2r+1)-window stat with explicit left-to-right
-    adds — the exact operation order the DuckDB window-SUM twin uses, so
-    float results reproduce bit-for-bit and integer results are exact."""
-    import numpy as np
-    import pandas as pd
+def _halo_stage(spark, path: str, z: int, radius: int, op: str, kernel, *,
+                cube: bool = False, schema=None, radius_arg: str = "radius"):
+    """The one plan behind every neighborhood operator: one scan of level
+    ``z`` -> ``_halo_gen`` (each tile plus the r-wide strips its 8
+    neighbors need) -> groupBy([t,] tx, ty) applyInPandas, which picks
+    the center, assembles its padded plane once and calls
+    ``kernel(c, a, pad, present)`` (center row, decoded center tile and
+    the ``_assemble_pad`` planes).
 
-    from ..functions.codec import decode_tile, encode_tile
+    The kernel returns ``None`` for no output. For tile output (the
+    default ``schema``: TILE_SCHEMA, or CUBE_TILE_SCHEMA with ``cube``)
+    it returns ``(out, vals)``, the (h, w) result and the values its
+    vmin/vmax/vmean are taken over; the row's metadata comes from the
+    center tile. With a custom ``schema`` it returns the output frame.
 
-    out_cols = ["z", "tx", "ty", "bytes", "w", "h", "c", "dtype",
-                "vmin", "vmax", "vmean", "cell", "xmin", "ymin",
-                "xmax", "ymax"]
-    if with_t:
-        out_cols = ["t"] + out_cols
+    The radius bound is checked here, on the driver: halos reach adjacent
+    tiles only, so ``radius`` may not exceed the level's smallest tile
+    dimension (its ragged last tile included), read from the
+    ``_multiscales.json`` document. A pyramid without one is checked per
+    tile by ``_halo_gen``."""
+    from ..functions.codec import encode_tile
+    from ..sources.catalog import read_level, read_multiscales
+
+    if radius < 1:
+        raise ValueError(f"{radius_arg} must be >= 1, got {radius}")
+    if cube:
+        from ..operators.cube import CUBE_TILE_SCHEMA, read_cube_level
+
+        tiles = read_cube_level(spark, path, z)
+        if "t" not in tiles.columns:
+            raise ValueError(f"{op} expects an (x, y, t) cube level")
+    else:
+        tiles = read_level(spark, path, z)
+        if "t" in tiles.columns:
+            raise ValueError(f"{op} expects a flat (x, y) level, not a cube")
+    ms = read_multiscales(path) or {}
+    if all(k in ms for k in ("base_w", "base_h", "tilesize")):
+        ts = int(ms["tilesize"])
+        # level size is ((base - 1) >> z) + 1; its last tile keeps the rest
+        least = min(((int(ms[k]) - 1) >> z) % ts + 1 for k in ("base_w", "base_h"))
+        if radius > least:
+            raise ValueError(
+                f"{op}: {radius_arg} {radius} exceeds the smallest tile "
+                f"dimension ({least} px) of level {z}; halos only reach "
+                "adjacent tiles (run against an overview level)")
+    tile_out = schema is None
+    if tile_out:
+        schema = CUBE_TILE_SCHEMA if cube else TILE_SCHEMA
 
     def fn(key, pdf):
-        ctr = pdf[(pdf["dx"] == 0) & (pdf["dy"] == 0)]
-        if ctr.empty:
-            return pd.DataFrame(columns=out_cols)
-        c = ctr.iloc[0]
-        h, w, r = int(c["h"]), int(c["w"]), radius
-        a, pad, valid, is_int = _assemble_pad(c, pdf, r)
+        is_ctr = (pdf["dx"] == 0) & (pdf["dy"] == 0)
+        if not is_ctr.any():
+            return pd.DataFrame()
+        c = pdf[is_ctr].iloc[0]
+        a, pad, present = _assemble_pad(c, pdf[~is_ctr], radius)
+        res = kernel(c, a, pad, present)
+        if res is None:
+            return pd.DataFrame()
+        if not tile_out:
+            return res
+        out, vals = res
+        out = np.ascontiguousarray(out)
+        return pd.DataFrame([{
+            **({"t": int(c["t"])} if cube else {}),
+            "z": z, "tx": int(c["tx"]), "ty": int(c["ty"]),
+            "bytes": encode_tile(out), "w": int(c["w"]), "h": int(c["h"]),
+            "c": 1, "dtype": str(out.dtype),
+            "vmin": float(vals.min()) if vals.size else float("nan"),
+            "vmax": float(vals.max()) if vals.size else float("nan"),
+            "vmean": float(vals.mean()) if vals.size else float("nan"),
+            "cell": None if c["cell"] is None else int(c["cell"]),
+            "xmin": float(c["xmin"]), "ymin": float(c["ymin"]),
+            "xmax": float(c["xmax"]), "ymax": float(c["ymax"]),
+        }])
 
-        k = 2 * r + 1
+    halo = tiles.mapInPandas(
+        _halo_gen(radius, op, with_t=cube), _HALO_SCHEMA_T if cube else _HALO_SCHEMA
+    )
+    keys = ("t", "tx", "ty") if cube else ("tx", "ty")
+    return halo.groupBy(*keys).applyInPandas(fn, schema)
 
-        def h_windows(m):
-            cols = [m[:, i:m.shape[1] - (k - 1 - i)] for i in range(k)]
-            return cols
 
-        def v_windows(m):
-            return [m[i:m.shape[0] - (k - 1 - i), :] for i in range(k)]
+def _focal_kernel(stat: str, radius: int):
+    """Halo kernel for the separable (2r+1)-window ``stat`` over valid
+    pixels (windows SHRINK at raster borders, counts reflect valid pixels
+    only), with explicit left-to-right folds — the exact operation order
+    the DuckDB window-SUM twin uses, so float results reproduce
+    bit-for-bit and integer results are exact."""
+    k = 2 * radius + 1
 
-        def seq_add(parts):
-            acc = parts[0].copy()
-            for p in parts[1:]:
-                acc = acc + p  # fixed left-to-right order (the SQL twin)
-            return acc
+    def fold(m, op):
+        # along rows, then along columns; (((p0 op p1) op p2) ...)
+        acc = m[:, 0:m.shape[1] - k + 1]
+        for i in range(1, k):
+            acc = op(acc, m[:, i:m.shape[1] - k + 1 + i])
+        out = acc[0:acc.shape[0] - k + 1, :]
+        for i in range(1, k):
+            out = op(out, acc[i:acc.shape[0] - k + 1 + i, :])
+        return out
 
+    def kern(c, a, pad, present):
+        valid = present & np.isfinite(pad)
+        is_int = a.dtype.kind in "ui"
         if stat in ("mean", "sum", "count"):
-            s = seq_add(h_windows(np.where(valid, pad, 0)))
-            s = seq_add(v_windows(s))
-            n = seq_add(h_windows(valid.astype(np.int64)))
-            n = seq_add(v_windows(n))
+            s = fold(np.where(valid, pad, 0), np.add)
+            n = fold(valid.astype(np.int64), np.add)
             if stat == "sum":
                 # all-nodata windows -> NaN on float rasters (the engine's
                 # NaN-as-nodata convention and SQL window-SUM-over-empty-
@@ -346,53 +415,20 @@ def _focal_assemble(stat: str, radius: int, z: int, with_t: bool = False):
             # ints stay int64 end-to-end (a float64 round-trip corrupts
             # values past 2^53 — the same width class zonal routes
             # around); sentinels replace +-inf
-            if is_int:
-                sent = (np.iinfo(np.int64).max if stat == "min"
-                        else np.iinfo(np.int64).min)
-                m = np.where(valid, pad, sent)
-            else:
-                m = np.where(valid, pad,
-                             np.inf if stat == "min" else -np.inf)
             op = np.minimum if stat == "min" else np.maximum
-            hw = h_windows(m)
-            acc = hw[0]
-            for p in hw[1:]:
-                acc = op(acc, p)
-            vw = v_windows(acc)
-            acc2 = vw[0]
-            for p in vw[1:]:
-                acc2 = op(acc2, p)
-            # all-nodata windows (possible when NaN nodata exists): NaN
-            # for float rasters; int rasters have no nodata encoding, so
-            # every window holds its (always finite) center pixel
             if is_int:
-                res = acc2.astype(a.dtype)
+                i64 = np.iinfo(np.int64)
+                sent = i64.max if stat == "min" else i64.min
+                # int rasters have no nodata encoding, so every window
+                # holds its (always finite) center pixel
+                res = fold(np.where(valid, pad, sent), op).astype(a.dtype)
             else:
-                vany = h_windows(valid.astype(np.uint8))
-                va = vany[0]
-                for p in vany[1:]:
-                    va = np.maximum(va, p)
-                vv = v_windows(va)
-                va2 = vv[0]
-                for p in vv[1:]:
-                    va2 = np.maximum(va2, p)
-                res = np.where(va2 > 0, acc2, np.nan)
-        out = np.ascontiguousarray(res)
-        finite = out[np.isfinite(out)]
-        return pd.DataFrame([{
-            **({"t": int(c["t"])} if with_t else {}),
-            "z": z, "tx": int(c["tx"]), "ty": int(c["ty"]),
-            "bytes": encode_tile(out), "w": w, "h": h, "c": 1,
-            "dtype": str(out.dtype),
-            "vmin": float(finite.min()) if finite.size else float("nan"),
-            "vmax": float(finite.max()) if finite.size else float("nan"),
-            "vmean": float(finite.mean()) if finite.size else float("nan"),
-            "cell": None if c["cell"] is None else int(c["cell"]),
-            "xmin": float(c["xmin"]), "ymin": float(c["ymin"]),
-            "xmax": float(c["xmax"]), "ymax": float(c["ymax"]),
-        }])
+                m = fold(np.where(valid, pad, np.inf if stat == "min" else -np.inf), op)
+                # all-nodata windows (possible when NaN nodata exists): NaN
+                res = np.where(fold(valid.astype(np.uint8), np.maximum) > 0, m, np.nan)
+        return res, res[np.isfinite(res)]
 
-    return fn
+    return kern
 
 
 def focal_stats(
@@ -418,20 +454,10 @@ def focal_stats(
     those, which is why the DuckDB oracle reproduces it bit-for-bit
     (engine-portable without any quantization).
     """
-    from ..sources.catalog import TILE_SCHEMA, read_level
-
     if stat not in FOCAL_STATS:
         raise ValueError(f"stat must be one of {FOCAL_STATS}, got {stat!r}")
-    if radius < 1:
-        raise ValueError(f"radius must be >= 1, got {radius}")
-    tiles = read_level(spark, path, z)
-    if any(f.name == "t" for f in tiles.schema.fields):
-        raise ValueError(
-            "focal_stats expects a flat (x, y) level; use focal_stats_cube"
-        )
-    halo = tiles.mapInPandas(_halo_gen(radius), _HALO_SCHEMA)
-    return halo.groupBy("tx", "ty").applyInPandas(
-        _focal_assemble(stat, radius, z), TILE_SCHEMA
+    return _halo_stage(
+        spark, path, z, radius, "focal_stats", _focal_kernel(stat, radius)
     )
 
 
@@ -513,77 +539,41 @@ def raster_proximity(
     semantics — proximity is about where targets are, not what the other
     pixels hold).
 
-    Plan: the focal halo exchange (strips of width ``max_radius``,
-    ~2r/tilesize of the pixel volume) followed by an exact SEPARABLE
-    two-stage EDT per padded tile: stage 1 takes, per column, the min
-    ``dy^2`` to a target within +-r rows (2r+1 vectorized row shifts);
-    stage 2 takes ``min_dx (dx^2 + stage1[y, x+dx])`` (2r+1 column
-    shifts) — the exact brute minimum in O(r) vector passes, never
-    O(r^2). Correctness bound: any target with Euclidean distance <= r
-    is within Chebyshev r, i.e. inside the halo. ``max_radius`` must not
-    exceed the tile size (halos reach adjacent tiles only — the
-    ``_halo_gen`` contract); for coarser reaches run against an overview
-    level, where radius shrinks by 2^z. Tiles with no reachable target
-    anywhere are dropped (sparse semantics).
+    Plan: the shared halo stage (``_halo_stage``: strips of width
+    ``max_radius``, ~2r/tilesize of the pixel volume) with an exact
+    SEPARABLE two-stage EDT as its per-tile kernel: stage 1 takes, per
+    padded column, the min ``dy^2`` to a target within +-r rows (2r+1
+    vectorized row shifts); stage 2 takes ``min_dx (dx^2 + stage1[y,
+    x+dx])`` (2r+1 column shifts) — the exact brute minimum in O(r)
+    vector passes, never O(r^2). Correctness bound: any target with
+    Euclidean distance <= r is within Chebyshev r, i.e. inside the halo.
+    ``max_radius`` must not exceed the level's smallest tile dimension
+    (halos reach adjacent tiles only; checked at call time); for coarser
+    reaches run against an overview level, where radius shrinks by 2^z.
+    Tiles with no reachable target anywhere are dropped (sparse
+    semantics); vmin/vmax/vmean are taken over reached pixels.
     """
-    from ..sources.catalog import TILE_SCHEMA, read_level
+    target, r = float(target_value), max_radius
 
-    if max_radius < 1:
-        raise ValueError(f"max_radius must be >= 1, got {max_radius}")
-    tiles = read_level(spark, path, z)
-    if any(f.name == "t" for f in tiles.schema.fields):
-        raise ValueError("raster_proximity expects a flat (x, y) level")
-    halo = tiles.mapInPandas(_halo_gen(max_radius), _HALO_SCHEMA)
-    return halo.groupBy("tx", "ty").applyInPandas(
-        _proximity_assemble(float(target_value), max_radius, z), TILE_SCHEMA
-    )
-
-
-def _proximity_assemble(target: float, radius: int, z: int):
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.codec import encode_tile
-
-    out_cols = ["z", "tx", "ty", "bytes", "w", "h", "c", "dtype",
-                "vmin", "vmax", "vmean", "cell", "xmin", "ymin",
-                "xmax", "ymax"]
-    INF = 1 << 60
-
-    def fn(key, pdf):
-        ctr = pdf[(pdf["dx"] == 0) & (pdf["dy"] == 0)]
-        if ctr.empty:
-            return pd.DataFrame(columns=out_cols)
-        c = ctr.iloc[0]
-        h, w, r = int(c["h"]), int(c["w"]), radius
-        _, pad, valid, _ = _assemble_pad(c, pdf, r)
-        tm = valid & (pad == target)
+    def kern(c, a, pad, present):
+        h, w = a.shape
+        tm = present & np.isfinite(pad) & (pad == target)
         # stage 1: per padded column, min dy^2 to a target within +-r rows
-        d1 = np.full((h, w + 2 * r), INF, dtype=np.int64)
+        d1 = np.full((h, w + 2 * r), _EDT_INF, dtype=np.int64)
         for dy in range(-r, r + 1):
             np.minimum(
-                d1, np.where(tm[r + dy:r + dy + h, :], dy * dy, INF), out=d1
+                d1, np.where(tm[r + dy:r + dy + h, :], dy * dy, _EDT_INF), out=d1
             )
         # stage 2: min over dx of dx^2 + stage1 shifted
-        best = np.full((h, w), INF, dtype=np.int64)
+        best = np.full((h, w), _EDT_INF, dtype=np.int64)
         for dx in range(-r, r + 1):
             np.minimum(best, dx * dx + d1[:, r + dx:r + dx + w], out=best)
         out = np.where(best <= r * r, best, -1)
-        if (out < 0).all():
-            return pd.DataFrame(columns=out_cols)
         reached = out[out >= 0]
-        return pd.DataFrame([{
-            "z": z, "tx": int(c["tx"]), "ty": int(c["ty"]),
-            "bytes": encode_tile(out), "w": w, "h": h, "c": 1,
-            "dtype": "int64",
-            "vmin": float(reached.min()), "vmax": float(reached.max()),
-            "vmean": float(reached.mean()),
-            "cell": None if c["cell"] is None else int(c["cell"]),
-            "xmin": float(c["xmin"]), "ymin": float(c["ymin"]),
-            "xmax": float(c["xmax"]), "ymax": float(c["ymax"]),
-        }])
+        return (out, reached) if reached.size else None
 
-    return fn
+    return _halo_stage(spark, path, z, max_radius, "raster_proximity", kern,
+                       radius_arg="max_radius")
 
 
 def fillnodata(
@@ -608,32 +598,34 @@ def fillnodata(
     neighbor; run ``focal_stats(mean)`` after this fill if smoothing is
     wanted — the documented GDAL recipe is exactly that pair).
 
-    Plan: the ``raster_proximity`` halo exchange (r-wide strips, ~2r/
-    tilesize of pixel volume) + the same separable two-stage exact EDT,
-    here carrying ``(d^2, value)`` TUPLES through both min passes. The
+    Plan: the shared halo stage (``_halo_stage``, r-wide strips, ~2r/
+    tilesize of pixel volume) with ``_lex_edt`` as its per-tile kernel:
+    the separable two-stage exact EDT of ``raster_proximity``, here
+    carrying ``(d^2, value)`` TUPLES through both min passes. The
     lexicographic tuple-min composes across the stages: within one
     column two seeds only tie in final distance when their ``dy^2``
     ties (same ``dx^2``), and stage 1 already broke that tie by value;
     across columns stage 2 compares full tuples. So two O(r) shift
     passes reproduce the global argmin, never O(r^2) scans. Same
-    ``max_radius <= tilesize`` halo contract as proximity; run against
-    an overview level for coarser reaches.
+    call-time ``max_radius`` bound as proximity (the level's smallest
+    tile dimension); run against an overview level for coarser reaches.
 
     Returns TILE_SCHEMA rows (the filled raster level, dtype preserved).
     Reference parity: none — north-rule raster-repair surface (the
     ingest-side companion of ``cube_time.gap_fill``'s temporal LOCF).
     """
-    from ..sources.catalog import TILE_SCHEMA, read_level
+    nodata, r = float(nodata), max_radius
 
-    if max_radius < 1:
-        raise ValueError(f"max_radius must be >= 1, got {max_radius}")
-    tiles = read_level(spark, path, z)
-    if any(f.name == "t" for f in tiles.schema.fields):
-        raise ValueError("fillnodata expects a flat (x, y) level")
-    halo = tiles.mapInPandas(_halo_gen(max_radius), _HALO_SCHEMA)
-    return halo.groupBy("tx", "ty").applyInPandas(
-        _fill_assemble(float(nodata), max_radius, z), TILE_SCHEMA
-    )
+    def kern(c, a, pad, present):
+        h, w = a.shape
+        bd, bv = _lex_edt(present & np.isfinite(pad) & (pad != nodata), pad, h, w, r)
+        keep = np.isfinite(a) & (a != nodata)
+        out = np.where(keep, a, np.where(bd <= r * r, bv.astype(a.dtype), a))
+        out = out.astype(a.dtype, copy=False)
+        return out, out[np.isfinite(out)]
+
+    return _halo_stage(spark, path, z, max_radius, "fillnodata", kern,
+                       radius_arg="max_radius")
 
 
 _EDT_INF = 1 << 60
@@ -673,46 +665,6 @@ def _lex_edt(vm, pad, h: int, w: int, r: int):
     return bd, bv
 
 
-def _fill_assemble(nodata: float, radius: int, z: int):
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.codec import encode_tile
-
-    out_cols = ["z", "tx", "ty", "bytes", "w", "h", "c", "dtype",
-                "vmin", "vmax", "vmean", "cell", "xmin", "ymin",
-                "xmax", "ymax"]
-
-    def fn(key, pdf):
-        ctr = pdf[(pdf["dx"] == 0) & (pdf["dy"] == 0)]
-        if ctr.empty:
-            return pd.DataFrame(columns=out_cols)
-        c = ctr.iloc[0]
-        h, w, r = int(c["h"]), int(c["w"]), radius
-        a, pad, valid, _ = _assemble_pad(c, pdf, r)
-        vm = valid & (pad != nodata)
-        bd, bv = _lex_edt(vm, pad, h, w, r)
-        keep = np.isfinite(a) & (a != nodata)
-        reach = bd <= r * r
-        out = np.where(keep, a,
-                       np.where(reach, bv.astype(a.dtype), a))
-        out = np.ascontiguousarray(out.astype(a.dtype, copy=False))
-        finite = out[np.isfinite(out.astype(np.float64))]
-        return pd.DataFrame([{
-            "z": z, "tx": int(c["tx"]), "ty": int(c["ty"]),
-            "bytes": encode_tile(out), "w": w, "h": h, "c": 1,
-            "dtype": str(out.dtype),
-            "vmin": float(finite.min()) if finite.size else float("nan"),
-            "vmax": float(finite.max()) if finite.size else float("nan"),
-            "vmean": float(finite.mean()) if finite.size else float("nan"),
-            "cell": None if c["cell"] is None else int(c["cell"]),
-            "xmin": float(c["xmin"]), "ymin": float(c["ymin"]),
-            "xmax": float(c["xmax"]), "ymax": float(c["ymax"]),
-        }])
-
-    return fn
-
-
 def focal_stats_cube(
     spark,
     path: str,
@@ -725,17 +677,10 @@ def focal_stats_cube(
     exchange keys (the J9/zonal_cube pattern: extra key columns, never
     extra scans). One scan of the cube level, strips keyed (t, ntx,
     nty), assembly per (t, tx, ty); returns CUBE_TILE_SCHEMA rows."""
-    from ..operators.cube import CUBE_TILE_SCHEMA, read_cube_level
-
     if stat not in FOCAL_STATS:
         raise ValueError(f"stat must be one of {FOCAL_STATS}, got {stat!r}")
-    if radius < 1:
-        raise ValueError(f"radius must be >= 1, got {radius}")
-    tiles = read_cube_level(spark, path, z)
-    halo = tiles.mapInPandas(_halo_gen(radius, with_t=True), _HALO_SCHEMA_T)
-    return halo.groupBy("t", "tx", "ty").applyInPandas(
-        _focal_assemble(stat, radius, z, with_t=True), CUBE_TILE_SCHEMA
-    )
+    return _halo_stage(spark, path, z, radius, "focal_stats_cube",
+                       _focal_kernel(stat, radius), cube=True)
 
 
 def focal_apply(
@@ -750,87 +695,36 @@ def focal_apply(
     any-callable contract for FOCAL computations. ``kernel_fn(padded,
     valid, radius)`` receives the (h+2r, w+2r) float64 window pad (NaN
     where no data exists — raster border or missing tile) plus the
-    validity mask, and returns the (h, w) result array. Runs inside the
-    same halo-exchange plan as ``focal_stats`` (strips-only shuffle);
-    the kernel must be a pure per-tile numpy function.
+    validity mask (True wherever a tile delivered a pixel, NaN pixels
+    included), and returns the (h, w) result array; the kernel must be a
+    pure per-tile numpy function.
+
+    Plan: the shared halo stage (``_halo_stage``: strips-only shuffle,
+    one padded plane per tile — the one ``focal_stats`` uses), with
+    ``kernel_fn`` as the per-tile kernel; vmin/vmax/vmean are taken over
+    the result's finite pixels.
 
     ``slope_degrees`` / ``hillshade`` below are the canonical DEM
     kernels (Horn's method); both are pytest-pinned against full-mosaic
     replays. Trig results are deliberately NOT oracle-gated (libm ulps
     are not engine-portable — the focal_stats mean row is the
     bit-exact representative of this plan)."""
-    import numpy as np
-    import pandas as pd
+    dt = np.dtype(out_dtype)
 
-    from ..functions.codec import decode_tile, encode_tile
-    from ..sources.catalog import TILE_SCHEMA, read_level
-
-    if radius < 1:
-        raise ValueError(f"radius must be >= 1, got {radius}")
-
-    def fn(key, pdf):
-        ctr = pdf[(pdf["dx"] == 0) & (pdf["dy"] == 0)]
-        if ctr.empty:
-            return pd.DataFrame(
-                columns=["z", "tx", "ty", "bytes", "w", "h", "c", "dtype",
-                         "vmin", "vmax", "vmean", "cell", "xmin", "ymin",
-                         "xmax", "ymax"])
-        c = ctr.iloc[0]
-        h, w, r = int(c["h"]), int(c["w"]), radius
-        pad = np.full((h + 2 * r, w + 2 * r), np.nan, dtype=np.float64)
-        valid = np.zeros(pad.shape, dtype=bool)
-        pad[r:r + h, r:r + w] = decode_tile(c["bytes"], h, w, c["dtype"])
-        valid[r:r + h, r:r + w] = True
-        for row in pdf[(pdf["dx"] != 0) | (pdf["dy"] != 0)].itertuples():
-            p = decode_tile(row.bytes, row.h, row.w, row.dtype)
-            x0 = 0 if row.dx == -1 else (r if row.dx == 0 else r + w)
-            y0 = 0 if row.dy == -1 else (r if row.dy == 0 else r + h)
-            pad[y0:y0 + p.shape[0], x0:x0 + p.shape[1]] = p
-            valid[y0:y0 + p.shape[0], x0:x0 + p.shape[1]] = True
-        res = np.ascontiguousarray(
-            np.asarray(kernel_fn(pad, valid, r), dtype=np.dtype(out_dtype))
-        )
-        if res.shape != (h, w):
+    def kern(c, a, pad, present):
+        res = np.asarray(kernel_fn(np.where(present, pad, np.nan), present, radius), dtype=dt)
+        if res.shape != a.shape:
             raise ValueError(
-                f"kernel returned shape {res.shape}, expected {(h, w)}")
-        finite = res[np.isfinite(res)]
-        return pd.DataFrame([{
-            "z": z, "tx": int(c["tx"]), "ty": int(c["ty"]),
-            "bytes": encode_tile(res), "w": w, "h": h, "c": 1,
-            "dtype": str(res.dtype),
-            "vmin": float(finite.min()) if finite.size else float("nan"),
-            "vmax": float(finite.max()) if finite.size else float("nan"),
-            "vmean": float(finite.mean()) if finite.size else float("nan"),
-            "cell": None if c["cell"] is None else int(c["cell"]),
-            "xmin": float(c["xmin"]), "ymin": float(c["ymin"]),
-            "xmax": float(c["xmax"]), "ymax": float(c["ymax"]),
-        }])
+                f"kernel returned shape {res.shape}, expected {a.shape}")
+        return res, res[np.isfinite(res)]
 
-    tiles = read_level(spark, path, z)
-    if any(f.name == "t" for f in tiles.schema.fields):
-        raise ValueError("focal_apply expects a flat (x, y) level, not a cube")
-    halo = tiles.mapInPandas(_halo_gen(radius), _HALO_SCHEMA)
-    return halo.groupBy("tx", "ty").applyInPandas(fn, TILE_SCHEMA)
+    return _halo_stage(spark, path, z, radius, "focal_apply", kern)
 
 
 def _horn_gradients(pad, cellsize: float):
     """Horn's method gradients on a 1-padded window; border pixels use
     edge replication (the GDAL -compute_edges convention)."""
-    import numpy as np
-
-    p = pad.copy()
-    # replicate edges into NaN halo so border windows are defined
-    for _ in range(2):  # two passes settle corners
-        m = np.isnan(p)
-        for sl_to, sl_from in (
-            (np.s_[0, :], np.s_[1, :]), (np.s_[-1, :], np.s_[-2, :]),
-            (np.s_[:, 0], np.s_[:, 1]), (np.s_[:, -1], np.s_[:, -2]),
-        ):
-            row = p[sl_to]
-            src = p[sl_from]
-            fill = np.isnan(row) & ~np.isnan(src)
-            row[fill] = src[fill]
-            p[sl_to] = row
+    p = _edge_replicate(pad)
     a, b, c = p[:-2, :-2], p[:-2, 1:-1], p[:-2, 2:]
     d, f = p[1:-1, :-2], p[1:-1, 2:]
     g, h2, i = p[2:, :-2], p[2:, 1:-1], p[2:, 2:]
@@ -1023,9 +917,10 @@ def contour_segments(spark, path: str, levels, z: int = 0):
     are wanted (segment endpoints on shared cell edges are bit-identical
     because both cells interpolate the same two corner values).
 
-    Plan: the radius-1 focal halo exchange (strips only — a cell on a
-    tile seam needs just the E/S/SE corner pixels), then one Arrow stage
-    per tile classifying all cells for all ``levels`` vectorized. Each
+    Plan: the shared halo stage (``_halo_stage``) at radius 1 (strips
+    only — a cell on a tile seam needs just the E/S/SE corner pixels),
+    with a per-tile kernel classifying all cells for all ``levels``
+    vectorized. Each
     cell is owned by exactly ONE tile (its top-left corner's tile), so
     no dedup shuffle; cells missing a corner (raster border, absent
     tile) emit nothing. Scale: the shuffle is O(perimeter), the emit is
@@ -1038,7 +933,6 @@ def contour_segments(spark, path: str, levels, z: int = 0):
     north-rule raster→vector surface, the inverse of ``rasterize``.
     """
     from ..api import PyramidDataset
-    from ..sources.catalog import read_level
 
     lvls = tuple(float(v) for v in levels)
     if not lvls:
@@ -1049,31 +943,18 @@ def contour_segments(spark, path: str, levels, z: int = 0):
             "segments twice (and collide polyline segment keys)"
         )
     ts = PyramidDataset.open(spark, path).spec.tilesize
-    tiles = read_level(spark, path, z)
-    if any(f.name == "t" for f in tiles.schema.fields):
-        raise ValueError("contour_segments expects a flat (x, y) level")
-    halo = tiles.mapInPandas(_halo_gen(1), _HALO_SCHEMA)
-    return halo.groupBy("tx", "ty").applyInPandas(
-        _contour_assemble(lvls, int(ts)), _CONTOUR_SCHEMA
-    )
+    return _halo_stage(spark, path, z, 1, "contour_segments",
+                       _contour_kernel(lvls, int(ts)), schema=_CONTOUR_SCHEMA)
 
 
-def _contour_assemble(levels: tuple, ts: int):
-    import numpy as np
-    import pandas as pd
-
-    out_cols = ["level", "cx", "cy", "k", "x0", "y0", "x1", "y1"]
-    empty = pd.DataFrame(columns=out_cols)
-
-    def fn(key, pdf):
-        ctr = pdf[(pdf["dx"] == 0) & (pdf["dy"] == 0)]
-        if ctr.empty:
-            return empty
-        c = ctr.iloc[0]
-        h, w = int(c["h"]), int(c["w"])
+def _contour_kernel(levels: tuple, ts: int):
+    """Radius-1 halo kernel of ``contour_segments``: the tile's segment
+    rows, or None when it has none."""
+    def kern(c, a, pad, present):
+        h, w = a.shape
         gx0, gy0 = int(c["tx"]) * ts, int(c["ty"]) * ts
-        _, pad, valid, _ = _assemble_pad(c, pdf, 1)
         pad = pad.astype(np.float64, copy=False)
+        valid = present & np.isfinite(pad)
         # corner grid: local corner (i, j) = global pixel (gy0+i, gx0+j);
         # this tile owns cells with top-left corner inside it (i<h, j<w),
         # so cell ownership is a partition of the lattice — no dedup
@@ -1150,9 +1031,9 @@ def _contour_assemble(levels: tuple, ts: int):
                         "cy": rcy.astype(np.int64),
                         "k": np.full(rcx.size, k_, dtype=np.int32),
                         "x0": x0, "y0": y0, "x1": x1, "y1": y1}))
-        return pd.concat(out, ignore_index=True) if out else empty
+        return pd.concat(out, ignore_index=True) if out else None
 
-    return fn
+    return kern
 
 
 def color_relief(

@@ -532,3 +532,54 @@ def test_tri_validation(spark, pyr):
     root, _ = pyr
     with pytest.raises(ValueError, match="alg"):
         tri(spark, root, alg="mad")
+
+
+def test_focal_apply_pad_contract(spark, tmp_path):
+    """``focal_apply`` hands its kernel a float64 pad that is NaN where no
+    tile delivered a pixel (raster border, missing tile) and a ``valid``
+    mask that is True wherever a tile did, NaN pixels included. The
+    kernel encodes, per output pixel, the window's count of valid cells
+    and of NaN pad cells; a numpy replay of that contract over the
+    assembled plane must agree, on ragged tiles around a missing one."""
+    from pyramidscheme_jl_spark.functions.codec import decode_tile
+    from pyramidscheme_jl_spark.operators.build import PyramidSpec, _rows_to_pdf, _tile_row
+    from pyramidscheme_jl_spark.operators.raster import focal_apply
+    from pyramidscheme_jl_spark.sources.catalog import write_level_driver, write_multiscales
+
+    ts, W, H, r, missing = 32, 80, 72, 2, (1, 1)
+    a = np.random.RandomState(11).uniform(0, 9, size=(H, W))
+    a[np.random.RandomState(12).rand(H, W) < 0.1] = np.nan
+    a[30:34, 62:66] = np.nan  # a NaN block across a tile seam
+    spec = PyramidSpec(W, H, ts)
+    tiles = [(tx, ty) for ty in range(3) for tx in range(3) if (tx, ty) != missing]
+    rows = [_tile_row(spec, 0, tx, ty, np.ascontiguousarray(a[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]))
+            for tx, ty in tiles]
+    path = str(tmp_path / "pyr")
+    write_level_driver(_rows_to_pdf(rows).to_dict("records"), path, 0)
+    write_multiscales(path, 0, ts, W, H, "none", "-")
+
+    def kern(pad, valid, k):
+        h, w = pad.shape[0] - 2 * k, pad.shape[1] - 2 * k
+        nv = np.zeros((h, w))
+        nn = np.zeros((h, w))
+        for dy in range(2 * k + 1):
+            for dx in range(2 * k + 1):
+                nv += valid[dy:dy + h, dx:dx + w]
+                nn += np.isnan(pad[dy:dy + h, dx:dx + w])
+        return nv * 100 + nn
+
+    # the replay: the whole plane padded by r, NaN where no tile delivered
+    plane = np.full((H + 2 * r, W + 2 * r), np.nan)
+    present = np.zeros(plane.shape, dtype=bool)
+    for tx, ty in tiles:
+        win = np.s_[r + ty * ts:r + min((ty + 1) * ts, H), r + tx * ts:r + min((tx + 1) * ts, W)]
+        plane[win] = a[win[0].start - r:win[0].stop - r, win[1].start - r:win[1].stop - r]
+        present[win] = True
+    want = kern(plane, present, r)
+
+    got = focal_apply(spark, path, kern, radius=r).collect()
+    assert sorted((x["tx"], x["ty"]) for x in got) == sorted(tiles)
+    for x in got:
+        tile = decode_tile(x["bytes"], x["h"], x["w"], x["dtype"])
+        y0, x0 = x["ty"] * ts, x["tx"] * ts
+        np.testing.assert_array_equal(tile, want[y0:y0 + x["h"], x0:x0 + x["w"]])

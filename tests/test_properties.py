@@ -157,3 +157,77 @@ def test_jpeg_roundtrip_properties(h, w, quality, mode, prog, seed):
     if prog:
         pr = decode_jpeg(encode_jpeg_progressive(img, quality=quality, subsample=ss))
         np.testing.assert_array_equal(seq, pr)
+
+
+def _classify_by_retest(rings, res, world):
+    """The cover classification as a second pass: every cover cell's
+    corner, vertex and edge tests re-run (the oracle for the descent's
+    own verdicts)."""
+    from pyramidscheme_jl_spark.functions.cells import (
+        _segments_intersect_rect,
+        points_in_polygon,
+        polygon_to_cells,
+    )
+
+    cover = polygon_to_cells(rings, res, world, compact=True)
+    allv = np.concatenate(rings)
+    is_full = np.zeros(len(cover), dtype=bool)
+    ix, iy, r = cell_to_xy(cover)
+    for i in range(len(cover)):
+        size = world / (1 << int(r[i]))
+        x0, y0 = ix[i] * size, iy[i] * size
+        x1, y1 = x0 + size, y0 + size
+        corners = points_in_polygon(
+            np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1]), rings
+        )
+        vert_in = (
+            (allv[:, 0] >= x0) & (allv[:, 0] <= x1) & (allv[:, 1] >= y0) & (allv[:, 1] <= y1)
+        ).any()
+        is_full[i] = bool(
+            corners.all() and not vert_in and not _segments_intersect_rect(rings, x0, y0, x1, y1)
+        )
+    return cover, is_full
+
+
+def _star(cx, cy, radii, phase, snap):
+    """A simple star-shaped ring around (cx, cy); with ``snap`` every
+    vertex sits on the cell lattice, so vertices land on cell edges."""
+    n = len(radii)
+    ang = phase + 2 * np.pi * np.arange(n) / n
+    ring = np.stack([cx + np.asarray(radii) * np.cos(ang), cy + np.asarray(radii) * np.sin(ang)], 1)
+    return np.round(ring / snap) * snap if snap else ring
+
+
+_radii = st.lists(st.floats(0.6, 1.0), min_size=3, max_size=9)
+
+
+@settings(deadline=None, max_examples=40)
+@given(
+    kind=st.sampled_from(["simple", "holed", "multi"]),
+    outer=_radii,
+    inner=_radii,
+    phase=st.floats(0.0, 6.3),
+    cx=st.floats(300.0, 700.0),
+    cy=st.floats(300.0, 700.0),
+    scale=st.floats(60.0, 250.0),
+    res=st.integers(3, 6),
+    snap=st.booleans(),
+)
+def test_cover_classification_matches_retest(kind, outer, inner, phase, cx, cy, scale, res, snap):
+    """``polygon_to_cells_classified`` takes ``is_full`` from the cover
+    descent itself; it must equal the per-cell re-test over random
+    simple, holed and multi polygons, vertices on cell edges included."""
+    from pyramidscheme_jl_spark.functions.cells import polygon_to_cells_classified
+
+    world = 1024.0
+    lattice = world / (1 << res) if snap else 0.0
+    rings = [_star(cx, cy, np.asarray(outer) * scale, phase, lattice)]
+    if kind == "holed":
+        rings.append(_star(cx, cy, np.asarray(inner) * scale * 0.3, -phase, lattice))
+    elif kind == "multi":
+        rings.append(_star(world - cx, world - cy, np.asarray(inner) * scale * 0.5, phase, lattice))
+    cells, is_full = polygon_to_cells_classified(rings, res, world)
+    want_cells, want_full = _classify_by_retest(rings, res, world)
+    np.testing.assert_array_equal(cells, want_cells)
+    np.testing.assert_array_equal(is_full, want_full)
+    assert cells.dtype == np.int64 and is_full.dtype == bool

@@ -9,6 +9,7 @@ import pytest
 
 from pyramidscheme_jl_spark.functions.codec import decode_tile
 from pyramidscheme_jl_spark.operators.build import PyramidSpec, _rows_to_pdf, _tile_row
+from pyramidscheme_jl_spark.operators import raster
 from pyramidscheme_jl_spark.operators.raster import raster_proximity
 from pyramidscheme_jl_spark.sources.catalog import write_level_driver, write_multiscales
 
@@ -95,3 +96,31 @@ def test_proximity_no_targets_yields_empty(spark, plane_path):
 def test_proximity_validation(spark, plane_path):
     with pytest.raises(ValueError, match="max_radius"):
         raster_proximity(spark, plane_path, 7.0, 0)
+
+
+@pytest.fixture(scope="module")
+def ragged_path(spark, tmp_path_factory):
+    """80x80 plane on 32px tiles: the last tile row/column is 16px."""
+    a = np.random.RandomState(7).randint(0, 3, size=(80, 80)).astype(np.float64)
+    path = str(tmp_path_factory.mktemp("ragged") / "pyr")
+    _write_plane(spark, a, path)
+    return path
+
+
+_HALO_CALLS = {
+    "focal_stats": lambda s, p, r: raster.focal_stats(s, p, radius=r),
+    "raster_proximity": lambda s, p, r: raster.raster_proximity(s, p, 1.0, r),
+    "fillnodata": lambda s, p, r: raster.fillnodata(s, p, 0.0, r),
+    "focal_apply": lambda s, p, r: raster.focal_apply(s, p, lambda pad, v, k: pad[k:-k, k:-k], radius=r),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_HALO_CALLS))
+def test_halo_radius_bound_fails_at_call_time(spark, ragged_path, op):
+    """A radius past the smallest (ragged, 16px) tile dimension is refused
+    when the operator is called — a ValueError naming the operator, not a
+    lazy frame that fails inside a Python worker at collect()."""
+    call = _HALO_CALLS[op]
+    with pytest.raises(ValueError, match=f"{op}.*16 px"):
+        call(spark, ragged_path, 20)
+    call(spark, ragged_path, 16).count()  # the bound itself runs
