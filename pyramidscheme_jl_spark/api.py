@@ -289,3 +289,11 @@ class PyramidDataset:
             src_ms.get("reducer_hash") or "",
         )
         return PyramidDataset(self.spark, path, self.spec, reducer=self.reducer)
+
+
+def _level_spec(spark: SparkSession, path: str, z: int) -> PyramidSpec:
+    """The pyramid's spec, refusing a level ``z`` it does not have."""
+    spec = PyramidDataset.open(spark, path).spec
+    if z < 0 or z >= spec.nlevels + 1:
+        raise ValueError(f"level {z} out of range for {spec.nlevels + 1}-level pyramid")
+    return spec

@@ -42,15 +42,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..api import _level_spec
 from ..sources.catalog import TILE_SCHEMA
-from .build import PyramidSpec, _rows_to_pdf, _tile_row
+from .build import _rows_to_pdf, _tile_row
 from .cube import CUBE_TILE_SCHEMA, _cube_rows_to_pdf, read_cube_level
-
-
-def _open_spec(spark: SparkSession, path: str) -> PyramidSpec:
-    from ..api import PyramidDataset
-
-    return PyramidDataset.open(spark, path).spec
 
 
 def _t_domain(spark: SparkSession, path: str, z: int, t_domain) -> np.ndarray:
@@ -169,8 +164,8 @@ def cube_gap_fill(
     the series is long (daily imagery for a decade); leave None when T is
     small and one gather per tile is cheapest.
     """
+    spec = _level_spec(spark, path, z)
     ts = _t_domain(spark, path, z, t_domain)
-    spec = _open_spec(spark, path)
     tiles = read_cube_level(spark, path, z)
     zz = int(z)
 
@@ -310,8 +305,8 @@ def cube_composite(
     """
     if argt and stat not in ("max", "min", "last", "first"):
         raise ValueError(f"argt is undefined for stat={stat!r}")
+    spec = _level_spec(spark, path, z)
     ts = _t_domain(spark, path, z, t_domain)
-    spec = _open_spec(spark, path)
     tiles = read_cube_level(spark, path, z)
     zz = int(z)
 
@@ -420,8 +415,8 @@ def cube_rolling(
         raise ValueError(
             f"min_periods must be in [1, window], got {min_periods}"
         )
+    spec = _level_spec(spark, path, z)
     ts = _t_domain(spark, path, z, t_domain)
-    spec = _open_spec(spark, path)
     tiles = read_cube_level(spark, path, z)
     zz = int(z)
     mp = int(min_periods)
@@ -511,8 +506,8 @@ def cube_anomaly(
     sums pass plus a map pass (not needed at the in-group sizes this
     serves). Returns CUBE_TILE_SCHEMA rows; all-NaN frames drop.
     """
+    spec = _level_spec(spark, path, z)
     ts = _t_domain(spark, path, z, t_domain)
-    spec = _open_spec(spark, path)
     tiles = read_cube_level(spark, path, z)
     zz = int(z)
 
@@ -572,8 +567,8 @@ def cube_trend(
         raise ValueError(
             f"stat must be slope|intercept|nobs, got {stat!r}"
         )
+    spec = _level_spec(spark, path, z)
     ts = _t_domain(spark, path, z, t_domain)
-    spec = _open_spec(spark, path)
     tiles = read_cube_level(spark, path, z)
     zz = int(z)
 

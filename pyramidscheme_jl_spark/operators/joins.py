@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..api import _level_spec
 from ..functions.cells import (
     _RES_SHIFT,
     cell_res,
@@ -684,16 +685,6 @@ def _pixel_center_mask(row, rings) -> np.ndarray:
     cy = row.ymin + (np.arange(row.h) + 0.5) * sy
     gx, gy = np.meshgrid(cx, cy)
     return points_in_polygon(gx.ravel(), gy.ravel(), rings).reshape(row.h, row.w)
-
-
-def _level_spec(spark: SparkSession, path: str, z: int):
-    """The pyramid's spec, refusing a level ``z`` it does not have."""
-    from ..api import PyramidDataset
-
-    spec = PyramidDataset.open(spark, path).spec
-    if z < 0 or z >= spec.nlevels + 1:
-        raise ValueError(f"level {z} out of range for {spec.nlevels + 1}-level pyramid")
-    return spec
 
 
 def _zonal_over_tiles(

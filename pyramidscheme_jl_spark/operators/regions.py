@@ -9,17 +9,26 @@ back out, and the pair closes the raster<->vector loop.
 
 Spark-first shape (the reason this works at 10^12 pixels):
 
-1. ONE tile scan; per tile a run-based union-find labels local components
-   (rows decompose into maximal equal-value runs; vertically overlapping
-   runs of equal value union — 4- or 8-connectivity). Each local component
-   gets a provisional label that is GLOBALLY canonical without any
-   coordination: the row-major global index of its first pixel.
-2. The same pass emits (a) one partial row per local component (count,
-   bbox, value) and (b) one strip row per tile edge (positions, values,
-   labels of the edge pixels — arrays, so the shuffle carries one row per
-   tile edge, ~2/tilesize of the pixel volume, the focal-halo budget).
-3. Facing strips meet on a shared edge key; equal values at touching
-   positions become label-equivalence edges. (8-connectivity adds the
+1. ONE tile scan (``_resolved_regions``, checkpointed — the only place a
+   tile is decoded and labeled); per tile a run-based union-find labels
+   local components (rows decompose into maximal equal-value runs;
+   vertically overlapping runs of equal value union — 4- or
+   8-connectivity). Each local component gets a provisional label that
+   is GLOBALLY canonical without any coordination: the row-major global
+   index of its first pixel.
+2. The same pass emits, per tile, exactly the rows its caller reads:
+   (a) piece rows ``(label, value, n, x0, y0, x1, y1)`` — one per local
+   component for the region table and the adjacency graph, or one per
+   RUN (a one-row piece: skinny, runs not pixels) for the operators that
+   place pixels (labeled raster, sieve, stats); (b) one strip row per
+   tile edge (positions, values, labels of the edge pixels — arrays, so
+   the shuffle carries one row per tile edge, ~2/tilesize of the pixel
+   volume, the focal-halo budget); (c) only when asked, in-tile contact
+   rows ``(la, lb, n)`` for the adjacency graph.
+3. Facing strips meet in one equi-join on ``(ekey, pos)``
+   (``_facing_pairs``); equal values at touching positions become
+   label-equivalence edges, and the same pairs give the cross-tile
+   contacts and the cross-seam internal edges. (8-connectivity adds the
    four corner pixels to per-corner keys for the two diagonal pairs a
    vertical/horizontal strip cannot see.)
 4. The equivalence graph resolves two-tier: dims-sized edge lists (the
@@ -29,9 +38,10 @@ Spark-first shape (the reason this works at 10^12 pixels):
    (min-label + pointer doubling, O(log diameter) rounds, count-only
    driver traffic) — a region snaking across thousands of tiles costs
    log rounds, not length rounds.
-5. Final labels join back to the partials (left join: components with no
-   cross-tile edge keep their provisional label) and one hash aggregate
-   emits the region table.
+5. Final labels join back to the pieces (``_resolve_col``, a left join:
+   components with no cross-tile edge keep their provisional label);
+   one hash aggregate emits the region table, or one per-tile run
+   painter (``_paint_runs``) writes a raster.
 
 Labels are deterministic and meaningful: ``region_id`` is the row-major
 global pixel index of the region's first (topmost, then leftmost) pixel.
@@ -47,23 +57,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..api import _level_spec
 from ..functions.codec import decode_tile
 from ..plans.grid import level_shape
 
-#: union row schema for the single-scan emit: partial rows (kind 0) fill
-#: the first block, strip rows (kind 1) the arrays, in-tile contact rows
-#: (kind 2, emitted only when the scan is asked for them) use
-#: (label=la, lb, n=4-adjacent pixel pairs)
+#: union row schema for the single-scan emit: piece rows (kind 0: one
+#: local component, or one run) fill the first block, strip rows (kind 1)
+#: the arrays, in-tile contact rows (kind 2, emitted only when the scan is
+#: asked for them) use (label=la, lb, n=4-adjacent pixel pairs)
 _SCAN_SCHEMA = (
     "kind int, label long, value double, n long, "
     "x0 long, y0 long, x1 long, y1 long, lb long, "
     "ekey string, side int, pos array<long>, vals array<double>, labels array<long>"
 )
-
-_REGION_SCHEMA = (
-    "region_id long, value double, n_px long, "
-    "xmin long, ymin long, xmax long, ymax long"
-)
+_PIECE_COLS = ("label", "value", "n", "x0", "y0", "x1", "y1")
 
 
 def _label_tile(a: np.ndarray, eight: bool = False):
@@ -182,7 +189,7 @@ def _tile_contacts(rr: np.ndarray, root: np.ndarray) -> dict:
     return acc
 
 
-def _scan_gen(ts: int, W: int, eight: bool, contacts: bool = False):
+def _scan_gen(ts: int, W: int, eight: bool, runs: bool, contacts: bool):
     def gen(batches):
         for pdf in batches:
             out = []
@@ -197,103 +204,66 @@ def _scan_gen(ts: int, W: int, eight: bool, contacts: bool = False):
                 if rr.shape[0] == 0:
                     continue
                 h, w = a.shape
-                # provisional label per run root: global pixel index of the
-                # component's first pixel == min over its runs of the run
-                # start (runs are emitted in row-major order, so the min
-                # run id belongs to the first run — but its START pixel is
-                # what we key on)
+                # provisional label: global pixel index of the component's
+                # first pixel, i.e. the START of its root run (the root is
+                # the smallest run id, and run ids are row-major)
                 gidx = (rr[:, 0] + gy0) * W + (rr[:, 1] + gx0)
-                lab_of_root: dict[int, int] = {}
-                for i in range(rr.shape[0]):
-                    rt = int(root[i])
-                    g = int(gidx[i])
-                    if rt not in lab_of_root or g < lab_of_root[rt]:
-                        lab_of_root[rt] = g
-                lab = np.array([lab_of_root[int(r_)] for r_ in root], dtype=np.int64)
+                lab = gidx[root]
                 vals = a[rr[:, 0], rr[:, 1]]
-                # per-component partials (one pandas groupby over runs)
-                part = pd.DataFrame({
-                    "label": lab,
-                    "value": vals,
-                    "n": rr[:, 2] - rr[:, 1],
-                    "x0": rr[:, 1] + gx0,
-                    "x1": rr[:, 2] - 1 + gx0,
-                    "y": rr[:, 0] + gy0,
-                }).groupby("label", as_index=False).agg(
-                    value=("value", "min"), n=("n", "sum"),
-                    x0=("x0", "min"), x1=("x1", "max"),
-                    y0=("y", "min"), y1=("y", "max"),
-                )
-                for p in part.itertuples(index=False):
-                    out.append((0, int(p.label), float(p.value), int(p.n),
-                                int(p.x0), int(p.y0), int(p.x1), int(p.y1),
+                gy = rr[:, 0] + gy0
+                pieces = pd.DataFrame({
+                    "label": lab, "value": vals, "n": rr[:, 2] - rr[:, 1],
+                    "x0": rr[:, 1] + gx0, "y0": gy, "x1": rr[:, 2] - 1 + gx0,
+                    "y1": gy,
+                })
+                if not runs:  # per-component partials (one pandas groupby)
+                    pieces = pieces.groupby("label", as_index=False).agg(
+                        value=("value", "min"), n=("n", "sum"),
+                        x0=("x0", "min"), y0=("y0", "min"),
+                        x1=("x1", "max"), y1=("y1", "max"),
+                    )
+                for p in pieces[list(_PIECE_COLS)].itertuples(index=False):
+                    out.append((0, int(p.label), float(p.value), *map(int, p[2:]),
                                 None, None, None, None, None, None))
 
                 if contacts:
                     # in-tile 4-contact pairs on provisional labels
                     for (ra, rb), wgt in _tile_contacts(rr, root).items():
-                        la_, lb_ = lab_of_root[ra], lab_of_root[rb]
-                        out.append((2, min(la_, lb_), None, int(wgt),
-                                    None, None, None, None, max(la_, lb_),
-                                    None, None, None, None, None))
+                        la_, lb_ = sorted((int(gidx[ra]), int(gidx[rb])))
+                        out.append((2, la_, None, int(wgt), None, None, None,
+                                    None, lb_, None, None, None, None, None))
 
-                def edge(which: str, ekey: str, side: int):
-                    if which in ("l", "r"):
-                        col = 0 if which == "l" else w - 1
-                        sel = (rr[:, 1] <= col) & (rr[:, 2] > col)
-                        rs = rr[sel]
-                        ls = lab[sel]
-                        if rs.shape[0] == 0:
-                            return
-                        pos = rs[:, 0] + gy0
-                        vv = a[rs[:, 0], col]
-                    else:
-                        r_ = 0 if which == "t" else h - 1
-                        sel = rr[:, 0] == r_
-                        rs = rr[sel]
-                        ls = lab[sel]
-                        if rs.shape[0] == 0:
-                            return
-                        # expand runs of the edge row to pixels
-                        pos_list, v_list, l_list = [], [], []
-                        for i in range(rs.shape[0]):
-                            c0, c1 = int(rs[i, 1]), int(rs[i, 2])
-                            pos_list.append(np.arange(c0, c1, dtype=np.int64) + gx0)
-                            v_list.append(np.full(c1 - c0, a[r_, c0]))
-                            l_list.append(np.full(c1 - c0, ls[i], dtype=np.int64))
-                        pos = np.concatenate(pos_list)
-                        vv = np.concatenate(v_list)
-                        ls = np.concatenate(l_list)
-                    out.append((1, None, None, None, None, None, None, None,
-                                None, ekey, side, pos.tolist(), vv.tolist(),
-                                ls.tolist()))
+                def strip(ekey, side, pos, vv, ls):
+                    if len(pos):
+                        out.append((1, None, None, None, None, None, None,
+                                    None, None, ekey, side, pos.tolist(),
+                                    vv.tolist(), ls.tolist()))
 
-                edge("r", f"v:{tx + 1}:{ty}", 0)
-                edge("l", f"v:{tx}:{ty}", 1)
-                edge("b", f"h:{tx}:{ty + 1}", 0)
-                edge("t", f"h:{tx}:{ty}", 1)
+                for col, ekey, side in ((w - 1, f"v:{tx + 1}:{ty}", 0),
+                                        (0, f"v:{tx}:{ty}", 1)):
+                    sel = (rr[:, 1] <= col) & (rr[:, 2] > col)
+                    strip(ekey, side, rr[sel, 0] + gy0, a[rr[sel, 0], col], lab[sel])
+                for r_, ekey, side in ((h - 1, f"h:{tx}:{ty + 1}", 0),
+                                       (0, f"h:{tx}:{ty}", 1)):
+                    # the edge row's runs, expanded to its valid pixels
+                    sel = rr[:, 0] == r_
+                    n = rr[sel, 2] - rr[sel, 1]
+                    strip(ekey, side, np.flatnonzero(~np.isnan(a[r_])) + gx0,
+                          np.repeat(vals[sel], n), np.repeat(lab[sel], n))
                 if eight:
                     # corner pixels -> per-DIAGONAL pseudo edge keys (pos=0
                     # both sides), so the corner diagonals the strips cannot
                     # see ride the SAME (ekey, pos) equi-join as everything
                     # else: "cd" pairs TL-BR, "ce" pairs TR-BL of a corner
-                    def corner(r_: int, c_: int, ekey: str, side: int):
-                        if not (0 <= r_ < h and 0 <= c_ < w):
-                            return
-                        if np.isnan(a[r_, c_]):
-                            return
+                    for r_, c_, ekey, side in (
+                        (h - 1, w - 1, f"cd:{tx + 1}:{ty + 1}", 0),  # TL of corner
+                        (0, 0, f"cd:{tx}:{ty}", 1),                  # BR of corner
+                        (h - 1, 0, f"ce:{tx}:{ty + 1}", 0),          # TR of corner
+                        (0, w - 1, f"ce:{tx + 1}:{ty}", 1),          # BL of corner
+                    ):
                         sel = (rr[:, 0] == r_) & (rr[:, 1] <= c_) & (rr[:, 2] > c_)
-                        if not sel.any():
-                            return
-                        out.append((1, None, None, None, None, None, None,
-                                    None, None, ekey, side, [0],
-                                    [float(a[r_, c_])],
-                                    [int(lab[np.flatnonzero(sel)[0]])]))
-
-                    corner(h - 1, w - 1, f"cd:{tx + 1}:{ty + 1}", 0)  # TL of corner
-                    corner(0, 0, f"cd:{tx}:{ty}", 1)                  # BR of corner
-                    corner(h - 1, 0, f"ce:{tx}:{ty + 1}", 0)          # TR of corner
-                    corner(0, w - 1, f"ce:{tx + 1}:{ty}", 1)          # BL of corner
+                        strip(ekey, side, np.zeros(sel.sum(), dtype=np.int64),
+                              a[rr[sel, 0], c_], lab[sel])
             cols = ["kind", "label", "value", "n", "x0", "y0", "x1", "y1",
                     "lb", "ekey", "side", "pos", "vals", "labels"]
             yield pd.DataFrame(out, columns=cols)
@@ -301,111 +271,75 @@ def _scan_gen(ts: int, W: int, eight: bool, contacts: bool = False):
     return gen
 
 
-def _strip_melt(scan: DataFrame, with_vals: bool, corners: bool) -> DataFrame:
-    """Skinny (ekey, side, pos[, val], lab) rows melted from the kind-1
-    strip rows — the shared front of the three strip consumers
-    (``_strip_edges`` stitch join, ``_strip_contacts`` RAG pairs,
-    ``_strip_same_value`` perimeter pairs). ``corners=False`` drops the
-    8-conn corner pseudo-keys (diagonals are not 4-edges)."""
+def _facing_pairs(scan: DataFrame, diagonal: bool = False) -> DataFrame:
+    """Facing pixel pairs across tile seams, ``(ekey, pos, val, lab,
+    val_b, lab_b)`` on PROVISIONAL labels — the one strip join behind the
+    stitch edges, the cross-tile contacts and the cross-seam internal
+    edges, entirely JVM-side: the kind-1 strips explode to skinny
+    (ekey, side, pos, val, lab) rows (the volume stays ~2/tilesize of the
+    pixels) and facing sides meet in ONE equi-join on (ekey, pos) — no
+    second python stage (two chained pandas stages run two python
+    workers per task, the measured sandbox trap), and the whole match is
+    codegen'd. ``diagonal=False`` gives the 4-adjacent pairs only (corner
+    pseudo-keys dropped); ``diagonal=True`` (8-connectivity stitching)
+    probes pos -1/0/+1 on the side-0 arm (diagonals across a strip), and
+    the corner diagonals arrive as their own pseudo keys with pos=0."""
     src = scan.where(F.col("kind") == 1)
-    if not corners:
+    if not diagonal:
         src = src.where(~F.col("ekey").startswith("c"))
-    zcols = ("pos", "vals", "labels") if with_vals else ("pos", "labels")
-    melted = (
-        src.select("ekey", "side", F.arrays_zip(*zcols).alias("z"))
-        .select("ekey", "side", F.explode("z").alias("e"))
+    s = src.select(
+        "ekey", "side", F.explode(F.arrays_zip("pos", "vals", "labels")).alias("e")
+    ).select(
+        "ekey", "side", F.col("e.pos").alias("pos"),
+        F.col("e.vals").alias("val"), F.col("e.labels").alias("lab"),
     )
-    cols = ["ekey", "side", F.col("e.pos").alias("pos")]
-    if with_vals:
-        cols.append(F.col("e.vals").alias("val"))
-    cols.append(F.col("e.labels").alias("lab"))
-    return melted.select(*cols)
-
-
-def _strip_edges(scan: DataFrame, eight: bool) -> DataFrame:
-    """Label-equivalence edges from the strip rows, entirely JVM-side:
-    strips explode to skinny (ekey, pos, val, lab) rows (the volume stays
-    ~2/tilesize of the pixels) and facing sides meet in ONE equi-join on
-    (ekey, pos) — no second python stage (two chained pandas stages run
-    two python workers per task, the measured sandbox trap), and the
-    whole match is codegen'd. 8-connectivity probes pos -1/0/+1 on the
-    side-0 arm (diagonals across a strip); corner diagonals arrive as
-    their own pseudo keys with pos=0 and ride the same join."""
-    s = _strip_melt(scan, with_vals=True, corners=True)
     a = s.where(F.col("side") == 0).drop("side")
-    if eight:
+    if diagonal:
         # corner pseudo-keys must NOT probe +-1 (their pos is a constant 0,
         # not a coordinate): keep exact for them, explode for strips
-        a = a.withColumn(
-            "pos",
-            F.explode(
-                F.when(
-                    F.col("ekey").startswith("c"),
-                    F.array(F.col("pos")),
-                ).otherwise(
-                    F.array(F.col("pos") - 1, F.col("pos"), F.col("pos") + 1)
-                )
-            ),
-        )
-    b = (
-        s.where(F.col("side") == 1)
-        .drop("side")
-        .withColumnRenamed("val", "val_b")
-        .withColumnRenamed("lab", "lab_b")
+        p = F.col("pos")
+        a = a.withColumn("pos", F.explode(
+            F.when(F.col("ekey").startswith("c"), F.array(p))
+            .otherwise(F.array(p - 1, p, p + 1))
+        ))
+    b = s.where(F.col("side") == 1).select(
+        "ekey", "pos", F.col("val").alias("val_b"), F.col("lab").alias("lab_b")
     )
-    return (
-        a.join(b, ["ekey", "pos"])
-        .where((F.col("val") == F.col("val_b")) & (F.col("lab") != F.col("lab_b")))
-        .select(
-            F.least("lab", "lab_b").alias("id_a"),
-            F.greatest("lab", "lab_b").alias("id_b"),
-        )
-        .distinct()
-    )
-
-
-def _strip_contacts(scan: DataFrame) -> DataFrame:
-    """ALL facing 4-adjacent pixel pairs across tile boundaries (no value
-    filter — different-value neighbors are exactly the contacts), one row
-    per pair on PROVISIONAL labels: ``(la, lb, w=1)``. Corner pseudo-keys
-    are excluded (diagonal pairs are not 4-contacts)."""
-    s = _strip_melt(scan, with_vals=False, corners=False)
-    a = s.where(F.col("side") == 0).drop("side")
-    b = (
-        s.where(F.col("side") == 1).drop("side")
-        .withColumnRenamed("lab", "lab_b")
-    )
-    return a.join(b, ["ekey", "pos"]).select(
-        F.least("lab", "lab_b").alias("la"),
-        F.greatest("lab", "lab_b").alias("lb"),
-        F.lit(1).cast("long").alias("w"),
-    )
+    return a.join(b, ["ekey", "pos"])
 
 
 def _resolved_regions(spark, path, z, connectivity, driver_resolve_max_edges,
-                      contacts: bool):
-    """Shared front half of the region family: scan (+optional in-tile
-    contacts), stitch edges, component resolve. Returns
-    ``(scan, comp, spec, lw, lh)``."""
-    from ..api import PyramidDataset
+                      *, runs: bool, contacts: bool):
+    """Shared front half of the region family: the checkpointed scan
+    (piece rows per component, or per run with ``runs``; in-tile contact
+    rows with ``contacts``), stitch edges, component resolve. Returns
+    ``(scan, comp, (lw, lh), tilesize)``."""
     from ..operators.dedup import connected_components
     from ..sources.catalog import read_level
 
     if connectivity not in (4, 8):
         raise ValueError(f"connectivity must be 4 or 8, got {connectivity}")
     eight = connectivity == 8
-    spec = PyramidDataset.open(spark, path).spec
-    if z < 0 or z > spec.nlevels:
-        raise ValueError(f"level {z} out of range for {spec.nlevels + 1}-level pyramid")
+    spec = _level_spec(spark, path, z)
     lw, lh = level_shape((spec.base_w, spec.base_h), z)
     scan = read_level(spark, path, z).mapInPandas(
-        _scan_gen(spec.tilesize, lw, eight, contacts=contacts), _SCAN_SCHEMA
+        _scan_gen(spec.tilesize, lw, eight, runs, contacts), _SCAN_SCHEMA
     ).localCheckpoint(eager=True)
-    comp = connected_components(
-        _strip_edges(scan, eight),
-        driver_resolve_max_edges=driver_resolve_max_edges,
+    edges = (
+        _facing_pairs(scan, diagonal=eight)
+        .where((F.col("val") == F.col("val_b")) & (F.col("lab") != F.col("lab_b")))
+        .select(F.least("lab", "lab_b").alias("id_a"),
+                F.greatest("lab", "lab_b").alias("id_b"))
+        .distinct()
     )
-    return scan, comp, spec, lw, lh
+    comp = connected_components(
+        edges, driver_resolve_max_edges=driver_resolve_max_edges
+    )
+    return scan, comp, (lw, lh), spec.tilesize
+
+
+def _pieces(scan: DataFrame) -> DataFrame:
+    return scan.where(F.col("kind") == 0).select(*_PIECE_COLS)
 
 
 def _resolve_col(df, comp, col: str, out: str):
@@ -416,6 +350,78 @@ def _resolve_col(df, comp, col: str, out: str):
         *[x for x in df.columns if x != col],
         F.coalesce(f"__c_{col}", col).alias(out),
     )
+
+
+def _region_rows(pieces: DataFrame, comp: DataFrame, *extra) -> DataFrame:
+    """The region table ``(region_id, value, n_px, xmin, ymin, xmax,
+    ymax, *extra)``: pieces resolved to final labels, one hash
+    aggregate."""
+    return _resolve_col(pieces, comp, "label", "region_id").groupBy(
+        "region_id"
+    ).agg(
+        F.min("value").alias("value"),
+        F.sum("n").alias("n_px"),
+        F.min("x0").alias("xmin"),
+        F.min("y0").alias("ymin"),
+        F.max("x1").alias("xmax"),
+        F.max("y1").alias("ymax"),
+        *extra,
+    )
+
+
+def _adjacency(scan: DataFrame, comp: DataFrame) -> DataFrame:
+    """``(rid_a, rid_b, contact)``: in-tile contact rows (kind 2) plus one
+    row per cross-tile 4-adjacent pair (no value filter — different-value
+    neighbors are exactly the contacts), both resolved to final labels;
+    same-component pairs (merged same-value neighbors) drop out, one hash
+    aggregate sums the weights."""
+    incell = scan.where(F.col("kind") == 2).select(
+        F.col("label").alias("la"), F.col("lb"), F.col("n").alias("w")
+    )
+    cross = _facing_pairs(scan).select(
+        F.col("lab").alias("la"), F.col("lab_b").alias("lb"),
+        F.lit(1).cast("long").alias("w"),
+    )
+    allc = _resolve_col(incell.unionByName(cross), comp, "la", "fa")
+    allc = _resolve_col(allc, comp, "lb", "fb")
+    return (
+        allc.where(F.col("fa") != F.col("fb"))
+        .select(F.least("fa", "fb").alias("rid_a"),
+                F.greatest("fa", "fb").alias("rid_b"), "w")
+        .groupBy("rid_a", "rid_b")
+        .agg(F.sum("w").alias("contact"))
+    )
+
+
+def _paint_runs(runs: DataFrame, col: str, fill, dtype: str, shape, ts: int):
+    """One TILE_SCHEMA tile per touched tile from run rows: a ``fill``
+    plane on which every run paints its ``col`` value, cast to ``dtype``
+    unless NaN fill is left in it. Tiles no run touches are not emitted
+    (sparse semantics)."""
+    from ..operators.build import PyramidSpec, _rows_to_pdf, _tile_row
+    from ..plans.grid import tile_pixel_window
+    from ..sources.catalog import TILE_SCHEMA
+
+    out_spec = PyramidSpec(shape[0], shape[1], ts)
+
+    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+        tx = int(pdf["tx"].iloc[0])
+        ty = int(pdf["ty"].iloc[0])
+        _, _, w, h = tile_pixel_window(shape, 0, tx, ty, ts)
+        plane = np.full((h, w), fill)
+        for r_, c0, c1, v in zip(pdf["y0"].to_numpy() - ty * ts,
+                                 pdf["x0"].to_numpy() - tx * ts,
+                                 pdf["x1"].to_numpy() + 1 - tx * ts,
+                                 pdf[col].to_numpy()):
+            plane[r_, c0:c1] = v
+        if plane.dtype.kind != "f" or not np.isnan(plane).any():
+            plane = plane.astype(dtype, copy=False)
+        return _rows_to_pdf([_tile_row(out_spec, 0, tx, ty, plane)])
+
+    return runs.select(
+        F.expr(f"x0 DIV {ts}").alias("tx"), F.expr(f"y0 DIV {ts}").alias("ty"),
+        "x0", "y0", "x1", col,
+    ).groupBy("tx", "ty").applyInPandas(assemble, TILE_SCHEMA)
 
 
 def region_adjacency(
@@ -435,29 +441,13 @@ def region_adjacency(
     (la, lb, w) rows (O(runs) two-pointer sweep, aggregated in-tile);
     cross-tile contacts ride the same strip join as the stitch edges
     (without the value filter); both resolve to final labels and one hash
-    aggregate sums weights. Same-component pairs (merged same-value
-    neighbors) drop out after the resolve.
+    aggregate sums weights (``_adjacency``).
     """
     scan, comp, *_ = _resolved_regions(
-        spark, path, z, connectivity, driver_resolve_max_edges, contacts=True
+        spark, path, z, connectivity, driver_resolve_max_edges,
+        runs=False, contacts=True,
     )
-    incell = scan.where(F.col("kind") == 2).select(
-        F.col("label").alias("la"), F.col("lb"), F.col("n").alias("w")
-    )
-    cross = _strip_contacts(scan)
-    allc = incell.unionByName(cross)
-    allc = _resolve_col(allc, comp, "la", "fa")
-    allc = _resolve_col(allc, comp, "lb", "fb")
-    return (
-        allc.where(F.col("fa") != F.col("fb"))
-        .select(
-            F.least("fa", "fb").alias("rid_a"),
-            F.greatest("fa", "fb").alias("rid_b"),
-            "w",
-        )
-        .groupBy("rid_a", "rid_b")
-        .agg(F.sum("w").alias("contact"))
-    )
+    return _adjacency(scan, comp)
 
 
 def region_sieve(
@@ -477,133 +467,55 @@ def region_sieve(
     smallest-first merge differs on chained small regions, documented).
     Returns a NEW TILE_SCHEMA raster (sparse, like the input scan).
 
-    Plan: one region pass (scan + contacts + resolve as
-    ``region_adjacency``), the region table and the small->value mapping
-    are region-count-sized DataFrames; the rewrite joins run rows (runs,
-    not pixels) against the mapping and assembles per tile.
+    Plan: ONE region scan emitting run rows and in-tile contacts, then
+    the resolve and adjacency graph as ``region_adjacency``; the region
+    table and the small->value mapping are region-count-sized
+    DataFrames; the scan's run rows (runs, not pixels) join the mapping
+    and the run painter assembles each tile.
     """
     from pyspark.sql import Window
 
-    from ..operators.build import PyramidSpec, _rows_to_pdf, _tile_row
-    from ..sources.catalog import TILE_SCHEMA, read_level
+    from ..sources.catalog import read_level
 
     if min_px <= 0:
         raise ValueError(f"min_px must be positive, got {min_px}")
-    eight = connectivity == 8
-    scan, comp, spec, lw, lh = _resolved_regions(
-        spark, path, z, connectivity, driver_resolve_max_edges, contacts=True
+    scan, comp, shape, ts = _resolved_regions(
+        spark, path, z, connectivity, driver_resolve_max_edges,
+        runs=True, contacts=True,
     )
-    ts = spec.tilesize
-
-    partials = scan.where(F.col("kind") == 0).select("label", "value", "n")
-    partials = _resolve_col(partials, comp, "label", "rid")
-    regions = partials.groupBy("rid").agg(
-        F.min("value").alias("value"), F.sum("n").alias("n_px")
-    )
-
-    incell = scan.where(F.col("kind") == 2).select(
-        F.col("label").alias("la"), F.col("lb"), F.col("n").alias("w")
-    )
-    allc = incell.unionByName(_strip_contacts(scan))
-    allc = _resolve_col(allc, comp, "la", "fa")
-    allc = _resolve_col(allc, comp, "lb", "fb")
-    adj = (
-        allc.where(F.col("fa") != F.col("fb"))
-        .select(F.least("fa", "fb").alias("rid_a"),
-                F.greatest("fa", "fb").alias("rid_b"), "w")
-        .groupBy("rid_a", "rid_b")
-        .agg(F.sum("w").alias("contact"))
-    )
+    runs = _resolve_col(_pieces(scan), comp, "label", "region_id")
+    regions = _region_rows(_pieces(scan), comp)
+    adj = _adjacency(scan, comp)
     # symmetrize: one row per (small candidate, neighbor)
     sym = adj.select(
-        F.col("rid_a").alias("rid"), F.col("rid_b").alias("nbr"), "contact"
+        F.col("rid_a").alias("region_id"), F.col("rid_b").alias("nbr"), "contact"
     ).unionByName(adj.select(
-        F.col("rid_b").alias("rid"), F.col("rid_a").alias("nbr"), "contact"
+        F.col("rid_b").alias("region_id"), F.col("rid_a").alias("nbr"), "contact"
     ))
-    small = regions.where(F.col("n_px") < min_px).select("rid")
+    small = regions.where(F.col("n_px") < min_px).select("region_id")
     large = regions.where(F.col("n_px") >= min_px).select(
-        F.col("rid").alias("nbr"), F.col("value").alias("nbr_value")
+        F.col("region_id").alias("nbr"), F.col("value").alias("nbr_value")
     )
-    w_pick = Window.partitionBy("rid").orderBy(
+    w_pick = Window.partitionBy("region_id").orderBy(
         F.col("contact").desc(), F.col("nbr").asc()
     )
     targets = (
-        sym.join(small, "rid")
+        sym.join(small, "region_id")
         .join(large, "nbr")  # inner: only large neighbors qualify
         .withColumn("__rk", F.row_number().over(w_pick))
         .where(F.col("__rk") == 1)
-        .select("rid", F.col("nbr_value").alias("new_value"))
+        .select("region_id", F.col("nbr_value").alias("new_value"))
     )
-    value_map = regions.join(targets, "rid", "left").select(
-        "rid", F.coalesce("new_value", "value").alias("out_value")
+    value_map = regions.join(targets, "region_id", "left").select(
+        "region_id", F.coalesce("new_value", "value").alias("out_value")
     )
-
-    runs = read_level(spark, path, z).mapInPandas(
-        _runs_gen(ts, lw, eight),
-        "tx int, ty int, r int, c0 int, c1 int, label long, v double",
-    )
-    runs = _resolve_col(runs, comp, "label", "rid")
-    resolved = runs.join(value_map, "rid").select(
-        "tx", "ty", "r", "c0", "c1", "out_value"
-    )
-    out_spec = PyramidSpec(lw, lh, ts)
     # dtype policy mirrors warp: NaN background exists whenever the level
     # has nodata pixels, so assemble float64 and cast back to the source
     # dtype per tile only when the tile is fully covered
     first = read_level(spark, path, z).select("dtype").first()
     src_dtype = first["dtype"] if first is not None else "float64"
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..plans.grid import tile_pixel_window
-
-        tx = int(pdf["tx"].iloc[0])
-        ty = int(pdf["ty"].iloc[0])
-        _, _, w, h = tile_pixel_window((lw, lh), 0, tx, ty, ts)
-        plane = np.full((h, w), np.nan, dtype=np.float64)
-        for r_ in pdf.itertuples(index=False):
-            plane[r_.r, r_.c0:r_.c1] = r_.out_value
-        if not np.isnan(plane).any():
-            plane = plane.astype(src_dtype, copy=False)
-        return _rows_to_pdf([_tile_row(out_spec, 0, tx, ty, plane)])
-
-    return resolved.groupBy("tx", "ty").applyInPandas(assemble, TILE_SCHEMA)
-
-
-def _runs_gen(ts: int, W: int, eight: bool):
-    """Second-pass scan for the labeled-raster output: re-derives each
-    tile's runs + provisional labels (deterministic — same algorithm as
-    the first pass) and emits them as skinny rows. Runs are ~px/avg-run-
-    length rows of five ints (<~10% of pixel volume as bytes), which is
-    what rides the label-map join; the alternative — carrying per-pixel
-    labels through the stitch shuffle — would move the full pixel volume.
-    """
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                a = decode_tile(row.bytes, row.h, row.w, row.dtype,
-                                getattr(row, "c", 1)).astype(np.float64)
-                tx, ty = int(row.tx), int(row.ty)
-                gx0, gy0 = tx * ts, ty * ts
-                rr, root = _label_tile(a, eight)
-                if rr.shape[0] == 0:
-                    continue
-                gidx = (rr[:, 0] + gy0) * W + (rr[:, 1] + gx0)
-                lab_of_root: dict[int, int] = {}
-                for i in range(rr.shape[0]):
-                    rt = int(root[i])
-                    g = int(gidx[i])
-                    if rt not in lab_of_root or g < lab_of_root[rt]:
-                        lab_of_root[rt] = g
-                for i in range(rr.shape[0]):
-                    out.append((tx, ty, int(rr[i, 0]), int(rr[i, 1]),
-                                int(rr[i, 2]), lab_of_root[int(root[i])],
-                                float(a[rr[i, 0], rr[i, 1]])))
-            yield pd.DataFrame(
-                out, columns=["tx", "ty", "r", "c0", "c1", "label", "v"]
-            )
-
-    return gen
+    return _paint_runs(runs.join(value_map, "region_id"), "out_value",
+                       np.nan, src_dtype, shape, ts)
 
 
 def region_label_raster(
@@ -621,66 +533,17 @@ def region_label_raster(
     TABLE (count/bbox per region).
 
     Plan: the stitch resolve is shared with ``region_label`` (strips ->
-    JVM equi-join -> two-tier components); a second scan re-derives each
-    tile's runs deterministically and joins the run rows (skinny — runs,
-    not pixels) against the final label map, then one per-tile assembly
-    writes the label plane. Tiles with zero labeled pixels are dropped
-    (sparse semantics).
+    JVM equi-join -> two-tier components); the same checkpointed scan
+    emits run rows (skinny — runs, not pixels), which join the final
+    label map, then the run painter writes each tile's label plane.
+    Tiles with zero labeled pixels are dropped (sparse semantics).
     """
-    from ..operators.build import PyramidSpec, _rows_to_pdf, _tile_row
-    from ..sources.catalog import TILE_SCHEMA, read_level
-
-    eight = connectivity == 8
-    scan, comp, spec, lw, lh = _resolved_regions(
-        spark, path, z, connectivity, driver_resolve_max_edges, contacts=False
+    scan, comp, shape, ts = _resolved_regions(
+        spark, path, z, connectivity, driver_resolve_max_edges,
+        runs=True, contacts=False,
     )
-    ts = spec.tilesize
-    runs = read_level(spark, path, z).mapInPandas(
-        _runs_gen(ts, lw, eight),
-        "tx int, ty int, r int, c0 int, c1 int, label long, v double",
-    )
-    resolved = (
-        runs.join(comp, runs["label"] == comp["id"], "left")
-        .select(
-            "tx", "ty", "r", "c0", "c1",
-            F.coalesce("component", "label").alias("rid"),
-        )
-    )
-    out_spec = PyramidSpec(lw, lh, ts)
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..plans.grid import tile_pixel_window
-
-        tx = int(pdf["tx"].iloc[0])
-        ty = int(pdf["ty"].iloc[0])
-        _, _, w, h = tile_pixel_window((lw, lh), 0, tx, ty, ts)
-        plane = np.full((h, w), -1, dtype=np.int64)
-        for r_ in pdf.itertuples(index=False):
-            plane[r_.r, r_.c0:r_.c1] = r_.rid
-        return _rows_to_pdf([_tile_row(out_spec, 0, tx, ty, plane)])
-
-    return resolved.groupBy("tx", "ty").applyInPandas(assemble, TILE_SCHEMA)
-
-
-def _strip_same_value(scan: DataFrame) -> DataFrame:
-    """Facing 4-adjacent pixel pairs across tile seams with EQUAL values
-    — internal edges of the final merged regions (every such pair also
-    generated a stitch edge, so both sides resolve to the same
-    component; counting either side's label once is exact). Corner
-    pseudo-keys excluded (diagonals are not 4-edges). ``(label, p=1)``
-    rows on provisional labels."""
-    s = _strip_melt(scan, with_vals=True, corners=False)
-    a = s.where(F.col("side") == 0).drop("side")
-    b = (
-        s.where(F.col("side") == 1).drop("side")
-        .withColumnRenamed("val", "val_b")
-        .withColumnRenamed("lab", "lab_b")
-    )
-    return (
-        a.join(b, ["ekey", "pos"])
-        .where(F.col("val") == F.col("val_b"))
-        .select(F.col("lab").alias("label"), F.lit(1).cast("long").alias("p"))
-    )
+    runs = _resolve_col(_pieces(scan), comp, "label", "region_id")
+    return _paint_runs(runs, "region_id", -1, "int64", shape, ts)
 
 
 def region_stats(
@@ -697,61 +560,40 @@ def region_stats(
     centroid_y)`` in level pixel coords (centroid at pixel INDEX
     coordinates; add 0.5 for pixel-center world coords).
 
-    Plan: the shared stitch resolve, then the RUN rows (skinny — runs,
-    not pixels, the ``region_label_raster`` discipline) aggregated once:
-    a run ``[c0, c1)`` on global row ``gy`` contributes ``len = c1-c0``
-    pixels, ``sum_x = len*gx0 + (c0+c1-1)*len/2`` (exact: consecutive-
-    integer sum, always even product) and ``sum_y = len*gy`` — all JVM
-    integer expressions, one hash aggregate. ``centroid_* = sum_* /
-    n_px`` is ONE IEEE division of exact int64s — engine-portable
+    Plan: the shared stitch resolve over a scan that emits RUN rows
+    (skinny — runs, not pixels, the ``region_label_raster`` discipline),
+    aggregated once: a run of ``n`` pixels from global column ``x0`` on
+    global row ``y0`` contributes ``sum_x = n*x0 + n*(n-1)/2`` (exact:
+    consecutive-integer sum, always even product) and ``sum_y = n*y0``
+    — all JVM integer expressions, one hash aggregate. ``centroid_* =
+    sum_* / n_px`` is ONE IEEE division of exact int64s — engine-portable
     (the focal-mean discipline).
 
     ``perimeter=True`` adds an exact integer ``perimeter`` column
     (4-edge boundary length in pixel-side units, raster border counts
     as boundary — the GDAL/terra polygonize attribute): ``P = 4*n_px -
     2*E_int`` where the internal-edge count decomposes into three
-    all-JVM terms — horizontal in-run pairs (``len - 1`` per run),
-    vertical in-tile pairs (a runs self-join on (tile, label,
-    consecutive row) summing column overlaps — same-value vertical
-    overlap within a tile is ALWAYS same-label, since the tile pass
-    unions 4-connected equal values), and cross-seam pairs (the strip
-    join with the value-equality filter, ``_strip_same_value``). Edge
-    length is always 4-edge-based regardless of ``connectivity`` (the
-    ``region_adjacency`` contact convention).
+    all-JVM terms over the same checkpointed scan — horizontal in-run
+    pairs (``n - 1`` per run), vertical in-tile pairs (a runs self-join
+    on (label, consecutive row) summing column overlaps — provisional
+    labels are tile-local, and same-value vertical overlap within a tile
+    is ALWAYS same-label, since the tile pass unions 4-connected equal
+    values), and cross-seam pairs (the strip join with the
+    value-equality filter). Edge length is always 4-edge-based
+    regardless of ``connectivity`` (the ``region_adjacency`` contact
+    convention).
     """
-    from ..sources.catalog import read_level
-
-    eight = connectivity == 8
-    scan, comp, spec, lw, lh = _resolved_regions(
-        spark, path, z, connectivity, driver_resolve_max_edges, contacts=False
+    scan, comp, *_ = _resolved_regions(
+        spark, path, z, connectivity, driver_resolve_max_edges,
+        runs=True, contacts=False,
     )
-    ts = spec.tilesize
-    runs = read_level(spark, path, z).mapInPandas(
-        _runs_gen(ts, lw, eight),
-        "tx int, ty int, r int, c0 int, c1 int, label long, v double",
-    )
-    if perimeter:
-        runs = runs.localCheckpoint()  # 3 downstream branches decode once
-    resolved = runs.join(comp, runs["label"] == comp["id"], "left").select(
-        F.coalesce("component", "label").alias("region_id"),
-        "v",
-        F.expr(f"CAST(c1 - c0 AS BIGINT)").alias("len"),
-        F.expr(f"CAST(tx AS BIGINT) * {ts} + c0").alias("gx0"),
-        F.expr(f"CAST(tx AS BIGINT) * {ts} + c1 - 1").alias("gx1"),
-        F.expr(f"CAST(ty AS BIGINT) * {ts} + r").alias("gy"),
-    )
-    agg = resolved.groupBy("region_id").agg(
-        F.min("v").alias("value"),
-        F.sum("len").alias("n_px"),
-        F.min("gx0").alias("xmin"),
-        F.min("gy").alias("ymin"),
-        F.max("gx1").alias("xmax"),
-        F.max("gy").alias("ymax"),
-        # sum over the run of global column indexes: len*gx0 + 0+1+..+(len-1)
-        F.sum(F.expr("len * gx0 + (len * (len - 1)) DIV 2")).alias("sum_x"),
-        F.sum(F.expr("len * gy")).alias("sum_y"),
-    )
-    out = agg.select(
+    runs = _pieces(scan)
+    # sum over the run of global column indexes: n*x0 + 0+1+..+(n-1)
+    out = _region_rows(
+        runs, comp,
+        F.sum(F.expr("n * x0 + (n * (n - 1)) DIV 2")).alias("sum_x"),
+        F.sum(F.expr("n * y0")).alias("sum_y"),
+    ).select(
         "*",
         (F.col("sum_x").cast("double") / F.col("n_px")).alias("centroid_x"),
         (F.col("sum_y").cast("double") / F.col("n_px")).alias("centroid_y"),
@@ -759,28 +601,21 @@ def region_stats(
     if not perimeter:
         return out
 
-    h_in = runs.select(
-        "label", F.expr("CAST(c1 - c0 - 1 AS BIGINT)").alias("p")
-    )
-    ra = runs.select(
-        "tx", "ty", "label", "r",
-        F.col("c0").alias("a0"), F.col("c1").alias("a1"),
-    )
-    rb = runs.select(
-        "tx", "ty", "label", (F.col("r") - 1).alias("r"),
-        F.col("c0").alias("b0"), F.col("c1").alias("b1"),
-    )
+    h_in = runs.select("label", (F.col("n") - 1).alias("p"))
+    ra = runs.select("label", F.col("y0").alias("y"),
+                     F.col("x0").alias("a0"), F.col("x1").alias("a1"))
+    rb = runs.select("label", (F.col("y0") + 1).alias("y"),
+                     F.col("x0").alias("b0"), F.col("x1").alias("b1"))
     v_in = (
-        ra.join(rb, ["tx", "ty", "label", "r"])
-        .select(
-            "label",
-            (F.least("a1", "b1") - F.greatest("a0", "b0"))
-            .cast("long").alias("p"),
-        )
+        ra.join(rb, ["label", "y"])
+        .select("label", (F.least("a1", "b1") - F.greatest("a0", "b0") + 1).alias("p"))
         .where(F.col("p") > 0)
     )
-    internal = h_in.unionByName(v_in).unionByName(_strip_same_value(scan))
-    internal = _resolve_col(internal, comp, "label", "region_id")
+    seam = _facing_pairs(scan).where(F.col("val") == F.col("val_b")).select(
+        F.col("lab").alias("label"), F.lit(1).cast("long").alias("p")
+    )
+    internal = _resolve_col(h_in.unionByName(v_in).unionByName(seam),
+                            comp, "label", "region_id")
     totals = internal.groupBy("region_id").agg(F.sum("p").alias("e_int"))
     return out.join(totals, "region_id", "left").select(
         out["*"],
@@ -814,24 +649,7 @@ def region_label(
     itself is cluster-sized.
     """
     scan, comp, *_ = _resolved_regions(
-        spark, path, z, connectivity, driver_resolve_max_edges, contacts=False
+        spark, path, z, connectivity, driver_resolve_max_edges,
+        runs=False, contacts=False,
     )
-    partials = scan.where(F.col("kind") == 0).select(
-        "label", "value", "n", "x0", "y0", "x1", "y1"
-    )
-    return (
-        partials.join(comp, partials["label"] == comp["id"], "left")
-        .select(
-            F.coalesce("component", "label").alias("region_id"),
-            "value", "n", "x0", "y0", "x1", "y1",
-        )
-        .groupBy("region_id")
-        .agg(
-            F.min("value").alias("value"),
-            F.sum("n").alias("n_px"),
-            F.min("x0").alias("xmin"),
-            F.min("y0").alias("ymin"),
-            F.max("x1").alias("xmax"),
-            F.max("y1").alias("ymax"),
-        )
-    )
+    return _region_rows(_pieces(scan), comp)

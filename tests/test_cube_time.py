@@ -418,3 +418,17 @@ def test_cube_rolling_validation(spark, cube_path):
         cube_rolling(spark, cube_path, window=2, min_periods=3)
     with pytest.raises(ValueError, match="t_chunk"):
         cube_rolling(spark, cube_path, t_chunk=0)
+
+
+@pytest.mark.parametrize(
+    "op", ["cube_gap_fill", "cube_composite", "cube_rolling", "cube_anomaly", "cube_trend"]
+)
+def test_level_out_of_range_fails_at_call_time(spark, cube_path, op):
+    """A level past the cube's pyramid is refused by the shared level
+    check before any scan runs (not by Spark's analyzer inside the
+    t-domain scan)."""
+    from pyramidscheme_jl_spark.operators import cube_time
+
+    z = PyramidSpec(BASE, BASE, TILE).nlevels + 1
+    with pytest.raises(ValueError, match="out of range"):
+        getattr(cube_time, op)(spark, cube_path, z=z)

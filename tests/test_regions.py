@@ -220,14 +220,16 @@ def test_region_adjacency_matches_brute_force(spark, plane, plane_path, conn):
     assert got == want
 
 
-def test_region_sieve_matches_replay(spark, plane, plane_path):
+@pytest.mark.parametrize("conn", [4, 8])
+def test_region_sieve_matches_replay(spark, plane, plane_path, conn):
     """Single-pass sieve rule replayed in python: small regions with a
-    large max-contact neighbor take that neighbor's value; others stay."""
+    large max-contact neighbor take that neighbor's value; others stay.
+    Regions form under ``conn``; contact stays 4-edge."""
     from pyramidscheme_jl_spark.functions.codec import decode_tile
     from pyramidscheme_jl_spark.operators.regions import region_sieve
 
     min_px = 60
-    lab = _brute_plane_labels(plane, 4)
+    lab = _brute_plane_labels(plane, conn)
     adj = _brute_adjacency(lab)
     sizes = {int(r): int((lab == r).sum()) for r in np.unique(lab) if r >= 0}
     values = {int(r): float(plane[lab == r][0]) for r in sizes}
@@ -245,7 +247,8 @@ def test_region_sieve_matches_replay(spark, plane, plane_path):
 
     h, w = plane.shape
     got = np.full((h, w), np.nan)
-    for r in region_sieve(spark, plane_path, min_px=min_px, z=0).collect():
+    for r in region_sieve(spark, plane_path, min_px=min_px, z=0,
+                          connectivity=conn).collect():
         a = decode_tile(r.bytes, r.h, r.w, r.dtype, r.c).astype(np.float64)
         got[r.ty * 32 : r.ty * 32 + r.h, r.tx * 32 : r.tx * 32 + r.w] = a
     np.testing.assert_array_equal(np.isnan(got), np.isnan(want))
@@ -347,3 +350,58 @@ def test_region_stats_perimeter_singleton(spark, tmp_path):
     by_val = {float(r.value): int(r.perimeter) for r in rows}
     assert by_val[5.0] == 4
     assert by_val[6.0] == 2 * (64 + 2)  # raster border counts as boundary
+
+
+# ---------------------------------------------------------------------------
+# one region scan: the distributed resolve tier and the decode-once plan
+# ---------------------------------------------------------------------------
+
+
+def _all_region_outputs(spark, path, **kw):
+    from pyramidscheme_jl_spark.operators.regions import (
+        region_adjacency,
+        region_label_raster,
+        region_sieve,
+        region_stats,
+    )
+
+    ops = {
+        "label": region_label(spark, path, **kw),
+        "raster": region_label_raster(spark, path, **kw),
+        "adjacency": region_adjacency(spark, path, **kw),
+        "sieve": region_sieve(spark, path, min_px=60, **kw),
+        "perimeter": region_stats(spark, path, perimeter=True, **kw),
+    }
+    return {k: sorted((tuple(r) for r in df.collect()), key=repr) for k, df in ops.items()}
+
+
+def test_region_ops_distributed_resolve_tier(spark, plane_path):
+    """``driver_resolve_max_edges=0`` sends the stitch graph through the
+    distributed connected-components loop; every region operator gives
+    the same rows (tiles: bytes and all metadata) as the driver tier."""
+    driver = _all_region_outputs(spark, plane_path, connectivity=4)
+    dist = _all_region_outputs(
+        spark, plane_path, connectivity=4, driver_resolve_max_edges=0
+    )
+    assert all(driver.values())
+    assert dist == driver
+
+
+def test_region_ops_decode_the_level_once(spark, plane_path):
+    """Only the checkpointed region scan decodes tiles: the operators
+    that place pixels read its run rows, so their plans hold no second
+    tile-decoding ``MapInPandas`` stage."""
+    from pyramidscheme_jl_spark.operators.regions import (
+        region_label_raster,
+        region_sieve,
+        region_stats,
+    )
+
+    for df in (
+        region_label_raster(spark, plane_path),
+        region_sieve(spark, plane_path, min_px=60),
+        region_stats(spark, plane_path),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in plan, plan
+        assert "ExistingRDD" in plan, plan
