@@ -222,8 +222,9 @@ def _scan_gen(ts: int, W: int, eight: bool, runs: bool, contacts: bool):
                         x0=("x0", "min"), y0=("y0", "min"),
                         x1=("x1", "max"), y1=("y1", "max"),
                     )
-                for p in pieces[list(_PIECE_COLS)].itertuples(index=False):
-                    out.append((0, int(p.label), float(p.value), *map(int, p[2:]),
+                for p in pieces.itertuples(index=False):
+                    out.append((0, int(p.label), float(p.value), int(p.n),
+                                int(p.x0), int(p.y0), int(p.x1), int(p.y1),
                                 None, None, None, None, None, None))
 
                 if contacts:
