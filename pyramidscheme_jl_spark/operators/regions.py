@@ -280,7 +280,7 @@ def _facing_pairs(scan: DataFrame, diagonal: bool = False) -> DataFrame:
     (ekey, side, pos, val, lab) rows (the volume stays ~2/tilesize of the
     pixels) and facing sides meet in ONE equi-join on (ekey, pos) — no
     second python stage (two chained pandas stages run two python
-    workers per task, the measured sandbox trap), and the whole match is
+    workers per task, a measured cost), and the whole match is
     codegen'd. ``diagonal=False`` gives the 4-adjacent pairs only (corner
     pseudo-keys dropped); ``diagonal=True`` (8-connectivity stitching)
     probes pos -1/0/+1 on the side-0 arm (diagonals across a strip), and
