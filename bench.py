@@ -149,7 +149,9 @@ class _StealMeter:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from pyramidscheme_jl_spark.session import get_spark, local_cpus
+
+    cpus = local_cpus()
     bench_g = int(os.environ.get("SPARK_GRAFT_BENCH_G", "64"))
     pip_side = int(os.environ.get("SPARK_GRAFT_BENCH_PIP_SIDE", "512"))
 
@@ -159,7 +161,6 @@ def main() -> None:
         point_in_polygon_join,
         with_point_cells,
     )
-    from pyramidscheme_jl_spark.session import get_spark
     from pyramidscheme_jl_spark.sources.synth import (
         IMAGES_DDL,
         POINTS_DDL,
@@ -277,7 +278,7 @@ def main() -> None:
     # steady-state the single-session r2 protocol measured.
     # embedding_ivf_topk is included so its first-use constants (python
     # worker fan-out for the Arrow matmul assign — the round-5 A/B winner
-    # over the unrolled expr, tools/ivf_assign_ab.py — plus broadcast
+    # over the unrolled expr, BENCH/IVF_ASSIGN_AB.md — plus broadcast
     # machinery) land in the untimed warmup; the timed run measures the
     # steady-state plan.
     t0 = time.perf_counter()

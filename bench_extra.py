@@ -35,9 +35,9 @@ def main() -> None:
     import pandas as pd
 
     import __spark_entry__ as E
-    from pyramidscheme_jl_spark.session import get_spark
+    from pyramidscheme_jl_spark.session import get_spark, local_cpus
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     spark = get_spark(app="bench-extra", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,37 +1,47 @@
-"""Temporal analytics over (x, y, t) cube pyramids: gap-filling and
-per-pixel time compositing.
+"""Temporal analytics over (x, y, t) cube pyramids: gap fill, composite,
+rolling, anomaly and trend, all computed ALONG the t axis.
 
 The reference passes non-spatial dims through untouched
-(/root/reference/src/PyramidScheme.jl:229-233) and never computes ALONG
-them; a production raster time-series engine needs exactly those two
-missing arrows — fill the t axis (cloud-gap interpolation: LOCF /
-linear) and reduce the t axis (max-value / most-recent composites, the
-classic satellite mosaic rules). Both are north-rule surface, not port
-surface.
+(PyramidScheme.jl, src/PyramidScheme.jl:229-233) and never computes
+along them; a production raster time-series engine needs exactly those
+arrows — fill the t axis (cloud-gap interpolation: LOCF / linear),
+reduce it (max-value / most-recent composites, per-pixel trend) and map
+it (rolling windows, climatology anomalies). North-rule surface, not
+port surface.
 
-Spark-first shape shared by both operators:
+One stage, ``_t_stage``, runs all five operators; each operator keeps
+only its argument checks and its numpy kernel:
 
-- the only shuffle is ``groupBy(tx, ty)`` (plus a chunk id in the
-  bounded-gap mode) — tile bytes move once, keyed by the same tile key
-  every other cube op uses, so AQE/bucketing can co-locate with
-  downstream zonal/extract stages;
-- the t domain is collected once (dims-sized: |t| values, never pixel
-  data) so frames absent from storage (sparse cubes drop all-nodata
-  tiles) are still filled/composited as all-NaN planes;
-- per-group work is one vectorized numpy pass over a (T, h, w[, c])
-  stack — no per-pixel or per-frame Python loops;
+- the level is checked (``api._level_spec``), the t domain resolved
+  once (dims-sized: |t| values, never pixel data) so frames absent from
+  storage (sparse cubes drop all-nodata tiles) still enter the kernel
+  as all-NaN planes, and the level scanned;
+- the only shuffle is one ``groupBy(tx, ty)`` ``applyInPandas`` (plus a
+  chunk id ``ck`` in chunked mode) — tile bytes move once, keyed by the
+  same tile key every other cube op uses;
+- each group is decoded once into a (T, h, w[, c]) float64 stack and
+  the kernel maps it, with its ``ts``, to one plane per frame (CUBE_TILE_SCHEMA
+  rows: fill, rolling, anomaly) or to one plane (TILE_SCHEMA rows:
+  composite, trend) — one vectorized numpy pass, no per-pixel or
+  per-frame Python loops;
+- one drop rule: a plane that is NaN everywhere is not emitted
+  (sparse-cube semantics), so every kernel returns NaN wherever its
+  operator has no output;
 - arithmetic is engine-portable by construction: observed values pass
-  through bit-identically, and a linear fill is two exact integer-range
-  products plus ONE IEEE division (the warp/focal oracle discipline), so
-  a SQL twin reproduces every filled pixel bit-for-bit.
+  through bit-identically, and a linear fill, a mean, an anomaly or a
+  trend is exact integer-range sums plus ONE IEEE division (the
+  warp/focal oracle discipline), so a SQL twin reproduces every pixel
+  bit-for-bit.
 
-Scale note (T >> memory): an unbounded fill genuinely needs the whole
-series per pixel, but every *bounded* fill (``max_gap=g``) has influence
-radius <= g+1 frames. ``t_chunk=C`` switches to chunked execution: each
-frame is exploded to its home chunk plus neighbor chunks within the
-halo, groups become ``(tx, ty, chunk)`` of at most C + 2*(g+1) frames,
-and only chunk-interior frames are emitted — the focal halo exchange
-pattern rotated onto the t axis. Memory per group is then O(C) frames at
+Scale note (T >> memory): a kernel whose output frame reads at most
+``before`` frames back and ``after`` frames ahead runs chunked with
+``t_chunk=C``: each frame is exploded to every chunk whose window
+``[ck*C - before, (ck+1)*C + after)`` holds it, groups become
+``(tx, ty, ck)`` of at most C + before + after frames, and each group
+emits only its home frames ``[ck*C, (ck+1)*C)`` — the focal halo
+exchange rotated onto the t axis. A bounded gap fill (``max_gap=g``)
+reads g+1 frames each side; a trailing rolling window reads
+``window - 1`` back and none ahead. Memory per group is O(C) frames at
 any series length.
 """
 
@@ -67,9 +77,9 @@ def _t_domain(spark: SparkSession, path: str, z: int, t_domain) -> np.ndarray:
 
 
 def _decode_group(pdf: pd.DataFrame, ts: np.ndarray):
-    """Group frames -> (stack, meta). stack is (T_local, h, w[, c]) float64
-    with NaN planes for absent frames; T_local covers ``ts`` (the caller
-    restricts ts to the chunk window in chunked mode)."""
+    """Group frames -> a (T_local, h, w[, c]) float64 stack with NaN
+    planes for absent frames; T_local covers ``ts`` (the chunk window in
+    chunked mode)."""
     from ..functions.codec import decode_tile
 
     first = pdf.iloc[0]
@@ -88,6 +98,81 @@ def _decode_group(pdf: pd.DataFrame, ts: np.ndarray):
             )
         stack[i] = a.astype(np.float64, copy=False)
     return stack
+
+
+def _t_stage(
+    spark: SparkSession,
+    path: str,
+    z: int,
+    t_domain,
+    kernel,
+    *,
+    cube: bool = True,
+    t_chunk: int | None = None,
+    before: int = 0,
+    after: int = 0,
+) -> DataFrame:
+    """The one plan behind every t-axis operator: check the level, resolve
+    the t domain, scan, group by ``(tx, ty[, ck])``, decode each group once
+    and call ``kernel(stack, ts)``. With ``cube`` the kernel returns one
+    plane per frame of ``ts`` (CUBE_TILE_SCHEMA rows), otherwise one plane
+    (TILE_SCHEMA rows); all-NaN planes are not emitted.
+
+    ``t_chunk=C`` groups frames into chunks of C; a chunk's window adds the
+    ``before``/``after`` frames its kernel reads, and it emits only its
+    home frames."""
+    spec = _level_spec(spark, path, z)
+    ts = _t_domain(spark, path, z, t_domain)
+    tiles = read_cube_level(spark, path, z)
+    zz, nT = int(z), int(ts.size)
+    C, keys = nT, ["tx", "ty"]
+    if t_chunk is not None:
+        C = int(t_chunk)
+        if C <= 0:
+            raise ValueError(f"t_chunk must be positive, got {t_chunk}")
+        # t -> dense index, broadcast-joined (dims-sized map); a frame claims
+        # every chunk whose window holds it. Shuffle volume
+        # <= (1 + (before + after)/C) x level bytes.
+        tmap = spark.createDataFrame(
+            [(int(t), i) for i, t in enumerate(ts)], "t int, ti int"
+        )
+        tiles = tiles.join(F.broadcast(tmap), "t").withColumn(
+            "ck",
+            F.explode(
+                F.expr(
+                    f"sequence(GREATEST(ti - {after}, 0) DIV {C},"
+                    f" LEAST(ti + {before}, {nT - 1}) DIV {C})"
+                ).cast("array<int>")
+            ),
+        )
+        keys.append("ck")
+
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        tx, ty = int(key[0]), int(key[1])
+        ck = int(key[2]) if t_chunk is not None else 0
+        lo, hi = max(0, ck * C - before), min(nT, (ck + 1) * C + after)
+        out = kernel(_decode_group(pdf, ts[lo:hi]), ts[lo:hi])
+        if not cube:
+            planes = [(out, {})]
+        else:  # halo frames: the chunk they belong to emits them
+            home = range(ck * C, min((ck + 1) * C, nT))
+            planes = [(out[i - lo], {"t": int(ts[i])}) for i in home]
+        rows = [
+            dict(_tile_row(spec, zz, tx, ty, plane), **t)
+            for plane, t in planes
+            if not np.isnan(plane).all()
+        ]
+        return _cube_rows_to_pdf(rows) if cube else _rows_to_pdf(rows)
+
+    schema = CUBE_TILE_SCHEMA if cube else TILE_SCHEMA
+    return tiles.groupBy(*keys).applyInPandas(run, schema)
+
+
+def _nan_unless_finite(planes: np.ndarray) -> np.ndarray:
+    """NaN out every plane of ``planes`` (axis 0) with no finite pixel —
+    anomaly and trend emit no tile that holds only NaN and +-inf."""
+    planes[~np.isfinite(planes).reshape(len(planes), -1).any(axis=1)] = np.nan
+    return planes
 
 
 def _fill_stack(
@@ -113,9 +198,6 @@ def _fill_stack(
         if max_gap is not None:
             ok = ok & (tcur - tp <= float(max_gap))
         return np.where(obs, stack, np.where(ok, pv, np.nan))
-
-    if method != "linear":
-        raise ValueError(f"unknown gap-fill method {method!r} (locf|linear)")
 
     nxt = np.flip(
         np.minimum.accumulate(np.flip(np.where(obs, idx, T), axis=0), axis=0),
@@ -164,106 +246,48 @@ def cube_gap_fill(
     the series is long (daily imagery for a decade); leave None when T is
     small and one gather per tile is cheapest.
     """
-    spec = _level_spec(spark, path, z)
-    ts = _t_domain(spark, path, z, t_domain)
-    tiles = read_cube_level(spark, path, z)
-    zz = int(z)
-
-    if t_chunk is None:
-        ts_local = ts
-
-        def fill_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return _cube_rows_to_pdf([])
-            tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
-            stack = _decode_group(pdf, ts_local)
-            out = _fill_stack(stack, ts_local, method, max_gap)
-            rows = []
-            for i, t in enumerate(ts_local):
-                if np.isnan(out[i]).all():
-                    continue
-                rows.append(dict(_tile_row(spec, zz, tx, ty, out[i]), t=int(t)))
-            return _cube_rows_to_pdf(rows)
-
-        return tiles.groupBy("tx", "ty").applyInPandas(fill_all, CUBE_TILE_SCHEMA)
-
-    if max_gap is None:
+    if method not in ("locf", "linear"):
+        raise ValueError(f"unknown gap-fill method {method!r} (locf|linear)")
+    if t_chunk is not None and max_gap is None:
         raise ValueError("t_chunk requires max_gap (unbounded fills can't chunk)")
-    C = int(t_chunk)
-    if C <= 0:
-        raise ValueError(f"t_chunk must be positive, got {t_chunk}")
-    halo = int(max_gap) + 1  # index influence <= t-unit influence (ts ints, step>=1)
-    nT = int(ts.size)
-    nchunk = -(-nT // C)
-
-    # t -> dense index, broadcast-joined (dims-sized map); each frame claims
-    # its home chunk plus neighbors its halo reaches — the focal halo
-    # exchange rotated onto t. Shuffle volume <= (1 + 2*halo/C) x level bytes.
-    tmap = spark.createDataFrame(
-        [(int(t), i) for i, t in enumerate(ts)], "t int, ti int"
-    )
-    claimed = tiles.join(F.broadcast(tmap), "t").withColumn(
-        "ck",
-        F.explode(
-            F.expr(
-                f"sequence(GREATEST(ti - {halo}, 0) DIV {C},"
-                f" LEAST(ti + {halo}, {nT - 1}) DIV {C})"
-            ).cast("array<int>")
-        ),
-    )
-
-    def fill_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, ck = int(key[0]), int(key[1]), int(key[2])
-        lo = max(0, ck * C - halo)
-        hi = min(nT, (ck + 1) * C + halo)
-        ts_win = ts[lo:hi]
-        stack = _decode_group(pdf, ts_win)
-        out = _fill_stack(stack, ts_win, method, max_gap)
-        rows = []
-        for i in range(lo, hi):
-            if not (ck * C <= i < min((ck + 1) * C, nT)):
-                continue  # halo frame: another chunk emits it
-            plane = out[i - lo]
-            if np.isnan(plane).all():
-                continue
-            rows.append(dict(_tile_row(spec, zz, tx, ty, plane), t=int(ts[i])))
-        return _cube_rows_to_pdf(rows)
-
-    return claimed.groupBy("tx", "ty", "ck").applyInPandas(
-        fill_chunk, CUBE_TILE_SCHEMA
+    # index influence <= t-unit influence (ts distinct ints, step >= 1)
+    halo = 0 if max_gap is None else int(max_gap) + 1
+    return _t_stage(
+        spark, path, z, t_domain,
+        lambda stack, ts: _fill_stack(stack, ts, method, max_gap),
+        t_chunk=t_chunk, before=halo, after=halo,
     )
 
 
-#: composite reducers: stack (T,...) float64 + obs mask + ts -> (value
-#: plane, chosen-index plane or None). Ties and "which frame won" follow
+#: composite reducers: stack (T,...) float64 + ts -> value plane, or the
+#: winning t plane with ``argt``. Ties and "which frame won" follow
 #: GDAL/earth-engine mosaic conventions: first occurrence wins argmax/argmin
 #: (smallest t), "last"/"first" pick the newest/oldest observation.
-def _composite(stack: np.ndarray, obs: np.ndarray, stat: str):
+def _composite(stack: np.ndarray, ts: np.ndarray, stat: str, argt: bool):
     T = stack.shape[0]
+    obs = ~np.isnan(stack)
     valid = obs.any(axis=0)
+    if not valid.any():  # no observation anywhere in the tile: no tile
+        return np.full(stack.shape[1:], np.nan)
+    if stat == "count":
+        return obs.sum(axis=0).astype(np.float64)
+    if stat == "mean":
+        n = obs.sum(axis=0)
+        s = np.where(obs, stack, 0.0).sum(axis=0)  # exact for integer rasters
+        return np.divide(s, n, out=np.full(n.shape, np.nan), where=n > 0)
     if stat == "max":
         am = np.argmax(np.where(obs, stack, -np.inf), axis=0)
     elif stat == "min":
         am = np.argmin(np.where(obs, stack, np.inf), axis=0)
     elif stat == "last":
         am = T - 1 - np.argmax(np.flip(obs, axis=0), axis=0)
-    elif stat == "first":
+    else:  # first
         am = np.argmax(obs, axis=0)
-    elif stat == "count":
-        return obs.sum(axis=0).astype(np.float64), None, valid
-    elif stat == "mean":
-        n = obs.sum(axis=0)
-        s = np.where(obs, stack, 0.0).sum(axis=0)  # exact for integer rasters
-        val = np.divide(s, n, out=np.full(n.shape, np.nan), where=n > 0)
-        return val, None, valid
-    else:
-        raise ValueError(
-            f"unknown composite stat {stat!r} (max|min|mean|count|first|last)"
-        )
-    val = np.where(
+    if argt:
+        return np.where(valid, ts[am].astype(np.float64), np.nan)
+    return np.where(
         valid, np.take_along_axis(stack, am[np.newaxis], axis=0)[0], np.nan
     )
-    return val, am, valid
 
 
 def cube_composite(
@@ -293,8 +317,8 @@ def cube_composite(
 
     Returns TILE_SCHEMA rows at level ``z`` of a NEW single-slice raster
     (composites are ordinary rasters: write_level + build_overviews
-    re-pyramid them). Pixels never observed at any t are NaN; all-NaN
-    tiles are dropped.
+    re-pyramid them). Pixels never observed at any t are NaN; tiles with
+    no observation at any t are dropped.
 
     Scale: max/min/mean/count/first/last are all decomposable along t, so
     at T >> memory this gather can run as tree partials (composite each
@@ -303,27 +327,17 @@ def cube_composite(
     stacks at daily cadence (a (365*10, 256, 256) float64 stack is 1.9 GB;
     chunk via two passes of this same op at coarser t buckets if bigger).
     """
+    if stat not in ("max", "min", "mean", "count", "first", "last"):
+        raise ValueError(
+            f"unknown composite stat {stat!r} (max|min|mean|count|first|last)"
+        )
     if argt and stat not in ("max", "min", "last", "first"):
         raise ValueError(f"argt is undefined for stat={stat!r}")
-    spec = _level_spec(spark, path, z)
-    ts = _t_domain(spark, path, z, t_domain)
-    tiles = read_cube_level(spark, path, z)
-    zz = int(z)
-
-    def reduce_t(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return _rows_to_pdf([])
-        tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
-        stack = _decode_group(pdf, ts)
-        obs = ~np.isnan(stack)
-        val, am, valid = _composite(stack, obs, stat)
-        if argt:
-            val = np.where(valid, ts[am].astype(np.float64), np.nan)
-        if not valid.any():
-            return _rows_to_pdf([])
-        return _rows_to_pdf([_tile_row(spec, zz, tx, ty, val)])
-
-    return tiles.groupBy("tx", "ty").applyInPandas(reduce_t, TILE_SCHEMA)
+    return _t_stage(
+        spark, path, z, t_domain,
+        lambda stack, ts: _composite(stack, ts, stat, argt),
+        cube=False,
+    )
 
 
 CUBE_ROLLING_STATS = ("mean", "sum", "min", "max", "count")
@@ -400,7 +414,8 @@ def cube_rolling(
     reads at most ``window - 1`` frames backward; a frame claims its
     home chunk plus the chunks its forward influence reaches. Shuffle
     volume <= (1 + (window-1)/C) x level bytes. Bit-identical to the
-    unchunked path (pinned in tests).
+    unchunked path (pinned in tests); a window that starts at the cube
+    origin clips there, as unchunked.
 
     Reference parity: none — PyramidScheme.jl has no temporal ops;
     north-rule datacube surface alongside ``cube_gap_fill``/
@@ -415,75 +430,20 @@ def cube_rolling(
         raise ValueError(
             f"min_periods must be in [1, window], got {min_periods}"
         )
-    spec = _level_spec(spark, path, z)
-    ts = _t_domain(spark, path, z, t_domain)
-    tiles = read_cube_level(spark, path, z)
-    zz = int(z)
     mp = int(min_periods)
-
-    if t_chunk is None:
-        ts_local = ts
-
-        def roll_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return _cube_rows_to_pdf([])
-            tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
-            stack = _decode_group(pdf, ts_local)
-            out = _rolling_stack(stack, stat, window, mp)
-            rows = []
-            for i, t in enumerate(ts_local):
-                if np.isnan(out[i]).all():
-                    continue
-                rows.append(dict(_tile_row(spec, zz, tx, ty, out[i]), t=int(t)))
-            return _cube_rows_to_pdf(rows)
-
-        return tiles.groupBy("tx", "ty").applyInPandas(
-            roll_all, CUBE_TILE_SCHEMA
-        )
-
-    C = int(t_chunk)
-    if C <= 0:
-        raise ValueError(f"t_chunk must be positive, got {t_chunk}")
-    halo = window - 1
-    nT = int(ts.size)
-
-    tmap = spark.createDataFrame(
-        [(int(t), i) for i, t in enumerate(ts)], "t int, ti int"
-    )
-    # trailing window: frame ti influences outputs [ti, ti + window - 1]
-    claimed = tiles.join(F.broadcast(tmap), "t").withColumn(
-        "ck",
-        F.explode(
-            F.expr(
-                f"sequence(ti DIV {C},"
-                f" LEAST(ti + {halo}, {nT - 1}) DIV {C})"
-            ).cast("array<int>")
-        ),
+    return _t_stage(
+        spark, path, z, t_domain,
+        lambda stack, ts: _rolling_stack(stack, stat, window, mp),
+        t_chunk=t_chunk, before=window - 1,
     )
 
-    def roll_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, ck = int(key[0]), int(key[1]), int(key[2])
-        lo = max(0, ck * C - halo)
-        hi = min(nT, (ck + 1) * C)
-        ts_win = ts[lo:hi]
-        stack = _decode_group(pdf, ts_win)
-        # indices < halo into the window are warm-up context unless the
-        # window starts at the cube origin (lo == 0, where clipping is
-        # the real semantics)
-        out = _rolling_stack(stack, stat, window, mp)
-        rows = []
-        for i in range(lo, hi):
-            if i < ck * C:
-                continue  # halo frame: its home chunk emits it
-            plane = out[i - lo]
-            if np.isnan(plane).all():
-                continue
-            rows.append(dict(_tile_row(spec, zz, tx, ty, plane), t=int(ts[i])))
-        return _cube_rows_to_pdf(rows)
 
-    return claimed.groupBy("tx", "ty", "ck").applyInPandas(
-        roll_chunk, CUBE_TILE_SCHEMA
-    )
+def _anomaly(stack: np.ndarray, ts: np.ndarray) -> np.ndarray:
+    obs = ~np.isnan(stack)
+    n = obs.sum(axis=0).astype(np.float64)
+    sv = np.where(obs, stack, 0.0).sum(axis=0)
+    with np.errstate(invalid="ignore"):
+        return _nan_unless_finite((n * stack - sv) / n)  # one division, exact num
 
 
 def cube_anomaly(
@@ -504,33 +464,27 @@ def cube_anomaly(
     Same single ``groupBy(tx, ty)`` gather as ``cube_composite`` — the
     mean is decomposable, so a T-too-big stack splits into a partial-
     sums pass plus a map pass (not needed at the in-group sizes this
-    serves). Returns CUBE_TILE_SCHEMA rows; all-NaN frames drop.
+    serves). Returns CUBE_TILE_SCHEMA rows; frames with no finite pixel
+    drop.
     """
-    spec = _level_spec(spark, path, z)
-    ts = _t_domain(spark, path, z, t_domain)
-    tiles = read_cube_level(spark, path, z)
-    zz = int(z)
+    return _t_stage(spark, path, z, t_domain, _anomaly)
 
-    def anom(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return _cube_rows_to_pdf([])
-        tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
-        stack = _decode_group(pdf, ts)
-        obs = ~np.isnan(stack)
-        n = obs.sum(axis=0).astype(np.float64)
-        sv = np.where(obs, stack, 0.0).sum(axis=0)
-        out = []
-        with np.errstate(invalid="ignore"):
-            for i in range(stack.shape[0]):
-                plane = (n * stack[i] - sv) / n  # one division, exact num
-                if not np.isfinite(plane).any():
-                    continue
-                out.append(
-                    dict(_tile_row(spec, zz, tx, ty, plane), t=int(ts[i]))
-                )
-        return _cube_rows_to_pdf(out)
 
-    return tiles.groupBy("tx", "ty").applyInPandas(anom, CUBE_TILE_SCHEMA)
+def _trend(stack: np.ndarray, ts: np.ndarray, stat: str) -> np.ndarray:
+    obs = ~np.isnan(stack)
+    n = obs.sum(axis=0).astype(np.float64)
+    if stat == "nobs":
+        return np.where(n > 0, n, np.nan)
+    tcol = ts.astype(np.float64).reshape(-1, *(1,) * (stack.ndim - 1))
+    v0 = np.where(obs, stack, 0.0)
+    st = (tcol * obs).sum(axis=0)
+    stt = (tcol * tcol * obs).sum(axis=0)
+    sv = v0.sum(axis=0)
+    stv = (tcol * v0).sum(axis=0)
+    den = n * stt - st * st  # > 0 iff n >= 2 (distinct t per frame)
+    num = (n * stv - st * sv) if stat == "slope" else (stt * sv - st * stv)
+    val = np.divide(num, den, out=np.full(den.shape, np.nan), where=den > 0)
+    return _nan_unless_finite(val[np.newaxis])[0]
 
 
 def cube_trend(
@@ -558,7 +512,8 @@ def cube_trend(
     Same plan shape as ``cube_composite`` (one ``groupBy(tx, ty)``
     gather; the moment sums are decomposable along t, so a T-too-big
     stack tree-reduces by t buckets). Returns TILE_SCHEMA rows — an
-    ordinary raster plane (write_level / zonal / histogram compose).
+    ordinary raster plane (write_level / zonal / histogram compose);
+    tiles with no finite pixel drop.
 
     Reference parity: none (PyramidScheme.jl has no time axis) —
     north-rule cube-analytics surface.
@@ -567,36 +522,8 @@ def cube_trend(
         raise ValueError(
             f"stat must be slope|intercept|nobs, got {stat!r}"
         )
-    spec = _level_spec(spark, path, z)
-    ts = _t_domain(spark, path, z, t_domain)
-    tiles = read_cube_level(spark, path, z)
-    zz = int(z)
-
-    def reduce_t(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return _rows_to_pdf([])
-        tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
-        stack = _decode_group(pdf, ts)
-        obs = ~np.isnan(stack)
-        tcol = ts.astype(np.float64)[:, None, None]
-        n = obs.sum(axis=0).astype(np.float64)
-        if stat == "nobs":
-            val = np.where(n > 0, n, np.nan)
-            if not np.isfinite(val).any():
-                return _rows_to_pdf([])
-            return _rows_to_pdf([_tile_row(spec, zz, tx, ty, val)])
-        v0 = np.where(obs, stack, 0.0)
-        st = (tcol * obs).sum(axis=0)
-        stt = (tcol * tcol * obs).sum(axis=0)
-        sv = v0.sum(axis=0)
-        stv = (tcol * v0).sum(axis=0)
-        den = n * stt - st * st  # > 0 iff n >= 2 (distinct t per frame)
-        num = (n * stv - st * sv) if stat == "slope" else (stt * sv - st * stv)
-        val = np.divide(
-            num, den, out=np.full(den.shape, np.nan), where=den > 0
-        )
-        if not np.isfinite(val).any():
-            return _rows_to_pdf([])
-        return _rows_to_pdf([_tile_row(spec, zz, tx, ty, val)])
-
-    return tiles.groupBy("tx", "ty").applyInPandas(reduce_t, TILE_SCHEMA)
+    return _t_stage(
+        spark, path, z, t_domain,
+        lambda stack, ts: _trend(stack, ts, stat),
+        cube=False,
+    )

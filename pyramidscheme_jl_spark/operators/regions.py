@@ -17,8 +17,8 @@ Spark-first shape (the reason this works at 10^12 pixels):
    is GLOBALLY canonical without any coordination: the row-major global
    index of its first pixel.
 2. The same pass emits, per tile, exactly the rows its caller reads:
-   (a) piece rows ``(label, value, n, x0, y0, x1, y1)`` — one per local
-   component for the region table and the adjacency graph, or one per
+   (a) piece rows ``(label, value, n, x0, y0, x1, y1, dtype)`` — one per
+   local component for the region table and the adjacency graph, or one per
    RUN (a one-row piece: skinny, runs not pixels) for the operators that
    place pixels (labeled raster, sieve, stats); (b) one strip row per
    tile edge (positions, values, labels of the edge pixels — arrays, so
@@ -62,15 +62,17 @@ from ..functions.codec import decode_tile
 from ..plans.grid import level_shape
 
 #: union row schema for the single-scan emit: piece rows (kind 0: one
-#: local component, or one run) fill the first block, strip rows (kind 1)
-#: the arrays, in-tile contact rows (kind 2, emitted only when the scan is
-#: asked for them) use (label=la, lb, n=4-adjacent pixel pairs)
+#: local component, or one run, with its source tile's dtype) fill the
+#: first block, strip rows (kind 1) the arrays, in-tile contact rows
+#: (kind 2, emitted only when the scan is asked for them) use (label=la,
+#: lb, n=4-adjacent pixel pairs)
 _SCAN_SCHEMA = (
     "kind int, label long, value double, n long, "
     "x0 long, y0 long, x1 long, y1 long, lb long, "
-    "ekey string, side int, pos array<long>, vals array<double>, labels array<long>"
+    "ekey string, side int, pos array<long>, vals array<double>, labels array<long>, "
+    "dtype string"
 )
-_PIECE_COLS = ("label", "value", "n", "x0", "y0", "x1", "y1")
+_PIECE_COLS = ("label", "value", "n", "x0", "y0", "x1", "y1", "dtype")
 
 
 def _label_tile(a: np.ndarray, eight: bool = False):
@@ -225,20 +227,20 @@ def _scan_gen(ts: int, W: int, eight: bool, runs: bool, contacts: bool):
                 for p in pieces.itertuples(index=False):
                     out.append((0, int(p.label), float(p.value), int(p.n),
                                 int(p.x0), int(p.y0), int(p.x1), int(p.y1),
-                                None, None, None, None, None, None))
+                                None, None, None, None, None, None, row.dtype))
 
                 if contacts:
                     # in-tile 4-contact pairs on provisional labels
                     for (ra, rb), wgt in _tile_contacts(rr, root).items():
                         la_, lb_ = sorted((int(gidx[ra]), int(gidx[rb])))
                         out.append((2, la_, None, int(wgt), None, None, None,
-                                    None, lb_, None, None, None, None, None))
+                                    None, lb_, None, None, None, None, None, None))
 
                 def strip(ekey, side, pos, vv, ls):
                     if len(pos):
                         out.append((1, None, None, None, None, None, None,
                                     None, None, ekey, side, pos.tolist(),
-                                    vv.tolist(), ls.tolist()))
+                                    vv.tolist(), ls.tolist(), None))
 
                 for col, ekey, side in ((w - 1, f"v:{tx + 1}:{ty}", 0),
                                         (0, f"v:{tx}:{ty}", 1)):
@@ -266,7 +268,7 @@ def _scan_gen(ts: int, W: int, eight: bool, runs: bool, contacts: bool):
                         strip(ekey, side, np.zeros(sel.sum(), dtype=np.int64),
                               a[rr[sel, 0], c_], lab[sel])
             cols = ["kind", "label", "value", "n", "x0", "y0", "x1", "y1",
-                    "lb", "ekey", "side", "pos", "vals", "labels"]
+                    "lb", "ekey", "side", "pos", "vals", "labels", "dtype"]
             yield pd.DataFrame(out, columns=cols)
 
     return gen
@@ -394,9 +396,10 @@ def _adjacency(scan: DataFrame, comp: DataFrame) -> DataFrame:
     )
 
 
-def _paint_runs(runs: DataFrame, col: str, fill, dtype: str, shape, ts: int):
+def _paint_runs(runs: DataFrame, col: str, fill, dtype, shape, ts: int):
     """One TILE_SCHEMA tile per touched tile from run rows: a ``fill``
     plane on which every run paints its ``col`` value, cast to ``dtype``
+    (``None``: the source tile's dtype, from the runs' ``dtype`` column)
     unless NaN fill is left in it. Tiles no run touches are not emitted
     (sparse semantics)."""
     from ..operators.build import PyramidSpec, _rows_to_pdf, _tile_row
@@ -416,12 +419,12 @@ def _paint_runs(runs: DataFrame, col: str, fill, dtype: str, shape, ts: int):
                                  pdf[col].to_numpy()):
             plane[r_, c0:c1] = v
         if plane.dtype.kind != "f" or not np.isnan(plane).any():
-            plane = plane.astype(dtype, copy=False)
+            plane = plane.astype(dtype or pdf["dtype"].iloc[0], copy=False)
         return _rows_to_pdf([_tile_row(out_spec, 0, tx, ty, plane)])
 
     return runs.select(
         F.expr(f"x0 DIV {ts}").alias("tx"), F.expr(f"y0 DIV {ts}").alias("ty"),
-        "x0", "y0", "x1", col,
+        "x0", "y0", "x1", col, *([] if dtype else ["dtype"]),
     ).groupBy("tx", "ty").applyInPandas(assemble, TILE_SCHEMA)
 
 
@@ -472,11 +475,10 @@ def region_sieve(
     the resolve and adjacency graph as ``region_adjacency``; the region
     table and the small->value mapping are region-count-sized
     DataFrames; the scan's run rows (runs, not pixels) join the mapping
-    and the run painter assembles each tile.
+    and the run painter assembles each tile, cast to the dtype its runs
+    carry from their source tile.
     """
     from pyspark.sql import Window
-
-    from ..sources.catalog import read_level
 
     if min_px <= 0:
         raise ValueError(f"min_px must be positive, got {min_px}")
@@ -512,11 +514,9 @@ def region_sieve(
     )
     # dtype policy mirrors warp: NaN background exists whenever the level
     # has nodata pixels, so assemble float64 and cast back to the source
-    # dtype per tile only when the tile is fully covered
-    first = read_level(spark, path, z).select("dtype").first()
-    src_dtype = first["dtype"] if first is not None else "float64"
+    # tile's dtype only when the tile is fully covered
     return _paint_runs(runs.join(value_map, "region_id"), "out_value",
-                       np.nan, src_dtype, shape, ts)
+                       np.nan, None, shape, ts)
 
 
 def region_label_raster(

@@ -145,7 +145,7 @@ def lsh_bucket(
         # codegen'd (interpreted, measured ~1 ms/row), and the unrolled
         # generated-SQL codegen formulation measured 1.7x SLOWER here at
         # sf0.1 — confirmed decisively by the round-5 corpus-scale A/B
-        # (tools/ivf_assign_ab.py, 2M rows x dim 64 x 16 keys, local[16]):
+        # (BENCH/IVF_ASSIGN_AB.md, 2M rows x dim 64 x 16 keys, local[16]):
         # warm scan 34M rows/s (matmul UDF) vs 7.7M rows/s (unrolled expr),
         # 4.4x, AND a smaller one-time driver constant (6.0 s vs 12.9 s
         # plan-analysis + Janino compile of the ~1000-term tree). One
@@ -367,62 +367,6 @@ def quantized_centroids(centroids: np.ndarray) -> np.ndarray:
     return np.floor(centroids * QUANT + 0.5).astype(np.int64)
 
 
-def _packed_centroid_scores_sql(qcent: np.ndarray, qvec_col: str) -> str:
-    """SQL text for the per-centroid distance scores ``|c_j|^2 - 2 q.c_j``
-    packed as ``score * nlist + j`` so ties resolve to the lowest list id
-    exactly.
-
-    **Measured A/B loser — kept as the JVM twin, not the production path.**
-    Round 4 shipped this as the corpus-scan assignment (VERDICT r3 #4 asked
-    for a Python-free scan); the round-5 corpus-scale A/B
-    (``tools/ivf_assign_ab.py``, 2M rows, dim=64, nlist=16, local[16])
-    settled the contradiction with ``lsh_bucket``'s measurement: the Arrow
-    int64-matmul UDF (``_assign_udf``) wins on BOTH axes — warm scan
-    34M rows/s vs 7.7M rows/s (4.4x) and one-time driver constant 6.0 s vs
-    12.9 s (plan analysis + Janino compile of the ~1000-term tree). The
-    production ``ivf_topk`` therefore uses ``_assign_udf``/``_probe_udf``;
-    this generator remains for the expr<->numpy parity property test and
-    the A/B tool. No crossover exists at this shape; a much smaller
-    ``nlist*dim`` product (<~64 terms, where one batch matmul stops
-    amortizing Arrow transfer) is the only regime where the expr could win.
-
-    Within the expr formulation the two earlier choices still hold:
-    unrolled multiply-add chains (not CodegenFallback higher-order
-    functions), and ONE ``F.expr`` SQL string (Column algebra costs ~12 s
-    of py4j round-trips for the same tree).
-    """
-    nlist, dim = qcent.shape
-    c_norm = (qcent * qcent).sum(axis=1)
-    parts = []
-    for j in range(nlist):
-        terms = " + ".join(
-            f"{qvec_col}[{i}] * {int(qcent[j, i])}L"
-            for i in range(dim)
-            if qcent[j, i] != 0
-        ) or "0L"
-        parts.append(f"({int(c_norm[j])}L - 2L * ({terms})) * {nlist}L + {j}L")
-    return "array(" + ", ".join(parts) + ")"
-
-
-def _assign_expr(qcent: np.ndarray, qvec_col: str = "qvec"):
-    """qvec -> nearest-centroid list id, pure JVM (first-minimum = lowest
-    list id, matching np.argmin semantics; pmod because packed scores go
-    negative and Spark ``%`` is remainder)."""
-    packed = _packed_centroid_scores_sql(qcent, qvec_col)
-    return F.expr(f"cast(pmod(array_min({packed}), {len(qcent)}) as int)")
-
-
-def _probe_lists_expr(qcent: np.ndarray, nprobe: int, qvec_col: str = "qvec"):
-    """qvec -> the nprobe nearest list ids in distance order, pure JVM
-    (sorted packed scores; unique packing makes the order total). A/B
-    loser like ``_assign_expr`` — kept for the parity test."""
-    packed = _packed_centroid_scores_sql(qcent, qvec_col)
-    return F.expr(
-        f"transform(slice(array_sort({packed}), 1, {int(nprobe)}), "
-        f"v -> cast(pmod(v, {len(qcent)}) as int))"
-    )
-
-
 def _centroid_scores_np(qcent: np.ndarray, m: np.ndarray) -> np.ndarray:
     """(n, nlist) exact int64 distance scores ``|c_j|^2 - 2 q.c_j`` for a
     batch of quantized vectors — one matmul, shared by assign and probe."""
@@ -433,14 +377,12 @@ def _centroid_scores_np(qcent: np.ndarray, m: np.ndarray) -> np.ndarray:
 def _assign_udf(qcent: np.ndarray):
     """qvec -> nearest-centroid list id via one Arrow-batched int64 matmul.
 
-    The measured production path (tools/ivf_assign_ab.py, round 5): 4.4x
-    the unrolled-codegen expr's warm scan rate and half its driver
-    constant at the (nlist=16, dim=64) shape — see
-    ``_packed_centroid_scores_sql`` for the full A/B record. Semantics are
-    bit-identical to ``_assign_expr``: exact int64 arithmetic,
-    first-minimum tie-break (``np.argmin``) == lowest list id (pinned by
-    ``test_ivf_assign_expr_matches_numpy_argmin`` and the A/B tool's
-    full-corpus assignment-equality assert).
+    The measured production path (round-5 A/B, BENCH/IVF_ASSIGN_AB.md):
+    4.4x the unrolled-codegen SQL expr's warm scan rate and half its
+    driver constant at the (nlist=16, dim=64) shape; the expr path has
+    since been removed. Exact int64 arithmetic, first-minimum tie-break
+    (``np.argmin``) == lowest list id (pinned by
+    ``test_ivf_assign_expr_matches_numpy_argmin``).
     """
     qc = qcent.copy()
 
@@ -454,16 +396,16 @@ def _assign_udf(qcent: np.ndarray):
 
 def _probe_udf(qcent: np.ndarray, nprobe: int):
     """qvec -> the nprobe nearest list ids in distance order (query side,
-    same matmul scores; stable argsort + packed tiebreak on list id matches
-    ``_probe_lists_expr``'s total order exactly)."""
+    same matmul scores; stable argsort + packed ``score*nlist + j`` key:
+    a total order, ties to the lowest list id)."""
     qc = qcent.copy()
     nlist = len(qcent)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def probe(qv: pd.Series) -> pd.Series:
         m = np.array(qv.tolist(), dtype=np.int64)
-        # pack score*nlist+j like the expr so the sort key is total and ties
-        # resolve to the lowest list id; argsort positions ARE the list ids
+        # pack score*nlist+j so the sort key is total and ties resolve to
+        # the lowest list id; argsort positions ARE the list ids
         packed = _centroid_scores_np(qc, m) * nlist + np.arange(nlist, dtype=np.int64)
         idx = np.argsort(packed, axis=1)[:, : int(nprobe)]
         return pd.Series(list(idx.astype(np.int32)))
@@ -503,7 +445,7 @@ def ivf_topk(
     qcent = quantized_centroids(centroids)
     # assignment + probing are Arrow-batched int64 matmuls — the measured
     # winner over the unrolled-codegen expr at every scale (4.4x warm scan,
-    # half the driver constant; tools/ivf_assign_ab.py, round 5). The
+    # half the driver constant; BENCH/IVF_ASSIGN_AB.md, round 5). The
     # narrow UDF stage carries only qvec; the join stays an equi-join on
     # the bounded nlist key space.
     d = quantized(data, vec_col).select(

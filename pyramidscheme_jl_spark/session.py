@@ -147,6 +147,13 @@ def spark_conf(
     return conf
 
 
+def local_cpus(env=os.environ) -> int:
+    """Cores of the default ``local[N]`` master: ``SPARK_GRAFT_CPUS`` if
+    set, else this process's CPU-affinity count (the cores it may run on,
+    not the machine's)."""
+    return int(env.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app: str = "pyramidscheme-spark",
     master: str | None = None,
@@ -154,7 +161,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     _tune_driver_malloc()
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{local_cpus()}]"
     # make the package importable by the python *daemon* (pre-JVM-launch env)
     # so daemon_preload can warm numpy/pandas/our kernels before forking
     pkg_root = str(pathlib.Path(__file__).resolve().parent.parent)

@@ -953,17 +953,13 @@ def test_streaming_refuses_non_decomposable_reducer(spark, tmp_path):
 
 
 def test_ivf_assign_expr_matches_numpy_argmin(spark):
-    """Assignment/probe parity: BOTH formulations — the production Arrow
-    matmul UDF (_assign_udf/_probe_udf) and the JVM generated-SQL twin
-    (_assign_expr/_probe_lists_expr, the round-5 A/B loser kept for this
-    pin) — must reproduce np.argmin / stable argsort exactly, including
-    negative packed scores (pmod) and tie-break to the lowest list id."""
+    """Assignment/probe parity: the Arrow matmul UDFs (_assign_udf /
+    _probe_udf) must reproduce np.argmin / stable argsort exactly,
+    including negative scores and tie-break to the lowest list id."""
     import numpy as np
 
     from pyramidscheme_jl_spark.operators.similarity import (
-        _assign_expr,
         _assign_udf,
-        _probe_lists_expr,
         _probe_udf,
         quantized,
     )
@@ -982,11 +978,9 @@ def test_ivf_assign_expr_matches_numpy_argmin(spark):
     from pyspark.sql import functions as F
 
     got = {
-        r["vec_id"]: (r["a"], r["p"], r["au"], r["pu"])
+        r["vec_id"]: (r["au"], r["pu"])
         for r in q.select(
             "vec_id",
-            _assign_expr(qcent).alias("a"),
-            _probe_lists_expr(qcent, 3).alias("p"),
             _assign_udf(qcent)(F.col("qvec")).alias("au"),
             _probe_udf(qcent, 3)(F.col("qvec")).alias("pu"),
         ).collect()
@@ -998,8 +992,6 @@ def test_ivf_assign_expr_matches_numpy_argmin(spark):
         order = np.argsort(scores[i] * nlist + np.arange(nlist), kind="stable")
         assert got[i][0] == order[0], i
         assert got[i][1] == list(order[:3]), i
-        assert got[i][2] == order[0], i  # production UDF == expr == numpy
-        assert got[i][3] == list(order[:3]), i
 
 
 @pytest.mark.parametrize("layout", ["delta", "filewise"])

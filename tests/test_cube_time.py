@@ -153,10 +153,11 @@ def test_gap_fill_linear_exact(spark, cube_path):
     assert np.isnan(got[0][m0]).all()
 
 
-def test_gap_fill_linear_chunked_bit_identical(spark, cube_path):
-    base = _collect_cube(cube_gap_fill(spark, cube_path, method="linear", max_gap=2))
+@pytest.mark.parametrize("method", ["locf", "linear"])
+def test_gap_fill_chunked_bit_identical(spark, cube_path, method):
+    base = _collect_cube(cube_gap_fill(spark, cube_path, method=method, max_gap=2))
     chunk = _collect_cube(
-        cube_gap_fill(spark, cube_path, method="linear", max_gap=2, t_chunk=2)
+        cube_gap_fill(spark, cube_path, method=method, max_gap=2, t_chunk=2)
     )
     for t in TS:
         a, b = base.get(t), chunk.get(t)
@@ -432,3 +433,75 @@ def test_level_out_of_range_fails_at_call_time(spark, cube_path, op):
     z = PyramidSpec(BASE, BASE, TILE).nlevels + 1
     with pytest.raises(ValueError, match="out of range"):
         getattr(cube_time, op)(spark, cube_path, z=z)
+
+
+# ---------------------------------------------------------------------------
+# one drop rule: stored all-NaN frame tiles emit exactly the sparse tile set
+# ---------------------------------------------------------------------------
+
+NAN_TS = [0, 1, 2, 3]
+NAN_BASE, NAN_TILE = 32, 16
+
+
+@pytest.fixture(scope="module")
+def nan_cube_path(spark, tmp_path_factory):
+    """2x2 tiles, every frame tile STORED (none absent): (0,0) all-NaN at
+    every t, (1,0) all-NaN at t=0, (0,1) observed only at t=1, (1,1)
+    observed at every t."""
+    path = str(tmp_path_factory.mktemp("cube_nan") / "cube")
+    spec = PyramidSpec(NAN_BASE, NAN_BASE, NAN_TILE)
+    observed = {(0, 0): set(), (1, 0): {1, 2, 3}, (0, 1): {1}, (1, 1): set(NAN_TS)}
+    py, px = np.mgrid[0:NAN_TILE, 0:NAN_TILE]
+    rows = []
+    for t in NAN_TS:
+        for (tx, ty), ts in observed.items():
+            arr = ((px + 2 * py + 3 * t + tx) % 17).astype(np.float64)
+            if t not in ts:
+                arr[:] = np.nan
+            rows.append(dict(_tile_row(spec, 0, tx, ty, arr), t=t))
+    write_cube_level(spark.createDataFrame(rows, CUBE_TILE_SCHEMA), path, 0)
+    write_multiscales(path, spec.nlevels, NAN_TILE, NAN_BASE, NAN_BASE, "mean", "x")
+    return path
+
+
+_ALL = set(NAN_TS)
+_NAN_CUBE_TILES = [
+    # cube ops: {(tx, ty): emitted t}; a frame whose output is NaN
+    # everywhere (leading gaps, nothing to fill from) is not emitted
+    ("cube_gap_fill", dict(method="locf"), {(1, 0): {1, 2, 3}, (0, 1): {1, 2, 3}, (1, 1): _ALL}),
+    ("cube_gap_fill", dict(method="locf", max_gap=1, t_chunk=2),
+     {(1, 0): {1, 2, 3}, (0, 1): {1, 2}, (1, 1): _ALL}),
+    ("cube_gap_fill", dict(method="linear"), {(1, 0): {1, 2, 3}, (0, 1): {1}, (1, 1): _ALL}),
+    ("cube_rolling", dict(stat="mean", window=2), {(1, 0): {1, 2, 3}, (0, 1): {1, 2}, (1, 1): _ALL}),
+    ("cube_rolling", dict(stat="count", window=2, t_chunk=1),
+     {(1, 0): {1, 2, 3}, (0, 1): {1, 2}, (1, 1): _ALL}),
+    ("cube_anomaly", {}, {(1, 0): {1, 2, 3}, (0, 1): {1}, (1, 1): _ALL}),
+    # plane ops: emitted tiles; a tile with no observation at any t is not
+    # emitted, even for count (all zeros) — and a slope needs 2 observations
+    ("cube_composite", dict(stat="count"), {(1, 0), (0, 1), (1, 1)}),
+    ("cube_composite", dict(stat="mean"), {(1, 0), (0, 1), (1, 1)}),
+    ("cube_composite", dict(stat="max", argt=True), {(1, 0), (0, 1), (1, 1)}),
+    ("cube_composite", dict(stat="first"), {(1, 0), (0, 1), (1, 1)}),
+    ("cube_trend", dict(stat="nobs"), {(1, 0), (0, 1), (1, 1)}),
+    ("cube_trend", dict(stat="slope"), {(1, 0), (1, 1)}),
+]
+
+
+@pytest.mark.parametrize(
+    "op,kw,want", _NAN_CUBE_TILES,
+    ids=[f"{op}-{'-'.join(map(str, kw.values()))}" for op, kw, _ in _NAN_CUBE_TILES],
+)
+def test_stored_all_nan_tiles_emit_the_sparse_tile_set(spark, nan_cube_path, op, kw, want):
+    from pyramidscheme_jl_spark.operators import cube_time
+
+    rows = getattr(cube_time, op)(spark, nan_cube_path, **kw).collect()
+    if isinstance(want, dict):
+        got = {}
+        for r in rows:
+            got.setdefault((r.tx, r.ty), set()).add(r.t)
+    else:
+        got = {(r.tx, r.ty) for r in rows}
+        assert len(rows) == len(got)
+    assert got == want
+    for r in rows:  # no emitted tile is NaN everywhere
+        assert np.isfinite(decode_tile(r.bytes, r.h, r.w, r.dtype, r.c)).any()

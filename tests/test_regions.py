@@ -405,3 +405,32 @@ def test_region_ops_decode_the_level_once(spark, plane_path):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" not in plan, plan
         assert "ExistingRDD" in plan, plan
+
+
+def test_region_sieve_runs_no_job_beyond_the_shared_resolve(spark, plane_path, tmp_path):
+    """The sieve casts each tile back to the dtype its run rows carry from
+    the scan, so building it runs the same call-time jobs as
+    ``region_label_raster`` (the checkpointed scan and the resolve) and
+    no extra read of the level; a fully covered uint8 raster stays uint8."""
+    from pyramidscheme_jl_spark.operators.regions import region_label_raster, region_sieve
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    try:
+        for name, call in (
+            ("raster", lambda: region_label_raster(spark, plane_path)),
+            ("sieve", lambda: region_sieve(spark, plane_path, min_px=60)),
+        ):
+            sc.setJobGroup(f"sieve-jobs-{name}", name)
+            call()
+            jobs[name] = len(tracker.getJobIdsForGroup(f"sieve-jobs-{name}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs["sieve"] == jobs["raster"], jobs
+
+    a = np.random.RandomState(3).randint(0, 3, size=(40, 48)).astype(np.uint8)
+    path = str(tmp_path / "u8")
+    _write_plane(spark, a, path, ts=16)
+    rows = region_sieve(spark, path, min_px=4).collect()
+    assert len(rows) == 9 and {r.dtype for r in rows} == {"uint8"}

@@ -1,6 +1,9 @@
-"""Master-dependent session defaults (``session.spark_conf``), no session needed."""
+"""Master-dependent session defaults (``session.spark_conf``) and the
+default core count (``session.local_cpus``), no session needed."""
 
-from pyramidscheme_jl_spark.session import spark_conf
+import os
+
+from pyramidscheme_jl_spark.session import local_cpus, spark_conf
 
 KEY = "spark.sql.files.maxPartitionBytes"
 
@@ -22,3 +25,9 @@ def test_extra_conf_applies_last():
     conf = spark_conf("local[4]", shuffle_partitions=3, extra_conf={KEY: "1g"}, env={})
     assert conf[KEY] == "1g"
     assert conf["spark.sql.shuffle.partitions"] == "3"
+
+
+def test_local_cpus_defaults_to_affinity_and_env_overrides():
+    assert local_cpus(env={}) == len(os.sched_getaffinity(0))
+    assert local_cpus(env={"SPARK_GRAFT_CPUS": ""}) == len(os.sched_getaffinity(0))
+    assert local_cpus(env={"SPARK_GRAFT_CPUS": "3"}) == 3

@@ -1,9 +1,9 @@
 """Profile the bench.py pyramid-build section (the BENCH_r01 discrepancy).
 
-Reproduces bench.py's exact config (G=64, local[32], materialize_base=False)
-with per-level commit timing (PYRAMID_BUILD_VERBOSE) and /proc/stat steal%
-around the run, so we can attribute the wall-clock: per-level Spark jobs,
-parquet write, tail fusion, or host noise.
+Reproduces bench.py's exact config (G=64, ``local[session.local_cpus()]``,
+materialize_base=False) with per-level commit timing (PYRAMID_BUILD_VERBOSE)
+and /proc/stat steal% around the run, so we can attribute the wall-clock:
+per-level Spark jobs, parquet write, tail fusion, or host noise.
 """
 
 from __future__ import annotations
@@ -29,11 +29,12 @@ def cpu_counters():
 
 def main() -> None:
     G = int(os.environ.get("SPARK_GRAFT_BENCH_G", "64"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     import pandas as pd
 
     from pyramidscheme_jl_spark.operators.build import build_pyramid
-    from pyramidscheme_jl_spark.session import get_spark
+    from pyramidscheme_jl_spark.session import get_spark, local_cpus
+
+    cpus = local_cpus()
     from pyramidscheme_jl_spark.sources.synth import IMAGES_DDL, synth_images
 
     spark = get_spark(app="profile-build", master=f"local[{cpus}]")

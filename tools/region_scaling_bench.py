@@ -58,7 +58,7 @@ def ensure_raster(g: int) -> str:
     path = f"{BASE}/pyr_g{g}"
     if os.path.exists(f"{path}/.done"):
         return path
-    spark = get_spark("region-scale-build", master="local[16]")
+    spark = get_spark("region-scale-build")  # local[session.local_cpus()]
     n = g * 256
     spec = PyramidSpec(n, n, 256)
 
