@@ -25,9 +25,23 @@ At scale this is one hash exchange on ``by`` plus a per-partition sort —
 the same physical shape as a sort-merge join, with no python stage and no
 range explosion. Skewed ``by`` keys (one hot user) are bounded by the
 window sort, and AQE's skew handling applies to the exchange.
+
+Every time-bucket width in this module is planned at one of two sites.
+``_interval_plan`` plans ``interval_join``, ``interval_overlap_join``
+and their ``*_stats`` twins: it validates the width before any job,
+takes mean and max length in one scalars-only aggregate, applies the
+tier gate, probes the occupied tiers in one ``distinct`` job, and
+returns the ``stats=`` dict the joins consume (given that dict, it runs
+no job). ``_hot_widths`` is the hot-group rule of ``asof_join`` and
+``sessionize`` under ``bucket_width="auto"``: one Column expression
+splits each group over ``auto_budget`` rows into max(memory bound,
+latency bound) buckets.
 """
 
 from __future__ import annotations
+
+import math
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -151,7 +165,8 @@ def asof_join(
     ``bucket_width="auto"`` (VERDICT r6 #6): a caller who doesn't know
     their keys are hot shouldn't eat the serialized-window breach. One
     scalars-only count job (the J4 hot-salt pattern) sizes the largest
-    ``by`` group across both sides; at or under ``auto_budget`` rows
+    ``by`` group across both sides and evaluates the module's hot-group
+    rule (``_hot_widths``) for it; at or under ``auto_budget`` rows
     (default 2^20 — a comfortably single-task window sort) the plain
     one-shuffle path runs unchanged. Above it the hot group's time range
     is split into ``nb`` buckets where ``nb`` honours BOTH constraints a
@@ -211,31 +226,17 @@ def asof_join(
     )
     u = r.unionByName(l)
     order = [F.col("__t").asc(), F.col("__side").asc(), F.col("__tb").asc()]
-    if bucket_width == "auto":
-        import math
-
-        tl0 = _ordinal_long(F.col("__t"), left.schema[on].dataType)
-        stats = (
-            u.groupBy(*by)
-            .agg(F.count("*").alias("c"), F.min(tl0).alias("lo"), F.max(tl0).alias("hi"))
-            .agg(
-                F.max("c").alias("mx"),
-                F.max_by(F.struct("lo", "hi"), "c").alias("rng"),
-            )
-            .collect()[0]
-        )
-        mx = int(stats["mx"] or 0)
-        if mx <= int(auto_budget):
-            bucket_width = None  # largest group is single-task-sized
-        else:
-            lo, hi = int(stats["rng"]["lo"]), int(stats["rng"]["hi"])
-            par = left.sparkSession.sparkContext.defaultParallelism
-            nb = max(
-                math.ceil(mx / int(auto_budget)),  # memory: bucket fits a task
-                min(4 * par, math.ceil(mx / 65536)),  # latency: spread the group
-            )
-            bucket_width = max(1, math.ceil((hi - lo + 1) / nb))
     on_dt = left.schema[on].dataType
+    if bucket_width == "auto":
+        # one job: the largest hot group's width, or null (the plain path)
+        # when every group is single-task-sized
+        bucket_width = (
+            _hot_widths(u, by, _ordinal_long(F.col("__t"), on_dt), auto_budget)
+            .agg(F.max_by("__w", "__c"))
+            .collect()[0][0]
+        )
+    elif bucket_width is not None:
+        bucket_width = _width(bucket_width)
 
     def _nearest_choice(df: DataFrame) -> DataFrame:
         # closer of the two arms by int64 distance; ties go BACKWARD (the
@@ -267,15 +268,8 @@ def asof_join(
             )
     else:
         tl = _ordinal_long(F.col("__t"), on_dt)
-        # `div` keeps everything in int64 — Spark's `/` is double division,
-        # which rounds ordinals >= 2^53 (ns-scale ints) to the wrong bucket
-        # (ADVICE r6). pmod first keeps floor semantics for negatives.
         u = u.withColumn("__tl", tl).withColumn(
-            "__bk",
-            F.expr(
-                f"(__tl - pmod(__tl, {int(bucket_width)}L)) "
-                f"div {int(bucket_width)}L"
-            ),
+            "__bk", _floor_div("__tl", bucket_width)
         ).drop("__tl")
         base = Window.partitionBy(*by, "__bk").orderBy(*order)
         wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -390,11 +384,11 @@ def sessionize(
     unchanged. Above it, ONLY the over-budget groups are bucketed — a
     per-hot-group width table (``<= total_rows / auto_budget`` rows, so
     broadcastable by construction) rides a broadcast join, each hot
-    group's own time range split honouring the memory
-    (``c/auto_budget``) and latency (``4x parallelism``) bounds, while
-    every cold group collapses to a single bucket (its window cost is
-    the plain path's). A/B: tools/sessionize_skew_ab.py,
-    BENCH/SESSIONIZE_SKEW.md.
+    group's own time range split by the hot-group rule ``asof_join``
+    shares (``_hot_widths``: memory ``c/auto_budget`` and latency ``4x
+    parallelism`` bounds), while every cold group collapses to a single
+    bucket (its window cost is the plain path's). A/B:
+    tools/sessionize_skew_ab.py, BENCH/SESSIONIZE_SKEW.md.
     """
     if float(gap) != int(gap):
         raise ValueError(
@@ -408,31 +402,13 @@ def sessionize(
 
     width_df = None
     if bucket_width == "auto":
-        budget = int(auto_budget)
-        gstats = df.groupBy(*by).agg(
-            F.count("*").alias("__c"), F.min(t).alias("__lo"),
-            F.max(t).alias("__hi"),
-        )
-        mx = int(gstats.agg(F.max("__c")).collect()[0][0] or 0)
-        if mx <= budget:
-            bucket_width = None  # largest group is single-task-sized
-        else:
-            par = df.sparkSession.sparkContext.defaultParallelism
-            nb = F.greatest(
-                F.ceil(F.col("__c") / F.lit(budget)),  # bucket fits a task
-                F.least(  # spread the group, floor 64k rows/bucket
-                    F.lit(4 * par), F.ceil(F.col("__c") / F.lit(65536))
-                ),
-            )
-            width_df = gstats.where(F.col("__c") > budget).select(
-                *by,
-                F.greatest(
-                    F.lit(1),
-                    F.ceil((F.col("__hi") - F.col("__lo") + 1) / nb),
-                ).cast("long").alias("__w"),
-            )
+        width_df = _hot_widths(df, by, t, auto_budget).select(*by, "__w")
+        if not width_df.count():  # every group is single-task-sized
+            width_df = bucket_width = None
+    elif bucket_width is not None:
+        bucket_width = _width(bucket_width)
 
-    if bucket_width is None and width_df is None:
+    if bucket_width is None:
         w = Window.partitionBy(*by).orderBy(t.asc())
         is_new = F.when(
             t - F.lag(t).over(w) <= F.lit(gap).cast("long"), F.lit(0)
@@ -457,12 +433,7 @@ def sessionize(
             ),
         ).drop("__w")
     else:
-        bw = int(bucket_width)
-        if bw <= 0:
-            raise ValueError(
-                f"bucket_width must be positive, got {bucket_width}"
-            )
-        u = u.withColumn("__b", _floor_div("__t0", bw))
+        u = u.withColumn("__b", _floor_div("__t0", bucket_width))
     wloc = Window.partitionBy(*by, "__b").orderBy(F.col("__t0").asc())
     # provisional: every bucket's first row flags a new session; the
     # stitch below retracts it when the previous bucket reaches across
@@ -515,10 +486,142 @@ def sessionize(
     return out.select(*df.columns, session_col)
 
 
-def _floor_div(col, w: int):
-    """int64 floor division (pmod first keeps floor semantics for
-    negatives; `div` avoids the double-division rounding past 2^53)."""
-    return F.expr(f"({col} - pmod({col}, {int(w)}L)) div {int(w)}L")
+def _width(bucket_width) -> int:
+    """``bucket_width`` as a positive int: the one check every temporal
+    operator runs on an explicit width, before any job."""
+    w = int(bucket_width)
+    if w <= 0:
+        raise ValueError(f"bucket_width must be positive, got {bucket_width}")
+    return w
+
+
+def _floor_div(col: str, w: int, tier: str | None = None):
+    """int64 floor division by ``w``, or by ``w << tier`` given a tier
+    column (pmod first keeps floor semantics for negatives; `div` avoids
+    the double-division rounding past 2^53)."""
+    wt = f"{int(w)}L" if tier is None else f"shiftleft({int(w)}L, {tier})"
+    return F.expr(f"({col} - pmod({col}, {wt})) div {wt}")
+
+
+def _hot_widths(df: DataFrame, by: list[str], t, auto_budget: int) -> DataFrame:
+    """The hot-group rule of ``bucket_width="auto"``: one row ``(*by, __c,
+    __w)`` per ``by`` group of more than ``auto_budget`` rows. ``__w``
+    splits the group's range of ``t`` into ``max(memory, latency)``
+    buckets, at least one unit wide: memory ``c/auto_budget`` (a bucket
+    fits a task), latency ``min(4 x defaultParallelism, c/65536)`` (the
+    group spreads over the cluster, no bucket under 64k rows)."""
+    budget = int(auto_budget)
+    par = df.sparkSession.sparkContext.defaultParallelism
+    c = F.col("__c")
+    nb = F.greatest(
+        F.ceil(c / F.lit(budget)), F.least(F.lit(4 * par), F.ceil(c / F.lit(65536)))
+    )
+    return (
+        df.groupBy(*by)
+        .agg(F.count("*").alias("__c"), F.min(t).alias("__lo"), F.max(t).alias("__hi"))
+        .where(c > budget)
+        .select(
+            *by, "__c",
+            F.greatest(F.lit(1), F.ceil((F.col("__hi") - F.col("__lo") + 1) / nb))
+            .cast("long").alias("__w"),
+        )
+    )
+
+
+def _prep(df: DataFrame, s_col: str, e_col: str) -> DataFrame:
+    """``df`` with int64 ordinals ``__s``/``__e``; an interval with
+    ``end < start`` matches nothing (as under BETWEEN) and is dropped."""
+    s_o = _ordinal_long(F.col(s_col), df.schema[s_col].dataType)
+    e_o = _ordinal_long(F.col(e_col), df.schema[e_col].dataType)
+    return df.withColumn("__s", s_o).withColumn("__e", e_o).where(
+        F.col("__e") >= F.col("__s")
+    )
+
+
+def _tier_of(w: int, nt: int):
+    """Smallest tier whose width ``w * 2^t`` covers the interval length."""
+    return F.least(
+        F.lit(nt - 1),
+        F.greatest(
+            F.lit(0),
+            F.ceil(F.log2((F.col("__e") - F.col("__s") + 1) / F.lit(float(w))))
+            .cast("int"),
+        ),
+    )
+
+
+def _tier_lits(tiers):
+    """Tier numbers as an ``array<int>`` literal (typed when empty)."""
+    return F.array(*[F.lit(int(t)) for t in tiers]) if tiers \
+        else F.array().cast("array<int>")
+
+
+def _interval_plan(sides, keys, bucket_width, tier_threshold, stats=None, *, join=True):
+    """The time-bucket plan of the interval joins, for ``_prep``-ed
+    ``sides`` whose occupied-tier lists go under ``keys``.
+
+    Returns ``(plan, nt, sides)``. ``plan`` is the ``stats=`` dict:
+    ``width``, ``max_len`` and each side's occupied tiers. ``nt`` is the
+    tier count, 0 for the flat plan. When tiered, ``sides`` carry their
+    own tier ``__tv``. The flat plan stays its own path: run as the
+    one-tier case, its extra per-row explode and join key measured up to
+    a third slower on flat inputs.
+
+    Given ``stats``, no job runs; a side whose dict lists no tier (the
+    dict was planned flat) probes every tier, the safe superset. Else one
+    scalars-only aggregate takes mean length (the ``"auto"`` width, ~2
+    buckets per interval) and max length (the tier gate ``max_len/w >
+    tier_threshold``); a join skips it when neither consumer exists
+    (explicit width, tiering off). Tiered, one ``distinct`` job finds the
+    occupied tiers of all sides, before the bucket explode. A join first
+    checkpoints its (narrow) sides so that probe and the join share one
+    lineage instead of each re-running the upstream (ADVICE r7)."""
+    if stats is not None:
+        bucket_width = stats["width"]
+    if bucket_width != "auto":
+        bucket_width = _width(bucket_width)
+    no_tiers = tier_threshold is None or tier_threshold == float("inf")
+    occ = None
+    if stats is not None:
+        max_len = int(stats["max_len"])
+        occ = [list(stats.get(k) or []) for k in keys]
+    elif bucket_width == "auto" or not no_tiers or not join:
+        n = (F.col("__e") - F.col("__s") + 1).alias("n")
+        row = reduce(DataFrame.unionAll, [sd.select(n) for sd in sides]).agg(
+            F.avg("n").alias("m"), F.max("n").alias("mx")
+        ).collect()[0]
+        if bucket_width == "auto":
+            bucket_width = max(1, int(row["m"] or 1))
+        max_len = int(row["mx"] or 1)
+    else:
+        max_len = 0
+    w, nt = bucket_width, 0
+    if not no_tiers and -(-max_len // w) > int(tier_threshold):
+        nt = max(1, math.ceil(math.log2(max(max_len / w, 1.0))) + 1)
+        sides = [sd.withColumn("__tv", _tier_of(w, nt)) for sd in sides]
+        if occ is None:
+            if join:
+                sides = [sd.localCheckpoint() for sd in sides]
+            rows = reduce(DataFrame.unionAll, [
+                sd.select(F.lit(i).alias("__i"), "__tv") for i, sd in enumerate(sides)
+            ]).distinct().collect()
+            occ = [sorted(r["__tv"] for r in rows if r["__i"] == i)
+                   for i in range(len(sides))]
+        else:
+            occ = [o or list(range(nt)) for o in occ]
+    else:
+        occ = [[] for _ in keys]
+    return {"width": w, "max_len": max_len, **dict(zip(keys, occ))}, nt, sides
+
+
+def _burst(df: DataFrame, w: int, tier: str | None = None) -> DataFrame:
+    """Explode each interval into the buckets it covers at width ``w``
+    (``w << tier`` given a tier column): ``sequence(floor(s/wt),
+    floor(e/wt))``, a ~(len/wt + 1) fan-out."""
+    return df.withColumn(
+        "__bk",
+        F.explode(F.sequence(_floor_div("__s", w, tier), _floor_div("__e", w, tier))),
+    )
 
 
 def interval_stats(
@@ -544,42 +647,10 @@ def interval_stats(
     would be silently unmatched, the same contract violation as a stale
     index.
     """
-    s_o = _ordinal_long(F.col(start_col), intervals.schema[start_col].dataType)
-    e_o = _ordinal_long(F.col(end_col), intervals.schema[end_col].dataType)
-    iv = intervals.withColumn("__s", s_o).withColumn("__e", e_o).where(
-        F.col("__e") >= F.col("__s")
-    )
-    row = iv.agg(
-        F.avg(F.col("__e") - F.col("__s") + 1).alias("m"),
-        F.max(F.col("__e") - F.col("__s") + 1).alias("mx"),
-    ).collect()[0]
-    w = max(1, int(row["m"] or 1)) if bucket_width == "auto" else int(bucket_width)
-    if w <= 0:
-        raise ValueError(f"bucket_width must be positive, got {bucket_width}")
-    max_len = int(row["mx"] or 1)
-    occupied: list[int] = []
-    no_tiers = tier_threshold is None or tier_threshold == float("inf")
-    if not no_tiers and -(-max_len // w) > int(tier_threshold):
-        import math
-
-        nt = max(1, math.ceil(math.log2(max(max_len / w, 1.0))) + 1)
-        occupied = sorted(
-            r["__tv"]
-            for r in iv.select(_tier_of(w, nt).alias("__tv")).distinct().collect()
-        )
-    return {"width": w, "max_len": max_len, "occupied": occupied}
-
-
-def _tier_of(w: int, nt: int):
-    """Smallest tier whose width ``w * 2^t`` covers the interval length."""
-    return F.least(
-        F.lit(nt - 1),
-        F.greatest(
-            F.lit(0),
-            F.ceil(F.log2((F.col("__e") - F.col("__s") + 1) / F.lit(float(w))))
-            .cast("int"),
-        ),
-    )
+    return _interval_plan(
+        [_prep(intervals, start_col, end_col)], ("occupied",),
+        bucket_width, tier_threshold, join=False,
+    )[0]
 
 
 def interval_join(
@@ -609,25 +680,26 @@ def interval_join(
     twice — no dedup shuffle exists in the plan.
 
     ``bucket_width="auto"`` sizes w to the mean interval length (the
-    stats aggregate below; ~2 buckets per interval), the balance point
-    between interval fan-out (len/w) and bucket occupancy (points per
-    w). Intervals with ``end < start`` match nothing and are dropped,
-    as under BETWEEN. Ordinal units follow the column types
-    (``_ordinal_long``): native for ints, micros for timestamps, days
-    for dates.
+    planner's one scalars-only aggregate, ``_interval_plan``; ~2
+    buckets per interval), the balance point between interval fan-out
+    (len/w) and bucket occupancy (points per w). Intervals with ``end <
+    start`` match nothing and are dropped, as under BETWEEN. Ordinal
+    units follow the column types (``_ordinal_long``): native for ints,
+    micros for timestamps, days for dates.
 
     **Length skew — the tiered plan.** A mean-sized w leaves one
     "always-on" interval exploding len/w rows — unbounded under
-    interval-length skew. The same scalars-only stats job therefore
-    also takes the MAX length, and when ``max_len/w > tier_threshold``
+    interval-length skew. The planner's same aggregate therefore also
+    takes the MAX length, and when ``max_len/w > tier_threshold``
     the plan switches to a multi-resolution index (the interval-tree
     idea, relationally): tier t has width ``w * 2^t``; each interval
     lands ONLY in the smallest tier that covers its own length, where
     it explodes into at most ~3 buckets; each point probes its one
-    bucket in EVERY tier (<= log2(max_len/w)+1 keys — the 3x3-probe
-    pattern on the time axis). Fan-out is O(1) per interval and
-    O(log length-spread) per point, both sides bounded regardless of
-    skew. Exactly-once survives: an interval exists in a single tier,
+    bucket in every tier that holds intervals (<= log2(max_len/w)+1
+    keys — the 3x3-probe pattern on the time axis; the planner finds
+    the occupied tiers in one ``distinct`` job). Fan-out is O(1) per
+    interval and O(log length-spread) per point, both sides bounded
+    regardless of skew. Exactly-once survives: an interval exists in a single tier,
     and a point has one bucket there. A mis-rounded tier estimate can
     only widen an interval's bucket count by one — never correctness.
 
@@ -643,100 +715,30 @@ def interval_join(
     see ``interval_stats`` for the staleness contract.
     """
     by = [] if by is None else [by] if isinstance(by, str) else list(by)
-    s_dt = intervals.schema[start_col].dataType
-    t_dt = points.schema[on].dataType
-    s_o = _ordinal_long(F.col(start_col), s_dt)
-    e_o = _ordinal_long(F.col(end_col), intervals.schema[end_col].dataType)
-    t_o = _ordinal_long(F.col(on), t_dt)
-
-    iv = intervals.withColumn("__s", s_o).withColumn("__e", e_o).where(
-        F.col("__e") >= F.col("__s")
+    plan, nt, (iv,) = _interval_plan(
+        [_prep(intervals, start_col, end_col)], ("occupied",),
+        bucket_width, tier_threshold, stats,
     )
-    # one scalars-only job serves both the auto width AND the length-skew
-    # trigger (at deployment both are catalog statistics); with an explicit
-    # width AND tiering disabled (tier_threshold=None/inf) neither consumer
-    # exists, so the job is skipped entirely (ADVICE r7). A precomputed
-    # ``stats`` dict (interval_stats) replaces ALL driver jobs — the
-    # serve-many shape (r8).
-    no_tiers = tier_threshold is None or tier_threshold == float("inf")
-    pre_occ: list[int] | None = None
-    if stats is not None:
-        bucket_width = int(stats["width"])
-        max_len = int(stats["max_len"])
-        pre_occ = list(stats.get("occupied") or [])
-    elif bucket_width == "auto" or not no_tiers:
-        row = iv.agg(
-            F.avg(F.col("__e") - F.col("__s") + 1).alias("m"),
-            F.max(F.col("__e") - F.col("__s") + 1).alias("mx"),
-        ).collect()[0]
-        if bucket_width == "auto":
-            bucket_width = max(1, int(row["m"] or 1))
-        max_len = int(row["mx"] or 1)
-    else:
-        max_len = 0
-    w = int(bucket_width)
-    if w <= 0:
-        raise ValueError(f"bucket_width must be positive, got {bucket_width}")
-
-    pt = points.withColumn("__t", t_o)
+    w = plan["width"]
+    pt = points.withColumn("__t", _ordinal_long(F.col(on), points.schema[on].dataType))
     clash = (set(intervals.columns) & set(points.columns)) - set(by)
     for c in clash:  # the by keys join, the rest ride suffixed
         pt = pt.withColumnRenamed(c, f"{c}{suffix}")
-
-    if not no_tiers and -(-max_len // w) > int(tier_threshold):
-        import math
-
-        nt = max(1, math.ceil(math.log2(max(max_len / w, 1.0))) + 1)
-        tv = _tier_of(w, nt)
-        if pre_occ is not None:
-            # catalog-statistics path: occupied tiers were computed once at
-            # ingest (interval_stats); no checkpoint, no distinct job — the
-            # interval rows flow straight into the explode
-            iv = iv.withColumn("__tv", tv)
-            occupied = pre_occ or [0]
-        else:
-            # materialize the (narrow) interval rows once: the occupied-tier
-            # probe AND the join otherwise each re-execute the full upstream
-            # lineage (ADVICE r7)
-            iv = iv.withColumn("__tv", tv).localCheckpoint()
-            # points probe only tiers that actually hold intervals — with the
-            # common bimodal length mix (short jobs + always-on windows) that
-            # is 2-3 tiers, not log2(spread); one tiny distinct job (<= ~40
-            # rows), run BEFORE the bucket explode so it scans interval rows,
-            # not exploded ones. Measured at 4M points x 15 nominal tiers:
-            # the all-tiers probe was the dominant cost.
-            occupied = sorted(
-                r["__tv"] for r in iv.select("__tv").distinct().collect()
-            ) or [0]
-        iv = iv.withColumn(
-            "__wt", F.expr(f"shiftleft({w}L, __tv)")
-        ).withColumn(
-            "__bk",
-            F.explode(
-                F.sequence(
-                    F.expr("(__s - pmod(__s, __wt)) div __wt"),
-                    F.expr("(__e - pmod(__e, __wt)) div __wt"),
-                )
-            ),
-        ).drop("__wt")
-        pt = pt.withColumn(
-            "__tv", F.explode(F.array(*[F.lit(int(t)) for t in occupied]))
-        ).withColumn("__wt", F.expr(f"shiftleft({w}L, __tv)")).withColumn(
-            "__bk", F.expr("(__t - pmod(__t, __wt)) div __wt")
-        ).drop("__wt")
-        keys = [*by, "__tv", "__bk"]
-        extra_drop = ["__tv"]
-    else:
-        iv = iv.withColumn(
-            "__bk", F.explode(F.sequence(_floor_div("__s", w), _floor_div("__e", w)))
-        )
-        pt = pt.withColumn("__bk", _floor_div("__t", w))
-        keys = [*by, "__bk"]
-        extra_drop = []
+    keys = [*by, "__bk"]
+    tier = None
+    if nt:
+        # points probe their one bucket in each tier that actually holds
+        # intervals — with the common bimodal length mix (short jobs +
+        # always-on windows) that is 2-3 tiers, not log2(spread); measured
+        # at 4M points x 15 nominal tiers, the all-tiers probe dominated
+        pt = pt.withColumn("__tv", F.explode(_tier_lits(plan["occupied"])))
+        keys, tier = [*by, "__tv", "__bk"], "__tv"
+    iv = _burst(iv, w, tier)
+    pt = pt.withColumn("__bk", _floor_div("__t", w, tier))
     joined = iv.join(pt, keys).where(
         F.col("__t").between(F.col("__s"), F.col("__e"))
     )
-    return joined.drop("__s", "__e", "__t", "__bk", *extra_drop)
+    return joined.drop("__s", "__e", "__t", "__bk", "__tv")
 
 
 def interval_overlap_stats(
@@ -754,40 +756,10 @@ def interval_overlap_stats(
     side's occupied tier set. Same persistence contract — compute at
     ingest, pass back via ``stats=``, refresh when data changes
     (supersets are the safe staleness direction)."""
-
-    def prep(df, s_col, e_col):
-        s_o = _ordinal_long(F.col(s_col), df.schema[s_col].dataType)
-        e_o = _ordinal_long(F.col(e_col), df.schema[e_col].dataType)
-        return df.withColumn("__s", s_o).withColumn("__e", e_o).where(
-            F.col("__e") >= F.col("__s")
-        )
-
-    l = prep(left, left_start, left_end)
-    r = prep(right, right_start, right_end)
-    lens = l.select((F.col("__e") - F.col("__s") + 1).alias("n")).unionAll(
-        r.select((F.col("__e") - F.col("__s") + 1).alias("n"))
-    )
-    row = lens.agg(F.avg("n").alias("m"), F.max("n").alias("mx")).collect()[0]
-    w = max(1, int(row["m"] or 1)) if bucket_width == "auto" else int(bucket_width)
-    if w <= 0:
-        raise ValueError(f"bucket_width must be positive, got {bucket_width}")
-    max_len = int(row["mx"] or 1)
-    occ_l: list[int] = []
-    occ_r: list[int] = []
-    no_tiers = tier_threshold is None or tier_threshold == float("inf")
-    if not no_tiers and -(-max_len // w) > int(tier_threshold):
-        import math
-
-        nt = max(1, math.ceil(math.log2(max(max_len / w, 1.0))) + 1)
-        occ_l = sorted(
-            x["__tv"]
-            for x in l.select(_tier_of(w, nt).alias("__tv")).distinct().collect()
-        )
-        occ_r = sorted(
-            x["__tv"]
-            for x in r.select(_tier_of(w, nt).alias("__tv")).distinct().collect()
-        )
-    return {"width": w, "max_len": max_len, "occupied_l": occ_l, "occupied_r": occ_r}
+    return _interval_plan(
+        [_prep(left, left_start, left_end), _prep(right, right_start, right_end)],
+        ("occupied_l", "occupied_r"), bucket_width, tier_threshold, join=False,
+    )[0]
 
 
 def interval_overlap_join(
@@ -815,11 +787,12 @@ def interval_overlap_join(
     "auto"`` sizes w to the mean length across BOTH sides.
 
     **Length skew — the tiered plan** (same trigger as
-    ``interval_join``: the stats job also takes the max length, and
-    past ``max_len/w > tier_threshold`` the flat explode would be
-    unbounded). Tier t has width ``w * 2^t``; each interval emits
-    entries at its OWN tier (the smallest covering its length — <= ~3
-    buckets) AND at every coarser tier (<= ~3 buckets each, so <=
+    ``interval_join``: the planner's aggregate also takes the max
+    length, and past ``max_len/w > tier_threshold`` the flat explode
+    would be unbounded). Tier t has width ``w * 2^t``; each interval
+    emits entries at its OWN tier (the smallest covering its length —
+    <= ~3 buckets) AND at every coarser tier the other side occupies
+    (<= ~3 buckets each, so <=
     3·log2(length-spread) entries total). A pair is claimed exactly
     once at the joint tier ``T = max(tier_l, tier_r)`` — both sides
     provably emit there — in the later-start bucket at T's width, the
@@ -833,145 +806,48 @@ def interval_overlap_join(
     serve-many shape; see ``interval_stats`` for the staleness contract.
     """
     by = [] if by is None else [by] if isinstance(by, str) else list(by)
+    plan, nt, (l, r) = _interval_plan(
+        [_prep(left, left_start, left_end), _prep(right, right_start, right_end)],
+        ("occupied_l", "occupied_r"), bucket_width, tier_threshold, stats,
+    )
+    w = plan["width"]
+    tier = "__tk" if nt else None
 
-    def prep(df, s_col, e_col):
-        s_o = _ordinal_long(F.col(s_col), df.schema[s_col].dataType)
-        e_o = _ordinal_long(F.col(e_col), df.schema[e_col].dataType)
-        return df.withColumn("__s", s_o).withColumn("__e", e_o).where(
-            F.col("__e") >= F.col("__s")
-        )
-
-    l = prep(left, left_start, left_end)
-    r = prep(right, right_start, right_end)
-    # same stats gating as interval_join (ADVICE r7): explicit width +
-    # tiering disabled => no consumer for the stats job, skip it; a
-    # precomputed ``stats`` dict (interval_overlap_stats) replaces all
-    # driver jobs (r8)
-    no_tiers = tier_threshold is None or tier_threshold == float("inf")
-    pre_occ: dict | None = None
-    if stats is not None:
-        bucket_width = int(stats["width"])
-        max_len = int(stats["max_len"])
-        pre_occ = {
-            "l": list(stats.get("occupied_l") or []),
-            "r": list(stats.get("occupied_r") or []),
-        }
-    elif bucket_width == "auto" or not no_tiers:
-        lens = l.select((F.col("__e") - F.col("__s") + 1).alias("n")).unionAll(
-            r.select((F.col("__e") - F.col("__s") + 1).alias("n"))
-        )
-        row = lens.agg(F.avg("n").alias("m"), F.max("n").alias("mx")).collect()[0]
-        if bucket_width == "auto":
-            bucket_width = max(1, int(row["m"] or 1))
-        max_len = int(row["mx"] or 1)
-    else:
-        max_len = 0
-    w = int(bucket_width)
-    if w <= 0:
-        raise ValueError(f"bucket_width must be positive, got {bucket_width}")
-    clash = (set(left.columns) & set(right.columns)) - set(by)
-
-    if not no_tiers and -(-max_len // w) > int(tier_threshold):
-        import math
-
-        nt = max(1, math.ceil(math.log2(max(max_len / w, 1.0))) + 1)
-
-        def own_tier(df):
-            return df.withColumn("__tv", _tier_of(w, nt))
-
-        if pre_occ is not None:
-            # catalog-statistics path (interval_overlap_stats): no
-            # checkpoints, no distinct jobs
-            l, r = own_tier(l), own_tier(r)
-            occ = pre_occ
-        else:
-            # materialize both (narrow) sides once — the occupied-tier probes
-            # and the join would otherwise each re-run the upstream lineage
-            # (ADVICE r7)
-            l, r = own_tier(l).localCheckpoint(), own_tier(r).localCheckpoint()
+    def burst(df, side, other_occ):
+        if nt:
             # each side emits at its OWN tier plus only the OTHER side's
-            # occupied tiers above it (two tiny distinct jobs, <= ~40 rows
-            # each) — the emit set that can actually meet a partner; with
-            # bimodal lengths that is 2-3 entries, not log2(spread)
-            occ = {
-                side: sorted(
-                    row["__tv"] for row in df.select("__tv").distinct().collect()
-                )
-                for side, df in (("l", l), ("r", r))
-            }
-
-        def burst_t(df, side, other_occ):
-            lits = F.array(*[F.lit(int(t)) for t in other_occ]) if other_occ \
-                else F.array().cast("array<int>")
+            # occupied tiers above it — the emit set that can actually meet
+            # a partner; with bimodal lengths that is 2-3 entries, not
+            # log2(spread)
             emit = F.array_union(
                 F.array(F.col("__tv")),
-                F.filter(lits, lambda t: t > F.col("__tv")),
+                F.filter(_tier_lits(other_occ), lambda t: t > F.col("__tv")),
             )
-            out = (
-                df.withColumn("__tk", F.explode(emit))
-                .withColumn("__wt", F.expr(f"shiftleft({w}L, __tk)"))
-                .withColumn(
-                    "__bk",
-                    F.explode(
-                        F.sequence(
-                            F.expr("(__s - pmod(__s, __wt)) div __wt"),
-                            F.expr("(__e - pmod(__e, __wt)) div __wt"),
-                        )
-                    ),
-                )
-                .drop("__wt")
-            )
-            return (
-                out.withColumnRenamed("__s", f"__s_{side}")
-                .withColumnRenamed("__e", f"__e_{side}")
-                .withColumnRenamed("__tv", f"__tv_{side}")
-            )
+            df = df.withColumn("__tk", F.explode(emit))
+        df = _burst(df, w, tier)
+        for c in ("__s", "__e", "__tv"):
+            df = df.withColumnRenamed(c, f"{c}_{side}")
+        return df
 
-        lb = burst_t(l, "l", occ["r"])
-        rb = burst_t(r, "r", occ["l"])
-        for c in clash:
-            rb = rb.withColumnRenamed(c, f"{c}{suffix}")
-        wt = f"shiftleft({w}L, __tk)"
-        joined = lb.join(rb, [*by, "__tk", "__bk"]).where(
-            (F.col("__s_l") <= F.col("__e_r"))
-            & (F.col("__s_r") <= F.col("__e_l"))
-            # claim once: at the JOINT tier (the coarser of the two own
-            # tiers — both sides emit there) in its later-start bucket
-            & (F.col("__tk") == F.greatest(F.col("__tv_l"), F.col("__tv_r")))
-            & (
-                F.col("__bk")
-                == F.greatest(
-                    F.expr(f"(__s_l - pmod(__s_l, {wt})) div {wt}"),
-                    F.expr(f"(__s_r - pmod(__s_r, {wt})) div {wt}"),
-                )
-            )
-        )
-        return joined.drop(
-            "__s_l", "__e_l", "__s_r", "__e_r", "__tv_l", "__tv_r",
-            "__tk", "__bk",
-        )
-
-    def burst(df, side):
-        out = df.withColumn("__s0", _floor_div("__s", w)).withColumn(
-            "__bk", F.explode(F.sequence(_floor_div("__s", w), _floor_div("__e", w)))
-        )
-        return out.withColumnRenamed("__s", f"__s_{side}").withColumnRenamed(
-            "__e", f"__e_{side}"
-        ).withColumnRenamed("__s0", f"__s0_{side}")
-
-    lb = burst(l, "l")
-    rb = burst(r, "r")
-    for c in clash:
+    lb = burst(l, "l", plan["occupied_r"])
+    rb = burst(r, "r", plan["occupied_l"])
+    for c in (set(left.columns) & set(right.columns)) - set(by):
         rb = rb.withColumnRenamed(c, f"{c}{suffix}")
-    joined = lb.join(rb, [*by, "__bk"]).where(
+    # claim each pair exactly once: in the later start bucket, which both
+    # exploded sides cover whenever the intervals overlap — tiered, at the
+    # JOINT tier (the coarser of the two own tiers; both sides emit there)
+    claim = F.col("__bk") == F.greatest(
+        _floor_div("__s_l", w, tier), _floor_div("__s_r", w, tier)
+    )
+    if nt:
+        claim = claim & (F.col("__tk") == F.greatest("__tv_l", "__tv_r"))
+    joined = lb.join(rb, [*by, *([tier] if nt else []), "__bk"]).where(
         (F.col("__s_l") <= F.col("__e_r"))
         & (F.col("__s_r") <= F.col("__e_l"))
-        # claim each pair exactly once: in the later start bucket, which
-        # both exploded sides cover whenever the intervals overlap
-        & (F.col("__bk") == F.greatest(F.col("__s0_l"), F.col("__s0_r")))
+        & claim
     )
     return joined.drop(
-        "__s_l", "__e_l", "__s_r", "__e_r", "__s0_l", "__s0_r", "__bk"
+        "__s_l", "__e_l", "__s_r", "__e_r", "__tv_l", "__tv_r", "__tk", "__bk"
     )
 
 

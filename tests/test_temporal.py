@@ -701,6 +701,14 @@ def test_interval_join_stats_path_identical(spark):
         ).collect()
     }
     assert got2 == expect
+    # a dict planned flat lists no occupied tier; a join whose default
+    # tier gate trips on it must probe every tier, not drop pairs
+    assert st2["occupied"] == []
+    got2t = {
+        (r["iv_id"], r["pt_id"])
+        for r in interval_join(idf, pdf, "s", "e", "t", stats=st2).collect()
+    }
+    assert got2t == expect
 
     # auto-width stats equals the inline auto decision
     st3 = interval_stats(idf, "s", "e")
@@ -753,3 +761,191 @@ def test_interval_overlap_stats_path_identical(spark):
         ).collect()
     }
     assert got2 == expect
+    # the flat dict feeding a join whose default tier gate trips
+    assert st2["occupied_l"] == st2["occupied_r"] == []
+    got2t = sorted(
+        (r["l_id"], r["r_id"])
+        for r in interval_overlap_join(ldf, rdf, "ls", "le", "rs", "re", stats=st2).collect()
+    )
+    assert got2t == sorted(expect)
+
+
+def _temporal_fixtures(spark):
+    """Small frames for the planning-only job counts: a hot ``by`` key for
+    the as-of / sessionize auto rule, and one giant interval per side
+    among shorts so the default tier gate trips."""
+    import random
+
+    rng = random.Random(5)
+    ev = spark.createDataFrame(
+        [(i, "hot" if i % 2 == 0 else f"u{rng.randrange(8)}", rng.randrange(0, 5000))
+         for i in range(600)],
+        "eid long, user string, t long",
+    )
+    q = spark.createDataFrame(
+        [(1000 + j, "hot" if j % 2 == 0 else f"u{rng.randrange(8)}",
+          rng.randrange(0, 5000), float(j)) for j in range(300)],
+        "qid long, user string, t long, v double",
+    )
+    ivs = [(i, s := rng.randrange(0, 50000), s + rng.randrange(0, 30)) for i in range(120)]
+    ivs.append((900, -500, 120000))
+    idf = spark.createDataFrame(ivs, "iv_id long, s long, e long")
+    pdf = spark.createDataFrame(
+        [(2000 + j, rng.randrange(-1000, 121000)) for j in range(250)], "pt_id long, t long"
+    )
+    rdf = spark.createDataFrame(
+        [(3000 + j, s := rng.randrange(0, 50000), s + rng.randrange(0, 200)) for j in range(100)]
+        + [(3900, 0, 90000)],
+        "r_id long, rs long, re long",
+    )
+    return ev, q, idf, pdf, rdf
+
+
+#: Upper bounds on the Spark jobs each planning-only call runs (no
+#: action on the result), measured when every operator still planned
+#: its own width; a call may run fewer, never more. ``stats=`` calls
+#: run none.
+_PLANNING_JOBS = {
+    "asof_plain": 0,
+    "asof_manual": 0,
+    "asof_auto_cold": 3,
+    "asof_auto_hot": 3,
+    "sessionize_plain": 0,
+    "sessionize_manual": 2,
+    "sessionize_auto_cold": 3,
+    "sessionize_auto_hot": 7,
+    "interval_plain": 0,
+    "interval_manual": 2,
+    "interval_auto": 2,
+    "interval_tiered": 5,
+    "interval_stats_flat": 2,
+    "interval_stats_tiered": 4,
+    "interval_stats=": 0,
+    "interval_stats=_tiered": 0,
+    "overlap_plain": 0,
+    "overlap_manual": 2,
+    "overlap_auto": 2,
+    "overlap_tiered": 8,
+    "overlap_stats_flat": 2,
+    "overlap_stats_tiered": 6,
+    "overlap_stats=": 0,
+    "overlap_stats=_tiered": 0,
+}
+
+
+def test_temporal_planning_jobs_per_call(spark):
+    """Pins the Spark jobs each temporal operator runs at call time in
+    every planning mode: plain, manual width, ``"auto"`` below and above
+    ``auto_budget``, tiered, and the ``stats=`` path, which must run
+    none."""
+    from pyramidscheme_jl_spark.operators.temporal import (
+        interval_join,
+        interval_overlap_join,
+        interval_overlap_stats,
+        interval_stats,
+        sessionize,
+    )
+
+    ev, q, idf, pdf, rdf = _temporal_fixtures(spark)
+    st = interval_stats(idf, "s", "e", bucket_width=20, tier_threshold=1)
+    ost = interval_overlap_stats(idf, rdf, "s", "e", "rs", "re", bucket_width=25, tier_threshold=1)
+    st_flat = interval_stats(idf, "s", "e", tier_threshold=None)
+    ost_flat = interval_overlap_stats(idf, rdf, "s", "e", "rs", "re", tier_threshold=None)
+
+    def asof(**kw):
+        return asof_join(ev, q, on="t", by="user", tiebreak="qid", **kw)
+
+    def ij(**kw):
+        return interval_join(idf, pdf, "s", "e", "t", **kw)
+
+    def oj(**kw):
+        return interval_overlap_join(idf, rdf, "s", "e", "rs", "re", **kw)
+
+    calls = {
+        "asof_plain": lambda: asof(),
+        "asof_manual": lambda: asof(bucket_width=64),
+        "asof_auto_cold": lambda: asof(bucket_width="auto", auto_budget=1 << 20),
+        "asof_auto_hot": lambda: asof(bucket_width="auto", auto_budget=100),
+        "sessionize_plain": lambda: sessionize(ev, "user", "t", gap=30),
+        "sessionize_manual": lambda: sessionize(ev, "user", "t", gap=30, bucket_width=64),
+        "sessionize_auto_cold": lambda: sessionize(ev, "user", "t", gap=30, bucket_width="auto"),
+        "sessionize_auto_hot": lambda: sessionize(
+            ev, "user", "t", gap=30, bucket_width="auto", auto_budget=100
+        ),
+        "interval_plain": lambda: ij(bucket_width=20, tier_threshold=None),
+        "interval_manual": lambda: ij(bucket_width=1 << 20),
+        "interval_auto": lambda: ij(tier_threshold=1 << 60),
+        "interval_tiered": lambda: ij(bucket_width=20, tier_threshold=1),
+        "interval_stats_flat": lambda: interval_stats(idf, "s", "e", tier_threshold=None),
+        "interval_stats_tiered": lambda: interval_stats(idf, "s", "e", tier_threshold=1),
+        "interval_stats=": lambda: ij(tier_threshold=None, stats=st_flat),
+        "interval_stats=_tiered": lambda: ij(tier_threshold=1, stats=st),
+        "overlap_plain": lambda: oj(bucket_width=20, tier_threshold=None),
+        "overlap_manual": lambda: oj(bucket_width=1 << 20),
+        "overlap_auto": lambda: oj(tier_threshold=1 << 60),
+        "overlap_tiered": lambda: oj(bucket_width=25, tier_threshold=1),
+        "overlap_stats_flat": lambda: interval_overlap_stats(
+            idf, rdf, "s", "e", "rs", "re", tier_threshold=None
+        ),
+        "overlap_stats_tiered": lambda: interval_overlap_stats(
+            idf, rdf, "s", "e", "rs", "re", tier_threshold=1
+        ),
+        "overlap_stats=": lambda: oj(tier_threshold=None, stats=ost_flat),
+        "overlap_stats=_tiered": lambda: oj(tier_threshold=1, stats=ost),
+    }
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    try:
+        for name, call in calls.items():
+            sc.setJobGroup(f"temporal-plan-{name}", name)
+            call()
+            jobs[name] = len(tracker.getJobIdsForGroup(f"temporal-plan-{name}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs.keys() == _PLANNING_JOBS.keys()
+    over = {k: (n, _PLANNING_JOBS[k]) for k, n in jobs.items() if n > _PLANNING_JOBS[k]}
+    assert not over, over
+    assert all(n == 0 for k, n in jobs.items() if "stats=" in k), jobs
+
+
+@pytest.mark.parametrize("width", [-7, 0])
+def test_bad_bucket_width_rejected_before_any_job(spark, width):
+    """Every temporal operator rejects a non-positive explicit
+    ``bucket_width`` at call time, before it runs a Spark job."""
+    from pyramidscheme_jl_spark.operators.temporal import (
+        interval_join,
+        interval_overlap_join,
+        interval_overlap_stats,
+        interval_stats,
+        sessionize,
+    )
+
+    ev, q, idf, pdf, rdf = _temporal_fixtures(spark)
+    calls = {
+        "asof": lambda: asof_join(ev, q, on="t", by="user", bucket_width=width),
+        "asof_nearest": lambda: asof_join(
+            ev, q, on="t", by="user", bucket_width=width, direction="nearest"
+        ),
+        "sessionize": lambda: sessionize(ev, "user", "t", gap=30, bucket_width=width),
+        "interval_join": lambda: interval_join(idf, pdf, "s", "e", "t", bucket_width=width),
+        "interval_overlap_join": lambda: interval_overlap_join(
+            idf, rdf, "s", "e", "rs", "re", bucket_width=width
+        ),
+        "interval_stats": lambda: interval_stats(idf, "s", "e", bucket_width=width),
+        "interval_overlap_stats": lambda: interval_overlap_stats(
+            idf, rdf, "s", "e", "rs", "re", bucket_width=width
+        ),
+    }
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    try:
+        for name, call in calls.items():
+            sc.setJobGroup(f"temporal-bad-width-{name}", name)
+            with pytest.raises(ValueError, match="bucket_width must be positive"):
+                call()
+            jobs[name] = len(tracker.getJobIdsForGroup(f"temporal-bad-width-{name}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not any(jobs.values()), jobs

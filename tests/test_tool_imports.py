@@ -7,6 +7,7 @@ to resolve."""
 import ast
 import importlib
 import pathlib
+import re
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
@@ -38,3 +39,17 @@ def test_script_package_imports_resolve():
                 except ImportError:
                     missing.append(f"{where}: {node.module}.{alias.name}")
     assert len(scripts) > 2 and not missing, missing
+
+
+def test_scripts_import_the_package_from_their_own_checkout():
+    """A script that puts a fixed absolute path on ``sys.path`` imports the
+    package from that checkout, not from its own tree, so a copy kept for
+    an A/B run would measure or check the wrong code."""
+    scripts = sorted(ROOT.glob("tools/*.py")) + [
+        ROOT / n for n in ("bench.py", "bench_extra.py")
+    ]
+    pinned = [
+        str(p.relative_to(ROOT)) for p in scripts
+        if re.search(r"sys\.path\.insert\(\s*0\s*,\s*[\"']/", p.read_text())
+    ]
+    assert not pinned, pinned

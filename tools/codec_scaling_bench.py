@@ -24,13 +24,17 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import subprocess
 import sys
 import tempfile
 
+# the checkout this script lives in; the worker imports the package from it
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 WORKER = """\
 import json, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, ROOT)
 import pandas as pd
 
 cpus = int(sys.argv[1]); G = int(sys.argv[2]); task_cpus = int(sys.argv[3])
@@ -94,7 +98,7 @@ def _steal_now() -> list[int]:
 
 def run_one(cpus: int, g: int, task_cpus: int) -> dict:
     with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as f:
-        f.write(WORKER)
+        f.write(f"ROOT = {ROOT!r}\n" + WORKER)
         script = f.name
     s0 = _steal_now()
     out = subprocess.run(

@@ -15,7 +15,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ["PYRAMID_BUILD_VERBOSE"] = "1"
 
 

@@ -17,11 +17,12 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPS = 2  # work sized so the parallel region dominates (see below)
 

@@ -24,9 +24,12 @@ import subprocess
 import sys
 import tempfile
 
+# the checkout this script lives in; the worker imports the package from it
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 WORKER = r"""
 import json, os, sys, time, tempfile, shutil
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, ROOT)
 import pandas as pd
 
 cpus = int(sys.argv[1]); G = int(sys.argv[2]); side = int(sys.argv[3])
@@ -104,7 +107,7 @@ def _steal_now() -> list[int]:
 
 def run_one(cpus: int, g: int, side: int, task_cpus: int = 1) -> dict:
     with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as f:
-        f.write(WORKER)
+        f.write(f"ROOT = {ROOT!r}\n" + WORKER)
         script = f.name
     try:
         s0 = _steal_now()
