@@ -2735,8 +2735,9 @@ def q_embedding_ivfpq_indexed(spark: SparkSession, sf: str) -> DataFrame:
     path opens the manifest (trained centroids/codebooks/row count — no
     re-train, no re-encode, no count job) and scans ONLY the probed
     ``list_id=`` partitions of the stored codes. Shares
-    ``_ivfpq_score_topk`` with ``ivfpq_topk``, so ranks are bit-identical
-    to ``embedding_ivfpq_topk`` and the same DuckDB twin applies."""
+    ``_ivfpq_score_topk`` with ``ivfpq_topk`` (and ``pq_topk``, its
+    one-list case), so ranks are bit-identical to ``embedding_ivfpq_topk``
+    and the same DuckDB twin applies."""
     path = _ensure_ivfpq_index(spark, sf)
     idx = S.open_ivfpq_index(spark, path)
     emb = _t(spark, sf, "embeddings")
@@ -5010,8 +5011,9 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
         del out["embedding_ivfpq_topk"]  # degrade to rows-only for ivfpq alone
     else:
         # the persisted-index path shares _ivfpq_score_topk with ivfpq_topk
-        # (rerank=None pins the ADC order), so ranks are identical by
-        # construction and the same DuckDB twin applies verbatim
+        # and pq_topk (plain PQ is its one-list case; rerank=None pins the
+        # ADC order), so ranks are identical by construction and the same
+        # DuckDB twin applies verbatim
         out["embedding_ivfpq_indexed"] = out["embedding_ivfpq_topk"]
     # prebuilt import -> overview extension -> window serve (round 8):
     # closed-form recomputation of the G=8 mosaic's full mean cascade.

@@ -1202,7 +1202,6 @@ def test_pq_topk_recall_and_exact_adc(spark):
     contract the DuckDB oracle relies on); (2) recall >= 0.8 vs exact
     euclidean brute force on clustered vectors."""
     from pyramidscheme_jl_spark.operators.similarity import (
-        _pq_encode_udf,
         pq_topk,
         quantized_centroids,
         train_pq_codebooks,
@@ -1743,3 +1742,148 @@ def test_ivfpq_index_persist_roundtrip(spark, tmp_path):
         idx.topk(queries, k=k, rerank="bogus")
     with pytest.raises(FileNotFoundError):
         open_ivfpq_index(spark, str(tmp_path / "nope"))
+
+
+_ANN_TRAIN = dict(seed=7, train_size=120)
+_ANN_PQ = dict(m=4, ksub=8, **_ANN_TRAIN)
+_ANN_IVFPQ = dict(nlist=4, **_ANN_PQ)
+
+
+@pytest.fixture(scope="module")
+def ann_setup(spark, tmp_path_factory):
+    """160 x 16 seeded vectors, 4 queries and an ``nlist=4`` persisted
+    IVF-PQ index over them."""
+    from pyramidscheme_jl_spark.operators.similarity import (
+        open_ivfpq_index,
+        write_ivfpq_index,
+    )
+
+    rng = np.random.RandomState(5)
+    rows = [(i, [float(x) for x in rng.randn(16)]) for i in range(160)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    path = str(tmp_path_factory.mktemp("ann") / "idx")
+    write_ivfpq_index(df, path, **_ANN_IVFPQ)
+    return df, df.where("vec_id < 4"), open_ivfpq_index(spark, path)
+
+
+def _ann_entry_points(df, queries, idx):
+    """name -> (keywords it takes, call) for the six top-k entry points."""
+    from pyramidscheme_jl_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_topk,
+        ivfpq_topk,
+        lsh_topk,
+        pq_topk,
+    )
+
+    return {
+        "brute_force_topk": ({"k"}, lambda **kw: brute_force_topk(df, queries, **kw)),
+        "lsh_topk": (
+            {"k"},
+            lambda **kw: lsh_topk(df, queries, bits=4, seed=7, dim=16, probes=1, **kw),
+        ),
+        "ivf_topk": (
+            {"k", "nprobe"},
+            lambda **kw: ivf_topk(df, queries, nlist=4, **_ANN_TRAIN, **kw),
+        ),
+        "pq_topk": ({"k", "rerank"}, lambda **kw: pq_topk(df, queries, **_ANN_PQ, **kw)),
+        "ivfpq_topk": (
+            {"k", "nprobe", "rerank"},
+            lambda **kw: ivfpq_topk(df, queries, **_ANN_IVFPQ, **kw),
+        ),
+        "IvfPqIndex.topk": (
+            {"k", "nprobe", "rerank"},
+            lambda **kw: idx.topk(queries, data=df, **kw),
+        ),
+    }
+
+
+def _spark_jobs(spark, group, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Spark jobs per call on the ann_setup fixture, with no action on the
+# result, as measured before plain PQ shared the IVF-PQ path: upper bounds.
+_ANN_JOBS = {
+    "brute_force_topk": 0,
+    "lsh_topk": 0,
+    "ivf_topk": 1,
+    "pq_topk_none": 2,
+    "pq_topk_int": 2,
+    "pq_topk_auto": 5,
+    "ivfpq_topk_none": 2,
+    "ivfpq_topk_int": 2,
+    "ivfpq_topk_auto": 4,
+    "IvfPqIndex.topk_none": 2,
+    "IvfPqIndex.topk_auto": 2,
+}
+
+
+def test_ann_jobs_per_call(spark, ann_setup):
+    """Pins the Spark jobs every ANN entry point runs at call time (train
+    sample, LUT queries, ``rerank="auto"`` counts) as upper bounds, and
+    that the persisted index sizes ``rerank="auto"`` with no count job."""
+    ep = _ann_entry_points(*ann_setup)
+    calls = {}
+    for name, (_, call) in ep.items():
+        if name in ("brute_force_topk", "lsh_topk", "ivf_topk"):
+            calls[name] = call
+            continue
+        for mode, rerank in (("none", None), ("int", 50), ("auto", "auto")):
+            if (name, mode) != ("IvfPqIndex.topk", "int"):
+                calls[f"{name}_{mode}"] = lambda c=call, r=rerank: c(rerank=r)
+    jobs = {name: _spark_jobs(spark, f"ann-jobs-{name}", c) for name, c in calls.items()}
+    assert jobs.keys() == _ANN_JOBS.keys()
+    over = {k: (n, _ANN_JOBS[k]) for k, n in jobs.items() if n > _ANN_JOBS[k]}
+    assert not over, over
+    assert jobs["IvfPqIndex.topk_auto"] <= jobs["IvfPqIndex.topk_none"], jobs
+
+
+@pytest.mark.parametrize(
+    "arg,value,match",
+    [
+        ("k", 0, "k must be >= 1"),
+        ("k", -1, "k must be >= 1"),
+        ("nprobe", 0, "nprobe must be >= 1"),
+        ("nprobe", -1, "nprobe must be >= 1"),
+        ("rerank", -3, "rerank must be"),
+        ("rerank", "bogus", "rerank must be"),
+    ],
+)
+def test_ann_bad_args_rejected_before_any_job(spark, ann_setup, arg, value, match):
+    """A non-positive ``k`` or ``nprobe``, a negative ``rerank`` or a
+    ``rerank`` string other than ``"auto"`` raises at call time, before
+    any Spark job, in every entry point that takes it (before, they
+    returned too few LUT rows or empty results)."""
+    jobs = {}
+    for name, (takes, call) in _ann_entry_points(*ann_setup).items():
+        if arg not in takes:
+            continue
+
+        def rejected(call=call):
+            with pytest.raises(ValueError, match=match):
+                call(**{arg: value})
+
+        jobs[name] = _spark_jobs(spark, f"ann-bad-{arg}{value}-{name}", rejected)
+    assert jobs and not any(jobs.values()), jobs
+
+
+def test_lsh_topk_hyperplane_needs_dim(spark, ann_setup):
+    """Hyperplane buckets (``seed`` given) need ``dim``: ``lsh_topk``
+    raises at call time, multi-probe included, with no Spark job."""
+    from pyramidscheme_jl_spark.operators.similarity import lsh_topk
+
+    df, queries, _ = ann_setup
+
+    def rejected():
+        with pytest.raises(ValueError, match="hyperplane LSH needs the embedding dim"):
+            lsh_topk(df, queries, seed=1, dim=None, probes=2)
+
+    assert _spark_jobs(spark, "ann-lsh-no-dim", rejected) == 0
