@@ -745,8 +745,8 @@ def _ivfpq_score_topk(
 
     The broadcast LUTs meet the codes on ``list_id`` (``by_list``), or —
     plain PQ's single list — by a broadcast cross join: a constant-key
-    equi-join measured 14 % slower (20k x 64 corpus, 40 queries,
-    ``local[4]``, median of 6)."""
+    equi-join measured 12-23 % slower (20k x 64 corpus, 40 queries,
+    ``local[4]`` on 4 vCPUs, best of 3, 3 alternating pairs)."""
     # query_id is typed from the QUERIES side: a string-keyed queries df
     # against a bigint-keyed corpus would otherwise fail createDataFrame
     qid_ddl = dict(queries.dtypes)[id_col]
