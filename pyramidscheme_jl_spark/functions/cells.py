@@ -247,24 +247,24 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, ring) -> np.ndarray:
     return out
 
 
-def _segments_intersect_rect(ring, rx0, ry0, rx1, ry1) -> bool:
-    """Does any edge of the geometry intersect the axis-aligned rect?
-    (Cohen-style tests; ``ring`` takes any ``as_rings`` shape.)"""
-    ax, ay, bx, by = _ring_edges(as_rings(ring))
+def _edges_cross_rects(edges, rx0, ry0, rx1, ry1) -> np.ndarray:
+    """Per rect: does any edge ``(ax, ay, bx, by)`` intersect the closed
+    axis-aligned rect? (Cohen-style tests, broadcast (rects x edges).)
+
+    The endpoint-inside term is also the vertex-in-cell test: every vertex
+    starts one edge, and an edge with an endpoint in the rect is never
+    bbox-rejected."""
+    ax, ay, bx, by = (e[None, :] for e in edges)
+    rx0, ry0, rx1, ry1 = (np.asarray(v, dtype=np.float64)[:, None] for v in (rx0, ry0, rx1, ry1))
     # quick reject: edge bbox disjoint from rect
-    reject = (
+    cand = ~(
         (np.maximum(ax, bx) < rx0)
         | (np.minimum(ax, bx) > rx1)
         | (np.maximum(ay, by) < ry0)
         | (np.minimum(ay, by) > ry1)
     )
-    cand = ~reject
-    if not cand.any():
-        return False
     # endpoint inside rect?
-    inside = (ax >= rx0) & (ax <= rx1) & (ay >= ry0) & (ay <= ry1)
-    if (inside & cand).any():
-        return True
+    hit = (ax >= rx0) & (ax <= rx1) & (ay >= ry0) & (ay <= ry1)
     # segment straddles one of the rect's 4 edge lines within the rect span
     for (px0, py0, px1, py1) in (
         (rx0, ry0, rx1, ry0),
@@ -276,58 +276,72 @@ def _segments_intersect_rect(ring, rx0, ry0, rx1, ry1) -> bool:
         d2 = (px1 - px0) * (by - py0) - (py1 - py0) * (bx - px0)
         d3 = (bx - ax) * (py0 - ay) - (by - ay) * (px0 - ax)
         d4 = (bx - ax) * (py1 - ay) - (by - ay) * (px1 - ax)
-        hit = ((d1 * d2) < 0) & ((d3 * d4) < 0)
-        if (hit & cand).any():
-            return True
-    return False
+        hit |= ((d1 * d2) < 0) & ((d3 * d4) < 0)
+    return (cand & hit).any(axis=1)
 
 
-def _cover_descent(rings: list[np.ndarray], res: int, world: float) -> list[tuple[int, bool]]:
-    """Recursive quadtree descent over a geometry's ring list, yielding
-    ``(cell, is_full)`` for every kept cell in visit order.
+def _segments_intersect_rect(ring, rx0, ry0, rx1, ry1) -> bool:
+    """Does any edge of the geometry intersect the axis-aligned rect?
+    The one-rect case of ``_edges_cross_rects`` (``ring`` takes any
+    ``as_rings`` shape)."""
+    edges = _ring_edges(as_rings(ring))
+    return bool(_edges_cross_rects(edges, [rx0], [ry0], [rx1], [ry1])[0])
+
+
+def _cover_descent(rings: list[np.ndarray], res: int, world: float) -> tuple[np.ndarray, np.ndarray]:
+    """Level-synchronous quadtree descent over a geometry's ring list:
+    ``(cells, is_full)`` sorted by cell. Each step classifies every
+    candidate cell of one resolution at once:
 
     - cell fully inside          -> keep at current res, ``is_full`` (for
       holed polygons: inside the outer AND outside every hole — the
-      even-odd corner test plus the no-edge/no-vertex guards over ALL
+      even-odd corner test plus the no-edge/no-vertex guard over ALL
       rings give exactly that)
     - cell disjoint              -> drop (this includes cells wholly inside
       a HOLE: all four corners test outside under even-odd, and no hole
       edge crosses the cell)
-    - partial                    -> recurse until ``res``; keep intersecting
-      leaves, not ``is_full``
+    - partial                    -> its four children are the next step's
+      candidates until ``res``; intersecting leaves are kept, not
+      ``is_full``
     """
+    edges = _ring_edges(rings)
     allv = np.concatenate(rings)
     bx0, by0 = allv[:, 0].min(), allv[:, 1].min()
     bx1, by1 = allv[:, 0].max(), allv[:, 1].max()
-    out: list[tuple[int, bool]] = []
-
-    def visit(r: int, ix: int, iy: int) -> None:
+    # bound each (cells x edges) temporary to ~2 MB
+    chunk = max(1, (1 << 18) // len(edges[0]))
+    cells_out = [np.zeros(0, dtype=np.int64)]
+    full_out = [np.zeros(0, dtype=bool)]
+    ix = iy = np.zeros(1, dtype=np.int64)
+    for r in range(res + 1):
         size = world / (1 << r)
         x0, y0 = ix * size, iy * size
         x1, y1 = x0 + size, y0 + size
-        if x1 <= bx0 or x0 >= bx1 or y1 <= by0 or y0 >= by1:
-            return
-        corners_in = points_in_polygon(
-            np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1]), rings
-        )
-        edge_hit = _segments_intersect_rect(rings, x0, y0, x1, y1)
-        vert_in = (
-            (allv[:, 0] >= x0) & (allv[:, 0] <= x1) & (allv[:, 1] >= y0) & (allv[:, 1] <= y1)
-        ).any()
-        if corners_in.all() and not edge_hit and not vert_in:
-            out.append((int(xy_to_cell(ix, iy, r)), True))  # fully inside
-            return
-        if not corners_in.any() and not edge_hit and not vert_in:
-            return  # fully outside
+        live = ~((x1 <= bx0) | (x0 >= bx1) | (y1 <= by0) | (y0 >= by1))
+        ix, iy, x0, y0, x1, y1 = (a[live] for a in (ix, iy, x0, y0, x1, y1))
+        if not len(ix):
+            break
+        corners = points_in_polygon(
+            np.concatenate([x0, x1, x1, x0]), np.concatenate([y0, y0, y1, y1]), rings
+        ).reshape(4, -1)
+        edge_hit = np.concatenate([
+            _edges_cross_rects(edges, *(a[s : s + chunk] for a in (x0, y0, x1, y1)))
+            for s in range(0, len(ix), chunk)
+        ])
+        full = corners.all(axis=0) & ~edge_hit
+        partial = ~full & (corners.any(axis=0) | edge_hit)
+        cells_out.append(xy_to_cell(ix[full], iy[full], r))
+        full_out.append(np.ones(int(full.sum()), dtype=bool))
         if r == res:
-            out.append((int(xy_to_cell(ix, iy, r)), False))  # partial leaf
-            return
-        for dy in (0, 1):
-            for dx in (0, 1):
-                visit(r + 1, 2 * ix + dx, 2 * iy + dy)
-
-    visit(0, 0, 0)
-    return out
+            cells_out.append(xy_to_cell(ix[partial], iy[partial], r))
+            full_out.append(np.zeros(int(partial.sum()), dtype=bool))
+            break
+        px, py = 2 * ix[partial], 2 * iy[partial]
+        ix = np.concatenate([px, px + 1, px, px + 1])
+        iy = np.concatenate([py, py, py + 1, py + 1])
+    cells, is_full = np.concatenate(cells_out), np.concatenate(full_out)
+    order = np.argsort(cells)
+    return cells[order], is_full[order]
 
 
 def polygon_to_cells_classified(
@@ -341,11 +355,7 @@ def polygon_to_cells_classified(
     cells are inside with no ray-cast at all — at scale that's the vast
     majority, so the exact test runs only on the boundary shell.
     """
-    kept = sorted(_cover_descent(as_rings(ring), res, world))
-    return (
-        np.asarray([c for c, _ in kept], dtype=np.int64),
-        np.asarray([f for _, f in kept], dtype=bool),
-    )
+    return _cover_descent(as_rings(ring), res, world)
 
 
 def polygon_to_cells(ring, res: int, world: float, compact: bool = True) -> np.ndarray:

@@ -7,9 +7,10 @@ and designed Spark-first:
 - **Point-in-polygon (J3)** — filter+refine. Polygon *compact covers*
   (driver-side planning over the dims-sized polygon table) split into
   fully-interior and boundary cells; candidates come from one broadcast
-  equi-join on ancestor cells (zero shuffle of the fact side), and the
-  exact vectorized ray cast runs only on boundary-cell candidates in a
-  narrow mapInPandas stage. At 10^12 rows the fact table is never shuffled.
+  equi-join on ancestor cells (zero shuffle of the fact side), and one
+  scalar Arrow UDF filter sees only ``(x, y, poly_idx, is_full)``: it
+  passes interior rows and ray-casts boundary rows. At 10^12 rows the
+  fact table is never shuffled.
 - **kNN (J4)** — k-ring expansion: candidates = equi-join on the exploded
   grid disk of each query cell, distance + ``row_number`` window for top-k,
   driver loop doubles the ring until every query's k-th distance is covered
@@ -32,7 +33,6 @@ from pyspark.sql import types as T
 from ..api import _level_spec
 from ..functions.cells import (
     _RES_SHIFT,
-    cell_res,
     points_in_polygon,
     polygon_to_cells_classified,
 )
@@ -126,23 +126,52 @@ def _covers_df(
 
     Each polygon dict carries its geometry under ``"ring"`` (or the alias
     ``"rings"``) in any ``as_rings`` shape: a single ring, a ring list
-    ``[outer, hole, ...]``, or a multipolygon (r7). The returned ringmap
-    values are normalized ring LISTS — every refine kernel feeds them to
-    ``points_in_polygon``, which takes that shape natively."""
+    ``[outer, hole, ...]``, or a multipolygon (r7). Cover rows are
+    ``(polygon_id, poly_idx, cover_cell, cover_res, is_full)``, where
+    ``poly_idx`` is the polygon's ordinal in ``polygons``. The returned
+    ringmap maps ``polygon_id`` to its normalized ring LIST (the shape
+    ``points_in_polygon`` takes natively), in ordinal order, so
+    ``list(ringmap.values())[poly_idx]`` is the same geometry. A repeated
+    ``polygon_id`` raises ``ValueError`` before any Spark job: the refines
+    would otherwise test one polygon's candidates against another's rings."""
     from ..functions.cells import as_rings
 
     rows = []
     rings: dict[str, list[np.ndarray]] = {}
-    for p in polygons:
-        geom = as_rings(p.get("rings", p.get("ring")))
-        rings[p["polygon_id"]] = geom
+    for ordinal, p in enumerate(polygons):
+        pid = p["polygon_id"]
+        if pid in rings:
+            raise ValueError(f"duplicate polygon_id {pid!r}")
+        geom = rings[pid] = as_rings(p.get("rings", p.get("ring")))
         cells, is_full = polygon_to_cells_classified(geom, res, world)
         for c, f in zip(cells.tolist(), is_full.tolist()):
-            rows.append((p["polygon_id"], int(c), int(cell_res(np.int64(c))), bool(f)))
-    schema = "polygon_id string, cover_cell long, cover_res int, is_full boolean"
+            rows.append((pid, ordinal, c, c >> _RES_SHIFT, f))
+    schema = "polygon_id string, poly_idx int, cover_cell long, cover_res int, is_full boolean"
     covers = spark.createDataFrame(rows, schema)
-    ress = sorted({r[2] for r in rows})
+    ress = sorted({r[3] for r in rows})
     return covers, rings, ress
+
+
+def _inside_udf(rings: list[list[np.ndarray]]):
+    """Scalar Arrow UDF ``inside(x, y, poly_idx, is_full) -> boolean``:
+    True for full-cell rows; boundary rows ray-cast, grouped by
+    ``poly_idx``, against ``rings[poly_idx]``. Only these four primitive
+    columns cross into Python and one boolean per row comes back."""
+
+    @F.pandas_udf("boolean")
+    def inside(x: pd.Series, y: pd.Series, poly_idx: pd.Series, is_full: pd.Series) -> pd.Series:
+        out = is_full.to_numpy(dtype=bool)
+        border = np.flatnonzero(~out)
+        if len(border):
+            out = out.copy()
+            idx = poly_idx.to_numpy()[border]
+            bx, by = x.to_numpy()[border], y.to_numpy()[border]
+            for pi in np.unique(idx):
+                sel = idx == pi
+                out[border[sel]] = points_in_polygon(bx[sel], by[sel], rings[pi])
+        return pd.Series(out)
+
+    return inside
 
 
 def point_in_polygon_join(
@@ -157,21 +186,22 @@ def point_in_polygon_join(
     semantics.
 
     points must carry ``cell`` at resolution ``res`` (``with_point_cells``).
-    Plan shape: broadcast-join fact rows against the tiny cover table on
-    each cover resolution's ancestor key (union over the 1-4 distinct
-    resolutions), then a *narrow* vectorized ray-cast refine for boundary
-    cells only. The fact table is never shuffled and never ray-casts
-    interior hits.
+    Plan shape: ONE scan of the fact table, broadcast-joined against the
+    tiny cover table on each point's ancestor cells at every cover
+    resolution, then a filter through the scalar Arrow UDF ``inside``:
+    full-cell rows pass as they are, boundary-cell rows are ray-cast.
+    Only ``x``, ``y``, ``poly_idx`` and ``is_full`` cross into Python; the
+    id and carry columns stay in the JVM. The fact table is never
+    shuffled and never ray-casts interior hits.
 
     ``carry_cols``: extra point columns passed through the join — at scale
     this is how downstream aggregations (zonal_stats) avoid a second join
     against the 10^12-row fact table just to recover their value column.
     """
-    # point_id/x/y always pass through — carrying them again would duplicate
-    # column names and break the Arrow refine stage
+    # point_id/x/y always pass through — carrying them again would
+    # duplicate column names
     carry = [c for c in (carry_cols or []) if c not in ("point_id", "x", "y")]
     covers, rings, ress = _covers_df(spark, polygons, res, world)
-    keep = ["point_id", "x", "y", *carry, "polygon_id", "is_full"]
     # ONE scan of the fact table: each point explodes its ancestor cell at
     # every distinct cover resolution (1-4 ids) and joins the whole cover
     # table at once — cell ids embed their resolution in the top bits, so
@@ -180,44 +210,13 @@ def point_in_polygon_join(
     # (The previous per-resolution union re-scanned the fact side |ress|
     # times — 3-5 scans of a 10^12-row table instead of one.)
     anc = F.array(*[parent_cell_expr("cell", res, r) for r in ress])
-    cand = (
+    inside = _inside_udf(list(rings.values()))
+    return (
         points.select("point_id", "x", "y", *carry, F.explode(anc).alias("jcell"))
         .join(F.broadcast(covers), F.col("jcell") == covers["cover_cell"], "inner")
-        .select(*keep)
+        .filter(inside("x", "y", "poly_idx", "is_full"))
+        .select("point_id", "x", "y", *carry, "polygon_id")
     )
-
-    ring_items = sorted(rings.items())  # deterministic closure
-    # carry_fields must follow the carry-list order (not points.schema
-    # order): refine emits columns via out_cols, which interleaves carry in
-    # list order — a schema in a different order would misalign the Arrow
-    # column assignment (ADVICE r2).
-    by_name = {f.name: f for f in points.schema.fields}
-    carry_fields = [T.StructField(c, by_name[c].dataType) for c in carry]
-    out_schema = T.StructType(
-        [
-            T.StructField("point_id", T.StringType()),
-            T.StructField("x", T.DoubleType()),
-            T.StructField("y", T.DoubleType()),
-            *carry_fields,
-            T.StructField("polygon_id", T.StringType()),
-        ]
-    )
-    out_cols = ["point_id", "x", "y", *carry, "polygon_id"]
-
-    def refine(batches):
-        ringmap = dict(ring_items)
-        for pdf in batches:
-            keep_full = pdf[pdf["is_full"]]
-            parts = [keep_full[out_cols]]
-            border = pdf[~pdf["is_full"]]
-            for pid, grp in border.groupby("polygon_id", sort=False):
-                inside = points_in_polygon(
-                    grp["x"].to_numpy(), grp["y"].to_numpy(), ringmap[pid]
-                )
-                parts.append(grp.loc[inside, out_cols])
-            yield pd.concat(parts, ignore_index=True)
-
-    return cand.mapInPandas(refine, out_schema)
 
 
 def zonal_stats(

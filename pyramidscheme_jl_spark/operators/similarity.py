@@ -88,6 +88,17 @@ def topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _not_self(d: DataFrame, q: DataFrame):
+    """Self-exclusion ``n_id != query_id`` over a corpus side ``d`` and a
+    query side ``q``, chosen at plan time from their id types: the plain
+    comparison when the types match, else both ids compared as strings
+    (the implicit cast of a string query id to a bigint corpus id would
+    fail the scoring job with ``CAST_INVALID_INPUT``)."""
+    if d.schema["n_id"].dataType == q.schema["query_id"].dataType:
+        return F.col("n_id") != F.col("query_id")
+    return F.col("n_id").cast("string") != F.col("query_id").cast("string")
+
+
 def _check_topk_args(k: int, nprobe: int | None = None, rerank="auto") -> None:
     """Call-time argument check shared by every top-k entry point: a bad
     value would otherwise return wrong or empty results after the jobs."""
@@ -130,7 +141,7 @@ def brute_force_topk(
     )
     scored = (
         d.crossJoin(F.broadcast(q))
-        .where(F.col("n_id") != F.col("query_id"))
+        .where(_not_self(d, q))
         .withColumn("ip", _dot(F.col("q_qvec"), F.col("n_qvec")))
     )
     return topk_per_query(scored, k)
@@ -328,7 +339,7 @@ def lsh_topk(
         )
     if broadcast_queries:
         joined = d.join(F.broadcast(q), "bucket")
-        scored = joined.where(F.col("n_id") != F.col("query_id")).withColumn(
+        scored = joined.where(_not_self(d, q)).withColumn(
             "ip", _dot(F.col("q_qvec"), F.col("n_qvec"))
         )
         return topk_per_query(scored, k)
@@ -341,7 +352,7 @@ def lsh_topk(
     # excluded) — the exact survivor set the old plan's partition-partial
     # phase kept — and the unchanged global window reranks. numpy int64
     # wraps on overflow exactly like the JVM long arithmetic it replaces.
-    id_t = data.schema[id_col].dataType.simpleString()
+    n_t, q_t = d.schema["n_id"].dataType, q.schema["query_id"].dataType
 
     def _bucket_topk(key, dpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
         if len(dpdf) == 0 or len(qpdf) == 0:
@@ -353,10 +364,12 @@ def lsh_topk(
         G = Q @ D.T
         n_ids = dpdf["n_id"].to_numpy()
         q_ids = qpdf["query_id"].to_numpy()
+        # the self-exclusion of _not_self: mixed id types compare as strings
+        n_cmp, q_cmp = (n_ids, q_ids) if n_t == q_t else (n_ids.astype(str), q_ids.astype(str))
         out_q, out_n, out_ip = [], [], []
         for i in range(len(q_ids)):
             ips = G[i]
-            sel = np.flatnonzero(n_ids != q_ids[i])
+            sel = np.flatnonzero(n_cmp != q_cmp[i])
             if len(sel) == 0:
                 continue
             # primary -ip desc, secondary n_id asc (lexsort: last key primary)
@@ -370,7 +383,9 @@ def lsh_topk(
     scored = (
         d.groupBy("bucket")
         .cogroup(q.groupBy("bucket"))
-        .applyInPandas(_bucket_topk, f"query_id {id_t}, n_id {id_t}, ip long")
+        .applyInPandas(
+            _bucket_topk, f"query_id {q_t.simpleString()}, n_id {n_t.simpleString()}, ip long"
+        )
     )
     return topk_per_query(scored, k)
 
@@ -489,7 +504,7 @@ def ivf_topk(
     )
     scored = (
         d.join(q, "list_id")
-        .where(F.col("n_id") != F.col("query_id"))
+        .where(_not_self(d, q))
         .withColumn("ip", _dot(F.col("q_qvec"), F.col("n_qvec")))
     )
     return topk_per_query(scored, k).withColumn("rank", F.col("rank").cast("long"))
@@ -758,7 +773,7 @@ def _ivfpq_score_topk(
         else d.drop("list_id").crossJoin(F.broadcast(luts_df.drop("list_id")))
     )
     scored = (
-        cands.where(F.col("n_id") != F.col("query_id"))
+        cands.where(_not_self(d, luts_df))
         .withColumn(
             "adc",
             F.expr(

@@ -1887,3 +1887,39 @@ def test_lsh_topk_hyperplane_needs_dim(spark, ann_setup):
             lsh_topk(df, queries, seed=1, dim=None, probes=2)
 
     assert _spark_jobs(spark, "ann-lsh-no-dim", rejected) == 0
+
+
+def test_ann_string_query_ids_over_bigint_corpus(spark, ann_setup):
+    """Six string-keyed queries over the bigint-keyed corpus, the vectors
+    of corpus rows 0-5 under ids ``"0" "1" "2" "q3" "q4" "q5"``: every
+    top-k entry point (and the shuffled LSH path) returns the rows of the
+    same vectors keyed 0, 1, 2, 1003, 1004, 1005, and still excludes a
+    query's own row. The plain ``n_id != query_id`` cast ``"q3"`` to
+    bigint and failed the scoring job with ``CAST_INVALID_INPUT``."""
+    from pyramidscheme_jl_spark.operators.similarity import lsh_topk
+
+    df, _, idx = ann_setup
+    six = df.where("vec_id < 6")
+    low = F.col("vec_id") < 3
+    long_q = six.select(F.when(low, F.col("vec_id")).otherwise(F.col("vec_id") + 1000).alias("vec_id"), "embedding")
+    str_q = six.select(
+        F.when(low, F.col("vec_id").cast("string")).otherwise(F.format_string("q%d", "vec_id")).alias("vec_id"),
+        "embedding",
+    )
+    as_str = {str(1000 + i): f"q{i}" for i in range(3, 6)}
+
+    def rows(out):
+        return sorted(
+            (as_str.get(str(r[0]), str(r[0])), *(str(v) for v in r[1:])) for r in out.collect()
+        )
+
+    bad = {}
+    for name, (_, call) in _ann_entry_points(df, long_q, idx).items():
+        want = rows(call())
+        got = rows(_ann_entry_points(df, str_q, idx)[name][1]())
+        if got != want or not got or any(r[0] == r[1] for r in got):
+            bad[name] = (got, want)
+    shuffled = dict(bits=4, seed=7, dim=16, probes=1, broadcast_queries=False)
+    if rows(lsh_topk(df, str_q, **shuffled)) != rows(lsh_topk(df, long_q, **shuffled)):
+        bad["lsh_topk_shuffled"] = True
+    assert not bad, bad

@@ -1,5 +1,7 @@
 """Spatial joins vs brute-force oracles (north rule J2-J6)."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -65,6 +67,43 @@ def test_pip_boundary_points(spark, points, polygons):
             ring = np.asarray(poly["ring"])
             want = bool(points_in_polygon(np.array([r["x"]]), np.array([r["y"]]), ring)[0])
             assert ((pid, poly["polygon_id"]) in pairs) == want
+
+
+def test_pip_refine_sends_only_primitive_columns(spark, polygons):
+    """The J3 refine is one scalar Arrow UDF filter: no ``MapInPandas``,
+    exactly one ``ArrowEvalPython`` whose inputs are only ``x``, ``y``,
+    ``poly_idx`` and ``is_full`` (ids and carried columns stay in the
+    JVM), one scan of the points, and two Spark jobs per ``noop`` write
+    (the cover broadcast and the scan)."""
+    rows = synth_points(WORLD, n_side=32)
+    pts = spark.createDataFrame([(r["point_id"], r["x"], r["y"]) for r in rows], POINTS_DDL)
+    df = point_in_polygon_join(spark, with_point_cells(pts, RES, WORLD), polygons, RES, WORLD)
+    plan = re.sub(r"#\d+L?", "", df._jdf.queryExecution().executedPlan().toString())
+    assert "MapInPandas" not in plan, plan
+    assert re.findall(r"ArrowEvalPython \[(.*?)\]", plan) == ["inside(x, y, poly_idx, is_full)"], plan
+    assert plan.count("Scan ExistingRDD[point_id,x,y]") == 1, plan
+    sc = spark.sparkContext
+    sc.setJobGroup("pip-noop-write", "pip-noop-write")
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("pip-noop-write")) == 2
+
+
+def test_pip_join_rejects_duplicate_polygon_id(spark, points, polygons):
+    """Rings are looked up per polygon, so a repeated ``polygon_id`` would
+    refine one polygon's candidates against another's rings: it raises
+    before any Spark job."""
+    dup = [*polygons, {**polygons[1], "polygon_id": polygons[0]["polygon_id"]}]
+    sc = spark.sparkContext
+    sc.setJobGroup("pip-dup-id", "pip-dup-id")
+    try:
+        with pytest.raises(ValueError, match=f"duplicate polygon_id {polygons[0]['polygon_id']!r}"):
+            point_in_polygon_join(spark, points, dup, RES, WORLD)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("pip-dup-id") == []
 
 
 def test_parent_cell_expr_matches_numpy(spark, points):

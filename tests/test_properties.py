@@ -231,3 +231,122 @@ def test_cover_classification_matches_retest(kind, outer, inner, phase, cx, cy, 
     np.testing.assert_array_equal(cells, want_cells)
     np.testing.assert_array_equal(is_full, want_full)
     assert cells.dtype == np.int64 and is_full.dtype == bool
+
+
+def _ref_segments_intersect_rect(rings, rx0, ry0, rx1, ry1) -> bool:
+    """The scalar edge-crosses-rect test of the recursive descent, with its
+    early exits (reference for ``_ref_cover_descent``)."""
+    from pyramidscheme_jl_spark.functions.cells import _ring_edges
+
+    ax, ay, bx, by = _ring_edges(rings)
+    reject = (
+        (np.maximum(ax, bx) < rx0)
+        | (np.minimum(ax, bx) > rx1)
+        | (np.maximum(ay, by) < ry0)
+        | (np.minimum(ay, by) > ry1)
+    )
+    cand = ~reject
+    if not cand.any():
+        return False
+    inside = (ax >= rx0) & (ax <= rx1) & (ay >= ry0) & (ay <= ry1)
+    if (inside & cand).any():
+        return True
+    for (px0, py0, px1, py1) in (
+        (rx0, ry0, rx1, ry0),
+        (rx1, ry0, rx1, ry1),
+        (rx1, ry1, rx0, ry1),
+        (rx0, ry1, rx0, ry0),
+    ):
+        d1 = (px1 - px0) * (ay - py0) - (py1 - py0) * (ax - px0)
+        d2 = (px1 - px0) * (by - py0) - (py1 - py0) * (bx - px0)
+        d3 = (bx - ax) * (py0 - ay) - (by - ay) * (px0 - ax)
+        d4 = (bx - ax) * (py1 - ay) - (by - ay) * (px1 - ax)
+        hit = ((d1 * d2) < 0) & ((d3 * d4) < 0)
+        if (hit & cand).any():
+            return True
+    return False
+
+
+def _ref_cover_descent(rings, res, world):
+    """The recursive per-cell quadtree descent that the level-synchronous
+    one replaced: one visit per cell, four corners, an edge test and a
+    vertex test each. -> sorted ``(cells, is_full)``."""
+    from pyramidscheme_jl_spark.functions.cells import points_in_polygon
+
+    allv = np.concatenate(rings)
+    bx0, by0 = allv[:, 0].min(), allv[:, 1].min()
+    bx1, by1 = allv[:, 0].max(), allv[:, 1].max()
+    out = []
+
+    def visit(r, ix, iy):
+        size = world / (1 << r)
+        x0, y0 = ix * size, iy * size
+        x1, y1 = x0 + size, y0 + size
+        if x1 <= bx0 or x0 >= bx1 or y1 <= by0 or y0 >= by1:
+            return
+        corners_in = points_in_polygon(
+            np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1]), rings
+        )
+        edge_hit = _ref_segments_intersect_rect(rings, x0, y0, x1, y1)
+        vert_in = (
+            (allv[:, 0] >= x0) & (allv[:, 0] <= x1) & (allv[:, 1] >= y0) & (allv[:, 1] <= y1)
+        ).any()
+        if corners_in.all() and not edge_hit and not vert_in:
+            out.append((int(xy_to_cell(ix, iy, r)), True))
+            return
+        if not corners_in.any() and not edge_hit and not vert_in:
+            return
+        if r == res:
+            out.append((int(xy_to_cell(ix, iy, r)), False))
+            return
+        for dy in (0, 1):
+            for dx in (0, 1):
+                visit(r + 1, 2 * ix + dx, 2 * iy + dy)
+
+    visit(0, 0, 0)
+    out.sort()
+    return (
+        np.asarray([c for c, _ in out], dtype=np.int64),
+        np.asarray([f for _, f in out], dtype=bool),
+    )
+
+
+@settings(deadline=None, max_examples=60)
+@given(
+    kind=st.sampled_from(["simple", "holed", "multi"]),
+    outer=_radii,
+    inner=_radii,
+    phase=st.floats(0.0, 6.3),
+    cx=st.floats(250.0, 750.0),
+    cy=st.floats(250.0, 750.0),
+    scale=st.floats(40.0, 240.0),
+    res=st.integers(2, 6),
+    snap=st.booleans(),
+    edge=st.sampled_from([None, "left", "bottom", "right", "top"]),
+)
+def test_cover_descent_matches_recursive(kind, outer, inner, phase, cx, cy, scale, res, snap, edge):
+    """The level-synchronous cover gives the recursive descent's cells and
+    ``is_full`` flags bit for bit over simple, holed and multi polygons,
+    with lattice-snapped vertices (on cell edges), and with the shape
+    shifted onto one world edge (by a lattice multiple when snapped)."""
+    from pyramidscheme_jl_spark.functions.cells import as_rings, polygon_to_cells_classified
+
+    world = 1024.0
+    lattice = world / (1 << res) if snap else 0.0
+    rings = [_star(cx, cy, np.asarray(outer) * scale, phase, lattice)]
+    if kind == "holed":
+        rings.append(_star(cx, cy, np.asarray(inner) * scale * 0.3, -phase, lattice))
+    elif kind == "multi":
+        rings.append(_star(world - cx, world - cy, np.asarray(inner) * scale * 0.5, phase, lattice))
+    if edge is not None:
+        allv = np.concatenate(rings)
+        axis = 0 if edge in ("left", "right") else 1
+        to = 0.0 - allv[:, axis].min() if edge in ("left", "bottom") else world - allv[:, axis].max()
+        for r in rings:
+            r[:, axis] += to
+    rings = [np.clip(r, 0.0, world) for r in rings]
+    cells, is_full = polygon_to_cells_classified(rings, res, world)
+    want_cells, want_full = _ref_cover_descent(as_rings(rings), res, world)
+    np.testing.assert_array_equal(cells, want_cells)
+    np.testing.assert_array_equal(is_full, want_full)
+    assert cells.dtype == np.int64 and is_full.dtype == bool

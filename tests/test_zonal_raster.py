@@ -113,6 +113,15 @@ def test_zonal_raster_level_out_of_range(spark, pyr_path):
         zonal_raster(spark, pyr_path, _polys(), z=99)
 
 
+def test_zonal_raster_rejects_duplicate_polygon_id(spark, pyr_path):
+    """A repeated ``polygon_id`` raises at call time instead of refining
+    one polygon's boundary tiles against another polygon's rings."""
+    polys = _polys()
+    dup = [*polys, {**polys[1], "polygon_id": polys[0]["polygon_id"]}]
+    with pytest.raises(ValueError, match="duplicate polygon_id"):
+        zonal_raster(spark, pyr_path, dup, z=0)
+
+
 def test_oracle_rings_parity_guard():
     """The DuckDB oracle's strict half-plane test is exact only because no
     pixel center can lie on an edge: every fixture edge has dx+dy odd (the
