@@ -247,6 +247,21 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, ring) -> np.ndarray:
     return out
 
 
+def pixel_center_mask(xmin, ymin, xmax, ymax, w: int, h: int, ring) -> np.ndarray:
+    """(h, w) mask of a tile's pixel CENTERS inside the geometry: pixel
+    ``(i, j)`` of a ``w x h`` tile over extent ``[xmin, xmax) x [ymin,
+    ymax)`` is tested at ``(xmin + (i + 0.5) * sx, ymin + (j + 0.5) * sy)``
+    with ``sx = (xmax - xmin) / w``. The one pixel-center ray cast of
+    ``rasterize_polygons`` and the zonal refines, so a burned pixel and a
+    zonal pixel are the same pixel."""
+    sx = (xmax - xmin) / w
+    sy = (ymax - ymin) / h
+    cx = xmin + (np.arange(w) + 0.5) * sx
+    cy = ymin + (np.arange(h) + 0.5) * sy
+    gx, gy = np.meshgrid(cx, cy)
+    return points_in_polygon(gx.ravel(), gy.ravel(), ring).reshape(h, w)
+
+
 def _edges_cross_rects(edges, rx0, ry0, rx1, ry1) -> np.ndarray:
     """Per rect: does any edge ``(ax, ay, bx, by)`` intersect the closed
     axis-aligned rect? (Cohen-style tests, broadcast (rects x edges).)

@@ -28,11 +28,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..api import _level_spec
 from ..functions.cells import (
     _RES_SHIFT,
+    pixel_center_mask,
     points_in_polygon,
     polygon_to_cells_classified,
 )
@@ -121,7 +121,7 @@ def salted_repartition(
 
 def _covers_df(
     spark: SparkSession, polygons: list[dict], res: int, world: float
-) -> tuple[DataFrame, dict[str, list[np.ndarray]], list[int]]:
+) -> tuple[DataFrame, dict[str, list[np.ndarray]], list[int], list[tuple]]:
     """Driver-side planning: compact covers for each polygon (dims-sized).
 
     Each polygon dict carries its geometry under ``"ring"`` (or the alias
@@ -133,7 +133,12 @@ def _covers_df(
     ``points_in_polygon`` takes natively), in ordinal order, so
     ``list(ringmap.values())[poly_idx]`` is the same geometry. A repeated
     ``polygon_id`` raises ``ValueError`` before any Spark job: the refines
-    would otherwise test one polygon's candidates against another's rings."""
+    would otherwise test one polygon's candidates against another's rings.
+
+    Returns ``(covers, ringmap, ress, rows)``: ``ress`` are the distinct
+    cover resolutions and ``rows`` the driver-side cover tuples behind
+    ``covers``, so planners that need the cells on the driver (the zonal
+    scan ranges) read them here instead of collecting ``covers``."""
     from ..functions.cells import as_rings
 
     rows = []
@@ -149,7 +154,7 @@ def _covers_df(
     schema = "polygon_id string, poly_idx int, cover_cell long, cover_res int, is_full boolean"
     covers = spark.createDataFrame(rows, schema)
     ress = sorted({r[3] for r in rows})
-    return covers, rings, ress
+    return covers, rings, ress, rows
 
 
 def _inside_udf(rings: list[list[np.ndarray]]):
@@ -201,7 +206,7 @@ def point_in_polygon_join(
     # point_id/x/y always pass through — carrying them again would
     # duplicate column names
     carry = [c for c in (carry_cols or []) if c not in ("point_id", "x", "y")]
-    covers, rings, ress = _covers_df(spark, polygons, res, world)
+    covers, rings, ress, _ = _covers_df(spark, polygons, res, world)
     # ONE scan of the fact table: each point explodes its ancestor cell at
     # every distinct cover resolution (1-4 ids) and joins the whole cover
     # table at once — cell ids embed their resolution in the top bits, so
@@ -619,11 +624,13 @@ def _zonal_candidates(
     """Shared zonal candidate builder: pushed cell-range scan filter +
     broadcast compact-cover join. Returns ``(cand, rings)`` where ``cand``
     carries one row per (tile, polygon-cover hit) with ``is_full`` marking
-    interior covers. Used by ``_zonal_over_tiles`` (scalar aggregates) and
-    ``zonal_quantiles`` (value histograms)."""
+    interior covers. The cover plan is ``_covers_df``'s, and the scan
+    ranges come from the cover rows it holds on the driver, so planning
+    runs no Spark job. Used by ``_zonal_over_tiles`` (scalar aggregates)
+    and ``_zonal_value_hist`` (value counts)."""
     from ..functions.cells import cell_range
 
-    covers, rings, ress = _covers_df(spark, polygons, res_z, spec.world)
+    covers, rings, ress, rows = _covers_df(spark, polygons, res_z, spec.world)
 
     # driver-side cover -> cell ranges at res_z for the pushed scan filter.
     # The filter is an OPTIMIZATION ONLY (the broadcast cover join is what
@@ -632,11 +639,8 @@ def _zonal_candidates(
     # most ``max_pushdown_ranges`` by closing the smallest Morton gaps — a
     # 497-term OR chain measured ~3.5 s of plan+eval cost at bench scale,
     # while <=64 ranges keep row-group pruning with negligible overhead.
-    cover_rows = covers.collect()  # dims-sized (compact covers of the polygon list)
-    ranges: set[tuple[int, int]] = set()
-    for r in cover_rows:
-        lo, hi = cell_range(np.int64(r["cover_cell"]), res_z)
-        ranges.add((int(lo), int(hi)))
+    los, his = cell_range(np.array([r[2] for r in rows], dtype=np.int64), res_z)
+    ranges = set(zip(los.tolist(), his.tolist()))
     if ranges and max_pushdown_ranges > 0:
         merged: list[list[int]] = []
         for lo, hi in sorted(ranges):
@@ -675,15 +679,63 @@ def _zonal_candidates(
     return cand, rings
 
 
-def _pixel_center_mask(row, rings) -> np.ndarray:
-    """(h, w) mask of the tile row's pixel CENTERS inside ``rings`` — the
-    exact ray-cast the zonal refine stages run on boundary-cover tiles."""
-    sx = (row.xmax - row.xmin) / row.w
-    sy = (row.ymax - row.ymin) / row.h
-    cx = row.xmin + (np.arange(row.w) + 0.5) * sx
-    cy = row.ymin + (np.arange(row.h) + 0.5) * sy
-    gx, gy = np.meshgrid(cx, cy)
-    return points_in_polygon(gx.ravel(), gy.ravel(), rings).reshape(row.h, row.w)
+def _zonal_refine(spark, cand, rings, keys: list[str], kernel, fields: str) -> DataFrame:
+    """The one zonal refine stage: one Arrow-batched pass that decodes
+    each candidate (tile, polygon) row once, masks it (the whole tile for
+    an interior cover, ``pixel_center_mask`` against the polygon's rings
+    for a boundary cover) and calls ``kernel(row, arr, mask)``, where
+    ``mask`` is None for an interior cover. The kernel returns tuples
+    matching the DDL ``fields``; the stage prefixes each with
+    ``(polygon_id, *keys)``."""
+    from ..functions.codec import decode_tile
+
+    ring_items = sorted(rings.items())
+    schema = "polygon_id string" + "".join(f", {k} int" for k in keys) + f", {fields}"
+    cols = ["polygon_id", *keys, *(f.split()[0] for f in fields.split(","))]
+
+    def refine(batches):
+        ringmap = dict(ring_items)
+        for pdf in batches:
+            out = []
+            for row in pdf.itertuples(index=False):
+                arr = decode_tile(row.bytes, row.h, row.w, row.dtype, row.c)
+                mask = None if row.is_full else pixel_center_mask(
+                    row.xmin, row.ymin, row.xmax, row.ymax, row.w, row.h,
+                    ringmap[row.polygon_id],
+                )
+                head = (row.polygon_id, *(getattr(row, k) for k in keys))
+                out.extend((*head, *t) for t in kernel(row, arr, mask))
+            yield pd.DataFrame(out, columns=cols)
+
+    rows = cand.select(
+        *keys, "bytes", "w", "h", "c", "dtype", "xmin", "ymin", "xmax", "ymax",
+        "polygon_id", "is_full",
+    )
+    # ray-cast cost is CPU-per-pixel, not bytes: keep the boundary shell
+    # spread across tasks instead of letting AQE coalesce by byte size
+    rows = rows.repartition(max(spark.sparkContext.defaultParallelism, 8))
+    return rows.mapInPandas(refine, schema)
+
+
+def _plane(arr: np.ndarray) -> np.ndarray:
+    """A decoded tile as one float64 plane: multi-channel tiles give their
+    channel mean."""
+    arr = arr.astype(np.float64, copy=False)
+    return arr.mean(axis=2) if arr.ndim == 3 else arr
+
+
+def _stats_kernel(row, arr, mask):
+    """Zonal stats of one masked tile: ``(n, sum, min, max)`` over the
+    channel-mean plane, NaN skipped; nothing for an empty mask."""
+    plane = _plane(arr)
+    valid = ~np.isnan(plane)
+    if mask is not None:
+        valid &= mask
+    n = int(valid.sum())
+    if n == 0:
+        return ()
+    vals = plane[valid]
+    return ((n, float(vals.sum()), float(vals.min()), float(vals.max())),)
 
 
 def _zonal_over_tiles(
@@ -699,8 +751,6 @@ def _zonal_over_tiles(
     at TILE granularity over any TILE_SCHEMA-shaped DataFrame. See
     ``zonal_raster`` for the three cost tiers; ``extra_keys`` (e.g. ``t``)
     ride through the split, the Arrow refine, and the final group-by."""
-    from ..functions.codec import decode_tile
-
     keys = list(extra_keys)
     cand, rings = _zonal_candidates(
         spark, tiles, spec, polygons, res_z, extra_keys, max_pushdown_ranges
@@ -714,10 +764,8 @@ def _zonal_over_tiles(
     # exact only while the true sum fits a double's 53-bit mantissa —
     # holds for ≤32-bit values × ≤2^16 px/tile (≤2^48), not for
     # int64/uint64 tiles, which route to the decode tier instead.
-    int_dtype = (
-        F.col("dtype").rlike("^u?int(8|16|32)$") & (F.col("c") == 1)
-    )
-    interior = cand.where(F.col("is_full") & int_dtype).select(
+    meta_only = F.col("is_full") & F.col("dtype").rlike("^u?int(8|16|32)$") & (F.col("c") == 1)
+    interior = cand.where(meta_only).select(
         "polygon_id",
         *keys,
         (F.col("w").cast("long") * F.col("h")).alias("n"),
@@ -725,65 +773,10 @@ def _zonal_over_tiles(
         F.col("vmin").alias("mn"),
         F.col("vmax").alias("mx"),
     )
-
-    ring_items = sorted(rings.items())
-    key_fields = [
-        T.StructField(k, T.IntegerType()) for k in keys
-    ]
-    part_schema = T.StructType(
-        [
-            T.StructField("polygon_id", T.StringType()),
-            *key_fields,
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.DoubleType()),
-            T.StructField("mn", T.DoubleType()),
-            T.StructField("mx", T.DoubleType()),
-        ]
+    partials = _zonal_refine(
+        spark, cand.where(~meta_only), rings, keys, _stats_kernel,
+        "n long, s double, mn double, mx double",
     )
-
-    def refine(batches):
-        ringmap = dict(ring_items)
-        cols = list(part_schema.fieldNames())
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for row in pdf.itertuples(index=False):
-                arr = decode_tile(row.bytes, row.h, row.w, row.dtype, row.c).astype(
-                    np.float64, copy=False
-                )
-                if arr.ndim == 3:  # multi-channel: aggregate the channel mean
-                    arr = arr.mean(axis=2)
-                if row.is_full:
-                    mask = np.ones(arr.shape, dtype=bool)
-                else:
-                    mask = _pixel_center_mask(row, ringmap[row.polygon_id])
-                mask &= ~np.isnan(arr)
-                n = int(mask.sum())
-                if n == 0:
-                    continue
-                vals = arr[mask]
-                out["polygon_id"].append(row.polygon_id)
-                for k in keys:
-                    out[k].append(getattr(row, k))
-                out["n"].append(n)
-                out["s"].append(float(vals.sum()))
-                out["mn"].append(float(vals.min()))
-                out["mx"].append(float(vals.max()))
-            pdf_out = pd.DataFrame(out, columns=cols)
-            for k in keys:
-                pdf_out[k] = pdf_out[k].astype("int32")
-            yield pdf_out
-
-    decode_rows = cand.where(~(F.col("is_full") & int_dtype)).select(
-        *keys, "bytes", "w", "h", "c", "dtype", "xmin", "ymin", "xmax", "ymax",
-        "polygon_id", "is_full",
-    )
-    # ray-cast cost is CPU-per-pixel, not bytes: keep the boundary shell
-    # spread across tasks instead of letting AQE coalesce by byte size
-    decode_rows = decode_rows.repartition(
-        max(spark.sparkContext.defaultParallelism, 8)
-    )
-    partials = decode_rows.mapInPandas(refine, part_schema)
-
     return (
         interior.unionByName(partials)
         .groupBy("polygon_id", *keys)
@@ -827,9 +820,11 @@ def zonal_raster(
        int64/uint64 sums can exceed 2^53 where the recovery is silently
        off (ADVICE r6), so both route to tier 3.)
     3. **Decode boundary shell** — boundary tiles (and interior float
-       tiles) decode in an Arrow-batched stage; pixel CENTERS ray-cast
-       against the polygon ring (same even-odd kernel as J3), NaNs skipped,
-       one partial row per (tile, polygon) into the final hash aggregate.
+       tiles) run the shared zonal refine stage (``_zonal_refine``): pixel
+       CENTERS ray-cast against the polygon ring (``pixel_center_mask``,
+       the even-odd kernel of J3 and of ``rasterize_polygons``), NaNs
+       skipped, one partial row per (tile, polygon) into the final hash
+       aggregate.
 
     At scale: tier 3 touches O(perimeter) tiles, tier 2 is metadata-only,
     and the shuffle carries one partial row per (tile, polygon). Returns
@@ -867,16 +862,16 @@ def zonal_quantiles(
     product, so the result is engine-portable bit-for-bit (the DuckDB
     twin runs the same window construction).
 
-    Plan: same pruned-scan + broadcast-cover candidates as
-    ``zonal_raster`` (``_zonal_candidates``), but the refine emits
-    per-(polygon, value) COUNTS — bounded by occupied values x tiles,
-    never pixels — then one hash aggregate and a per-polygon cumulative
-    window over at most |value domain| rows. Unlike ``zonal_raster``
-    there is NO metadata-only interior tier: an exact order statistic
-    needs every pixel's value, so interior covers decode too (O(area),
-    inherent to exactness). Integer single-channel rasters only in the
-    exact mode: floats raise (exact quantiles over continuous values
-    would shuffle every distinct pixel).
+    Plan: same pruned-scan + broadcast-cover candidates and refine stage
+    as ``zonal_raster`` (``_zonal_candidates``, ``_zonal_refine``), but
+    the refine kernel emits per-(polygon, value) COUNTS — bounded by
+    occupied values x tiles, never pixels — then one hash aggregate and a
+    per-polygon cumulative window over at most |value domain| rows.
+    Unlike ``zonal_raster`` there is NO metadata-only interior tier: an
+    exact order statistic needs every pixel's value, so interior covers
+    decode too (O(area), inherent to exactness). Integer single-channel
+    rasters only in the exact mode: floats raise (exact quantiles over
+    continuous values would shuffle every distinct pixel).
 
     **Binned mode** (``bins``/``vmin``/``vmax``, the ``raster_histogram``
     bucket rule: fixed width over ``[vmin, vmax)``, value == vmax lands
@@ -889,11 +884,13 @@ def zonal_quantiles(
     """
     from ..sources.catalog import read_level
 
-    qs, labels, bins, lo_b, hi_b = _validate_quantile_args(qs, bins, vmin, vmax)
+    qs, labels, bins, lo_b, hi_b = _validate_quantile_args(
+        "zonal_quantiles", qs, bins, vmin, vmax
+    )
     spec = _level_spec(spark, path, z)
     return _zonal_quantiles_over_tiles(
         spark, read_level(spark, path, z), spec, polygons, spec.cell_res(z),
-        qs, labels, (), max_pushdown_ranges, bins, lo_b, hi_b,
+        qs, labels, (), max_pushdown_ranges, "zonal_quantiles", bins, lo_b, hi_b,
     )
 
 
@@ -914,12 +911,14 @@ def zonal_quantiles_cube(
     aggregate, and the per-partition windows; never extra scans."""
     from ..operators.cube import read_cube_level
 
-    qs, labels, bins, lo_b, hi_b = _validate_quantile_args(qs, bins, vmin, vmax)
+    qs, labels, bins, lo_b, hi_b = _validate_quantile_args(
+        "zonal_quantiles_cube", qs, bins, vmin, vmax
+    )
     spec = _level_spec(spark, path, z)
     return _zonal_quantiles_over_tiles(
         spark, read_cube_level(spark, path, z), spec, polygons,
         spec.cell_res(z), qs, labels, ("t",), max_pushdown_ranges,
-        bins, lo_b, hi_b,
+        "zonal_quantiles_cube", bins, lo_b, hi_b,
     )
 
 
@@ -957,7 +956,7 @@ def zonal_categorical(
     spec = _level_spec(spark, path, z)
     hist = _zonal_value_hist(
         spark, read_level(spark, path, z), spec, polygons, spec.cell_res(z),
-        (), max_pushdown_ranges, None, 0.0, 0.0,
+        (), max_pushdown_ranges, "zonal_categorical", None, 0.0, 0.0,
     )
     # majority: lexicographic max of (n, -value) -> highest count, lowest
     # value on ties; minority: min of (n, value). Struct min/max keeps it
@@ -972,7 +971,41 @@ def zonal_categorical(
     )
 
 
-def _validate_quantile_args(qs, bins, vmin, vmax):
+def _bin_args(op: str, bins, vmin, vmax) -> tuple[int | None, float, float]:
+    """The one bins check of the binned modes: ``(bins, lo, hi)``, or
+    ``(None, 0.0, 0.0)`` when ``bins`` is None (the exact mode)."""
+    if bins is None:
+        return None, 0.0, 0.0
+    if vmin is None or vmax is None or not (float(vmax) > float(vmin)):
+        raise ValueError(f"binned {op} needs vmin < vmax")
+    bins = int(bins)
+    if bins <= 0:
+        raise ValueError(f"bins must be positive, got {bins}")
+    return bins, float(vmin), float(vmax)
+
+
+def _value_counts(flat: np.ndarray, op: str, nb, lo: float, hi: float):
+    """``np.unique`` counts of a pixel array: exact values (integer
+    rasters only, else ``ValueError`` naming ``op``) or, with ``nb``, the
+    one bucket rule of ``raster_histogram`` and the binned zonal
+    statistics: the GDAL fixed-width rule ``floor((x - lo) * nb / (hi -
+    lo))`` over ``[lo, hi)``, a value equal to ``hi`` in the last bucket,
+    NaN (nodata) and out-of-range pixels dropped."""
+    if nb is None:
+        if not np.issubdtype(flat.dtype, np.integer):
+            raise ValueError(
+                f"exact {op} needs an integer raster, got dtype "
+                f"{flat.dtype.name!r}; pass bins/vmin/vmax for the binned mode"
+            )
+        return np.unique(flat, return_counts=True)
+    x = flat.astype(np.float64)
+    x = x[np.isfinite(x)]
+    idx = np.floor((x - lo) * nb / (hi - lo)).astype(np.int64)
+    idx[x == hi] = nb - 1
+    return np.unique(idx[(idx >= 0) & (idx < nb)], return_counts=True)
+
+
+def _validate_quantile_args(op, qs, bins, vmin, vmax):
     if not qs:
         raise ValueError("qs must be non-empty")
     for q in qs:
@@ -981,87 +1014,41 @@ def _validate_quantile_args(qs, bins, vmin, vmax):
     labels = [f"q{int(round(float(q) * 1000)):03d}" for q in qs]
     if len(set(labels)) != len(labels):
         raise ValueError(f"quantiles collide at 1/1000 resolution: {qs}")
-    if bins is not None:
-        if vmin is None or vmax is None or not (float(vmax) > float(vmin)):
-            raise ValueError("binned quantiles need vmin < vmax")
-        bins = int(bins)
-        if bins <= 0:
-            raise ValueError(f"bins must be positive, got {bins}")
-    lo_b, hi_b = (float(vmin), float(vmax)) if bins is not None else (0.0, 0.0)
-    return qs, labels, bins, lo_b, hi_b
+    return (qs, labels, *_bin_args(op, bins, vmin, vmax))
 
 
 def _zonal_value_hist(
     spark, tiles, spec, polygons, res_z,
-    extra_keys: tuple[str, ...], max_pushdown_ranges, nb, lo_b, hi_b,
+    extra_keys: tuple[str, ...], max_pushdown_ranges, op, nb, lo_b, hi_b,
 ) -> DataFrame:
-    """Shared refine core for the order/frequency statistics zonal ops
-    (``zonal_quantiles``, ``zonal_categorical``): per-(polygon[, t],
-    value) pixel COUNTS over a pruned tile scan — shuffle bounded by
-    occupied values x tiles, never pixels. ``nb``/``lo_b``/``hi_b``
-    switch on the raster_histogram bucket rule for float rasters."""
-    from ..functions.codec import decode_tile
-
+    """Shared core of the order/frequency statistics zonal ops
+    (``zonal_quantiles``, ``zonal_categorical``): the zonal refine stage
+    with a value-count kernel — per-(polygon[, t], value) pixel COUNTS
+    over a pruned tile scan, shuffle bounded by occupied values x tiles,
+    never pixels. Single-channel integer rasters only, unless
+    ``nb``/``lo_b``/``hi_b`` switch on the ``raster_histogram`` bucket
+    rule (``_value_counts``); errors name the calling operator ``op``."""
     keys = list(extra_keys)
     cand, rings = _zonal_candidates(
         spark, tiles, spec, polygons, res_z, extra_keys,
         max_pushdown_ranges=max_pushdown_ranges,
     )
-    ring_items = sorted(rings.items())
 
-    def refine(batches):
-        ringmap = dict(ring_items)
-        for pdf in batches:
-            acc: dict[tuple, int] = {}
-            for row in pdf.itertuples(index=False):
-                if row.c != 1:
-                    raise ValueError(
-                        f"zonal_quantiles needs single-channel rasters, got c={row.c}"
-                    )
-                if nb is None and not str(row.dtype).startswith(("int", "uint")):
-                    raise ValueError(
-                        "exact zonal_quantiles needs an integer raster, got "
-                        f"dtype={row.dtype!r}; pass bins/vmin/vmax for the "
-                        "binned mode"
-                    )
-                arr = decode_tile(row.bytes, row.h, row.w, row.dtype, row.c)
-                if row.is_full:
-                    flat = arr.ravel()
-                else:
-                    mask = _pixel_center_mask(row, ringmap[row.polygon_id])
-                    if not mask.any():
-                        continue
-                    flat = arr[mask]
-                if nb is not None:
-                    x = flat.astype(np.float64)
-                    x = x[np.isfinite(x)]  # NaN = nodata
-                    idx = np.floor((x - lo_b) * nb / (hi_b - lo_b)).astype(np.int64)
-                    idx[x == hi_b] = nb - 1  # the raster_histogram bucket rule
-                    flat = idx[(idx >= 0) & (idx < nb)]
-                vals, cnts = np.unique(flat, return_counts=True)
-                kv = tuple(getattr(row, k) for k in keys)
-                for v, c in zip(vals.tolist(), cnts.tolist()):
-                    key = (row.polygon_id, *kv, int(v))
-                    acc[key] = acc.get(key, 0) + int(c)
-            yield pd.DataFrame(
-                [(*k, n) for k, n in acc.items()],
-                columns=["polygon_id", *keys, "value", "n"],
-            )
+    def counts(row, arr, mask):
+        if row.c != 1:
+            raise ValueError(f"{op} needs single-channel rasters, got c={row.c}")
+        vals, cnts = _value_counts(
+            arr.ravel() if mask is None else arr[mask], op, nb, lo_b, hi_b
+        )
+        return zip(vals.tolist(), cnts.tolist())
 
-    key_schema = "".join(f", {k} int" for k in keys)
-    parts = cand.select(
-        "polygon_id", *keys, "is_full", "bytes", "w", "h", "c", "dtype",
-        "xmin", "ymin", "xmax", "ymax",
-    ).repartition(max(spark.sparkContext.defaultParallelism, 8)).mapInPandas(
-        refine, f"polygon_id string{key_schema}, value long, n long"
-    )
-    grp = ["polygon_id", *keys]
-    return parts.groupBy(*grp, "value").agg(F.sum("n").alias("n"))
+    parts = _zonal_refine(spark, cand, rings, keys, counts, "value long, n long")
+    return parts.groupBy("polygon_id", *keys, "value").agg(F.sum("n").alias("n"))
 
 
 def _zonal_quantiles_over_tiles(
     spark, tiles, spec, polygons, res_z, qs, labels,
-    extra_keys: tuple[str, ...], max_pushdown_ranges, nb, lo_b, hi_b,
+    extra_keys: tuple[str, ...], max_pushdown_ranges, op, nb, lo_b, hi_b,
 ) -> DataFrame:
     from pyspark.sql import Window
 
@@ -1069,7 +1056,7 @@ def _zonal_quantiles_over_tiles(
     grp = ["polygon_id", *keys]
     hist = _zonal_value_hist(
         spark, tiles, spec, polygons, res_z, extra_keys,
-        max_pushdown_ranges, nb, lo_b, hi_b,
+        max_pushdown_ranges, op, nb, lo_b, hi_b,
     )
     cum_w = (
         Window.partitionBy(*grp)
@@ -1127,6 +1114,34 @@ def zonal_cube(
         spark, tiles, spec, polygons, spec.cell_res(z), extra_keys=("t",),
         max_pushdown_ranges=max_pushdown_ranges,
     )
+
+
+_SAMPLES_DDL = "point_id string, x double, y double, value double"
+
+
+def _sample_points(plane: np.ndarray, ext, pts: pd.DataFrame) -> pd.DataFrame:
+    """The one point-sampling kernel of ``raster_extract``: the points of
+    ``pts`` (point_id, x, y) that fall on a tile with extent ``ext``, with
+    ``value``, the ``plane`` pixel under each (``floor((p - min) / pixel
+    size)`` indexing; points off the tile drop)."""
+    xmin, ymin, xmax, ymax = ext
+    h, w = plane.shape
+    px, py = pts["x"].to_numpy(), pts["y"].to_numpy()
+    ix = np.floor((px - xmin) / ((xmax - xmin) / w)).astype(np.int64)
+    iy = np.floor((py - ymin) / ((ymax - ymin) / h)).astype(np.int64)
+    ok = (ix >= 0) & (ix < w) & (iy >= 0) & (iy < h)
+    return pd.DataFrame({
+        "point_id": pts["point_id"].to_numpy()[ok],
+        "x": px[ok],
+        "y": py[ok],
+        "value": plane[iy[ok], ix[ok]],
+    })
+
+
+def _concat_samples(outs: list[pd.DataFrame]) -> pd.DataFrame:
+    if outs:
+        return pd.concat(outs, ignore_index=True)
+    return pd.DataFrame({"point_id": [], "x": [], "y": [], "value": []})
 
 
 def raster_extract(
@@ -1199,84 +1214,28 @@ def raster_extract(
         # that never duplicates tile bytes. 6.7 -> ~2 s on a 200k-point /
         # 4-tile extract, identical rows.
         if len(probe) <= broadcast_tiles_max:
-            tile_rows = tiles.collect()
-            bc = spark.sparkContext.broadcast(
-                [
-                    (
-                        int(t["cell"]), bytes(t["bytes"]), int(t["w"]), int(t["h"]),
-                        int(t["c"]), t["dtype"], float(t["xmin"]), float(t["ymin"]),
-                        float(t["xmax"]), float(t["ymax"]),
-                    )
-                    for t in tile_rows
-                ]
-            )
-
-            bcast_schema = T.StructType(
-                [
-                    T.StructField("point_id", T.StringType()),
-                    T.StructField("x", T.DoubleType()),
-                    T.StructField("y", T.DoubleType()),
-                    T.StructField("value", T.DoubleType()),
-                ]
-            )
+            bc = spark.sparkContext.broadcast({
+                int(t["cell"]): (
+                    (bytes(t["bytes"]), int(t["h"]), int(t["w"]), t["dtype"], int(t["c"])),
+                    (float(t["xmin"]), float(t["ymin"]), float(t["xmax"]), float(t["ymax"])),
+                )
+                for t in tiles.collect()
+            })
 
             def gather_bcast(batches):
-                from ..functions.codec import decode_tile as _dec
-
-                decoded = {}
-
-                def tile_for(cell):
-                    if cell not in decoded:
-                        for (
-                            c0, bts, w, h, ch, dt, xmin, ymin, xmax, ymax
-                        ) in bc.value:
-                            if c0 == cell:
-                                arr = _dec(bts, h, w, dt, ch).astype(
-                                    np.float64, copy=False
-                                )
-                                if arr.ndim == 3:
-                                    arr = arr.mean(axis=2)
-                                decoded[cell] = (arr, w, h, xmin, ymin, xmax, ymax)
-                                break
-                        else:
-                            decoded[cell] = None
-                    return decoded[cell]
-
+                planes = {}  # each task decodes each tile once
                 for pdf in batches:
                     outs = []
                     for cell, grp in pdf.groupby("cell", sort=False):
-                        t = tile_for(int(cell))
-                        if t is None:
+                        tile = bc.value.get(int(cell))
+                        if tile is None:
                             continue
-                        arr, w, h, xmin, ymin, xmax, ymax = t
-                        sx = (xmax - xmin) / w
-                        sy = (ymax - ymin) / h
-                        px = grp["x"].to_numpy()
-                        py = grp["y"].to_numpy()
-                        ix = np.floor((px - xmin) / sx).astype(np.int64)
-                        iy = np.floor((py - ymin) / sy).astype(np.int64)
-                        ok = (ix >= 0) & (ix < w) & (iy >= 0) & (iy < h)
-                        if not ok.any():
-                            continue
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    "point_id": grp["point_id"].to_numpy()[ok],
-                                    "x": px[ok],
-                                    "y": py[ok],
-                                    "value": arr[iy[ok], ix[ok]],
-                                }
-                            )
-                        )
-                    yield (
-                        pd.concat(outs, ignore_index=True)
-                        if outs
-                        else pd.DataFrame(
-                            {"point_id": [], "x": [], "y": [], "value": []}
-                        )
-                    )
+                        if cell not in planes:
+                            planes[cell] = _plane(decode_tile(*tile[0]))
+                        outs.append(_sample_points(planes[cell], tile[1], grp))
+                    yield _concat_samples(outs)
 
-            return keyed.mapInPandas(gather_bcast, bcast_schema)
+            return keyed.mapInPandas(gather_bcast, _SAMPLES_DDL)
         hot = [(int(r["cell"]), int(r["c"])) for r in probe if r["c"] > hot_cell_budget]
     else:
         hot = [
@@ -1308,40 +1267,15 @@ def raster_extract(
         max(spark.sparkContext.defaultParallelism, 8)
     )  # gather cost scales with points-per-tile, not row bytes — keep spread
 
-    out_schema = T.StructType(
-        [
-            T.StructField("point_id", T.StringType()),
-            T.StructField("x", T.DoubleType()),
-            T.StructField("y", T.DoubleType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-
     def gather(batches):
         for pdf in batches:
-            out = {"point_id": [], "x": [], "y": [], "value": []}
-            for row in pdf.itertuples(index=False):
-                arr = decode_tile(row.bytes, row.h, row.w, row.dtype, row.c).astype(
-                    np.float64, copy=False
+            yield _concat_samples([
+                _sample_points(
+                    _plane(decode_tile(row.bytes, row.h, row.w, row.dtype, row.c)),
+                    (row.xmin, row.ymin, row.xmax, row.ymax),
+                    pd.DataFrame.from_records(list(row.pts), columns=["point_id", "x", "y"]),
                 )
-                if arr.ndim == 3:
-                    arr = arr.mean(axis=2)
-                recs = list(row.pts)
-                if recs and isinstance(recs[0], dict):
-                    p = pd.DataFrame(recs)[["point_id", "x", "y"]]
-                else:
-                    p = pd.DataFrame(recs, columns=["point_id", "x", "y"])
-                sx = (row.xmax - row.xmin) / row.w
-                sy = (row.ymax - row.ymin) / row.h
-                ix = np.floor((p["x"].to_numpy() - row.xmin) / sx).astype(np.int64)
-                iy = np.floor((p["y"].to_numpy() - row.ymin) / sy).astype(np.int64)
-                ok = (ix >= 0) & (ix < row.w) & (iy >= 0) & (iy < row.h)
-                if not ok.any():
-                    continue
-                out["point_id"].extend(p["point_id"][ok])
-                out["x"].extend(p["x"][ok])
-                out["y"].extend(p["y"][ok])
-                out["value"].extend(arr[iy[ok], ix[ok]])
-            yield pd.DataFrame(out, columns=list(out_schema.fieldNames()))
+                for row in pdf.itertuples(index=False)
+            ])
 
-    return joined.mapInPandas(gather, out_schema)
+    return joined.mapInPandas(gather, _SAMPLES_DDL)

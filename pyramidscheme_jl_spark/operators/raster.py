@@ -6,17 +6,19 @@ raster<->vector engine also needs the opposite arrow (GDAL's
 engine (zonal_raster, raster_extract, build levels, streaming patches)
 consumes unchanged. Spark-first shape:
 
-- driver-side planning is dims-sized: each polygon's compact cover
-  (``polygon_to_cells_classified``) becomes (polygon_id, paint_ord,
-  is_full, leaf_lo, leaf_hi) rows, where the leaf range is the cover
-  cell's Morton descendant interval at the TILE resolution;
-- leaf expansion happens JVM-side (``explode(sequence(lo, hi))``) — a
-  continent-sized polygon fans out on executors, never on the driver;
+- driver-side planning is dims-sized and shared with the zonal
+  operators: ``joins._covers_df`` gives each polygon's compact cover
+  rows (polygon_id, paint ordinal, cover cell, is_full) and its rings;
+- leaf expansion happens JVM-side: each cover cell becomes its Morton
+  descendant interval at the TILE resolution, cut into 2^16-leaf chunks
+  and exploded (``explode(sequence(lo, hi))``) — a continent-sized
+  polygon fans out on executors, never on the driver;
 - one hash aggregate groups the (cell, polygon...) pairs to a single row
   per output tile, so each tile renders ONCE with its full paint list;
 - the Arrow render stage fills interior covers wholesale and ray-casts
-  only boundary-cover pixels, in ascending paint order (LAST polygon
-  wins, GDAL semantics); tiles with zero burned pixels are dropped
+  only boundary-cover pixel centers (``cells.pixel_center_mask``, the
+  same mask the zonal refines use), in ascending paint order (LAST
+  polygon wins, GDAL semantics); tiles with zero burned pixels are dropped
   (sparse-raster semantics — at 10^12-tile scale materializing empty
   tiles is the bug, not the feature).
 
@@ -32,13 +34,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cells import (
-    cell_range,
-    cell_to_xy,
-    points_in_polygon,
-    polygon_to_cells_classified,
-)
+from ..functions.cells import _RES_SHIFT, cell_to_xy, pixel_center_mask
 from ..operators.build import PyramidSpec, _rows_to_pdf, _tile_row
+from ..operators.joins import _MORTON_MASK, _bin_args, _covers_df, _value_counts
 from ..plans.grid import tile_pixel_window
 from ..sources.catalog import TILE_SCHEMA
 
@@ -61,9 +59,13 @@ def rasterize_polygons(
     stats are skipmissing-correct like every other tile in the engine).
     Hole pixels are NOT burned (even-odd), matching GDAL's rasterize
     semantics for interior rings.
-    """
-    from ..functions.cells import as_rings
 
+    The covers come from ``joins._covers_df`` (the zonal operators' cover
+    plan, with its duplicate-``polygon_id`` check) and a burned pixel is
+    one whose center ``cells.pixel_center_mask`` puts inside the polygon,
+    so ``zonal_raster`` over the burned level counts exactly the burned
+    pixels. Runs no Spark job until the caller acts.
+    """
     if np.isnan(fill) and not np.issubdtype(np.dtype(dtype), np.floating):
         raise ValueError(
             f"dtype {dtype!r} cannot represent the default NaN fill — pass an "
@@ -71,45 +73,33 @@ def rasterize_polygons(
         )
     spec = PyramidSpec(base_shape[0], base_shape[1], tilesize)
     res0 = spec.res0
-    rings: dict[str, list[np.ndarray]] = {}
-    values: dict[str, float] = {}
-    rows = []
-    for ordinal, p in enumerate(polygons):
-        pid = p["polygon_id"]
-        if pid in rings:
-            raise ValueError(f"duplicate polygon_id {pid!r}")
-        rings[pid] = as_rings(p.get("rings", p.get("ring")))
-        values[pid] = float(p.get(value_key, 1.0))
-        cells, is_full = polygon_to_cells_classified(rings[pid], res0, spec.world)
-        for c, full in zip(cells.tolist(), is_full.tolist()):
-            lo, hi = cell_range(np.int64(c), res0)
-            # chunk the leaf interval: explode(sequence(lo, hi)) builds the
-            # whole array in ONE task row — Spark caps arrays near 2^31 and
-            # a 4^12-leaf array would blow task memory long before that.
-            # 2^16 leaves/chunk keeps every sequence tiny while the chunk
-            # rows stay a driver-side list (a res-k full cover yields
-            # 4^(res0-k)/2^16 rows — dims-sized for any realistic polygon).
-            lo, hi = int(lo), int(hi)
-            step = 1 << 16
-            for s in range(lo, hi + 1, step):
-                rows.append((pid, ordinal, bool(full), s, min(s + step - 1, hi)))
-    if not rows:
+    covers, rings, ress, _ = _covers_df(spark, polygons, res0, spec.world)
+    if not ress:
         return spark.createDataFrame([], TILE_SCHEMA)
-    covers = spark.createDataFrame(
-        rows, "polygon_id string, ord int, is_full boolean, lo long, hi long"
-    )
+    ring_list = list(rings.values())  # by paint ordinal
+    values = [float(p.get(value_key, 1.0)) for p in polygons]
 
+    # each cover cell's Morton leaf interval at the tile resolution, in
+    # chunks: explode(sequence(lo, hi)) builds the whole array in ONE task
+    # row — Spark caps arrays near 2^31 and a 4^12-leaf array would blow
+    # task memory long before that. 2^16 leaves/chunk keeps every sequence
+    # tiny (a res-k full cover yields 4^(res0-k)/2^16 chunks).
+    step = 1 << 16
+    shift = f"2 * ({res0} - cover_res)"
+    lo = F.expr(f"{res0 << _RES_SHIFT} | shiftleft(cover_cell & {_MORTON_MASK}, {shift})")
+    hi = lo + F.expr(f"shiftleft(1L, {shift})") - 1
     per_tile = (
         covers.select(
-            "polygon_id", "ord", "is_full",
-            F.explode(F.sequence("lo", "hi")).alias("cell"),
+            F.struct(F.col("poly_idx").alias("ord"), "is_full").alias("paint"),
+            hi.alias("hi"),
+            F.explode(F.sequence(lo, hi, F.lit(step).cast("long"))).alias("s"),
+        )
+        .select(
+            "paint",
+            F.explode(F.sequence("s", F.least(F.col("s") + (step - 1), "hi"))).alias("cell"),
         )
         .groupBy("cell")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("ord", "polygon_id", "is_full"))
-            ).alias("paints")
-        )
+        .agg(F.sort_array(F.collect_list("paint")).alias("paints"))
     )
 
     # the grouped rows are a few KB (cell + paint list) but each carries a
@@ -120,14 +110,9 @@ def rasterize_polygons(
     # still coalesced to 1; repartition(n) and repartitionByRange survive).
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
     per_tile = per_tile.repartition(n_parts)
-
-    ring_items = sorted(rings.items())
-    value_items = sorted(values.items())
     bw, bh = base_shape
 
     def render(batches):
-        ringmap = dict(ring_items)
-        valmap = dict(value_items)
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
@@ -137,24 +122,14 @@ def rasterize_polygons(
                 if w <= 0 or h <= 0:  # cover cell in the padded world margin
                     continue
                 arr = np.full((h, w), np.nan, dtype=np.float64)
-                cx = x0 + np.arange(w) + 0.5
-                cy = y0 + np.arange(h) + 0.5
-                gx, gy = np.meshgrid(cx, cy)
                 burned = np.zeros((h, w), dtype=bool)
-                paints = list(row.paints)
-                paints.sort(key=lambda s: s["ord"] if isinstance(s, dict) else s[0])
-                for s in paints:  # ascending paint order: LAST wins
-                    if isinstance(s, dict):
-                        pid, full = s["polygon_id"], s["is_full"]
-                    else:
-                        pid, full = s[1], s[2]
-                    if full:
+                for s in row.paints:  # ascending paint order: LAST wins
+                    i = s["ord"]
+                    if s["is_full"]:
                         mask = np.ones((h, w), dtype=bool)
-                    else:
-                        mask = points_in_polygon(
-                            gx.ravel(), gy.ravel(), ringmap[pid]
-                        ).reshape(h, w)
-                    arr[mask] = valmap[pid]
+                    else:  # a level-0 pixel is one world unit wide
+                        mask = pixel_center_mask(x0, y0, x0 + w, y0 + h, w, h, ring_list[i])
+                    arr[mask] = values[i]
                     burned |= mask
                 if not burned.any():
                     continue
@@ -1248,47 +1223,18 @@ def raster_histogram(
     from ..functions.codec import decode_tile
     from ..sources.catalog import read_level
 
-    if bins is not None:
-        if vmin is None or vmax is None or not (float(vmax) > float(vmin)):
-            raise ValueError("binned histogram needs vmin < vmax")
-        bins = int(bins)
-        if bins <= 0:
-            raise ValueError(f"bins must be positive, got {bins}")
-    lo, hi = (float(vmin), float(vmax)) if bins is not None else (0.0, 0.0)
-    nb = bins
+    nb, lo, hi = _bin_args("raster_histogram", bins, vmin, vmax)
 
     def gen(batches):
         for pdf in batches:
             acc: dict[int, int] = {}
-            exact = None
             for row in pdf.itertuples():
                 a = decode_tile(row.bytes, row.h, row.w, row.dtype,
                                 getattr(row, "c", 1))
-                flat = a.ravel()
-                if nb is None:
-                    if not np.issubdtype(flat.dtype, np.integer):
-                        raise ValueError(
-                            "exact-value histogram (bins=None) needs an "
-                            f"integer raster, got dtype {row.dtype!r}; "
-                            "pass bins/vmin/vmax"
-                        )
-                    vals, cnts = np.unique(flat, return_counts=True)
-                else:
-                    if np.issubdtype(flat.dtype, np.floating):
-                        flat = flat[np.isfinite(flat)]  # NaN = nodata
-                    x = flat.astype(np.float64)
-                    idx = np.floor((x - lo) * nb / (hi - lo)).astype(np.int64)
-                    idx[x == hi] = nb - 1  # GDAL: max value -> last bucket
-                    keep = (idx >= 0) & (idx < nb)
-                    vals, cnts = np.unique(idx[keep], return_counts=True)
-                exact = True
+                vals, cnts = _value_counts(a.ravel(), "raster_histogram", nb, lo, hi)
                 for v, c in zip(vals.tolist(), cnts.tolist()):
-                    acc[int(v)] = acc.get(int(v), 0) + int(c)
-            if exact is None:
-                continue
-            yield pd.DataFrame(
-                {"bin": list(acc.keys()), "n": list(acc.values())}
-            )
+                    acc[v] = acc.get(v, 0) + c
+            yield pd.DataFrame({"bin": list(acc), "n": list(acc.values())})
 
     part = read_level(spark, path, z).mapInPandas(gen, "bin long, n long")
     agg = part.groupBy("bin").agg(F.sum("n").alias("n"))

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..functions.codec import decode_tile, encode_tile
 from ..plans.grid import agg_axis, extents_intersect, plan_window
 from ..sources.catalog import TILE_SCHEMA, read_tiles_local
-from .build import PyramidSpec, _mosaic, _rows_to_pdf, _tile_row
+from .build import PyramidSpec, _mosaic, _rows_to_pdf, _tile_row, _tile_stats
 
 # ---------------------------------------------------------------------------
 # L1-L3 + F1-F3: windowed viewport read
@@ -149,30 +149,61 @@ def map_tiles(tiles: DataFrame, op: str, scalar: float | None = None) -> DataFra
     return _map_tiles_with(tiles, fn)
 
 
-def _map_tiles_with(tiles: DataFrame, fn) -> DataFrame:
-    """Shared elementwise-map stage: decode -> fn(array) -> re-encode with
-    fresh stats. One narrow mapInPandas, no shuffle; every level at once."""
+def _retile(df: DataFrame, tile_fn) -> DataFrame:
+    """Shared re-encode stage of the tile maps: each record ``r`` becomes
+    the tile row carrying ``tile_fn(r)`` (new bytes, dtype, band count and
+    ``build._tile_stats``; other TILE_SCHEMA columns pass through). One
+    narrow mapInPandas, no shuffle; every level at once."""
 
     def gen(batches):
         for pdf in batches:
             rows = []
             for r in pdf.to_dict("records"):
-                a = decode_tile(r["bytes"], r["h"], r["w"], r["dtype"], r["c"])
-                out = fn(a)
-                d = dict(r)
-                af = out.astype(np.float64, copy=False)
-                d.update(
-                    bytes=encode_tile(out),
-                    dtype=str(out.dtype.name),
-                    vmin=float(np.nanmin(af)),
-                    vmax=float(np.nanmax(af)),
-                    vmean=float(np.nanmean(af)),
-                )
-                rows.append(d)
+                out = tile_fn(r)
+                vmin, vmax, vmean = _tile_stats(out)
+                rows.append({
+                    **r,
+                    "bytes": encode_tile(out),
+                    "c": out.shape[2] if out.ndim == 3 else r["c"],
+                    "dtype": str(out.dtype.name),
+                    "vmin": vmin,
+                    "vmax": vmax,
+                    "vmean": vmean,
+                })
             if rows:
                 yield _rows_to_pdf(rows)
 
-    return tiles.mapInPandas(gen, TILE_SCHEMA)
+    return df.mapInPandas(gen, TILE_SCHEMA)
+
+
+def _decode(r: dict, suffix: str = "") -> np.ndarray:
+    """Decode record ``r``'s tile, or its zip partner's with ``suffix="_b"``."""
+    return decode_tile(r["bytes" + suffix], r["h"], r["w"], r["dtype" + suffix], r["c" + suffix])
+
+
+def _zip_join(a: DataFrame, b: DataFrame) -> DataFrame:
+    """``a`` joined 1:1 with ``b`` on (z, tx, ty); ``b``'s pixels ride as
+    ``bytes_b``/``dtype_b``/``c_b``. Catalyst picks sort-merge or broadcast
+    (small upper levels broadcast automatically under AQE)."""
+    check_level_compat(a, b)
+    rb = b.select(
+        F.col("z").alias("z2"),
+        F.col("tx").alias("tx2"),
+        F.col("ty").alias("ty2"),
+        F.col("bytes").alias("bytes_b"),
+        F.col("dtype").alias("dtype_b"),
+        F.col("c").alias("c_b"),
+    )
+    return a.join(
+        rb,
+        (F.col("z") == F.col("z2")) & (F.col("tx") == F.col("tx2")) & (F.col("ty") == F.col("ty2")),
+        "inner",
+    ).drop("z2", "tx2", "ty2")
+
+
+def _map_tiles_with(tiles: DataFrame, fn) -> DataFrame:
+    """Shared elementwise-map stage: decode -> fn(array) -> re-encode."""
+    return _retile(tiles, lambda r: fn(_decode(r)))
 
 
 def reclassify(
@@ -277,41 +308,7 @@ def zip_tiles(a: DataFrame, b: DataFrame, op: str) -> DataFrame:
     if op not in BINARY_OPS:
         raise KeyError(f"unknown binary op {op!r}")
     fn = BINARY_OPS[op]
-    check_level_compat(a, b)
-    rb = b.select(
-        F.col("z").alias("z2"),
-        F.col("tx").alias("tx2"),
-        F.col("ty").alias("ty2"),
-        F.col("bytes").alias("bytes_b"),
-        F.col("dtype").alias("dtype_b"),
-    )
-    joined = a.join(
-        rb,
-        (F.col("z") == F.col("z2")) & (F.col("tx") == F.col("tx2")) & (F.col("ty") == F.col("ty2")),
-        "inner",
-    ).drop("z2", "tx2", "ty2")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                x = decode_tile(r["bytes"], r["h"], r["w"], r["dtype"], r["c"])
-                y = decode_tile(r["bytes_b"], r["h"], r["w"], r["dtype_b"], r["c"])
-                out = fn(x, y)
-                d = {k: r[k] for k in (f.name for f in TILE_SCHEMA.fields)}
-                af = out.astype(np.float64, copy=False)
-                d.update(
-                    bytes=encode_tile(out),
-                    dtype=str(out.dtype.name),
-                    vmin=float(np.nanmin(af)),
-                    vmax=float(np.nanmax(af)),
-                    vmean=float(np.nanmean(af)),
-                )
-                rows.append(d)
-            if rows:
-                yield _rows_to_pdf(rows)
-
-    return joined.mapInPandas(gen, TILE_SCHEMA)
+    return _retile(_zip_join(a, b), lambda r: fn(_decode(r), _decode(r, "_b")))
 
 
 # ---------------------------------------------------------------------------
@@ -482,48 +479,16 @@ def stack_bands(a: DataFrame, b: DataFrame) -> DataFrame:
     """C1 ``cat`` along a *new* dim: zip-join on the tile key, dstack the
     decoded blocks into the channel axis (bands pass through aggregation
     untouched, reference test/runtests.jl:145-166)."""
-    check_level_compat(a, b)
-    rb = b.select(
-        F.col("z").alias("z2"),
-        F.col("tx").alias("tx2"),
-        F.col("ty").alias("ty2"),
-        F.col("bytes").alias("bytes_b"),
-        F.col("dtype").alias("dtype_b"),
-        F.col("c").alias("c2"),
-    )
-    joined = a.join(
-        rb,
-        (F.col("z") == F.col("z2")) & (F.col("tx") == F.col("tx2")) & (F.col("ty") == F.col("ty2")),
-        "inner",
-    ).drop("z2", "tx2", "ty2")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                x = decode_tile(r["bytes"], r["h"], r["w"], r["dtype"], r["c"])
-                y = decode_tile(r["bytes_b"], r["h"], r["w"], r["dtype_b"], r["c2"])
-                if x.ndim == 2:
-                    x = x[:, :, None]
-                if y.ndim == 2:
-                    y = y[:, :, None]
-                out_dtype = np.result_type(x.dtype, y.dtype)  # promote, don't wrap
-                out = np.concatenate(
-                    [x.astype(out_dtype, copy=False), y.astype(out_dtype, copy=False)],
-                    axis=2,
-                )
-                d = {k: r[k] for k in (f.name for f in TILE_SCHEMA.fields)}
-                af = out.astype(np.float64, copy=False)
-                d.update(
-                    bytes=encode_tile(out),
-                    c=out.shape[2],
-                    dtype=str(out.dtype.name),
-                    vmin=float(np.nanmin(af)),
-                    vmax=float(np.nanmax(af)),
-                    vmean=float(np.nanmean(af)),
-                )
-                rows.append(d)
-            if rows:
-                yield _rows_to_pdf(rows)
+    def stack(r: dict) -> np.ndarray:
+        x, y = _decode(r), _decode(r, "_b")
+        if x.ndim == 2:
+            x = x[:, :, None]
+        if y.ndim == 2:
+            y = y[:, :, None]
+        out_dtype = np.result_type(x.dtype, y.dtype)  # promote, don't wrap
+        return np.concatenate(
+            [x.astype(out_dtype, copy=False), y.astype(out_dtype, copy=False)], axis=2
+        )
 
-    return joined.mapInPandas(gen, TILE_SCHEMA)
+    return _retile(_zip_join(a, b), stack)

@@ -541,5 +541,111 @@ def test_zonal_categorical_tie_breaks_to_lowest_value(spark, tmp_path):
 def test_zonal_categorical_float_level_raises(spark, pyr_path):
     from pyramidscheme_jl_spark.operators.joins import zonal_categorical
 
-    with pytest.raises(Exception, match="integer raster"):
+    with pytest.raises(Exception, match="integer raster") as err:
         zonal_categorical(spark, pyr_path, _polys(), z=1).collect()
+    # the shared value-count refine names the operator that called it
+    assert "zonal_categorical" in str(err.value)
+
+
+# ---------------------------------------------------------------------------
+# the raster<->vector stage shared by zonal, rasterize and histograms
+# ---------------------------------------------------------------------------
+
+
+def _one_slice_cube(spark, pyr_path, cube):
+    import shutil
+
+    from pyramidscheme_jl_spark.sources.catalog import MULTISCALES_FILE, read_level
+
+    read_level(spark, pyr_path, 0).withColumn("t", F.lit(3)).write.partitionBy(
+        "z"
+    ).parquet(f"{cube}/tiles")
+    shutil.copy(f"{pyr_path}/{MULTISCALES_FILE}", f"{cube}/{MULTISCALES_FILE}")
+
+
+def test_zonal_jobs_per_call(spark, pyr_path, tmp_path):
+    """Spark jobs each raster<->vector entry point runs at call time, with
+    no action on the result. The zonal scan ranges come from the cover
+    plan on the driver, so no job reads the cover back: one job per zonal
+    call (two before), none for ``rasterize_polygons``."""
+    from pyramidscheme_jl_spark.operators.joins import (
+        zonal_categorical,
+        zonal_cube,
+        zonal_quantiles,
+        zonal_quantiles_cube,
+    )
+    from pyramidscheme_jl_spark.operators.raster import rasterize_polygons
+
+    cube = str(tmp_path / "cube")
+    _one_slice_cube(spark, pyr_path, cube)
+    polys = _polys()
+    calls = {
+        "zonal_raster": lambda: zonal_raster(spark, pyr_path, polys),
+        "zonal_cube": lambda: zonal_cube(spark, cube, polys),
+        "zonal_quantiles": lambda: zonal_quantiles(spark, pyr_path, polys),
+        "zonal_quantiles_cube": lambda: zonal_quantiles_cube(spark, cube, polys),
+        "zonal_categorical": lambda: zonal_categorical(spark, pyr_path, polys),
+        "rasterize_polygons": lambda: rasterize_polygons(spark, polys, (256, 256), tilesize=64),
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    for name, call in calls.items():
+        sc.setJobGroup(f"zonal-jobs-{name}", name)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"zonal-jobs-{name}"))
+    want = {name: 1 for name in calls}
+    want["rasterize_polygons"] = 0
+    over = {k: (n, want[k]) for k, n in jobs.items() if n > want[k]}
+    assert not over, over
+
+
+def test_burned_membership_agrees_across_operators(spark, tmp_path):
+    """One pixel-center mask and one bucket rule: three disjoint polygons
+    (concave, quad, holed multipolygon) burned with their own integer
+    values read back the same membership through ``zonal_raster``,
+    ``raster_histogram`` and binned ``zonal_quantiles``."""
+    from pyramidscheme_jl_spark.functions.codec import decode_tile
+    from pyramidscheme_jl_spark.operators.joins import zonal_quantiles
+    from pyramidscheme_jl_spark.operators.raster import (
+        raster_histogram,
+        rasterize_polygons,
+    )
+    from pyramidscheme_jl_spark.sources.catalog import write_level, write_multiscales
+
+    hole = [(50.0, 160.0), (90.0, 160.0), (90.0, 200.0), (50.0, 200.0)]
+    outer = [(20.0, 130.0), (120.0, 125.0), (115.0, 240.0), (25.0, 235.0)]
+    tri = [(150.0, 200.0), (200.0, 205.0), (160.0, 250.0)]
+    geoms = {
+        "concave": (1, [(135.0, 15.0), (245.0, 25.0), (190.0, 60.0), (240.0, 115.0), (140.0, 105.0)]),
+        "quad": (2, RINGS["quad"]),
+        "holed": (3, [[outer, hole], [tri]]),
+    }
+    polys = [
+        {"polygon_id": pid, "ring": ring, "value": float(v)} for pid, (v, ring) in geoms.items()
+    ]
+    tiles = rasterize_polygons(spark, polys, (256, 256), tilesize=64, dtype="int32", fill=0)
+    burned = {v: 0 for v, _ in geoms.values()}
+    for t in tiles.collect():
+        a = decode_tile(t["bytes"], t["h"], t["w"], t["dtype"], t["c"])
+        for v in burned:
+            burned[v] += int((a == v).sum())
+    path = str(tmp_path / "burn")
+    write_level(tiles, path, 0)
+    write_multiscales(path, 0, 64, 256, 256, "rasterize", "-")
+
+    zonal = {r["polygon_id"]: r for r in zonal_raster(spark, path, polys).collect()}
+    bins = dict(bins=4, vmin=0.0, vmax=4.0)  # burn value v lands in bin v
+    hist = {r["bin"]: r["n"] for r in raster_histogram(spark, path, **bins).collect()}
+    quant = {
+        r["polygon_id"]: r
+        for r in zonal_quantiles(spark, path, polys, qs=(0.5,), **bins).collect()
+    }
+    for pid, (v, _) in geoms.items():
+        assert burned[v] > 0, pid
+        z = zonal[pid]
+        assert (z["n_px"], z["min_px"], z["max_px"]) == (burned[v], v, v), pid
+        assert hist[v] == quant[pid]["n_px"] == burned[v], pid
+        assert quant[pid]["q500_bin"] == v, pid
